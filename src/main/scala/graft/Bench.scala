@@ -145,6 +145,20 @@ object Bench {
     math.min(once(), once())
   }
 
+  /** The artifact line: one JSON object. `results` holds (query, min
+    * seconds, every pass) in bench order; a failed query is -1.0. */
+  private[graft] def artifactLine(total: Double, cpus: Int, calibration: Double,
+                                  calibrationEnd: Double, warmup: String,
+                                  results: Seq[(String, Double, Seq[Double])],
+                                  contaminated: Seq[String], sfDir: String): String = {
+    import Verify.jsonString
+    val qs = results.map { case (k, v, _) => jsonString(k) + ":" + v }.mkString("{", ",", "}")
+    val ps = results.map { case (k, _, p) => jsonString(k) + ":" + p.mkString("[", ",", "]") }
+      .mkString("{", ",", "}")
+    val cs = contaminated.map(jsonString).mkString("[", ",", "]")
+    s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"calibration":$calibration,"calibration_end":$calibrationEnd,"warmup":${jsonString(warmup)},"queries":$qs,"passes":$ps,"contaminated":$cs,"sf":${jsonString(sfDir)}}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local()
@@ -240,16 +254,13 @@ object Bench {
     // shows up as calibration ≠ calibration_end, mechanically, with
     // no untouched-query-median argument needed.
     val calibrationEnd = calibrationProbe(spark)
-    val qs = results.map { case (k, v, _) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val ps = results.map { case (k, _, p) => "\"" + k + "\":[" + p.mkString(",") + "]" }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
-    val cs = contaminated.map("\"" + _ + "\"").mkString("[", ",", "]")
     // "cpus" makes every artifact self-identify its core count (the
     // r15 8-core scaling run overwrote the 32-core artifact and
     // nothing inside the file said which was which — verdict item 2).
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"calibration":$calibration,"calibration_end":$calibrationEnd,"warmup":"$warmupMode","queries":$qs,"passes":$ps,"contaminated":$cs,"sf":"$sfDir"}"""
+    // It comes from the session, never from the raw environment string.
+    val line = artifactLine(results.map(_._2).filter(_ >= 0).sum,
+      spark.sparkContext.defaultParallelism, calibration, calibrationEnd, warmupMode,
+      results, contaminated, sfDir)
     println(line)
     // Also persist the full line: harness stdout capture truncates long
     // tails (BENCH_r04 lost the 14 alphabetically-first queries), so the

@@ -4,6 +4,20 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** JSON string escape: backslash, quote, and ALL control chars
+    * (<0x20) — a tab or CR in an oracle SQL string would otherwise
+    * make a JSON reader reject the whole oracle file. Bench's
+    * artifact line uses it too. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
@@ -66,27 +80,15 @@ object Verify {
           verdicts.mkString("{", ",", "}"))
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // expected sf0.01 row counts for the rows-only set, next to the
     // oracle SQL so the driver can rows-gate what it cannot hash-gate
     // (full dumps only — a partial dev dump isn't the driver shape)
     if (only.isEmpty) {
       val er = SparkEntry.expectedRows.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"${q(k)}: $v" }.mkString("{", ",", "}")
+        .map { case (k, v) => s"${jsonString(k)}: $v" }.mkString("{", ",", "}")
       Files.writeString(Paths.get(s"$outDir/expected_rows.json"), er)
     }
     spark.stop()

@@ -33,11 +33,19 @@ object GraphStreams {
     *    closed map is O(merged components), not O(docs)) and
     *    broadcasts it; current labels = one broadcast join at read.
     *
-    * Per batch: resolve the batch endpoints' current components
-    * (bucket-pruned label read + the closed merge map), collapse the
-    * batch edges to COMPONENT-level edges, run the existing
-    * distributed CC on that (tiny) component graph, append the new
-    * merge records and the new docs' labels. No label row is ever
+    * Per batch: one bounded `take` of the deduplicated batch picks
+    * the path. A batch of at most 100 000 edges (the `driverGate` of
+    * [[ccMergeBatch]]) runs in ONE driver pass: a bucket-pruned label
+    * read semi-joined to a broadcast of the batch endpoints, the
+    * closed merge map of their components, a driver union-find over
+    * the component-level edges, and two appends from local frames —
+    * the new merge records, then the new docs' labels — a few Spark
+    * jobs, where the distributed CC pays several per round. A larger
+    * batch takes the distributed path: the same reads as joins, the
+    * batch edges collapsed to COMPONENT-level edges, the distributed
+    * CC on that component graph, the same two appends.
+    * `stream_near_dedup` ([[IngestStreams.nearDedupBatch]]) feeds its
+    * verified pairs through the same batch path. No label row is ever
     * updated — the lazy-relabel design; a deployment compacts by
     * applying the closed map and truncating the merge log whenever
     * it grows past taste. Replayed batchIds skip via commit markers
@@ -149,20 +157,130 @@ object GraphStreams {
       .withColumn("mb", pmod(col("old_comp"), lit(nBuckets.toLong)))
       .write.mode("append").partitionBy("mb").parquet(mergesPath)
 
-  /** One [[ccIngest]] micro-batch, exposed for the replay spec. */
+  /** Spec-only failpoint: when set, the next [[ccMergeBatch]] throws
+    * AFTER appending its merge records but BEFORE the label append —
+    * the crash window a replay of the same batchId must close exactly.
+    * Both gate paths honour it. One-shot (resets itself when it fires). */
+  private[graft] var ccFailAfterMerges: Boolean = false
+
+  private def ccCrashPoint(): Unit =
+    if (ccFailAfterMerges) {
+      ccFailAfterMerges = false
+      throw new IllegalStateException("injected crash: merges appended, labels not appended")
+    }
+
+  /** One [[ccIngest]] micro-batch, exposed for the replay spec.
+    *
+    * `driverGate` bounds the deduplicated batch size of the one-pass
+    * driver path ([[ccDriverBatch]]); a larger batch takes the
+    * distributed path ([[ccDistributedBatch]]). The gate follows
+    * [[graft.operators.Graph.stronglyConnectedComponents]]: both paths
+    * write identical state, and the partitioning-invariance spec pins
+    * them equal with driverGate = 0 (which still sends an empty batch
+    * through the driver path, where it only commits).
+    */
   private[graft] def ccMergeBatch(batch0: org.apache.spark.sql.DataFrame,
                                   batchId: Long, labelsPath: String,
-                                  mergesPath: String, nBuckets: Int): Unit = {
+                                  mergesPath: String, nBuckets: Int,
+                                  driverGate: Long = 100000L): Unit = {
+    require(driverGate >= 0L && driverGate < Int.MaxValue, s"driverGate out of range: $driverGate")
     val spark = batch0.sparkSession
     import spark.implicits._
     val commitDir = new org.apache.hadoop.fs.Path(mergesPath, "_cc_commits")
     val marker = new org.apache.hadoop.fs.Path(commitDir, batchId.toString)
     val cfs = commitDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (cfs.exists(marker)) return // replayed batch: already applied
-    def mark(): Unit = { cfs.mkdirs(commitDir); cfs.create(marker, true).close() }
-    val b = batch0.select(col("doc_a"), col("doc_b")).dropDuplicates().persist()
+    val b = batch0.select(col("doc_a"), col("doc_b")).dropDuplicates()
+    // the gate is on the deduplicated batch: its component-level edge
+    // set is never larger, so a batch within the gate fits the driver
+    // union-find, and this one bounded take brings it whole to the
+    // driver — no further batch-sized Spark job
+    val head = b.as[(Long, Long)].take(driverGate.toInt + 1)
+    if (head.length <= driverGate) ccDriverBatch(spark, head, labelsPath, mergesPath, nBuckets)
+    else ccDistributedBatch(b, labelsPath, mergesPath, nBuckets)
+    cfs.mkdirs(commitDir)
+    cfs.create(marker, true).close()
+  }
+
+  /** The one-pass path for a batch within the gate: the collected
+    * edges, one bucket-pruned label read semi-joined to a broadcast of
+    * the batch endpoints, the pruned closure walk, a driver
+    * union-find over component-level edges, then two appends from
+    * local frames (merges, then labels). Each frame is coalesced to
+    * one partition first, so a batch writes at most one file per
+    * touched bucket.
+    */
+  private def ccDriverBatch(spark: SparkSession, edges: Array[(Long, Long)],
+                            labelsPath: String, mergesPath: String,
+                            nBuckets: Int): Unit = {
+    if (edges.isEmpty) return
+    import spark.implicits._
+    def bucketOf(d: Long): Long = java.lang.Math.floorMod(d, nBuckets.toLong)
+    val eps = edges.flatMap { case (a, b) => Array(a, b) }.distinct
+    val lp = new org.apache.hadoop.fs.Path(labelsPath)
+    val lfs = lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // doc → EVERY stored component: a replayed crash can leave a doc
+    // labeled twice, and the distributed path's join keeps both rows,
+    // so both components must merge here too
+    val known: Map[Long, Seq[Long]] =
+      if (lfs.exists(lp)) {
+        spark.read.parquet(labelsPath)
+          .filter(col("bucket").isin(eps.map(bucketOf).distinct.toSeq: _*))
+          .join(broadcast(eps.toSeq.toDF("doc_id")), Seq("doc_id"), "left_semi")
+          .select(col("doc_id").as[Long], col("component_id").as[Long])
+          .collect().groupBy(_._1).map { case (d, rs) => d -> rs.map(_._2).toSeq }
+      } else Map.empty
+    val closure = closedMergesFor(spark, mergesPath, known.values.flatten.toSeq.distinct, nBuckets)
+    val existing = known.values.flatten.map(c => closure.getOrElse(c, c)).toSeq.distinct
+    // an unknown endpoint is its own component
+    def comps(d: Long): Seq[Long] =
+      known.get(d).fold(Seq(d))(_.map(c => closure.getOrElse(c, c)))
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    // iterative find + second-pass path compression: a batch whose
+    // chain edges arrive in decreasing-min order builds an O(n) parent
+    // chain, far past the JVM default stack at the 100k gate —
+    // constant stack regardless of chain shape
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var c = x
+      while (c != r) { val next = parent(c); parent(c) = r; c = next }
+      r
+    }
+    def union(a: Long, b: Long): Unit = {
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    edges.foreach { case (a, b) =>
+      val cs = comps(a) ++ comps(b)
+      cs.tail.foreach(union(cs.head, _))
+    }
+    // merge records: existing components whose root changed
+    val newMerges = existing.map(c => (c, find(c))).filter { case (c, r) => c != r }
+    if (newMerges.nonEmpty) {
+      appendMerges(newMerges.toDF("old_comp", "new_comp").coalesce(1), mergesPath, nBuckets)
+    }
+    ccCrashPoint()
+    // new docs: labeled once, with their component as of THIS batch
+    val lbl = eps.filterNot(known.contains).map(d => (d, find(d), bucketOf(d)))
+    if (lbl.nonEmpty) {
+      lbl.toSeq.toDF("doc_id", "component_id", "bucket").coalesce(1)
+        .write.mode("append").partitionBy("bucket").parquet(labelsPath)
+    }
+  }
+
+  /** The scale path for a batch past the gate: resolve the batch
+    * endpoints' current components (bucket-pruned label read + the
+    * pruned closed merge map), collapse the batch edges to
+    * component-level edges, run the distributed CC on that component
+    * graph, append the new merge records and the new docs' labels.
+    */
+  private def ccDistributedBatch(b0: DataFrame, labelsPath: String,
+                                 mergesPath: String, nBuckets: Int): Unit = {
+    val spark = b0.sparkSession
+    import spark.implicits._
+    val b = b0.persist()
     try {
-      if (b.isEmpty) { mark(); return }
       val eps = b.select(col("doc_a").as("doc_id"))
         .unionByName(b.select(col("doc_b").as("doc_id"))).distinct()
       val lp = new org.apache.hadoop.fs.Path(labelsPath)
@@ -198,36 +316,7 @@ object GraphStreams {
         .select(coalesce(col("comp_a"), col("doc_a")).as("doc_a"),
           coalesce(col("comp_b"), col("doc_b")).as("doc_b"))
         .localCheckpoint(true)
-      // the component graph is collapsed — usually tiny relative to
-      // the batch. Under the gate, a driver union-find (min-label,
-      // identical output) replaces the iterative distributed CC whose
-      // per-round job overhead dominates at this size; past it, the
-      // distributed path stands (the triangleCount broadcast-gate
-      // pattern)
-      val cc =
-        if (compEdges.count() <= 100000L) {
-          val edges = compEdges.select(col("doc_a").as[Long], col("doc_b").as[Long]).collect()
-          val parent = scala.collection.mutable.Map.empty[Long, Long]
-          // iterative find + second-pass path compression: a batch
-          // whose chain edges arrive in decreasing-min order builds an
-          // O(n) parent chain, far past the JVM default stack at the
-          // 100k gate — constant stack regardless of chain shape
-          def find(x: Long): Long = {
-            var r = x
-            while (parent.getOrElse(r, r) != r) r = parent(r)
-            var c = x
-            while (c != r) { val next = parent(c); parent(c) = r; c = next }
-            r
-          }
-          edges.foreach { case (a, b2) =>
-            val (ra, rb) = (find(a), find(b2))
-            if (ra != rb) {
-              if (ra < rb) parent(rb) = ra else parent(ra) = rb
-            }
-          }
-          val nodes = edges.flatMap { case (a, b2) => Seq(a, b2) }.distinct
-          nodes.map(n => (n, find(n))).toSeq.toDF("doc_id", "component_id")
-        } else graft.operators.Dedup.connectedComponents(compEdges)
+      val cc = graft.operators.Dedup.connectedComponents(compEdges)
       graft.operators.Checkpoints.free(compEdges)
       // merge records: existing components whose root changed
       val newMerges = cc
@@ -237,6 +326,7 @@ object GraphStreams {
       if (!newMerges.isEmpty) {
         appendMerges(newMerges, mergesPath, nBuckets)
       }
+      ccCrashPoint()
       // new docs: labeled once, with their component as of THIS batch
       val lbl = eps.join(known.select("doc_id"), Seq("doc_id"), "left_anti")
         .join(cc, Seq("doc_id"), "left")
@@ -246,8 +336,8 @@ object GraphStreams {
         lbl.write.mode("append").partitionBy("bucket").parquet(labelsPath)
       }
       cur.unpersist()
+      graft.operators.Checkpoints.free(cc)
       graft.operators.Checkpoints.free(known)
-      mark()
     } finally { b.unpersist(); () }
   }
 

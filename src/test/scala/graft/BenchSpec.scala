@@ -87,4 +87,24 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.parseBaseline("not json").isEmpty)
     assert(Bench.parseBaseline("""{"metric":"total","value":1}""").isEmpty)
   }
+
+  test("artifactLine is valid JSON for any strings; cpus is a JSON integer") {
+    import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
+    val results = Seq(("q_a", 1.5, Seq(1.5, 2.0)), ("q_b", -1.0, Seq(-1.0, 0.5)),
+      ("q_\"odd\\name", 3.0E-2, Seq(0.03)))
+    val line = Bench.artifactLine(1.53, 4, 2.25, 2.5, "fu\"ll",
+      results, Seq("q_a"), "C:\\sf\"0.1\n")
+    val json = new ObjectMapper()
+      .enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS).readTree(line)
+    assert(json.get("cpus").isInt && json.get("cpus").asInt == 4)
+    assert(json.get("value").asDouble == 1.53)
+    assert(json.get("warmup").asText == "fu\"ll")
+    assert(json.get("sf").asText == "C:\\sf\"0.1\n")
+    assert(json.get("queries").get("q_b").asDouble == -1.0)
+    assert(json.get("queries").get("q_\"odd\\name").asDouble == 0.03)
+    assert(json.get("passes").get("q_a").size == 2)
+    assert(json.get("contaminated").get(0).asText == "q_a")
+    // the baseline reader still sees the plain-named queries
+    assert(Bench.parseBaseline(line) == Map("q_a" -> 1.5))
+  }
 }

@@ -907,6 +907,133 @@ class StreamingSpec extends AnyFunSuite {
       s"post-compaction merge drifted: ${resolve()}")
   }
 
+  /** Stored incremental-CC state of one run: resolved table, label
+    * rows (doc_id, component_id, bucket) and merge rows (old_comp,
+    * new_comp, mb), the row lists sorted so they compare as multisets. */
+  private def ccState(labels: String, merges: String) = {
+    def rows(path: String, cols: String*): Seq[(Long, Long, Long)] =
+      spark.read.parquet(path).select(cols.map(org.apache.spark.sql.functions.col): _*)
+        .collect().map { r =>
+          val l = (i: Int) => r.get(i).asInstanceOf[Number].longValue
+          (l(0), l(1), l(2))
+        }.toSeq.sorted
+    (GraphStreams.ccResolve(spark, labels, merges).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet,
+      rows(labels, "doc_id", "component_id", "bucket"),
+      rows(merges, "old_comp", "new_comp", "mb"))
+  }
+
+  /** Data files per partition directory under `root`. */
+  private def partFiles(root: String): Map[String, Int] = {
+    val s = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+    try {
+      import scala.jdk.CollectionConverters._
+      s.iterator().asScala.filter(_.getFileName.toString.startsWith("part-")).toSeq
+        .groupBy(_.getParent.toString).map { case (d, fs) => d -> fs.size }
+    } finally s.close()
+  }
+
+  test("ccMergeBatch: driver and distributed paths write identical state (driverGate = 0 vs default)") {
+    import spark.implicits._
+    def drive(gate: Long) = {
+      val base = java.nio.file.Files.createTempDirectory("graft-cc-gate-").toString
+      val labels = s"$base/labels"; val merges = s"$base/merges"
+      def batch(id: Long, edges: (Long, Long)*): Unit =
+        GraphStreams.ccMergeBatch(edges.toDF("doc_a", "doc_b"), id, labels, merges, 16, gate)
+      // the ccIngest replay sequence: merge, replay, compact, replay, merge
+      batch(0L, (1L, 2L), (5L, 6L))
+      batch(1L, (2L, 5L), (9L, 10L))
+      batch(1L, (2L, 5L), (9L, 10L))
+      GraphStreams.ccCompact(spark, labels, merges, 16)
+      batch(1L, (2L, 5L), (9L, 10L))
+      batch(2L, (6L, 9L))
+      // three new components in buckets 1, 2 and 4...
+      batch(3L, (17L, 33L), (34L, 50L), (100L, 116L))
+      val before = partFiles(labels) ++ partFiles(merges)
+      // ...then one batch whose endpoints span buckets 1, 2, 4, 8, 9
+      // and 10: it merges 34 into 17 and 100 into 1, and labels new
+      // docs several to a bucket (duplicate edge included)
+      batch(4L, (33L, 50L), (116L, 10L), (200L, 34L), (216L, 200L), (232L, 216L),
+        (201L, 217L), (33L, 50L))
+      val after = partFiles(labels) ++ partFiles(merges)
+      val written = after.map { case (d, n) => d -> (n - before.getOrElse(d, 0)) }
+        .filter(_._2 > 0)
+      (ccState(labels, merges), written)
+    }
+    val (dist, _) = drive(0L)
+    val (local, written) = drive(100000L)
+    val all = Seq((1L, 2L), (5L, 6L), (2L, 5L), (9L, 10L), (6L, 9L), (17L, 33L), (34L, 50L),
+      (100L, 116L), (33L, 50L), (116L, 10L), (200L, 34L), (216L, 200L), (232L, 216L),
+      (201L, 217L)).toDF("doc_a", "doc_b")
+    val want = graft.operators.Dedup.connectedComponents(all)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(local._1 == want, s"driver path drifted from batch CC: ${local._1} vs $want")
+    assert(dist._1 == local._1, s"resolved tables differ: ${dist._1} vs ${local._1}")
+    assert(dist._2 == local._2, s"label rows differ: ${dist._2} vs ${local._2}")
+    assert(dist._3 == local._3, s"merge rows differ: ${dist._3} vs ${local._3}")
+    // compaction truncated batch 1's 5 -> 1; the rest of the log stands
+    assert(local._3.map(m => (m._1, m._2)).toSet == Set((9L, 1L), (34L, 17L), (100L, 1L)))
+    // the one-pass path appends local frames coalesced to one
+    // partition: at most one file per touched bucket — labels in
+    // buckets 8 and 9, merges in mb 2 and 4
+    assert(written.values.forall(_ == 1), s"more than one file per bucket: $written")
+    assert(written.keySet.map(_.split("/").last) ==
+      Set("bucket=8", "bucket=9", "mb=2", "mb=4"), s"unexpected touched buckets: $written")
+  }
+
+  test("ccMergeBatch crash window: merges appended, labels not; a replay on either gate closes it exactly") {
+    import spark.implicits._
+    val gates = Seq(0L, 100000L)
+    val b0 = Seq((1L, 2L), (5L, 6L), (20L, 21L)).toDF("doc_a", "doc_b")
+    val b1 = Seq((2L, 5L), (9L, 10L), (21L, 6L)).toDF("doc_a", "doc_b")
+    val want = graft.operators.Dedup.connectedComponents(b0.unionByName(b1))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    for (crashGate <- gates; replayGate <- gates) {
+      val base = java.nio.file.Files.createTempDirectory("graft-cc-crash-").toString
+      val labels = s"$base/labels"; val merges = s"$base/merges"
+      GraphStreams.ccMergeBatch(b0, 0L, labels, merges, 16, crashGate)
+      GraphStreams.ccFailAfterMerges = true
+      intercept[IllegalStateException] {
+        GraphStreams.ccMergeBatch(b1, 1L, labels, merges, 16, crashGate)
+      }
+      assert(!GraphStreams.ccFailAfterMerges, "failpoint must be one-shot")
+      // the crash landed inside the window: merges in, new labels not
+      val (_, crashedLabels, crashedMerges) = ccState(labels, merges)
+      assert(crashedMerges.map(m => (m._1, m._2)).toSet == Set((5L, 1L), (20L, 1L)),
+        s"crash $crashGate: merges not appended before the crash: $crashedMerges")
+      assert(crashedLabels.map(_._1).toSet == Set(1L, 2L, 5L, 6L, 20L, 21L),
+        s"crash $crashGate: labels appended before the crash: $crashedLabels")
+      GraphStreams.ccMergeBatch(b1, 1L, labels, merges, 16, replayGate)
+      val (resolved, lbl, mrg) = ccState(labels, merges)
+      assert(resolved == want, s"crash $crashGate, replay $replayGate: $resolved vs $want")
+      assert(lbl.map(_._1).distinct.size == lbl.size, s"duplicate doc_id in labels: $lbl")
+      // committed: a further replay of the same batchId is a no-op
+      GraphStreams.ccMergeBatch(b1, 1L, labels, merges, 16, replayGate)
+      assert(ccState(labels, merges) == ((resolved, lbl, mrg)),
+        s"crash $crashGate, replay $replayGate: post-marker replay changed state")
+    }
+  }
+
+  test("ccMergeBatch: a doc stored under two components merges both, on either gate") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val states = Seq(0L, 100000L).map { gate =>
+      val base = java.nio.file.Files.createTempDirectory("graft-cc-dup-").toString
+      val labels = s"$base/labels"; val merges = s"$base/merges"
+      // doc 4 holds two label rows, as a replayed crash can leave it:
+      // components 1 and 3 share it, so both must merge
+      Seq((1L, 1L), (2L, 1L), (3L, 3L), (4L, 3L), (4L, 1L)).toDF("doc_id", "component_id")
+        .withColumn("bucket", pmod(col("doc_id"), lit(16L)))
+        .write.partitionBy("bucket").parquet(labels)
+      GraphStreams.ccMergeBatch(Seq((4L, 9L)).toDF("doc_a", "doc_b"), 0L, labels, merges, 16, gate)
+      ccState(labels, merges)
+    }
+    assert(states.head == states.last, s"paths differ: ${states.head} vs ${states.last}")
+    val (resolved, _, mrg) = states.last
+    assert(resolved == Set(1L, 2L, 3L, 4L, 9L).map(_ -> 1L), s"components not merged: $resolved")
+    assert(mrg.map(m => (m._1, m._2)) == Seq((3L, 1L)), s"merge rows: $mrg")
+  }
+
   test("streamedPhashDedup == batch phashSummary; cross-batch near-dup found via pruned state; replay no-op") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
