@@ -611,34 +611,12 @@ object Graph {
     if (und.isEmpty) {
       return spark.emptyDataset[(Long, Double, Long)].toDF("node", "bc", "rk")
     }
-    // dense-int renumbering + CSR adjacency: the boxed-Map version of
-    // this pass cost more driver seconds than the distributed rounds
-    // it replaced — primitive arrays keep the whole gate sub-second
-    val m = und.length
-    val ids = new Array[Long](m)
-    var i = 0
-    while (i < m) { ids(i) = und(i)._1; i += 1 }
-    val nodeIds = ids.distinct.sorted // every node appears as a source side of und
+    // und is symmetric, so the CSR's sorted ids are the source-side
+    // ids and the k smallest are dense ids 0 until k
+    val g = Csr(und)
+    val (nodeIds, off, nbr) = (g.ids, g.off, g.nbr)
     val n = nodeIds.length
-    val idOf = new scala.collection.mutable.LongMap[Int](n * 2)
-    i = 0
-    while (i < n) { idOf(nodeIds(i)) = i; i += 1 }
-    val deg = new Array[Int](n)
-    i = 0
-    while (i < m) { deg(idOf(und(i)._1)) += 1; i += 1 }
-    val off = new Array[Int](n + 1)
-    i = 0
-    while (i < n) { off(i + 1) = off(i) + deg(i); i += 1 }
-    val nbr = new Array[Int](m)
-    val fill = java.util.Arrays.copyOf(off, n)
-    i = 0
-    while (i < m) {
-      val a = idOf(und(i)._1)
-      nbr(fill(a)) = idOf(und(i)._2)
-      fill(a) += 1
-      i += 1
-    }
-    val sources = nodeIds.take(k).indices.map(j => idOf(nodeIds(j))).toArray
+    val sources = (0 until math.min(k, n)).toArray
     val reached = new Array[Boolean](n)
     val bc = new Array[Double](n)
     val dist = new Array[Int](n)
@@ -1171,34 +1149,31 @@ object Graph {
   private def driverTopoLayers(dag: DataFrame): DataFrame = {
     val spark = dag.sparkSession
     import spark.implicits._
-    val edges = dag.select(col("u"), col("v")).as[(Long, Long)].collect()
-    if (edges.isEmpty) return Seq.empty[(Long, Long)].toDF("node", "depth")
-    val adj = new scala.collection.mutable.HashMap[Long, List[Long]]()
-    val indeg = new scala.collection.mutable.HashMap[Long, Int]()
-      .withDefaultValue(0)
-    val depth = new scala.collection.mutable.HashMap[Long, Long]()
-    edges.foreach { case (u, v) =>
-      adj(u) = v :: adj.getOrElse(u, Nil)
-      indeg(v) += 1
-      depth.getOrElseUpdate(u, 0L)
-      depth.getOrElseUpdate(v, 0L)
-    }
-    val queue = scala.collection.mutable.Queue.empty[Long]
-    depth.keys.foreach(n => if (indeg(n) == 0) queue.enqueue(n))
-    var ordered = 0L
-    while (queue.nonEmpty) {
-      val u = queue.dequeue()
-      ordered += 1L
-      for (v <- adj.getOrElse(u, Nil)) {
-        if (depth(u) + 1L > depth(v)) depth(v) = depth(u) + 1L
-        indeg(v) -= 1
-        if (indeg(v) == 0) queue.enqueue(v)
+    val g = Csr(dag.select(col("u"), col("v")).as[(Long, Long)].collect())
+    val n = g.ids.length
+    val indeg = new Array[Int](n)
+    g.nbr.foreach(v => indeg(v) += 1)
+    val depth = new Array[Long](n)
+    val queue = new Array[Int](n)
+    var qt = 0
+    var v = 0
+    while (v < n) { if (indeg(v) == 0) { queue(qt) = v; qt += 1 }; v += 1 }
+    var qh = 0
+    while (qh < qt) {
+      val u = queue(qh); qh += 1
+      var e = g.off(u)
+      while (e < g.off(u + 1)) {
+        val w = g.nbr(e)
+        if (depth(u) + 1L > depth(w)) depth(w) = depth(u) + 1L
+        indeg(w) -= 1
+        if (indeg(w) == 0) { queue(qt) = w; qt += 1 }
+        e += 1
       }
     }
-    require(ordered == depth.size,
-      s"topoLayers: ${depth.size - ordered} nodes unreachable from any " +
+    require(qt == n,
+      s"topoLayers: ${n - qt} nodes unreachable from any " +
         "zero-in-degree node — cyclic input?")
-    depth.toSeq.toDF("node", "depth")
+    (0 until n).map(j => (g.ids(j), depth(j))).toDF("node", "depth")
   }
 
   /** One-row MST-family summary (the `q_mst_summary` entry): forest
@@ -1250,12 +1225,42 @@ object Graph {
     * full neighbor lists, per-round localCheckpoint + [[Checkpoints
     * .free]] (the 26b lesson). All-integer labels and counts, so the
     * arg-max via `max(struct(c, −label))` is reduction-order-free.
+    *
+    * Bounded-size gate (the [[betweennessApprox]] convention): the
+    * edge rows are checkpointed once, and one `take(driverGate + 1)`
+    * on them picks the path. At or under 2M edges the rounds run on
+    * the driver over one CSR adjacency — a few Spark jobs per call
+    * instead of ~7 per round — and the result is a local frame. Past
+    * the gate the per-round distributed plan above is the scale path,
+    * built from the same checkpoint. Both paths count every input row
+    * in both directions (no dedup: a duplicate row counts twice, a
+    * self-loop counts twice), so they agree row for row; the specs
+    * pin them equal with driverGate = 0. DRIVER-MEMORY REQUIREMENT
+    * (r15 ADVICE): a 2M-edge collect is ~64 MB raw, inside the
+    * deployment's 8g driver with wide margin; a deployment running
+    * sub-2M-edge graphs on a small driver (<2g) should lower the
+    * gate, and driverGate = 0 forces the distributed path.
     */
-  def labelPropagation(edges0: DataFrame, rounds: Int = 5): DataFrame = {
+  def labelPropagation(edges0: DataFrame, rounds: Int = 5): DataFrame =
+    labelPropagation(edges0, rounds, driverGate = 2000000L)
+
+  private[graft] def labelPropagation(edges0: DataFrame, rounds: Int,
+                                      driverGate: Long): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val und = edges0.select(col("u").as("a"), col("v").as("b"))
-      .unionAll(edges0.select(col("v").as("a"), col("u").as("b")))
+    require(driverGate < Int.MaxValue, s"driverGate out of range: $driverGate")
+    val spark = edges0.sparkSession
+    import spark.implicits._
+    val e = edges0.select(col("u").as("a"), col("v").as("b")).localCheckpoint(true)
+    if (driverGate > 0L) {
+      val head = e.as[(Long, Long)].take(driverGate.toInt + 1)
+      if (head.length <= driverGate) {
+        Checkpoints.free(e)
+        return driverLabelPropagation(head, rounds).toSeq.toDF("node", "label")
+      }
+    }
+    val und = e.unionAll(e.select(col("b").as("a"), col("a").as("b")))
       .localCheckpoint(true)
+    Checkpoints.free(e)
     var labels = und.select(col("a").as("node")).distinct()
       .select(col("node"), col("node").as("label")).localCheckpoint(true)
     var r = 0
@@ -1273,6 +1278,97 @@ object Graph {
     }
     Checkpoints.free(und)
     labels
+  }
+
+  /** Driver-side synchronous LPA behind [[labelPropagation]]'s gate:
+    * the same rounds, the same (most frequent, then smallest) label
+    * rule, over a symmetric CSR that keeps every row's multiplicity.
+    * Labels are held as dense ids, whose order is the node-id order,
+    * so "smallest label" is a comparison of dense ids. */
+  private def driverLabelPropagation(pairs: Array[(Long, Long)],
+                                     rounds: Int): Seq[(Long, Long)] = {
+    val g = Csr(pairs, symmetric = true)
+    val n = g.ids.length
+    var label = Array.tabulate(n)(identity)
+    var next = new Array[Int](n)
+    val seen = new Array[Int](g.nbr.length)
+    var r = 0
+    while (r < rounds) {
+      var e = 0
+      while (e < seen.length) { seen(e) = label(g.nbr(e)); e += 1 }
+      var v = 0
+      while (v < n) {
+        val end = g.off(v + 1)
+        java.util.Arrays.sort(seen, g.off(v), end)
+        // runs of equal labels in ascending order; only a strictly
+        // longer run wins, so a tie keeps the smaller label
+        var best = 0
+        var bestC = 0
+        var k = g.off(v)
+        while (k < end) {
+          var j = k + 1
+          while (j < end && seen(j) == seen(k)) j += 1
+          if (j - k > bestC) { best = seen(k); bestC = j - k }
+          k = j
+        }
+        next(v) = best
+        v += 1
+      }
+      val t = label; label = next; next = t
+      r += 1
+    }
+    (0 until n).map(j => (g.ids(j), g.ids(label(j))))
+  }
+
+  /** Compressed sparse row adjacency over dense ids — the one driver
+    * structure behind the gated kernels (Brandes, Tarjan, Kahn
+    * layering, label propagation). `ids` holds every endpoint of the
+    * collected pairs, sorted, so a dense id's order is its node id's
+    * order; `nbr(off(j) until off(j + 1))` are j's neighbours in
+    * input order, one entry per pair (no dedup). With `symmetric`,
+    * each pair also adds the reverse entry. Primitive arrays only: a
+    * boxed-Map adjacency costs more driver seconds than the
+    * distributed rounds a gate saves. */
+  private[graft] final class Csr(val ids: Array[Long], val off: Array[Int],
+                                 val nbr: Array[Int])
+
+  private[graft] object Csr {
+    def apply(pairs: Array[(Long, Long)], symmetric: Boolean = false): Csr = {
+      val m = pairs.length
+      val ends = new Array[Long](2 * m)
+      var i = 0
+      while (i < m) { ends(2 * i) = pairs(i)._1; ends(2 * i + 1) = pairs(i)._2; i += 1 }
+      java.util.Arrays.sort(ends)
+      var n = 0
+      i = 0
+      while (i < ends.length) {
+        if (n == 0 || ends(i) != ends(n - 1)) { ends(n) = ends(i); n += 1 }
+        i += 1
+      }
+      val ids = java.util.Arrays.copyOf(ends, n)
+      val src = new Array[Int](m)
+      val dst = new Array[Int](m)
+      val off = new Array[Int](n + 1)
+      i = 0
+      while (i < m) {
+        src(i) = java.util.Arrays.binarySearch(ids, pairs(i)._1)
+        dst(i) = java.util.Arrays.binarySearch(ids, pairs(i)._2)
+        off(src(i) + 1) += 1
+        if (symmetric) off(dst(i) + 1) += 1
+        i += 1
+      }
+      i = 0
+      while (i < n) { off(i + 1) += off(i); i += 1 }
+      val nbr = new Array[Int](off(n))
+      val fill = java.util.Arrays.copyOf(off, n)
+      i = 0
+      while (i < m) {
+        nbr(fill(src(i))) = dst(i); fill(src(i)) += 1
+        if (symmetric) { nbr(fill(dst(i))) = src(i); fill(dst(i)) += 1 }
+        i += 1
+      }
+      new Csr(ids, off, nbr)
+    }
   }
 
   /** Per-row count-min degree estimate from a COLLECTED sketch: the
@@ -1776,24 +1872,9 @@ object Graph {
     * distributed decomposition's contract exactly.
     */
   private def driverTarjan(edges: Array[(Long, Long)]): Seq[(Long, Long)] = {
-    val ids = edges.iterator.flatMap { case (a, b) => Iterator(a, b) }
-      .toArray.distinct
+    val g = Csr(edges)
+    val (ids, start, adj) = (g.ids, g.off, g.nbr)
     val n = ids.length
-    if (n == 0) return Seq.empty
-    val idx = new java.util.HashMap[Long, Int](n * 2)
-    var i = 0
-    while (i < n) { idx.put(ids(i), i); i += 1 }
-    // CSR adjacency
-    val outDeg = new Array[Int](n)
-    edges.foreach { case (a, _) => outDeg(idx.get(a)) += 1 }
-    val start = new Array[Int](n + 1)
-    i = 0
-    while (i < n) { start(i + 1) = start(i) + outDeg(i); i += 1 }
-    val adj = new Array[Int](edges.length)
-    val fill = start.clone()
-    edges.foreach { case (a, b) =>
-      val ai = idx.get(a); adj(fill(ai)) = idx.get(b); fill(ai) += 1
-    }
     val index = Array.fill(n)(-1)
     val low = new Array[Int](n)
     val onStk = new Array[Boolean](n)

@@ -14,6 +14,9 @@ class GraphSpec extends AnyFunSuite {
     pairs.toDF("u", "v")
   }
 
+  /** labelPropagation's default driver gate, then the distributed path. */
+  private val lpaGates = Seq(2000000L, 0L)
+
   test("triangle count on known small graphs") {
     // Triangle + pendant: {1-2, 2-3, 1-3, 3-4} has exactly 1 triangle.
     assert(Graph.triangleCount(edgeDf(Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L))))
@@ -628,13 +631,15 @@ class GraphSpec extends AnyFunSuite {
     // K4 on {1..4}, K4 on {11..14}, bridge 4-11.
     val cl = (for (i <- 1L to 4L; j <- (i + 1) to 4L) yield (i, j)) ++
       (for (i <- 11L to 14L; j <- (i + 1) to 14L) yield (i, j)) :+ ((4L, 11L))
-    val labels = Graph.labelPropagation(cl.toDF("u", "v")).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // Each clique converges to its min member's label; the bridge
-    // endpoints stay with their own clique (3 clique neighbors vs 1
-    // bridge neighbor).
-    assert((1L to 4L).map(labels).toSet === Set(1L))
-    assert((11L to 14L).map(labels).toSet === Set(11L))
+    for (gate <- lpaGates) {
+      val labels = Graph.labelPropagation(cl.toDF("u", "v"), 5, gate).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      // Each clique converges to its min member's label; the bridge
+      // endpoints stay with their own clique (3 clique neighbors vs 1
+      // bridge neighbor).
+      assert((1L to 4L).map(labels).toSet === Set(1L), s"gate=$gate")
+      assert((11L to 14L).map(labels).toSet === Set(11L), s"gate=$gate")
+    }
   }
 
   test("labelPropagation: deterministic under ties (smallest label) and partitioning-invariant") {
@@ -642,18 +647,75 @@ class GraphSpec extends AnyFunSuite {
     // Path 1-2-3: node 2 sees labels {1, 3} once each — tie broken
     // to 1. Nodes 1 and 3 see only node 2's label.
     val path = Seq((1L, 2L), (2L, 3L)).toDF("u", "v")
-    val l1 = Graph.labelPropagation(path, rounds = 1).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(l1 === Map(1L -> 2L, 2L -> 1L, 3L -> 2L))
     val big = (for (i <- 0L until 40L) yield (i, (i * 13L + 7L) % 40L))
       .filter { case (a, b) => a != b }
       .map { case (a, b) => (math.min(a, b), math.max(a, b)) }.distinct
-    val a = Graph.labelPropagation(big.toDF("u", "v").repartition(1)).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val b = Graph.labelPropagation(big.toDF("u", "v").repartition(7)).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(a === b)
-    assert(a.nonEmpty)
+    val byGate = lpaGates.map { gate =>
+      val l1 = Graph.labelPropagation(path, 1, gate).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(l1 === Map(1L -> 2L, 2L -> 1L, 3L -> 2L), s"gate=$gate")
+      val a = Graph.labelPropagation(big.toDF("u", "v").repartition(1), 5, gate).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val b = Graph.labelPropagation(big.toDF("u", "v").repartition(7), 5, gate).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(a === b, s"gate=$gate")
+      assert(a.nonEmpty)
+      a
+    }
+    assert(byGate.distinct.size == 1, "driver and distributed paths disagree")
+  }
+
+  /** Spark jobs that `body` starts on this thread. The listener counts
+    * job starts in a fresh job group; a sentinel job in the same group
+    * runs last, and the listener bus delivers events in order, so once
+    * the sentinel's start arrives every earlier job has been counted. */
+  private def sparkJobs(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"job-count-${java.util.UUID.randomUUID()}"
+    val sentinel = "job-count-sentinel"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val p = e.properties
+        if (p != null && p.getProperty("spark.jobGroup.id") == group) {
+          if (p.getProperty("spark.job.description") == sentinel) sentinelSeen.countDown()
+          else jobs.incrementAndGet()
+        }
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      body
+      sc.setJobDescription(sentinel)
+      sc.parallelize(Seq(1), 1).count()
+      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the sentinel job's start event never arrived")
+      jobs.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("labelPropagation job-count guard: the driver path runs <= 3 Spark jobs, the distributed path >= rounds; the gate boundary picks the path") {
+    import spark.implicits._
+    val rows = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 6L))
+    val edges = rows.toDF("u", "v")
+    val rounds = 5
+    val n = rows.size.toLong
+    // the default gate and a gate of exactly `n` rows take the driver
+    // path; `n - 1` (n = gate + 1 rows) and 0 take the distributed one
+    val byGate = Seq(2000000L -> true, n -> true, n - 1 -> false, 0L -> false).map {
+      case (gate, onDriver) =>
+        var out: org.apache.spark.sql.DataFrame = null
+        val jobs = sparkJobs { out = Graph.labelPropagation(edges, rounds, gate) }
+        if (onDriver) assert(jobs <= 3, s"gate=$gate: $jobs Spark jobs on the driver path")
+        else assert(jobs >= rounds, s"gate=$gate: $jobs Spark jobs on the distributed path")
+        out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    assert(byGate.distinct.size == 1, s"paths disagree: $byGate")
   }
 
   test("scc: planted cycles/bridges/DAG tail peel correctly; matches a brute-force closure on a seeded random digraph; partitioning-invariant") {

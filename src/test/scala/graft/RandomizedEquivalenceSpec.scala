@@ -74,22 +74,33 @@ class RandomizedEquivalenceSpec extends AnyFunSuite {
     }
   }
 
-  test("labelPropagation == local synchronous LPA simulation on 10 seeded random graphs") {
-    import spark.implicits._
-    def localLpa(edges: Seq[(Long, Long)], rounds: Int): Map[Long, Long] = {
-      val adj = (edges ++ edges.map(e => (e._2, e._1)))
-        .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2) }
-      var labels = adj.keys.map(n => n -> n).toMap
-      for (_ <- 1 to rounds) {
-        labels = adj.map { case (n, nbrs) =>
-          val counts = nbrs.groupBy(labels).map { case (l, xs) => l -> xs.size }
-          val maxC = counts.values.max
-          // most frequent neighbor label, smallest label on ties
-          n -> counts.filter(_._2 == maxC).keys.min
-        }
+  /** Local synchronous LPA: every row adds one neighbor entry in each
+    * direction (a duplicate row counts twice, a self-loop twice). */
+  private def localLpa(edges: Seq[(Long, Long)], rounds: Int): Map[Long, Long] = {
+    val adj = (edges ++ edges.map(e => (e._2, e._1)))
+      .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2) }
+    var labels = adj.keys.map(n => n -> n).toMap
+    for (_ <- 1 to rounds) {
+      labels = adj.map { case (n, nbrs) =>
+        val counts = nbrs.groupBy(labels).map { case (l, xs) => l -> xs.size }
+        val maxC = counts.values.max
+        // most frequent neighbor label, smallest label on ties
+        n -> counts.filter(_._2 == maxC).keys.min
       }
-      labels
     }
+    labels
+  }
+
+  private def lpa(edges: Seq[(Long, Long)], rounds: Int, driverGate: Long): Map[Long, Long] = {
+    import spark.implicits._
+    Graph.labelPropagation(edges.toDF("u", "v"), rounds, driverGate).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+  }
+
+  /** labelPropagation's default driver gate, then the distributed path. */
+  private val lpaGates = Seq(2000000L, 0L)
+
+  test("labelPropagation == local synchronous LPA simulation on 10 seeded random graphs") {
     for (seed <- 1 to 10) {
       val rnd = new scala.util.Random(1100 + seed)
       val nNodes = 5 + rnd.nextInt(40)
@@ -99,11 +110,33 @@ class RandomizedEquivalenceSpec extends AnyFunSuite {
         .collect { case (a, b) if a != b => (math.min(a, b), math.max(a, b)) }
         .distinct
       if (edges.nonEmpty) {
-        val got = Graph.labelPropagation(edges.toDF("u", "v"), rounds = 5).collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
-        assert(got == localLpa(edges, 5), s"seed=$seed edges=$edges")
+        for (gate <- lpaGates)
+          assert(lpa(edges, 5, gate) == localLpa(edges, 5), s"seed=$seed gate=$gate edges=$edges")
       }
     }
+  }
+
+  test("labelPropagation driver and distributed paths == local simulation on self-loops, duplicate rows, empty input and the gate boundary") {
+    // a self-loop counts twice: node 1 sees {1, 1, 5, 5, 6}, a 1-vs-5
+    // tie that goes to 1; counted once, 5 would win
+    val selfLoop = Seq((1L, 1L), (1L, 5L), (1L, 5L), (1L, 6L))
+    // a duplicated row counts twice: node 1 sees {2, 3, 3} and adopts 3
+    val dup = Seq((1L, 2L), (1L, 3L), (1L, 3L))
+    for (gate <- lpaGates) {
+      assert(lpa(selfLoop, 1, gate) == Map(1L -> 1L, 5L -> 1L, 6L -> 1L), s"gate=$gate")
+      assert(lpa(dup, 1, gate) == Map(1L -> 3L, 2L -> 1L, 3L -> 1L), s"gate=$gate")
+      for (e <- Seq(selfLoop, dup))
+        assert(lpa(e, 5, gate) == localLpa(e, 5), s"gate=$gate edges=$e")
+      assert(lpa(Seq.empty, 5, gate).isEmpty, s"gate=$gate")
+    }
+    // a small gate on 30 rows, a self-loop and a duplicate among them:
+    // exactly `gate` rows take the driver path, `gate + 1` the
+    // distributed one
+    val rnd = new scala.util.Random(1177)
+    val g = Seq.fill(27)((rnd.nextInt(12).toLong, rnd.nextInt(12).toLong)) ++
+      Seq((3L, 3L), (3L, 4L), (3L, 4L))
+    for (gate <- Seq(30L, 29L))
+      assert(lpa(g, 5, gate) == localLpa(g, 5), s"gate=$gate edges=$g")
   }
 
   test("kTruss == local support-peel simulation on 10 seeded random graphs") {
