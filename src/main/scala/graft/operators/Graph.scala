@@ -67,14 +67,13 @@ object Graph {
     * classic SSSP frontier argument). Per-round work is O(edges
     * incident to the improved set); each round is one equality join +
     * one min-aggregate + one left join back against the running
-    * distance table, all hash-partitioned on the node, with per-round
-    * eager `localCheckpoint` + [[Checkpoints.free]] keeping the plan
-    * and block manager constant-size (the 26b lesson). Early exit
-    * when a round improves nothing (the fixpoint); `maxRounds` caps
-    * the relaxation depth — note a min-WEIGHT path may use more hops
-    * than the BFS diameter, so the cap is generous and the SQL oracle
-    * unrolls the SAME number of rounds (rounds past the fixpoint are
-    * no-ops on both sides, the q_kcore oracle philosophy).
+    * distance table, all hash-partitioned on the node, run as a
+    * [[Fixpoint.delta]] loop. Early exit when a round improves
+    * nothing (the fixpoint); `maxRounds` caps the relaxation depth —
+    * note a min-WEIGHT path may use more hops than the BFS diameter,
+    * so the cap is generous and the SQL oracle unrolls the SAME
+    * number of rounds (rounds past the fixpoint are no-ops on both
+    * sides, the q_kcore oracle philosophy).
     *
     * All-integer distances (weights are integers, sums are Long), so
     * the oracle's unrolled relax-ladder must agree on every value —
@@ -91,71 +90,50 @@ object Graph {
            strict: Boolean = true): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
     val spark = edges0.sparkSession
-    val und = edges0.select(col("u").as("a"), col("v").as("b"), col("w"))
-      .unionAll(edges0.select(col("v").as("a"), col("u").as("b"), col("w")))
-      .localCheckpoint(true)
+    import spark.implicits._
+    val und = undirected(edges0, col("w")).localCheckpoint(true)
     val seedRow = und.agg(min(col("a"))).head()
     if (seedRow.isNullAt(0)) {
       Checkpoints.free(und)
-      import spark.implicits._
       return spark.emptyDataset[(Long, Long)].toDF("node", "dist")
     }
-    val seed = seedRow.getLong(0)
-    import spark.implicits._
-    var dist = Seq((seed, 0L)).toDF("node", "dist").localCheckpoint(true)
-    // Frontier carries (node, dist-at-improvement); first frontier is
-    // the seed itself.
-    var frontier = dist
-    var frontierCp: DataFrame = null
-    var round = 1
-    var continue = true
-    while (continue && round <= maxRounds) {
-      val cand = frontier.join(und, frontier("node") === und("a"))
-        .select(col("b").as("node"), (col("dist") + col("w")).as("nd"))
-        .groupBy("node").agg(min(col("nd")).as("nd"))
-      val improved = cand.join(dist, Seq("node"), "left_outer")
-        .filter(col("dist").isNull || col("nd") < col("dist"))
-        .select(col("node"), col("nd").as("dist"))
-        .localCheckpoint(true)
-      if (improved.isEmpty) {
-        Checkpoints.free(improved)
-        continue = false
-      } else {
-        val superseded = dist
-        dist = dist.join(improved, Seq("node"), "left_anti")
-          .unionAll(improved).localCheckpoint(true)
-        Checkpoints.free(superseded)
-        if (frontierCp != null) Checkpoints.free(frontierCp)
-        frontierCp = improved
-        frontier = improved
-      }
-      round += 1
-    }
-    // Fail loud when the round budget is exhausted while the frontier
-    // still improves something: a truncated result here silently
-    // diverges from any fixpoint oracle (the streamed twin relaxes to
-    // ITS fixpoint, so the two would hash-drift on a deeper graph).
-    // One extra bounded probe of the untested wave is cheap relative
-    // to the rounds already paid.
-    if (continue && strict) {
-      val leftover = frontier.join(und, frontier("node") === und("a"))
+    // one wave: the frontier's (node, dist) rows relaxed along the
+    // adjacency, kept where they beat the running distance
+    def improved(frontier: DataFrame, dist: DataFrame) =
+      frontier.join(und, frontier("node") === und("a"))
         .select(col("b").as("node"), (col("dist") + col("w")).as("nd"))
         .groupBy("node").agg(min(col("nd")).as("nd"))
         .join(dist, Seq("node"), "left_outer")
         .filter(col("dist").isNull || col("nd") < col("dist"))
-        .limit(1).count()
-      if (leftover > 0) {
-        if (frontierCp != null) Checkpoints.free(frontierCp)
-        Checkpoints.free(und)
-        throw new IllegalStateException(
-          s"sssp: round budget maxRounds=$maxRounds exhausted before " +
-            "fixpoint — distances would be truncated; raise maxRounds")
-      }
+        .select(col("node"), col("nd").as("dist"))
+    // Strict mode fails loud when the round budget is exhausted while
+    // the frontier still improves something: a truncated result here
+    // silently diverges from any fixpoint oracle (the streamed twin
+    // relaxes to ITS fixpoint, so the two would hash-drift on a deeper
+    // graph). One extra bounded probe of the untested wave is cheap
+    // relative to the rounds already paid.
+    val res = Fixpoint.delta(
+        Seq((seedRow.getLong(0), 0L)).toDF("node", "dist").localCheckpoint(true),
+        maxRounds, Seq("node"),
+        exhausted = (f, d) => !strict || improved(f, d).limit(1).count() > 0) {
+      (frontier, dist, _) => improved(frontier, dist)
     }
-    if (frontierCp != null) Checkpoints.free(frontierCp)
     Checkpoints.free(und)
-    dist
+    if (strict && !res.converged) {
+      Checkpoints.free(res.state)
+      throw new IllegalStateException(
+        s"sssp: round budget maxRounds=$maxRounds exhausted before " +
+          "fixpoint — distances would be truncated; raise maxRounds")
+    }
+    res.state
   }
+
+  /** Both directions of every (u, v) row as (a, b) rows, with the
+    * `extra` columns carried along — the adjacency the traversals
+    * read. */
+  private def undirected(edges: DataFrame, extra: Column*): DataFrame =
+    edges.select(col("u").as("a") +: col("v").as("b") +: extra: _*)
+      .unionAll(edges.select(col("v").as("a") +: col("u").as("b") +: extra: _*))
 
   /** Exact triangle count via degree-ordered wedge closure.
     *
@@ -325,36 +303,22 @@ object Graph {
     * round-budget invariance on planted graphs.
     *
     * Round cost: one degree aggregate + two LEFT SEMI joins, all
-    * keyed on node id — the CC-round shape; `localCheckpoint` per
-    * round truncates the iterative lineage (the §2.3 row 26b
-    * lesson), and the eager checkpoint's count doubles as the free
-    * fixpoint probe. Output: (node, deg) over the surviving
-    * subgraph.
+    * keyed on node id — the CC-round shape — run as a
+    * [[Fixpoint.stable]] loop whose edge count is the fixpoint probe.
+    * Output: (node, deg) over the surviving subgraph.
     */
   def kCore(edges0: DataFrame, k: Int, rounds: Int = 8): DataFrame = {
     require(k >= 1 && rounds >= 1, s"need k >= 1, rounds >= 1")
-    var edges = edges0.localCheckpoint(true)
-    var prev = edges.count()
-    var r = 0
-    var converged = false
-    while (r < rounds && !converged) {
+    val start = edges0.localCheckpoint(true)
+    val edges = Fixpoint.stable(start, start.count(), rounds,
+        Some((e: DataFrame) => e.count())) { (edges, _) =>
       val deg = edges.select(col("u").as("n")).unionAll(edges.select(col("v").as("n")))
         .groupBy("n").agg(count(lit(1)).as("d"))
       val keep = deg.filter(col("d") >= k).select("n")
-      val superseded = edges
-      edges = edges
+      edges
         .join(keep.withColumnRenamed("n", "u"), Seq("u"), "left_semi")
         .join(keep.withColumnRenamed("n", "v"), Seq("v"), "left_semi")
-        .localCheckpoint(true)
-      val c = edges.count()
-      // the new round is materialized (eager + count) — the peeled
-      // round's blocks must not outlive it (20 rounds of a 10⁹-edge
-      // graph would otherwise hold 20 edge copies in the block manager)
-      graft.operators.Checkpoints.free(superseded)
-      converged = c == prev
-      prev = c
-      r += 1
-    }
+    }.state
     edges.select(col("u").as("node")).unionAll(edges.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
   }
@@ -371,12 +335,11 @@ object Graph {
     * settled set, and the whole traversal is O(diameter) rounds like
     * propagation CC. Each round is one equality join + distinct + one
     * LEFT ANTI against the settled table (all hash-partitioned on the
-    * node — no broadcast of anything corpus-sized), with per-round
-    * eager `localCheckpoint` + [[Checkpoints.free]] so the logical
-    * plan and the block manager stay constant-size at any depth (the
-    * 26b lesson). Early exit on an empty frontier; `maxRounds` caps a
-    * pathological-diameter graph, and the SQL oracle carries the same
-    * cap so the semantics stay oracle-exact even when it binds.
+    * node — no broadcast of anything corpus-sized), run as a
+    * [[Fixpoint.delta]] loop. Early exit on an empty frontier;
+    * `maxRounds` caps a pathological-diameter graph, and the SQL
+    * oracle carries the same cap so the semantics stay oracle-exact
+    * even when it binds.
     *
     * All-integer output: the DuckDB oracle walks the same graph with
     * a recursive CTE and takes min(dist) per node — a genuinely
@@ -387,11 +350,8 @@ object Graph {
   def bfsHops(edges0: DataFrame, maxRounds: Int = 30): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
     val spark = edges0.sparkSession
-    // Undirected adjacency: each (u < v) edge in both directions. The
-    // traversal reads it every round — checkpoint once.
-    val und = edges0.select(col("u").as("a"), col("v").as("b"))
-      .unionAll(edges0.select(col("v").as("a"), col("u").as("b")))
-      .localCheckpoint(true)
+    // The traversal reads the adjacency every round — checkpoint once.
+    val und = undirected(edges0).localCheckpoint(true)
     val seedRow = und.agg(min(col("a"))).head()
     if (seedRow.isNullAt(0)) {
       Checkpoints.free(und)
@@ -486,9 +446,7 @@ object Graph {
     require(k >= 1, s"k must be >= 1, got $k")
     val spark = edges0.sparkSession
     import spark.implicits._
-    val und = edges0.select(col("u").as("a"), col("v").as("b"))
-      .unionAll(edges0.select(col("v").as("a"), col("u").as("b")))
-      .distinct().localCheckpoint(true)
+    val und = undirected(edges0).distinct().localCheckpoint(true)
     // Bounded-size gate (the stronglyConnectedComponents / topoLayers
     // / mergeMapping convention): under the gate, k-source Brandes is
     // O(k·(V+E)) driver work — sub-second — while the distributed
@@ -512,38 +470,20 @@ object Graph {
     val srcs = und.select(col("a").as("node")).distinct()
       .orderBy(col("node")).limit(k)
     // forward: (src, node, dist, sigma) level by level
-    var dist = srcs.select(col("node").as("src"), col("node"),
+    val dist0 = srcs.select(col("node").as("src"), col("node"),
       lit(0L).as("dist"), lit(1L).as("sigma")).localCheckpoint(true)
-    if (dist.isEmpty) {
+    if (dist0.isEmpty) {
       Checkpoints.free(und)
-      Checkpoints.free(dist)
+      Checkpoints.free(dist0)
       return spark.emptyDataset[(Long, Double, Long)].toDF("node", "bc", "rk")
     }
-    var frontier = dist
-    var frontierCp: DataFrame = null
-    var level = 1L
-    var continue = true
-    while (continue && level <= maxRounds) {
-      val next = frontier.join(und, frontier("node") === und("a"))
+    val dist = Fixpoint.delta(dist0, maxRounds) { (frontier, dist, level) =>
+      frontier.join(und, frontier("node") === und("a"))
         .select(col("src"), col("b").as("node"), col("sigma"))
         .join(dist.select(col("src"), col("node")), Seq("src", "node"), "left_anti")
         .groupBy("src", "node").agg(sum(col("sigma")).as("sigma"))
-        .select(col("src"), col("node"), lit(level).as("dist"), col("sigma"))
-        .localCheckpoint(true)
-      if (next.isEmpty) {
-        Checkpoints.free(next)
-        continue = false
-      } else {
-        val superseded = dist
-        dist = dist.unionAll(next).localCheckpoint(true)
-        Checkpoints.free(superseded)
-        if (frontierCp != null) Checkpoints.free(frontierCp)
-        frontierCp = next
-        frontier = next
-      }
-      level += 1
-    }
-    if (frontierCp != null) Checkpoints.free(frontierCp)
+        .select(col("src"), col("node"), lit(level.toLong).as("dist"), col("sigma"))
+    }.state
     val maxSigma = dist.agg(max(col("sigma"))).head().getLong(0)
     if (maxSigma > (1L << 52)) {
       Checkpoints.free(dist)
@@ -690,42 +630,22 @@ object Graph {
     // σ-counting adjacency ([[betweennessApprox]], which DOES
     // .distinct()) must dedup; add one here if this ever feeds path
     // COUNTS.
-    val und = edges0.select(col("u").as("a"), col("v").as("b"))
-      .unionAll(edges0.select(col("v").as("a"), col("u").as("b")))
-      .localCheckpoint(true)
+    val und = undirected(edges0).localCheckpoint(true)
     val srcs = und.select(col("a").as("node")).distinct()
       .orderBy(col("node")).limit(k)
-    var dist = srcs.select(col("node").as("src"), col("node"),
+    val dist0 = srcs.select(col("node").as("src"), col("node"),
       lit(0L).as("dist")).localCheckpoint(true)
-    if (dist.isEmpty) {
+    if (dist0.isEmpty) {
       Checkpoints.free(und)
-      Checkpoints.free(dist)
+      Checkpoints.free(dist0)
       return spark.emptyDataset[(Long, Long, Long)].toDF("src", "node", "dist")
     }
-    var frontier = dist.select("src", "node")
-    var frontierCp: DataFrame = null
-    var round = 1L
-    var continue = true
-    while (continue && round <= maxRounds) {
-      val next = frontier.join(und, frontier("node") === und("a"))
+    val dist = Fixpoint.delta(dist0, maxRounds) { (frontier, dist, round) =>
+      frontier.join(und, frontier("node") === und("a"))
         .select(col("src"), col("b").as("node")).distinct()
         .join(dist.select("src", "node"), Seq("src", "node"), "left_anti")
-        .select(col("src"), col("node"), lit(round).as("dist"))
-        .localCheckpoint(true)
-      if (next.isEmpty) {
-        Checkpoints.free(next)
-        continue = false
-      } else {
-        val superseded = dist
-        dist = dist.unionAll(next).localCheckpoint(true)
-        Checkpoints.free(superseded)
-        if (frontierCp != null) Checkpoints.free(frontierCp)
-        frontierCp = next
-        frontier = next.select("src", "node")
-      }
-      round += 1
-    }
-    if (frontierCp != null) Checkpoints.free(frontierCp)
+        .select(col("src"), col("node"), lit(round.toLong).as("dist"))
+    }.state
     Checkpoints.free(und)
     dist
   }
@@ -737,10 +657,7 @@ object Graph {
     */
   def bfsHopsFrom(edges0: DataFrame, seed: Long, maxRounds: Int = 30): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val und = edges0.select(col("u").as("a"), col("v").as("b"))
-      .unionAll(edges0.select(col("v").as("a"), col("u").as("b")))
-      .localCheckpoint(true)
-    bfsFromUnd(und, seed, maxRounds)
+    bfsFromUnd(undirected(edges0).localCheckpoint(true), seed, maxRounds)
   }
 
   /** Approximate graph diameter by DOUBLE SWEEP (Magnien, Latapy &
@@ -764,9 +681,7 @@ object Graph {
     import spark.implicits._
     // Build + checkpoint the bidirectional adjacency ONCE for both
     // sweeps (the naive two-bfsHops form materialized it twice).
-    val und = edges0.select(col("u").as("a"), col("v").as("b"))
-      .unionAll(edges0.select(col("v").as("a"), col("u").as("b")))
-      .localCheckpoint(true)
+    val und = undirected(edges0).localCheckpoint(true)
     val seedRow = und.agg(min(col("a"))).head()
     if (seedRow.isNullAt(0)) {
       Checkpoints.free(und)
@@ -793,31 +708,13 @@ object Graph {
                          freeUnd: Boolean = true): DataFrame = {
     val spark = und.sparkSession
     import spark.implicits._
-    var dist = Seq((seed, 0L)).toDF("node", "dist").localCheckpoint(true)
-    var frontier = dist.select("node")
-    var frontierCp: DataFrame = null
-    var round = 1L
-    var continue = true
-    while (continue && round <= maxRounds) {
-      val next = frontier.join(und, frontier("node") === und("a"))
+    val dist0 = Seq((seed, 0L)).toDF("node", "dist").localCheckpoint(true)
+    val dist = Fixpoint.delta(dist0, maxRounds) { (frontier, dist, round) =>
+      frontier.join(und, frontier("node") === und("a"))
         .select(col("b").as("node")).distinct()
         .join(dist, Seq("node"), "left_anti")
-        .select(col("node"), lit(round).as("dist"))
-        .localCheckpoint(true)
-      if (next.isEmpty) {
-        Checkpoints.free(next)
-        continue = false
-      } else {
-        val superseded = dist
-        dist = dist.unionAll(next).localCheckpoint(true)
-        Checkpoints.free(superseded)
-        if (frontierCp != null) Checkpoints.free(frontierCp)
-        frontierCp = next
-        frontier = next.select("node")
-      }
-      round += 1
-    }
-    if (frontierCp != null) Checkpoints.free(frontierCp)
+        .select(col("node"), lit(round.toLong).as("dist"))
+    }.state
     if (freeUnd) Checkpoints.free(und)
     dist
   }
@@ -891,24 +788,20 @@ object Graph {
   def kTruss(edges0: DataFrame, k: Int = 4, rounds: Int = 4): DataFrame = {
     require(k >= 3, s"k must be >= 3, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    var edges = edges0.select("u", "v").localCheckpoint(true)
-    var mEdges = edges.count()
-    var r = 0
-    var continue = true
-    while (continue && r < rounds && mEdges > 0) {
-      val sup = edgeSupport(edges, mEdges)
-      val kept = edges.join(sup, Seq("u", "v"), "left_outer")
-        .filter(coalesce(col("sup"), lit(0L)) >= lit((k - 2).toLong))
-        .select("u", "v")
-        .localCheckpoint(true)
-      val keptCount = kept.count()
-      Checkpoints.free(sup)
-      Checkpoints.free(edges)
-      edges = kept
-      if (keptCount == mEdges) continue = false
-      mEdges = keptCount
-      r += 1
-    }
+    val start = edges0.select("u", "v").localCheckpoint(true)
+    // each round's support table is freed once the next round (or the
+    // loop) is past the checkpoint that read it
+    var sup: DataFrame = null
+    val edges = Fixpoint.stable(start, start.count(), rounds,
+        Some((e: DataFrame) => e.count()), done = (m: Long) => m == 0L) {
+      (edges, mEdges) =>
+        if (sup != null) Checkpoints.free(sup)
+        sup = edgeSupport(edges, mEdges)
+        edges.join(sup, Seq("u", "v"), "left_outer")
+          .filter(coalesce(col("sup"), lit(0L)) >= lit((k - 2).toLong))
+          .select("u", "v")
+    }.state
+    if (sup != null) Checkpoints.free(sup)
     edges
   }
 
@@ -927,7 +820,7 @@ object Graph {
     * (Borůvka's merge step IS small-scale CC: the chosen-edge graph
     * has ≤ one out-edge per component), and now-intra-component
     * edges are dropped so later rounds shrink geometrically. All
-    * state per-round localCheckpointed + freed (the 26b lesson).
+    * state is checkpointed and freed per round, as in [[Fixpoint]].
     *
     * No SQL oracle — union-find/Borůvka is not expressible in
     * DuckDB's recursive CTEs without path enumeration — so the gate
@@ -1107,39 +1000,21 @@ object Graph {
       Checkpoints.free(dag)
       return out
     }
-    var lvl = dag.select(col("u").as("node"))
+    val lvl0 = dag.select(col("u").as("node"))
       .union(dag.select(col("v").as("node"))).distinct()
       .select(col("node"), lit(0L).as("depth")).localCheckpoint(true)
-    var frontier = lvl
-    var owned = false
-    var round = 0
-    var converged = false
-    while (!converged && round < maxRounds) {
+    val res = Fixpoint.delta(lvl0, maxRounds, Seq("node")) { (frontier, lvl, _) =>
       val pushed = frontier.join(dag, frontier("node") === dag("u"))
         .groupBy(dag("v").as("node")).agg(max(col("depth") + 1L).as("nd"))
-      val improved = lvl.join(pushed, Seq("node"))
+      lvl.join(pushed, Seq("node"))
         .filter(col("nd") > col("depth"))
         .select(col("node"), col("nd").as("depth"))
-        .localCheckpoint(true)
-      if (improved.isEmpty) {
-        Checkpoints.free(improved)
-        converged = true
-      } else {
-        val nl = lvl.join(improved, Seq("node"), "left_anti")
-          .union(improved).localCheckpoint(true)
-        Checkpoints.free(lvl)
-        if (owned) Checkpoints.free(frontier)
-        lvl = nl
-        frontier = improved
-        owned = true
-      }
-      round += 1
     }
-    if (owned) Checkpoints.free(frontier)
-    require(converged,
-      s"topoLayers did not converge in $maxRounds rounds — cyclic input?")
     Checkpoints.free(dag)
-    lvl
+    if (!res.converged) Checkpoints.free(res.state)
+    require(res.converged,
+      s"topoLayers did not converge in $maxRounds rounds — cyclic input?")
+    res.state
   }
 
   /** Driver-side longest-path layering: Kahn's topological order
@@ -1222,8 +1097,8 @@ object Graph {
     * Plan shape per round: one equality join labels⋈adjacency + one
     * (node, label) count aggregate + one arg-max-by-(count, −label)
     * aggregate — all hash-partitioned on the node, no windows over
-    * full neighbor lists, per-round localCheckpoint + [[Checkpoints
-    * .free]] (the 26b lesson). All-integer labels and counts, so the
+    * full neighbor lists, run as a [[Fixpoint.stable]] loop of exactly
+    * `rounds` rounds. All-integer labels and counts, so the
     * arg-max via `max(struct(c, −label))` is reduction-order-free.
     *
     * Bounded-size gate (the [[betweennessApprox]] convention): the
@@ -1250,7 +1125,7 @@ object Graph {
     require(driverGate < Int.MaxValue, s"driverGate out of range: $driverGate")
     val spark = edges0.sparkSession
     import spark.implicits._
-    val e = edges0.select(col("u").as("a"), col("v").as("b")).localCheckpoint(true)
+    val e = edges0.select(col("u"), col("v")).localCheckpoint(true)
     if (driverGate > 0L) {
       val head = e.as[(Long, Long)].take(driverGate.toInt + 1)
       if (head.length <= driverGate) {
@@ -1258,24 +1133,18 @@ object Graph {
         return driverLabelPropagation(head, rounds).toSeq.toDF("node", "label")
       }
     }
-    val und = e.unionAll(e.select(col("b").as("a"), col("a").as("b")))
-      .localCheckpoint(true)
+    val und = undirected(e).localCheckpoint(true)
     Checkpoints.free(e)
-    var labels = und.select(col("a").as("node")).distinct()
+    val labels0 = und.select(col("a").as("node")).distinct()
       .select(col("node"), col("node").as("label")).localCheckpoint(true)
-    var r = 0
-    while (r < rounds) {
-      val counts = labels.join(und, labels("node") === und("a"))
+    val labels = Fixpoint.stable(labels0, (), rounds, probe = None) { (labels, _) =>
+      labels.join(und, labels("node") === und("a"))
         .groupBy(col("b").as("dst"), col("label"))
         .agg(count(lit(1)).as("c"))
-      val next = counts.groupBy(col("dst").as("node"))
+        .groupBy(col("dst").as("node"))
         .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
         .select(col("node"), (-col("m.nl")).as("label"))
-        .localCheckpoint(true)
-      Checkpoints.free(labels)
-      labels = next
-      r += 1
-    }
+    }.state
     Checkpoints.free(und)
     labels
   }
@@ -1451,8 +1320,8 @@ object Graph {
       s"widths must be powers of two, got $minWidth/$width")
     val minW = math.min(minWidth, width) // a sub-minWidth width disables adaptation
     val spark = edges0.sparkSession
-    var edges = edges0.localCheckpoint(true)
-    var prev = edges.count()
+    val loaded = edges0.localCheckpoint(true)
+    val m0 = loaded.count()
     // CPU-grain re-split (guide §2.5 input-skew corollary): every
     // round evaluates depth md5 probes PER ENDPOINT over all edges —
     // microseconds-per-row work, so a partitioning that AQE coalesced
@@ -1462,15 +1331,14 @@ object Graph {
     // parallelism; the filter rounds below preserve the layout.
     // Pure repartition — results are partitioning-invariant.
     val cpuGrain = math.min(spark.sparkContext.defaultParallelism.toLong,
-      math.max(1L, prev / 65536L)).toInt
-    if (edges.rdd.getNumPartitions < cpuGrain) {
-      val superseded0 = edges
-      edges = edges.repartition(cpuGrain).localCheckpoint(true)
-      Checkpoints.free(superseded0)
+      math.max(1L, m0 / 65536L)).toInt
+    val start = if (loaded.rdd.getNumPartitions >= cpuGrain) loaded else {
+      val split = loaded.repartition(cpuGrain).localCheckpoint(true)
+      Checkpoints.free(loaded)
+      split
     }
-    var r = 0
-    var converged = false
-    while (r < rounds && !converged) {
+    val edges = Fixpoint.stable(start, m0, rounds,
+        Some((e: DataFrame) => e.count())) { (edges, prev) =>
       val w = adaptiveWidth(prev, width, minW, loadFactor)
       roundStats.foreach(_ += ((prev, w)))
       val cmUdaf = udaf(new graft.functions.CountMinAggregator(depth, w),
@@ -1479,17 +1347,9 @@ object Graph {
         .select(explode(array(col("u").cast("string"), col("v").cast("string"))).as("n"))
         .agg(cmUdaf(col("n")).as("s")).head().getSeq[Long](0)
       val sketch = (0 until depth).map(j => sk.slice(j * w, (j + 1) * w))
-      val superseded = edges
-      edges = edges
-        .filter(cmsEstimate(col("u"), sketch, w) >= k &&
-          cmsEstimate(col("v"), sketch, w) >= k)
-        .localCheckpoint(true)
-      val c = edges.count()
-      Checkpoints.free(superseded)
-      converged = c == prev
-      prev = c
-      r += 1
-    }
+      edges.filter(cmsEstimate(col("u"), sketch, w) >= k &&
+        cmsEstimate(col("v"), sketch, w) >= k)
+    }.state
     edges.select(col("u").as("node")).unionAll(edges.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
   }
@@ -1601,7 +1461,7 @@ object Graph {
     // exit only when BOTH directions saturate; extra rounds for an
     // already-saturated direction are no-ops, so budget semantics
     // are unchanged.
-    var lab = nodes.select(col("node"), col("node").as("fmin"),
+    val lab0 = nodes.select(col("node"), col("node").as("fmin"),
         col("node").as("bmin"))
       .localCheckpoint(true)
     def labelSum(df: DataFrame): (Long, Long) = {
@@ -1609,25 +1469,16 @@ object Graph {
         coalesce(sum(col("bmin")), lit(0L))).head
       (row.getLong(0), row.getLong(1))
     }
-    var prevSum = labelSum(lab)
-    var r = 0
-    var converged = false
-    while (r < rounds && !converged) {
+    val lab = Fixpoint.stable(lab0, labelSum(lab0), rounds,
+        Some(labelSum _)) { (lab, _) =>
       val nullL = lit(null).cast("long")
       val pushedF = lab.join(edges, lab("node") === edges("u"))
         .select(edges("v").as("node"), col("fmin"), nullL.as("bmin"))
       val pushedB = lab.join(edges, lab("node") === edges("v"))
         .select(edges("u").as("node"), nullL.as("fmin"), col("bmin"))
-      val next = lab.unionByName(pushedF).unionByName(pushedB)
+      lab.unionByName(pushedF).unionByName(pushedB)
         .groupBy("node").agg(min("fmin").as("fmin"), min("bmin").as("bmin"))
-        .localCheckpoint(true)
-      val s = labelSum(next)
-      converged = s == prevSum
-      prevSum = s
-      Checkpoints.free(lab)
-      lab = next
-      r += 1
-    }
+    }.state
     Checkpoints.free(edges)
     Checkpoints.free(nodes)
     lab
@@ -1698,8 +1549,9 @@ object Graph {
     * (3) extract every pivot's SCC simultaneously, remove, repeat.
     *
     * Every inner step is one equality join + one min aggregate on
-    * the node key (hash-partitioned, frontier-bounded), with
-    * per-round localCheckpoint + free (the 26b lineage lesson).
+    * the node key (hash-partitioned, frontier-bounded); the forward
+    * coloring is a [[Fixpoint.delta]] loop, and the trim and backward
+    * loops checkpoint every round too.
     * Outer rounds: TRIM passes peel no-in/no-out nodes as singleton
     * SCCs before every coloring (the classic FW-BW trim — a pure
     * DAG, the one-pivot-per-round adversary, dissolves entirely in
@@ -1773,37 +1625,21 @@ object Graph {
         .select(col("u"), col("v")).localCheckpoint(true)
       // forward min-label fixpoint, DELTA-propagated: only nodes
       // whose color just improved feed the next round's join (the
-      // q_bfs frontier discipline), and the improvement set doubles
-      // as the convergence test — no full-table change-count join.
-      var colors = remaining.select(col("node"), col("node").as("color"))
-        .localCheckpoint(true)
-      var fwdFrontier = colors // round 0: every node is its own new color
-      var fwdOwned = false // frontier aliases colors until first delta
-      var inner = 0
-      var converged = false
-      while (!converged && inner < maxInner) {
-        val incoming = fwdFrontier.join(e, fwdFrontier("node") === e("u"))
+      // q_bfs frontier discipline; round 1's frontier is every node
+      // as its own color), and the improvement set doubles as the
+      // convergence test — no full-table change-count join.
+      val fwd = Fixpoint.delta(
+          remaining.select(col("node"), col("node").as("color")).localCheckpoint(true),
+          maxInner, Seq("node")) { (frontier, colors, _) =>
+        val incoming = frontier.join(e, frontier("node") === e("u"))
           .groupBy(col("v").as("node")).agg(min(col("color")).as("inc"))
-        val improved = colors.join(incoming, Seq("node"))
+        colors.join(incoming, Seq("node"))
           .filter(col("inc") < col("color"))
           .select(col("node"), col("inc").as("color"))
-          .localCheckpoint(true)
-        if (improved.isEmpty) {
-          Checkpoints.free(improved)
-          converged = true
-        } else {
-          val nc = colors.join(improved, Seq("node"), "left_anti")
-            .union(improved).localCheckpoint(true)
-          Checkpoints.free(colors)
-          if (fwdOwned) Checkpoints.free(fwdFrontier)
-          colors = nc
-          fwdFrontier = improved
-          fwdOwned = true
-        }
-        inner += 1
       }
-      if (fwdOwned) Checkpoints.free(fwdFrontier)
-      require(converged,
+      val colors = fwd.state
+      if (!fwd.converged) Seq(colors, e, remaining, result, edges).foreach(Checkpoints.free)
+      require(fwd.converged,
         s"SCC forward coloring did not reach a fixpoint in $maxInner rounds")
       // backward confirmation within each class, all pivots at once:
       // seed = the pivots (color(c) = c); expand along REVERSED edges
@@ -1823,8 +1659,8 @@ object Graph {
         scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.DataFrame](pivots)
       var reached = pivots // lazily-built union of checkpointed deltas
       var bwdFrontier = pivots
-      inner = 0
-      converged = false
+      var inner = 0
+      var converged = false
       while (!converged && inner < maxInner) {
         // a node has exactly one color and ecol is same-color-
         // restricted, so the anti join can key on node alone

@@ -1098,14 +1098,6 @@ object GraphStreams {
     * unit of pruned dist reads (the 37l/37q read shape). */
   private[graft] val DistBuckets = 16
 
-  /** Overlay fold threshold for the relaxation family's base+overlay
-    * current-best view: once a batch's improvement wave exceeds this
-    * many rows (a cold-start full build — the only case a wave
-    * approaches store size) it folds into the pinned base so the
-    * per-round overlay join stays small. Sized like the suffix
-    * broadcastKeyLimit: ~64 MB of (node, dist) rows. */
-  private[graft] val OverlayFoldRows = 4000000L
-
   private def distBucketCol(c: org.apache.spark.sql.Column) =
     pmod(c, lit(DistBuckets.toLong))
 
@@ -1155,39 +1147,10 @@ object GraphStreams {
       // ONLY the buckets its candidate nodes fall in — a
       // distance-neutral batch touches the batch-endpoint buckets
       // and nothing else, never the whole store.
-      //
-      // BASE + OVERLAY current-best view (r16, guide §2.4 / the r15
-      // verdict's "stop re-shuffling the dist table every round"):
-      // the loaded store pins ONCE as `base` — hash-partitioned AND
-      // sorted on node, both preserved through localCheckpoint — so
-      // every round's improvement join re-uses that layout with ZERO
-      // exchange, zero sort and zero rebuild on the big side; only
-      // the round's (tiny) candidate wave shuffles. The improvements
-      // accumulate in `ovParts` (this batch's wave — exactly the
-      // claim parts already being written), folded min-per-node
-      // lazily inside each round's test join instead of being merged
-      // into a full re-materialized dist every round (the r15 lazy-
-      // fold attempt folded base AND claims per round and lost; the
-      // overlay here is only the wave, never the store). When the
-      // wave outgrows `OverlayFoldRows` (a cold-start full build at
-      // scale) it folds into a re-pinned base, so the per-round
-      // overlay join stays bounded. current-best = least(base, ov) —
-      // row-for-row the old incrementally-maintained dist, so the
-      // improved sets (and the claims written) are byte-identical.
       val distStoreExists = hasVisibleData(spark, distPath)
       val loaded = scala.collection.mutable.Set.empty[Long]
-      // base partition count: scale-adaptive from the store's on-disk
-      // bytes (the withSizedStatePartitions rule — 64 MB target,
-      // capped at the session's parallelism; 1 for a fixture store)
-      val baseParts = {
-        val bytes = StreamState.inputBytes(spark, Seq(distPath))
-        math.min(spark.sparkContext.defaultParallelism.toLong,
-          math.max(1L, bytes / (64L << 20) + 1L)).toInt
-      }
-      def pin(df: org.apache.spark.sql.DataFrame) = df
-        .repartition(baseParts, col("node")).sortWithinPartitions("node")
-        .localCheckpoint(true)
-      var base = pin(Seq.empty[(Long, Long)].toDF("node", "dist"))
+      var dist = Seq.empty[(Long, Long)].toDF("node", "dist")
+      var distCp: org.apache.spark.sql.DataFrame = null
       def ensureLoaded(buckets: Seq[Long]): Unit = {
         val need = buckets.filterNot(loaded)
         if (need.nonEmpty) {
@@ -1196,11 +1159,10 @@ object GraphStreams {
             val add = spark.read.parquet(distPath)
               .filter(col("db").isin(need: _*))
               .groupBy("node").agg(min("dist").as("dist"))
-            val superseded = base
-            // loads are bucket-disjoint from everything already in
-            // base, so the re-pin is a pure union, no re-fold
-            base = pin(base.unionAll(add))
-            graft.operators.Checkpoints.free(superseded)
+            val superseded = distCp
+            dist = dist.unionAll(add).localCheckpoint(true)
+            distCp = dist
+            if (superseded != null) graft.operators.Checkpoints.free(superseded)
           }
           loaded ++= need
         }
@@ -1217,36 +1179,15 @@ object GraphStreams {
       ensureLoaded(bucketsOf(batch.select(col("u").as("node"))
         .unionAll(batch.select(col("v").as("node")))
         .unionAll(Seq(seed).toDF("node"))))
-      val claimParts = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-      var ovParts = List.empty[org.apache.spark.sql.DataFrame]
-      var ovRows = 0L
-      // overlay-fold checkpoints are view-only state (claims are
-      // written from claimParts alone) — tracked here just to free
-      val ovFolds = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-      // test `cand` against current-best = least(base, overlay): one
-      // exchange-free sorted join against the pinned base + one tiny
-      // join against the folded wave
-      def improvedOf(cand: org.apache.spark.sql.DataFrame) = {
-        val withBase = cand
-          .join(base.withColumnRenamed("dist", "bd"), Seq("node"), "left_outer")
-        val tested = ovParts match {
-          case Nil => withBase.withColumn("old", col("bd"))
-          case ps => withBase
-            .join(ps.reduce(_ unionAll _)
-              .groupBy("node").agg(min("dist").as("od")), Seq("node"), "left_outer")
-            .withColumn("old", least(col("bd"), col("od")))
-        }
-        tested.filter(col("old").isNull || col("dist") < col("old"))
-          .select("node", "dist")
-      }
       // Initial claims: the standing seed claim (first batch, or a
       // no-op improvement afterwards) + one-hop relaxations of the
       // NEW edges from currently-known distances.
-      val hop = base.join(bidir(batch), col("node") === col("a"))
+      val hop = dist.join(bidir(batch), col("node") === col("a"))
         .select(col("b").as("node"), (col("dist") + col("w")).as("nd"))
         .groupBy("node").agg(min("nd").as("dist"))
       var cand = Seq((seed, 0L)).toDF("node", "dist").unionAll(hop)
       var candCp: org.apache.spark.sql.DataFrame = null
+      val claimParts = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
       var round = 0
       var continue = true
       while (continue && round <= maxRounds) {
@@ -1257,38 +1198,21 @@ object GraphStreams {
           ensureLoaded(bucketsOf(candCp.select("node")))
           candCp
         } else cand
-        val improved = improvedOf(candEval).localCheckpoint(true)
-        val nImproved = improved.count()
-        if (nImproved == 0L) {
+        val improved = candEval
+          .join(dist.withColumnRenamed("dist", "old"), Seq("node"), "left_outer")
+          .filter(col("old").isNull || col("dist") < col("old"))
+          .select("node", "dist")
+          .localCheckpoint(true)
+        if (improved.isEmpty) {
           graft.operators.Checkpoints.free(improved)
           continue = false
         } else {
           claimParts += improved
-          ovParts ::= improved
-          ovRows += nImproved
-          if (ovRows > OverlayFoldRows) {
-            // cold-start-scale wave: fold it into a re-pinned base so
-            // the per-round overlay stays small (amortized — at most
-            // every OverlayFoldRows of growth)
-            val superseded = base
-            base = pin(base.unionAll(ovParts.reduce(_ unionAll _))
-              .groupBy("node").agg(min("dist").as("dist")))
-            graft.operators.Checkpoints.free(superseded)
-            ovParts = Nil
-            ovRows = 0L
-          } else if (ovParts.length >= 8) {
-            // deep small wave (a 30-round chain): collapse the part
-            // list into one tiny checkpoint so the per-round view
-            // plan and its task count stay bounded instead of
-            // growing a part per round (the r15 revert's failure
-            // mode — there the fold dragged the whole STORE along;
-            // this folds only the batch's wave)
-            val folded = ovParts.reduce(_ unionAll _)
-              .groupBy("node").agg(min("dist").as("dist"))
-              .localCheckpoint(true)
-            ovFolds += folded
-            ovParts = List(folded)
-          }
+          val superseded = distCp
+          dist = dist.join(improved, Seq("node"), "left_anti")
+            .unionAll(improved).localCheckpoint(true)
+          distCp = dist
+          if (superseded != null) graft.operators.Checkpoints.free(superseded)
           cand = improved.join(adj(), col("node") === col("a"))
             .select(col("b").as("node"), (col("dist") + col("w")).as("nd"))
             .groupBy("node").agg(min("nd").as("dist"))
@@ -1303,7 +1227,10 @@ object GraphStreams {
       if (continue) {
         val lastCand = cand.localCheckpoint(true)
         if (trackingNeeded) ensureLoaded(bucketsOf(lastCand.select("node")))
-        val leftover = improvedOf(lastCand).limit(1).count()
+        val leftover = lastCand
+          .join(dist.withColumnRenamed("dist", "old"), Seq("node"), "left_outer")
+          .filter(col("old").isNull || col("dist") < col("old"))
+          .limit(1).count()
         graft.operators.Checkpoints.free(lastCand)
         if (leftover > 0) throw new IllegalStateException(
           s"relaxBatch: maxRounds=$maxRounds exhausted before fixpoint " +
@@ -1319,10 +1246,9 @@ object GraphStreams {
           .write.mode("append").partitionBy("db").parquet(distPath)
       }
       claimParts.foreach(graft.operators.Checkpoints.free)
-      ovFolds.foreach(graft.operators.Checkpoints.free)
       if (candCp != null) graft.operators.Checkpoints.free(candCp)
       if (und != null) graft.operators.Checkpoints.free(und)
-      graft.operators.Checkpoints.free(base)
+      if (distCp != null) graft.operators.Checkpoints.free(distCp)
       cfs.mkdirs(commitDir)
       cfs.create(marker, true).close()
     } finally batch.unpersist()

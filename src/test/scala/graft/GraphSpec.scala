@@ -14,6 +14,10 @@ class GraphSpec extends AnyFunSuite {
     pairs.toDF("u", "v")
   }
 
+  /** Ids of the RDDs persisted right now (eager checkpoints included):
+    * what an operator leaves behind is the difference across its call. */
+  private def persistedIds = spark.sparkContext.getPersistentRDDs.keySet
+
   /** labelPropagation's default driver gate, then the distributed path. */
   private val lpaGates = Seq(2000000L, 0L)
 
@@ -399,10 +403,14 @@ class GraphSpec extends AnyFunSuite {
     // strict (the entry default) fails LOUD on the same truncation
     // instead of returning distances that would hash-drift from a
     // fixpoint oracle
+    val before = persistedIds
     val e = intercept[IllegalStateException] {
       Graph.sssp(edges, maxRounds = 1).collect()
     }
     assert(e.getMessage.contains("exhausted before fixpoint"))
+    // ... and frees every checkpoint it made before throwing
+    val leaked = persistedIds -- before
+    assert(leaked.isEmpty, s"sssp left checkpoints behind on the fail-loud path: $leaked")
   }
 
   test("sssp: ring relaxes in both directions; later rounds improve earlier estimates") {
@@ -562,11 +570,14 @@ class GraphSpec extends AnyFunSuite {
       Graph.topoLayers(edgeDf(Seq((1L, 2L), (2L, 1L))), maxRounds = 5)
     }
     assert(ex.getMessage.contains("cyclic"))
+    val beforeDist = persistedIds
     val exd = intercept[IllegalArgumentException] {
       Graph.topoLayers(edgeDf(Seq((1L, 2L), (2L, 1L))), maxRounds = 5,
         driverGate = 0L)
     }
     assert(exd.getMessage.contains("cyclic"))
+    val leaked = persistedIds -- beforeDist
+    assert(leaked.isEmpty, s"topoLayers left checkpoints behind on the cyclic input: $leaked")
     // empty input -> empty layering
     assert(Graph.topoLayers(edgeDf(Seq.empty)).isEmpty)
     // driver-gate invariance (the driverTarjan convention): the
@@ -718,6 +729,52 @@ class GraphSpec extends AnyFunSuite {
     assert(byGate.distinct.size == 1, s"paths disagree: $byGate")
   }
 
+  test("round-loop job counts: each iterative operator runs a pinned number of Spark jobs per call on one fixed graph") {
+    import spark.implicits._
+    val pairs = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (2L, 4L), (4L, 5L),
+      (5L, 6L), (4L, 6L), (6L, 7L), (7L, 8L), (10L, 11L))
+    val und = edgeDf(pairs)
+    val weighted = pairs.map { case (u, v) => (u, v, (u + v) % 5 + 1) }.toDF("u", "v", "w")
+    val digraph = edgeDf(Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L),
+      (5L, 4L), (5L, 6L), (6L, 7L), (7L, 8L), (8L, 6L), (10L, 11L)))
+    // Jobs of one call plus collecting its result (gated operators at
+    // driverGate = 0). Every round's checkpoint and probe is a job, so
+    // an added or dropped per-round action moves these. AQE is off
+    // while counting: with it on, the counts for betweennessApprox and
+    // SCC changed from run to run of the same code; with it off every
+    // count repeats.
+    val expected = Seq[(String, Int, () => Any)](
+      ("sssp", 31, () => Graph.sssp(weighted).collect()),
+      ("bfsHops", 29, () => Graph.bfsHops(und).collect()),
+      ("bfsHopsFrom", 20, () => Graph.bfsHopsFrom(und, 5L).collect()),
+      ("diameterDoubleSweep", 56, () => Graph.diameterDoubleSweep(und).collect()),
+      ("bfsHopHistogram", 30, () => Graph.bfsHopHistogram(und, k = 3).collect()),
+      ("harmonicCentrality", 30,
+        () => Graph.harmonicCentrality(und, k = 3, topK = 5).collect()),
+      ("betweennessApprox", 50,
+        () => Graph.betweennessApprox(und, k = 3, topK = 5, driverGate = 0L).collect()),
+      ("topoLayers", 39, () => Graph.topoLayers(und, driverGate = 0L).collect()),
+      ("stronglyConnectedComponents", 176,
+        () => Graph.stronglyConnectedComponents(digraph, driverGate = 0L).collect()),
+      ("kCore", 12, () => Graph.kCore(und, 2).collect()),
+      ("kTruss", 17, () => Graph.kTruss(und, k = 3).collect()),
+      ("kCoreApprox", 12,
+        () => Graph.kCoreApprox(und, 2, width = 256, minWidth = 64).collect()),
+      ("minLabelFlood", 37, () => Graph.minLabelFlood(digraph).collect()),
+      ("labelPropagation", 14, () => Graph.labelPropagation(und, 5, 0L).collect()))
+    val aqe = "spark.sql.adaptive.enabled"
+    val saved = spark.conf.getOption(aqe)
+    spark.conf.set(aqe, "false")
+    val off = try expected.flatMap { case (name, want, call) =>
+      val jobs = sparkJobs { call() }
+      if (jobs != want) Some(s"$name: $jobs jobs, pinned $want") else None
+    } finally saved match {
+      case Some(v) => spark.conf.set(aqe, v)
+      case None => spark.conf.unset(aqe)
+    }
+    assert(off.isEmpty, off.mkString("; "))
+  }
+
   test("scc: planted cycles/bridges/DAG tail peel correctly; matches a brute-force closure on a seeded random digraph; partitioning-invariant") {
     def asMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -767,6 +824,16 @@ class GraphSpec extends AnyFunSuite {
     assert(Graph.stronglyConnectedComponents(edgeDf(Seq.empty)).count() == 0)
     assert(Graph.stronglyConnectedComponents(
       edgeDf(Seq.empty), driverGate = 0L).count() == 0)
+    // a 10-ring needs 9 coloring rounds: at maxInner = 2 the distributed
+    // path fails loud, with every checkpoint it made freed
+    val ring = edgeDf((0L until 10L).map(i => (i, (i + 1) % 10)))
+    val before = persistedIds
+    val ex = intercept[IllegalArgumentException] {
+      Graph.stronglyConnectedComponents(ring, maxInner = 2, driverGate = 0L)
+    }
+    assert(ex.getMessage.contains("did not reach a fixpoint"))
+    val leaked = persistedIds -- before
+    assert(leaked.isEmpty, s"SCC left checkpoints behind on the fail-loud path: $leaked")
   }
 
   test("co-purchase weighted edges: canonical, multiplicity-derived lengths in [1, 9]") {
