@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: times every SparkEntry query at the SPARK_GRAFT_SF_DIR
   * scale factor and prints one JSON line.
@@ -159,30 +159,37 @@ object Bench {
     s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"calibration":$calibration,"calibration_end":$calibrationEnd,"warmup":${jsonString(warmup)},"queries":$qs,"passes":$ps,"contaminated":$cs,"sf":${jsonString(sfDir)}}"""
   }
 
+  /** Force FULL materialization through the noop sink, never
+    * count(): count() lets Catalyst eliminate unreferenced
+    * left-join branches whose build side is unique on the join key,
+    * silently un-pricing them — measured r12: mm_phash_dedup
+    * "cost" 0.15 s under count() while its near-dup degree branch
+    * (the whole 26.8M-candidate pipeline) was optimized away; the
+    * honest all-columns price is ~16 s. The driver's correctness
+    * path always wrote full parquet, so only the bench was lied to.
+    */
+  private[graft] def force(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** The isolation rule: unpersist every persisted RDD, so the next
+    * timed pass starts from a clean block manager. */
+  private[graft] def clearPersisted(spark: SparkSession): Unit =
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+
+  /** One timed pass of a query: built, forced and isolated. A failed
+    * pass is -1.0. */
+  private[graft] def timeOnce(spark: SparkSession, sfDir: String,
+                              fn: (SparkSession, String) => DataFrame): Double = {
+    val t0 = System.nanoTime()
+    try force(fn(spark, sfDir)) catch { case _: Throwable => return -1.0 }
+    finally clearPersisted(spark)
+    (System.nanoTime() - t0) / 1e9
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local()
     val calibration = calibrationProbe(spark)
-    def clearPersisted(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
-    // Force FULL materialization through the noop sink, never
-    // count(): count() lets Catalyst eliminate unreferenced
-    // left-join branches whose build side is unique on the join key,
-    // silently un-pricing them — measured r12: mm_phash_dedup
-    // "cost" 0.15 s under count() while its near-dup degree branch
-    // (the whole 26.8M-candidate pipeline) was optimized away; the
-    // honest all-columns price is ~16 s. The driver's correctness
-    // path always wrote full parquet, so only the bench was lied to.
-    def force(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { force(fn(spark, sfDir)) } catch { case _: Throwable => return -1.0 }
-      finally clearPersisted()
-      (System.nanoTime() - t0) / 1e9
-    }
     // One untimed warmup pass over every query before the timed loop.
     // Rationale: the first plans a fresh JVM executes pay session
     // cold-start — Janino/whole-stage-codegen compiler init, parquet
@@ -206,7 +213,7 @@ object Bench {
     if (warmupMode != "probe") {
       SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
         try force(fn(spark, sfDir)) catch { case _: Throwable => () }
-        clearPersisted()
+        clearPersisted(spark)
       }
     }
     val baselineFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_BASELINE", "bench_out.json")
@@ -223,7 +230,7 @@ object Bench {
     // The `passes` array in the artifact discloses which was run.
     val nPasses = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt
     var results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val ps = (0 until math.max(1, nPasses)).map(_ => timeOnce(fn))
+      val ps = (0 until math.max(1, nPasses)).map(_ => timeOnce(spark, sfDir, fn))
       (name, if (ps.exists(_ < 0)) -1.0 else ps.min, ps)
     }
     // third pass of flagged windows at session end: a contention
@@ -241,7 +248,7 @@ object Bench {
     if (flagged.nonEmpty) {
       results = results.map { case (name, v, passes) =>
         if (flagged(name)) {
-          val c = timeOnce(SparkEntry.queries(name))
+          val c = timeOnce(spark, sfDir, SparkEntry.queries(name))
           (name, if (v < 0 || c < 0) v else math.min(v, c), passes :+ c)
         } else (name, v, passes)
       }

@@ -505,7 +505,7 @@ object SparkEntry {
     "dedup_cdc" -> ((s, dir) => Dedup.cdcDedup(Tables.documents(s, dir), 8, 63)),
     // LBFS minimum-chunk rule: boundaries closer than minLen to the
     // last kept one are suppressed (sequential fold) -- kills the
-    // tiny-chunk noise tail CdcRehearsal measured at 10^7 chunks
+    // tiny-chunk noise tail SURVEY §5's CDC rehearsal measured at 10^7 chunks
     "dedup_cdc_min" -> ((s, dir) => Dedup.cdcDedupMin(Tables.documents(s, dir), 8, 63, 16)),
     // the FULL LBFS size envelope: min rule + forced boundaries at
     // maxLen -- bounds the worst-case chunk a low-entropy run can emit

@@ -1089,7 +1089,7 @@ object Dedup {
     * suppressed when it lands fewer than `minLen` characters after
     * the previous KEPT boundary (a sequential left fold over the
     * ascending candidate list — `aggregate`, still one pure per-row
-    * expression chain, no shuffle). CdcRehearsal at 10⁷ chunks is
+    * expression chain, no shuffle). SURVEY §5's CDC rehearsal at 10⁷ chunks is
     * why this exists: with an expected length of only mask+1, the
     * geometric boundary spacing emits a long tail of tiny chunks
     * (sub-25-char content like `"q17 w"` carries no identifying

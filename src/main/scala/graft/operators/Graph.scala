@@ -986,7 +986,7 @@ object Graph {
     import spark.implicits._
     val dag = dag0.select(col("u"), col("v"))
       .filter(col("u") =!= col("v")).distinct().localCheckpoint(true)
-    // the driverTarjan convention (SccRehearsal-justified): the input
+    // the driverTarjan convention (SURVEY §5's SCC rehearsal): the input
     // here is a CONDENSATION — provably no larger than the raw edge
     // set and usually orders of magnitude smaller — and the
     // distributed fixpoint pays rounds = DAG depth of per-round job
@@ -1359,7 +1359,7 @@ object Graph {
     * vs what the degree-ordered orientation generates
     * (Σ C(outdeg, 2), provably O(m^1.5) total). The pair to check
     * before running [[triangleCount]] on a new graph, and the number
-    * [[graft.GraphRehearsal]] records at scale.
+    * SURVEY §5's triangle hub-skew rehearsal records at scale.
     */
   /** Global clustering coefficient: 3·triangles / wedges — "of all
     * two-paths, how many close" — THE one-number cohesion summary
@@ -1680,6 +1680,8 @@ object Graph {
         }
         inner += 1
       }
+      if (!converged)
+        (reachedParts ++ Seq(colors, ecol, e, remaining, result, edges)).foreach(Checkpoints.free)
       require(converged,
         s"SCC backward confirmation did not converge in $maxInner rounds")
       val sccRows = reached.select(col("node"), col("color").as("scc_label"))
@@ -1696,8 +1698,9 @@ object Graph {
       outer += 1
       }
     }
-    require(remaining.isEmpty,
-      s"SCC decomposition did not finish in $maxOuter outer rounds")
+    val finished = remaining.isEmpty
+    if (!finished) Seq(remaining, result, edges).foreach(Checkpoints.free)
+    require(finished, s"SCC decomposition did not finish in $maxOuter outer rounds")
     Checkpoints.free(edges)
     result
   }

@@ -779,7 +779,7 @@ object GraphStreams {
     * compaction actually ran, so callers/specs can observe the
     * cadence.
     *
-    * Threshold basis (SccRehearsal, §5): every batch's resolve folds
+    * Threshold basis (SURVEY §5's SCC rehearsal): every batch's resolve folds
     * the closed merge map on the driver and broadcasts it, so
     * per-batch cost grows linearly in log size while the compaction
     * pays one labels rewrite — at ratio 0.5 the amortized fold cost
@@ -1101,6 +1101,12 @@ object GraphStreams {
   private def distBucketCol(c: org.apache.spark.sql.Column) =
     pmod(c, lit(DistBuckets.toLong))
 
+  /** Free a relaxation batch's checkpoints: its claim parts and the
+    * candidate, adjacency and distance checkpoints it may have made. */
+  private def freeCheckpoints(claimParts: Iterable[org.apache.spark.sql.DataFrame],
+                              cps: org.apache.spark.sql.DataFrame*): Unit =
+    (claimParts ++ cps.filter(_ != null)).foreach(graft.operators.Checkpoints.free)
+
   private def relaxBatch(batch0: org.apache.spark.sql.DataFrame,
                          batchId: Long, statePath: String,
                          seed: Long, maxRounds: Int, weighted: Boolean): Unit = {
@@ -1232,9 +1238,12 @@ object GraphStreams {
           .filter(col("old").isNull || col("dist") < col("old"))
           .limit(1).count()
         graft.operators.Checkpoints.free(lastCand)
-        if (leftover > 0) throw new IllegalStateException(
-          s"relaxBatch: maxRounds=$maxRounds exhausted before fixpoint " +
-            s"in batch $batchId — raise maxRoundsPerBatch")
+        if (leftover > 0) {
+          freeCheckpoints(claimParts, candCp, und, distCp)
+          throw new IllegalStateException(
+            s"relaxBatch: maxRounds=$maxRounds exhausted before fixpoint " +
+              s"in batch $batchId — raise maxRoundsPerBatch")
+        }
       }
       if (claimParts.nonEmpty) {
         // cluster by bucket so the write lands ~one file per bucket,
@@ -1245,10 +1254,7 @@ object GraphStreams {
           .repartition(col("db"))
           .write.mode("append").partitionBy("db").parquet(distPath)
       }
-      claimParts.foreach(graft.operators.Checkpoints.free)
-      if (candCp != null) graft.operators.Checkpoints.free(candCp)
-      if (und != null) graft.operators.Checkpoints.free(und)
-      if (distCp != null) graft.operators.Checkpoints.free(distCp)
+      freeCheckpoints(claimParts, candCp, und, distCp)
       cfs.mkdirs(commitDir)
       cfs.create(marker, true).close()
     } finally batch.unpersist()
@@ -1499,9 +1505,12 @@ object GraphStreams {
           .filter(col("old").isNull || col("dist") < col("old"))
           .limit(1).count()
         graft.operators.Checkpoints.free(lastCand)
-        if (leftover > 0) throw new IllegalStateException(
-          s"multiBfsBatch: maxRounds=$maxRounds exhausted before fixpoint " +
-            s"in batch $batchId — raise maxRounds")
+        if (leftover > 0) {
+          freeCheckpoints(claimParts, candCp, und, distCp)
+          throw new IllegalStateException(
+            s"multiBfsBatch: maxRounds=$maxRounds exhausted before fixpoint " +
+              s"in batch $batchId — raise maxRounds")
+        }
       }
       if (claimParts.nonEmpty) {
         claimParts.reduce(_ unionAll _)
@@ -1510,10 +1519,7 @@ object GraphStreams {
           .write.mode("append").partitionBy("db").parquet(distPath)
       }
       srcs.toDF("s").coalesce(1).write.mode("overwrite").parquet(srcsPath)
-      claimParts.foreach(graft.operators.Checkpoints.free)
-      if (candCp != null) graft.operators.Checkpoints.free(candCp)
-      if (und != null) graft.operators.Checkpoints.free(und)
-      if (distCp != null) graft.operators.Checkpoints.free(distCp)
+      freeCheckpoints(claimParts, candCp, und, distCp)
       cfs.mkdirs(commitDir)
       cfs.create(marker, true).close()
     } finally { batch.unpersist(); () }

@@ -454,7 +454,7 @@ object IngestStreams {
       q.awaitTermination()
     }
     // fold the drained deltas so the entry's resolve exercises the
-    // compacted path (the IndexRehearsal finding: un-folded per-shard
+    // compacted path (SURVEY §5's inverted-index rehearsal: un-folded per-shard
     // dirs cost more than they save — the deployed cadence is
     // ingest → compact → query)
     bm25Compact(spark, state)
@@ -2705,7 +2705,7 @@ object IngestStreams {
     // file — without this the rewrite keeps one file per shuffle
     // partition per bucket and the file count (what bounds per-batch
     // pruned-read listing cost) never actually shrinks (measured in
-    // SpansRehearsal: 1024 delta files -> 16 after compaction)
+    // SURVEY §5's span-dedup rehearsal: 1024 delta files -> 16 after compaction)
     merged.repartition(col("wb"))
       .write.mode("overwrite").partitionBy("wb").parquet(winPath)
     graft.operators.Checkpoints.free(merged)
@@ -2815,7 +2815,7 @@ object IngestStreams {
   /** Streamed suffix profile (the `stream_suffix_profile` entry):
     * even/odd two-batch ingest of the documents table, the LSM fold,
     * then the resolve — the deployed cadence (ingest → compact →
-    * query, the IndexRehearsal finding). Shares
+    * query, SURVEY §5's inverted-index rehearsal). Shares
     * `dedup_suffix_profile`'s oracle verbatim. */
   def streamedSuffixProfile(spark: SparkSession, dir: String): DataFrame = {
     val docs = graft.Tables.documents(spark, dir)

@@ -26,7 +26,7 @@ class CoarseQuantizerSpec extends AnyFunSuite {
     // 4000 vectors on a smooth manifold, stored in manifold order (a
     // corpus sorted by source/shard): the first 16 rows span a sliver
     // of the space
-    val emb = PqRehearsal.manifoldEmbeddings(spark, 4000L).localCheckpoint(true)
+    val emb = EmbeddingCorpora.manifoldEmbeddings(spark, 4000L).localCheckpoint(true)
     val n = 4000.0
     val mean = n / 16
     // pre-round-7 behavior: cells = first nCells corpus vectors
@@ -121,7 +121,7 @@ class CoarseQuantizerSpec extends AnyFunSuite {
 
   test("trained-TABLE regime: broadcast-path assignment at 100k rows / 256 cells holds balance and recall gates") {
     // the deployment regime in miniature (the full 10^6-row / 1024-cell
-    // rehearsal is `runMain graft.PqRehearsal coarse1m`): quantizer
+    // rehearsal is SURVEY §5's trained-TABLE regime entry): quantizer
     // trained on a 5% sample of a SORTED clustered corpus, persisted,
     // loaded, and BOTH assignments routed through ivfCellsBroadcast
     // (viaTable) — the regime where the quantizer is a table, not a
@@ -135,7 +135,7 @@ class CoarseQuantizerSpec extends AnyFunSuite {
     // construction no matter how good the training is.)
     val n = 100000L
     val nc = 256
-    val emb = PqRehearsal.manifoldEmbeddings(spark, n).localCheckpoint(true)
+    val emb = EmbeddingCorpora.manifoldEmbeddings(spark, n).localCheckpoint(true)
     val coarse = Similarity.trainCoarseQuantizer(emb, nc, iters = 6,
       sampleFraction = 0.05)
     val pops = Similarity.ivfCellsBroadcast(emb, "vec_id", "embedding",
@@ -170,7 +170,7 @@ class CoarseQuantizerSpec extends AnyFunSuite {
     // probes (the 100 TB fraction, where the toy gaussian corpus
     // needs 13/16) recall is exact: neighbors are in-cluster, and a
     // cluster lives in one cell.
-    val emb = PqRehearsal.syntheticEmbeddings(spark, 4000L, 64, 64).localCheckpoint(true)
+    val emb = EmbeddingCorpora.syntheticEmbeddings(spark, 4000L, 64, 64).localCheckpoint(true)
     val exact = Similarity.bruteForceTopK(emb, 8, 10).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val coarse = Similarity.trainCoarseQuantizer(emb, 16, iters = 3)

@@ -234,7 +234,7 @@ class DedupSpec extends AnyFunSuite {
     // one 64-node chain: diameter 63. Min-label propagation moves the
     // min ONE hop per round; alternating-star must finish in ~log²
     // rounds — the measurable form of the SURVEY §2.3 complexity claim
-    // (the CcRehearsal main records the same at 10⁶ nodes).
+    // (SURVEY §5's CC crossover rehearsal records the same at 10⁶ nodes).
     val chain = (0L until 63L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val (pl, propRounds) = Dedup.connectedComponentsCounted(chain)
     val (al, altRounds) = Dedup.connectedComponentsAlternatingCounted(chain)

@@ -834,6 +834,28 @@ class GraphSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("did not reach a fixpoint"))
     val leaked = persistedIds -- before
     assert(leaked.isEmpty, s"SCC left checkpoints behind on the fail-loud path: $leaked")
+    // ring {1,2,3} -> 4 -> ring {4,5,6}: one outer round extracts only
+    // {1,2,3}, so at maxOuter = 1 the second SCC is left over
+    val twoRings = edgeDf(Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L),
+      (4L, 5L), (5L, 6L), (6L, 4L)))
+    val beforeOuter = persistedIds
+    val exOuter = intercept[IllegalArgumentException] {
+      Graph.stronglyConnectedComponents(twoRings, maxOuter = 1, driverGate = 0L)
+    }
+    assert(exOuter.getMessage.contains("did not finish in 1 outer rounds"))
+    val leakedOuter = persistedIds -- beforeOuter
+    assert(leakedOuter.isEmpty, s"SCC left checkpoints behind on the outer exit: $leakedOuter")
+    // a 10-ring with the chord 0 -> 5: the forward coloring settles in
+    // 6 rounds, but the backward pass needs 10 (node 1 reaches 0 only
+    // the long way round), so maxInner = 7 fails the backward exit
+    val chorded = edgeDf((0L until 10L).map(i => (i, (i + 1) % 10)) :+ ((0L, 5L)))
+    val beforeBwd = persistedIds
+    val exBwd = intercept[IllegalArgumentException] {
+      Graph.stronglyConnectedComponents(chorded, maxInner = 7, driverGate = 0L)
+    }
+    assert(exBwd.getMessage.contains("SCC backward confirmation did not converge"))
+    val leakedBwd = persistedIds -- beforeBwd
+    assert(leakedBwd.isEmpty, s"SCC left checkpoints behind on the backward exit: $leakedBwd")
   }
 
   test("co-purchase weighted edges: canonical, multiplicity-derived lengths in [1, 9]") {

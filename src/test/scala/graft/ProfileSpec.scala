@@ -1,0 +1,26 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** `graft.Profile`'s per-query function on the shared test session. */
+class ProfileSpec extends AnyFunSuite {
+  lazy val spark = SharedSpark.spark
+
+  test("profile: plan, three timed runs and the last run's jobs; nothing left persisted; session still open") {
+    def persistedIds = spark.sparkContext.getPersistentRDDs.keySet
+    // q_kcore returns a checkpointed frame, so a run that skipped
+    // Bench's isolation would leave its blocks behind
+    Seq("q_label_prop", "q_kcore").foreach { name =>
+      val before = persistedIds
+      val report = Profile.profile(spark, SharedSpark.sf, name)
+      val leaked = persistedIds -- before
+      assert(leaked.isEmpty, s"$name: the profiled runs left RDDs persisted: $leaked")
+      assert(report.plan.contains("Physical Plan"), report.plan)
+      assert(report.runs.size == 3 && report.runs.forall(_ >= 0), s"$name runs: ${report.runs}")
+      assert(report.jobs.nonEmpty, s"$name: no Spark job reported for the last run")
+      assert(report.lines.exists(_.startsWith(s"[profile] last run: wall=")))
+    }
+    assert(!spark.sparkContext.isStopped)
+    assert(spark.range(3).count() == 3)
+  }
+}

@@ -544,7 +544,7 @@ class SimilaritySpec extends AnyFunSuite {
     // variance to strip, so the two forms land within quantization
     // noise of each other (r7: 0.913 vs 0.938); the structured-corpus
     // advantage — where residuals exist for — is measured in
-    // PqRehearsal (0.54 → 0.95 on clustered data). A drop beyond
+    // SURVEY §5's PQ rehearsal (0.54 → 0.95 on clustered data). A drop beyond
     // noise means the decomposition (q·c + dtbl, cnorm + 2·xtbl +
     // ntbl) is wrong.
     assert(rRes >= rPlain - 0.05, s"residual $rRes vs plain $rPlain")

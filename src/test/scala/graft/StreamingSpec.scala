@@ -2605,6 +2605,27 @@ class StreamingSpec extends AnyFunSuite {
     assert(resolve() == after && spark.read.parquet(s"$state/dist").count() == nClaims)
   }
 
+  test("bfsBatch/ssspBatch/multiBfsBatch: an exhausted round budget fails loud with every checkpoint freed") {
+    import spark.implicits._
+    // a 6-node chain from seed (and sole source) 1 needs 5 relaxation
+    // rounds; maxRounds = 1 allows 2, and the leftover probe finds more
+    val chain = (1L until 6L).map(i => (i, i + 1, 1L)).toDF("u", "v", "w")
+    val edges = chain.select("u", "v")
+    def persistedIds = spark.sparkContext.getPersistentRDDs.keySet
+    Seq[(String, String => Unit)](
+      "relaxBatch" -> (st => GraphStreams.bfsBatch(edges, 0L, st, seed = 1L, maxRounds = 1)),
+      "relaxBatch" -> (st => GraphStreams.ssspBatch(chain, 0L, st, seed = 1L, maxRounds = 1)),
+      "multiBfsBatch" -> (st => GraphStreams.multiBfsBatch(edges, 0L, st, k = 1, maxRounds = 1))
+    ).foreach { case (name, batch) =>
+      val state = java.nio.file.Files.createTempDirectory("graft-relax-budget-").toString
+      val before = persistedIds
+      val ex = intercept[IllegalStateException](batch(s"$state/state"))
+      assert(ex.getMessage.startsWith(s"$name: maxRounds=1 exhausted before fixpoint"))
+      val leaked = persistedIds -- before
+      assert(leaked.isEmpty, s"$name left checkpoints behind on the exhausted budget: $leaked")
+    }
+  }
+
   test("streamedSssp two-batch ingest == batch sssp over the weighted co-purchase graph") {
     val streamed = GraphStreams.streamedSssp(spark, sf)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
