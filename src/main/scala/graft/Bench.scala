@@ -171,18 +171,25 @@ object Bench {
   private[graft] def force(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
-  /** The isolation rule: unpersist every persisted RDD, so the next
-    * timed pass starts from a clean block manager. */
-  private[graft] def clearPersisted(spark: SparkSession): Unit =
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+  /** The isolation rule: unpersist every persisted RDD whose id is
+    * not in `keep`, so the next timed pass starts from a clean block
+    * manager. `keep` is the caller's snapshot of
+    * `getPersistentRDDs.keySet` from before the pass: frames it had
+    * cached or checkpointed survive (a dropped localCheckpoint cannot
+    * be recomputed). */
+  private[graft] def clearPersisted(spark: SparkSession, keep: Set[Int] = Set.empty): Unit =
+    spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!keep(id)) rdd.unpersist(blocking = false)
+    }
 
   /** One timed pass of a query: built, forced and isolated. A failed
     * pass is -1.0. */
   private[graft] def timeOnce(spark: SparkSession, sfDir: String,
                               fn: (SparkSession, String) => DataFrame): Double = {
+    val keep = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val t0 = System.nanoTime()
     try force(fn(spark, sfDir)) catch { case _: Throwable => return -1.0 }
-    finally clearPersisted(spark)
+    finally clearPersisted(spark, keep)
     (System.nanoTime() - t0) / 1e9
   }
 

@@ -50,13 +50,15 @@ object Profile {
   }
 
   /** Profile one query on `spark`, which stays open. Building the
-    * query for its plan may run jobs (eager checkpoints), so the
-    * block manager is cleared after it, as after every timed run. */
+    * query for its plan may run jobs (eager checkpoints), so what it
+    * persisted is cleared after it, as after every timed run; frames
+    * the caller persisted beforehand stay. */
   private[graft] def profile(spark: SparkSession, sfDir: String, name: String): Report = {
     val fn = SparkEntry.queries(name)
+    val keep = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val plan =
       try fn(spark, sfDir).queryExecution.explainString(ExplainMode.fromString("formatted"))
-      finally Bench.clearPersisted(spark)
+      finally Bench.clearPersisted(spark, keep)
     val first = Seq.fill(2)(Bench.timeOnce(spark, sfDir, fn))
     val (last, jobs) = withJobs(spark)(Bench.timeOnce(spark, sfDir, fn))
     Report(name, plan, first :+ last, jobs)

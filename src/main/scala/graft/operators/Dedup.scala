@@ -383,7 +383,7 @@ object Dedup {
     * component id among itself and its neighbors; converges in
     * O(graph diameter) rounds. This is the standard distributed CC
     * (GraphFrames/Pregel shape): per round one join + one aggregate,
-    * labels cached, previous iteration unpersisted.
+    * each round's labels checkpointed, the previous round's freed.
     *
     * Output: (doc_id, component_id = min doc_id in the component) for
     * every doc that appears in at least one pair.
@@ -392,73 +392,11 @@ object Dedup {
     connectedComponentsCounted(pairs)._1
 
   /** [[connectedComponents]] plus the number of propagation rounds it
-    * ran — the O(diameter) cost driver (the scale-rehearsal main and
-    * the complexity spec read it; production callers use the plain
-    * variant).
+    * ran — the O(diameter) cost driver (the complexity spec reads it;
+    * production callers use the plain variant).
     */
-  def connectedComponentsCounted(pairs: DataFrame): (DataFrame, Int) = {
-    // pairs feeds BOTH union branches below: cache it so an expensive
-    // candidate generator (the ngram/LSH joins) runs once, not twice
-    val p = pairs.cache()
-    val edges = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .distinct()
-      .cache()
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("comp", col("id"))
-      .cache()
-    // min-propagation strictly decreases the label sum until the
-    // fixpoint, so convergence is a scalar checksum, not a join;
-    // coalesce(0) keeps the empty-graph case total (sum of no rows is null)
-    def labelSum(df: DataFrame): Long =
-      df.agg(coalesce(sum(col("comp")), lit(0L))).head.getLong(0)
-    var prevSum = labelSum(labels)
-    var converged = false
-    var rounds = 0
-    while (!converged) {
-      rounds += 1
-      val viaNeighbors = edges
-        .join(labels, col("dst") === col("id"))
-        .groupBy(col("src"))
-        .agg(min(col("comp")).as("n_comp"))
-      val next = labels
-        .join(viaNeighbors, col("id") === col("src"), "left")
-        .select(col("id"),
-          least(col("comp"), coalesce(col("n_comp"), col("comp"))).as("comp"))
-        // localCheckpoint, not cache: `labels` appears TWICE in this
-        // round's plan (directly and via viaNeighbors), so without
-        // lineage truncation the LOGICAL plan doubles every round —
-        // 2^rounds tree nodes. A cache bounds recomputation but
-        // Catalyst still re-analyzes the full tree each round: on a
-        // diameter-20 chain that is a million-node plan and an OOM
-        // before the first task launches. Eager checkpoint makes each
-        // round's plan constant-size.
-        .localCheckpoint(true)
-      val newSum = labelSum(next)
-      converged = newSum == prevSum
-      prevSum = newSum
-      // next is materialized (eager checkpoint + labelSum), so the
-      // superseded round's blocks can go NOW — unpersist drops the
-      // cache entry (round 0), Checkpoints.free the checkpoint RDD
-      labels.unpersist()
-      Checkpoints.free(labels)
-      labels = next
-    }
-    // Materialize the (small: one row per doc that appears in a pair)
-    // result and truncate its lineage, then free every iteration
-    // cache. Without this the returned frame would either leak the
-    // last round's cache for the session's lifetime or, if unpersisted,
-    // re-run the ENTIRE iterative loop on the consumer's next action.
-    // localCheckpoint is the local-mode stand-in; a cluster deployment
-    // with executor churn would use a reliable checkpoint dir instead.
-    val out = labels.select(col("id").as("doc_id"), col("comp").as("component_id"))
-      .localCheckpoint(true)
-    labels.unpersist()
-    Checkpoints.free(labels)
-    edges.unpersist()
-    p.unpersist()
-    (out, rounds)
-  }
+  def connectedComponentsCounted(pairs: DataFrame): (DataFrame, Int) =
+    minLabelComponents(pairs, Int.MaxValue)
 
   /** EXACTLY-K-round bounded min-label components — the sf1-capable
     * twin of [[connectedComponents]]: each node's label after `rounds`
@@ -479,42 +417,52 @@ object Dedup {
     */
   def boundedComponents(pairs: DataFrame, rounds: Int = 6): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
+    minLabelComponents(pairs, rounds)._1
+  }
+
+  /** The min-label propagation loop behind [[connectedComponents]]
+    * and [[boundedComponents]]: at most `maxRounds` rounds on
+    * [[Fixpoint.stable]], stopping early once a round leaves the
+    * label sum unchanged (min-propagation strictly decreases it until
+    * the fixpoint, so convergence is a scalar checksum, not a join).
+    * Every frame is an eager `localCheckpoint`: `pairs` feeds both
+    * union branches, so an expensive candidate generator runs once,
+    * and each round's plan stays constant-size — `labels` appears
+    * twice in it, so an uncut lineage doubles the logical plan every
+    * round. Returns the labels and the rounds run; only the result
+    * stays persisted.
+    */
+  private def minLabelComponents(pairs: DataFrame, maxRounds: Int): (DataFrame, Int) = {
     val p = pairs.localCheckpoint(true)
     val edges = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .distinct()
       .localCheckpoint(true)
     Checkpoints.free(p)
-    var labels = edges.select(col("src").as("id")).distinct()
+    val labels0 = edges.select(col("src").as("id")).distinct()
       .withColumn("comp", col("id"))
       .localCheckpoint(true)
+    // coalesce(0) keeps the empty-graph case total (sum of no rows is null)
     def labelSum(df: DataFrame): Long =
       df.agg(coalesce(sum(col("comp")), lit(0L))).head.getLong(0)
-    var prevSum = labelSum(labels)
-    var r = 0
-    var converged = false
-    while (r < rounds && !converged) {
+    var rounds = 0
+    val labels = Fixpoint.stable(labels0, labelSum(labels0), maxRounds,
+        Some(labelSum _)) { (labels, _) =>
+      rounds += 1
       val viaNeighbors = edges
         .join(labels, col("dst") === col("id"))
         .groupBy(col("src"))
         .agg(min(col("comp")).as("n_comp"))
-      val next = labels
+      labels
         .join(viaNeighbors, col("id") === col("src"), "left")
         .select(col("id"),
           least(col("comp"), coalesce(col("n_comp"), col("comp"))).as("comp"))
-        .localCheckpoint(true)
-      val s = labelSum(next)
-      converged = s == prevSum
-      prevSum = s
-      Checkpoints.free(labels)
-      labels = next
-      r += 1
-    }
+    }.state
     val out = labels.select(col("id").as("doc_id"), col("comp").as("component_id"))
       .localCheckpoint(true)
     Checkpoints.free(labels)
     Checkpoints.free(edges)
-    out
+    (out, rounds)
   }
 
   /** Alternating large-star/small-star connected components (the

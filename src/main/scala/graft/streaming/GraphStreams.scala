@@ -2,10 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types._
 
-import graft.streaming.StreamState.{hasVisibleData, healSwap, swapInstall}
+import graft.streaming.StreamState.{drain, hasVisibleData, healSwap, oncePerBatch, shardedInput, swapInstall}
 
 /** Streaming GRAPH maintenance (SURVEY §2.7 rows 37l, 37r, 37r\',
   * 37r\'\', 37r\'\'\', 37v): incremental connected components,
@@ -57,23 +55,40 @@ object GraphStreams {
     */
   def ccIngest(pairStream: DataFrame, labelsPath: String, mergesPath: String,
                checkpoint: String, nBuckets: Int = 16): Unit = {
-    val q = pairStream
-      .writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        ccMergeBatch(b, id, labelsPath, mergesPath, nBuckets)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(pairStream, checkpoint) { (b, id) =>
+      ccMergeBatch(b, id, labelsPath, mergesPath, nBuckets)
+    }
   }
 
 
-  /** Transitively-closed merge map (old component → current root).
-    * Closed iteratively with memoization — each key's root resolved
-    * once, intermediate hops cached — so an un-compacted merge log
-    * with an L-deep chain costs O(L) total and constant stack, not
-    * O(L²) walks and L recursion frames. This FULL read is the
+  /** The memoized chain walk both closure readers share: resolve
+    * every key in `keys` to the end of its merge chain, where
+    * `next(c)` is c's merge target (None at a root). Each key's root
+    * is resolved once and written back along the whole path, so an
+    * un-compacted merge log with an L-deep chain costs O(L) total and
+    * constant stack, not O(L²) walks and L recursion frames. Returns
+    * the root of every node walked through (roots themselves are not
+    * keys).
+    */
+  private def closeChains(keys: Iterable[Long])(next: Long => Option[Long]): Map[Long, Long] = {
+    val memo = scala.collection.mutable.Map.empty[Long, Long]
+    keys.foreach { c =>
+      val path = scala.collection.mutable.ArrayBuffer.empty[Long]
+      var cur = c
+      var step = if (memo.contains(cur)) None else next(cur)
+      while (step.isDefined) {
+        path += cur
+        cur = step.get
+        step = if (memo.contains(cur)) None else next(cur)
+      }
+      val r = memo.getOrElse(cur, cur)
+      path.foreach(memo(_) = r)
+    }
+    memo.toMap
+  }
+
+  /** Transitively-closed merge map (old component → current root)
+    * over the whole merge log, read once. This FULL read is the
     * resolve-time (and crash-window) path; the per-batch hot path is
     * [[closedMergesFor]], which loads only the buckets its seeds'
     * chains touch.
@@ -84,21 +99,7 @@ object GraphStreams {
     val raw = spark.read.parquet(mergesPath)
       .select(col("old_comp").as[Long], col("new_comp").as[Long])
       .collect().toMap
-    val memo = scala.collection.mutable.Map.empty[Long, Long]
-    def root(c: Long): Long = {
-      // walk to the first memoized or terminal node, then write the
-      // answer back along the whole path
-      val path = scala.collection.mutable.ArrayBuffer.empty[Long]
-      var cur = c
-      while (!memo.contains(cur) && raw.contains(cur)) {
-        path += cur
-        cur = raw(cur)
-      }
-      val r = memo.getOrElse(cur, cur)
-      path.foreach(memo(_) = r)
-      r
-    }
-    raw.keys.map(k => k -> root(k)).toMap
+    closeChains(raw.keys)(raw.get)
   }
 
   /** Seed-pruned closed merge map — the per-batch path (r12). The
@@ -127,26 +128,10 @@ object GraphStreams {
         loaded += bucket
       }
     }
-    def bucketOf(c: Long): Long = java.lang.Math.floorMod(c, nBuckets.toLong)
-    val memo = scala.collection.mutable.Map.empty[Long, Long]
-    def root(c: Long): Long = {
-      val path = scala.collection.mutable.ArrayBuffer.empty[Long]
-      var cur = c
-      var done = false
-      while (!done) {
-        if (memo.contains(cur)) done = true
-        else {
-          load(bucketOf(cur))
-          if (raw.contains(cur)) { path += cur; cur = raw(cur) }
-          else done = true
-        }
-      }
-      val r = memo.getOrElse(cur, cur)
-      path.foreach(memo(_) = r)
-      r
-    }
-    seeds.foreach(root)
-    memo.filter { case (k, v) => k != v }.toMap
+    closeChains(seeds) { c =>
+      load(java.lang.Math.floorMod(c, nBuckets.toLong))
+      raw.get(c)
+    }.filter { case (k, v) => k != v }
   }
 
   /** Append merge records pmod(old_comp)-partitioned so
@@ -186,20 +171,16 @@ object GraphStreams {
     require(driverGate >= 0L && driverGate < Int.MaxValue, s"driverGate out of range: $driverGate")
     val spark = batch0.sparkSession
     import spark.implicits._
-    val commitDir = new org.apache.hadoop.fs.Path(mergesPath, "_cc_commits")
-    val marker = new org.apache.hadoop.fs.Path(commitDir, batchId.toString)
-    val cfs = commitDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (cfs.exists(marker)) return // replayed batch: already applied
-    val b = batch0.select(col("doc_a"), col("doc_b")).dropDuplicates()
-    // the gate is on the deduplicated batch: its component-level edge
-    // set is never larger, so a batch within the gate fits the driver
-    // union-find, and this one bounded take brings it whole to the
-    // driver — no further batch-sized Spark job
-    val head = b.as[(Long, Long)].take(driverGate.toInt + 1)
-    if (head.length <= driverGate) ccDriverBatch(spark, head, labelsPath, mergesPath, nBuckets)
-    else ccDistributedBatch(b, labelsPath, mergesPath, nBuckets)
-    cfs.mkdirs(commitDir)
-    cfs.create(marker, true).close()
+    oncePerBatch(spark, s"$mergesPath/_cc_commits", batchId) {
+      val b = batch0.select(col("doc_a"), col("doc_b")).dropDuplicates()
+      // the gate is on the deduplicated batch: its component-level edge
+      // set is never larger, so a batch within the gate fits the driver
+      // union-find, and this one bounded take brings it whole to the
+      // driver — no further batch-sized Spark job
+      val head = b.as[(Long, Long)].take(driverGate.toInt + 1)
+      if (head.length <= driverGate) ccDriverBatch(spark, head, labelsPath, mergesPath, nBuckets)
+      else ccDistributedBatch(b, labelsPath, mergesPath, nBuckets)
+    }
   }
 
   /** The one-pass path for a batch within the gate: the collected
@@ -401,14 +382,10 @@ object GraphStreams {
       .select(col("doc_a").cast("long"), col("doc_b").cast("long"))
       .localCheckpoint(true)
     val base = java.nio.file.Files.createTempDirectory("graft-cc-ing-").toString
-    val incoming = s"$base/incoming"
-    shards.filter(col("doc_a") % 2 === 0).coalesce(1).write.mode("append").parquet(incoming)
-    shards.filter(col("doc_a") % 2 =!= 0).coalesce(1).write.mode("append").parquet(incoming)
+    val stream = shardedInput(base,
+      shards.filter(col("doc_a") % 2 === 0),
+      shards.filter(col("doc_a") % 2 =!= 0))
     graft.operators.Checkpoints.free(shards)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("doc_a", LongType), StructField("doc_b", LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(incoming)
     ccIngest(stream, s"$base/labels", s"$base/merges", s"$base/ckpt", nBuckets)
     ccResolve(spark, s"$base/labels", s"$base/merges")
   }
@@ -453,25 +430,16 @@ object GraphStreams {
       return Seq.empty[(Long, Long)].toDF("node", "scc_label")
     }
     val base = java.nio.file.Files.createTempDirectory("graft-scc-ing-").toString
-    val incoming = s"$base/incoming"
-    edges.filter(col("u") % 2 === 0).coalesce(1).write.mode("append").parquet(incoming)
-    edges.filter(col("u") % 2 =!= 0).coalesce(1).write.mode("append").parquet(incoming)
+    val stream = shardedInput(base,
+      edges.filter(col("u") % 2 === 0),
+      edges.filter(col("u") % 2 =!= 0))
     graft.operators.Checkpoints.free(edges)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("u", LongType), StructField("v", LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(incoming)
-    val q = stream.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        // cadence-triggered label compaction ON in the deployed drive
-        // (resolution-invariant, spec-pinned)
-        sccMergeBatch(b, id, s"$base/labels", s"$base/merges", s"$base/qedges",
-          nBuckets, autoCompact = Some((0.5, 256L)))
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(stream, s"$base/ckpt") { (b, id) =>
+      // cadence-triggered label compaction ON in the deployed drive
+      // (resolution-invariant, spec-pinned)
+      sccMergeBatch(b, id, s"$base/labels", s"$base/merges", s"$base/qedges",
+        nBuckets, autoCompact = Some((0.5, 256L)))
+    }
     sccResolve(spark, s"$base/labels", s"$base/merges")
   }
 
@@ -499,25 +467,16 @@ object GraphStreams {
       return Seq.empty[(Long, Long)].toDF("scc", "depth")
     }
     val base = java.nio.file.Files.createTempDirectory("graft-topo-ing-").toString
-    val incoming = s"$base/incoming"
-    edges.filter(col("u") % 2 === 0).coalesce(1).write.mode("append").parquet(incoming)
-    edges.filter(col("u") % 2 =!= 0).coalesce(1).write.mode("append").parquet(incoming)
+    val stream = shardedInput(base,
+      edges.filter(col("u") % 2 === 0),
+      edges.filter(col("u") % 2 =!= 0))
     graft.operators.Checkpoints.free(edges)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("u", LongType), StructField("v", LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(incoming)
-    val q = stream.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        // cadence-triggered label compaction ON in the deployed drive
-        // (resolution-invariant, spec-pinned)
-        sccMergeBatch(b, id, s"$base/labels", s"$base/merges", s"$base/qedges",
-          nBuckets, autoCompact = Some((0.5, 256L)))
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(stream, s"$base/ckpt") { (b, id) =>
+      // cadence-triggered label compaction ON in the deployed drive
+      // (resolution-invariant, spec-pinned)
+      sccMergeBatch(b, id, s"$base/labels", s"$base/merges", s"$base/qedges",
+        nBuckets, autoCompact = Some((0.5, 256L)))
+    }
     topoLayersResolve(spark, s"$base/qedges", s"$base/merges")
   }
 
@@ -579,128 +538,130 @@ object GraphStreams {
                                    autoCompact: Option[(Double, Long)] = None): Unit = {
     val spark = batch0.sparkSession
     import spark.implicits._
-    val commitDir = new org.apache.hadoop.fs.Path(mergesPath, "_scc_commits")
-    val marker = new org.apache.hadoop.fs.Path(commitDir, batchId.toString)
-    val cfs = commitDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (cfs.exists(marker)) return
-    def mark(): Unit = { cfs.mkdirs(commitDir); cfs.create(marker, true).close() }
-    // a crashed sccCompact may have left the labels aside — restore
-    // before the pruned label read below
-    healSwap(spark, labelsPath)
-    val pendingDir = new org.apache.hadoop.fs.Path(mergesPath, "_scc_pending")
-    val inCrashWindow = cfs.exists(pendingDir) && cfs.listStatus(pendingDir).nonEmpty
-    val b = batch0.select(col("u"), col("v"))
-      .filter(col("u") =!= col("v")).dropDuplicates().persist()
-    try {
-      if (b.isEmpty) { mark(); return }
-      val eps = b.select(col("u").as("node"))
-        .unionByName(b.select(col("v").as("node"))).distinct()
-      val lp = new org.apache.hadoop.fs.Path(labelsPath)
-      val lfs = lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val known =
-        if (lfs.exists(lp)) {
-          val epBuckets = eps
-            .select(pmod(col("node"), lit(nBuckets.toLong)).as[Long])
-            .distinct().collect().toSeq
-          spark.read.parquet(labelsPath)
-            .filter(col("bucket").isin(epBuckets: _*))
-            .join(eps, Seq("node"), "left_semi")
-            .dropDuplicates("node")
-            .select(col("node"), col("scc_id"))
-            .localCheckpoint(true)
-        } else Seq.empty[(Long, Long)].toDF("node", "scc_id")
-      val closureDf = (
-        if (inCrashWindow) closedMerges(spark, mergesPath)
-        else closedMergesFor(spark, mergesPath,
-          known.select(col("scc_id").as[Long]).distinct().collect().toSeq, nBuckets)
-        ).toSeq.toDF("mc_old", "mc_new")
-      val cur = known
-        .join(broadcast(closureDf), col("scc_id") === col("mc_old"), "left")
-        .select(col("node"), coalesce(col("mc_new"), col("scc_id")).as("scc"))
-        .persist()
-      val cu = cur.select(col("node").as("u"), col("scc").as("scc_u"))
-      val cv = cur.select(col("node").as("v"), col("scc").as("scc_v"))
-      val mapped = b.join(cu, Seq("u"), "left").join(cv, Seq("v"), "left")
-        .select(coalesce(col("scc_u"), col("u")).as("u"),
-          coalesce(col("scc_v"), col("v")).as("v"))
-        .filter(col("u") =!= col("v"))
-      val qOld0 =
-        if (hasVisibleData(spark, qPath)) spark.read.parquet(qPath).select(col("u"), col("v"))
-        else Seq.empty[(Long, Long)].toDF("u", "v")
-      // crash-window retry: bring the condensation into the closed
-      // label space before the union (see the method doc)
-      val qOld =
-        if (!inCrashWindow) qOld0
-        else {
-          val mu = closureDf.select(col("mc_old").as("u"), col("mc_new").as("nu"))
-          val mv = closureDf.select(col("mc_old").as("v"), col("mc_new").as("nv"))
-          qOld0.join(broadcast(mu), Seq("u"), "left")
-            .join(broadcast(mv), Seq("v"), "left")
-            .select(coalesce(col("nu"), col("u")).as("u"),
-              coalesce(col("nv"), col("v")).as("v"))
+    // set once this batch's state lands; a replayed or empty batch
+    // leaves it unset and skips the compaction probe
+    var applied = false
+    oncePerBatch(spark, s"$mergesPath/_scc_commits", batchId) {
+      // a crashed sccCompact may have left the labels aside — restore
+      // before the pruned label read below
+      healSwap(spark, labelsPath)
+      val pendingDir = new org.apache.hadoop.fs.Path(mergesPath, "_scc_pending")
+      val pfs = pendingDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val inCrashWindow = pfs.exists(pendingDir) && pfs.listStatus(pendingDir).nonEmpty
+      val b = batch0.select(col("u"), col("v"))
+        .filter(col("u") =!= col("v")).dropDuplicates().persist()
+      try {
+        if (!b.isEmpty) {
+          val eps = b.select(col("u").as("node"))
+            .unionByName(b.select(col("v").as("node"))).distinct()
+          val lp = new org.apache.hadoop.fs.Path(labelsPath)
+          val lfs = lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          val known =
+            if (lfs.exists(lp)) {
+              val epBuckets = eps
+                .select(pmod(col("node"), lit(nBuckets.toLong)).as[Long])
+                .distinct().collect().toSeq
+              spark.read.parquet(labelsPath)
+                .filter(col("bucket").isin(epBuckets: _*))
+                .join(eps, Seq("node"), "left_semi")
+                .dropDuplicates("node")
+                .select(col("node"), col("scc_id"))
+                .localCheckpoint(true)
+            } else Seq.empty[(Long, Long)].toDF("node", "scc_id")
+          val closureDf = (
+            if (inCrashWindow) closedMerges(spark, mergesPath)
+            else closedMergesFor(spark, mergesPath,
+              known.select(col("scc_id").as[Long]).distinct().collect().toSeq, nBuckets)
+            ).toSeq.toDF("mc_old", "mc_new")
+          val cur = known
+            .join(broadcast(closureDf), col("scc_id") === col("mc_old"), "left")
+            .select(col("node"), coalesce(col("mc_new"), col("scc_id")).as("scc"))
+            .persist()
+          val cu = cur.select(col("node").as("u"), col("scc").as("scc_u"))
+          val cv = cur.select(col("node").as("v"), col("scc").as("scc_v"))
+          val mapped = b.join(cu, Seq("u"), "left").join(cv, Seq("v"), "left")
+            .select(coalesce(col("scc_u"), col("u")).as("u"),
+              coalesce(col("scc_v"), col("v")).as("v"))
             .filter(col("u") =!= col("v"))
+          val qOld0 =
+            if (hasVisibleData(spark, qPath)) spark.read.parquet(qPath).select(col("u"), col("v"))
+            else Seq.empty[(Long, Long)].toDF("u", "v")
+          // crash-window retry: bring the condensation into the closed
+          // label space before the union (see the method doc)
+          val qOld =
+            if (!inCrashWindow) qOld0
+            else {
+              val mu = closureDf.select(col("mc_old").as("u"), col("mc_new").as("nu"))
+              val mv = closureDf.select(col("mc_old").as("v"), col("mc_new").as("nv"))
+              qOld0.join(broadcast(mu), Seq("u"), "left")
+                .join(broadcast(mv), Seq("v"), "left")
+                .select(coalesce(col("nu"), col("u")).as("u"),
+                  coalesce(col("nv"), col("v")).as("v"))
+                .filter(col("u") =!= col("v"))
+            }
+          val qAll = qOld.unionByName(mapped).distinct().localCheckpoint(true)
+          val scc = graft.operators.Graph.stronglyConnectedComponents(qAll)
+            .localCheckpoint(true)
+          // the cadence manifest's baseline, read BEFORE any mutation
+          // (exact on the happy path; a fallback recount after a crash)
+          val (baseLabels, baseMerges) = sccCounts(spark, labelsPath, mergesPath)
+          // open the crash window: state mutations start here — and the
+          // counts manifest stops being trustworthy until the commit
+          // below rewrites it, so delete it first (a crashed batch must
+          // leave the prober on real counts, never a stale manifest)
+          pfs.mkdirs(pendingDir)
+          pfs.create(new org.apache.hadoop.fs.Path(pendingDir, batchId.toString), true).close()
+          deleteSccCounts(spark, mergesPath)
+          val newMerges = scc.filter(col("node") =!= col("scc_label"))
+            .select(col("node").as("old_comp"), col("scc_label").as("new_comp"))
+          val nNewMerges = newMerges.count()
+          if (nNewMerges > 0) appendMerges(newMerges, mergesPath, nBuckets)
+          if (sccFailAfterMerges) {
+            sccFailAfterMerges = false
+            throw new IllegalStateException(
+              "injected crash: merges appended, condensation not rewritten")
+          }
+          // new nodes: labeled once, with their SCC as of THIS batch
+          val lbl = eps.join(known.select("node"), Seq("node"), "left_anti")
+            .join(scc, Seq("node"), "left")
+            .select(col("node"), coalesce(col("scc_label"), col("node")).as("scc_id"))
+            .withColumn("bucket", pmod(col("node"), lit(nBuckets.toLong)))
+            .localCheckpoint(true)
+          val nNewLabels = lbl.count()
+          if (nNewLabels > 0) lbl.write.mode("append").partitionBy("bucket").parquet(labelsPath)
+          // rewrite the condensation in the new label space, intra-SCC
+          // edges dropped (materialized BEFORE overwriting what it reads)
+          val su = scc.select(col("node").as("u"), col("scc_label").as("lu"))
+          val sv = scc.select(col("node").as("v"), col("scc_label").as("lv"))
+          val relabeled = qAll.join(su, Seq("u"), "left").join(sv, Seq("v"), "left")
+            .select(coalesce(col("lu"), col("u")).as("u"),
+              coalesce(col("lv"), col("v")).as("v"))
+            .filter(col("u") =!= col("v")).distinct()
+            .localCheckpoint(true)
+          relabeled.write.mode("overwrite").parquet(qPath)
+          // condensation caught up with the merge log: close the window
+          pfs.delete(pendingDir, true)
+          // reinstate the cadence manifest with this batch's deltas folded
+          // in — a crash before this line leaves it absent (fallback), a
+          // crash after leaves it exact; never stale either way
+          writeSccCounts(spark, mergesPath,
+            baseLabels + nNewLabels, baseMerges + nNewMerges)
+          graft.operators.Checkpoints.free(relabeled)
+          graft.operators.Checkpoints.free(qAll)
+          graft.operators.Checkpoints.free(scc)
+          graft.operators.Checkpoints.free(known)
+          graft.operators.Checkpoints.free(lbl)
+          cur.unpersist()
+          applied = true
         }
-      val qAll = qOld.unionByName(mapped).distinct().localCheckpoint(true)
-      val scc = graft.operators.Graph.stronglyConnectedComponents(qAll)
-        .localCheckpoint(true)
-      // the cadence manifest's baseline, read BEFORE any mutation
-      // (exact on the happy path; a fallback recount after a crash)
-      val (baseLabels, baseMerges) = sccCounts(spark, labelsPath, mergesPath)
-      // open the crash window: state mutations start here — and the
-      // counts manifest stops being trustworthy until the commit
-      // below rewrites it, so delete it first (a crashed batch must
-      // leave the prober on real counts, never a stale manifest)
-      cfs.mkdirs(pendingDir)
-      cfs.create(new org.apache.hadoop.fs.Path(pendingDir, batchId.toString), true).close()
-      deleteSccCounts(spark, mergesPath)
-      val newMerges = scc.filter(col("node") =!= col("scc_label"))
-        .select(col("node").as("old_comp"), col("scc_label").as("new_comp"))
-      val nNewMerges = newMerges.count()
-      if (nNewMerges > 0) appendMerges(newMerges, mergesPath, nBuckets)
-      if (sccFailAfterMerges) {
-        sccFailAfterMerges = false
-        throw new IllegalStateException(
-          "injected crash: merges appended, condensation not rewritten")
-      }
-      // new nodes: labeled once, with their SCC as of THIS batch
-      val lbl = eps.join(known.select("node"), Seq("node"), "left_anti")
-        .join(scc, Seq("node"), "left")
-        .select(col("node"), coalesce(col("scc_label"), col("node")).as("scc_id"))
-        .withColumn("bucket", pmod(col("node"), lit(nBuckets.toLong)))
-        .localCheckpoint(true)
-      val nNewLabels = lbl.count()
-      if (nNewLabels > 0) lbl.write.mode("append").partitionBy("bucket").parquet(labelsPath)
-      // rewrite the condensation in the new label space, intra-SCC
-      // edges dropped (materialized BEFORE overwriting what it reads)
-      val su = scc.select(col("node").as("u"), col("scc_label").as("lu"))
-      val sv = scc.select(col("node").as("v"), col("scc_label").as("lv"))
-      val relabeled = qAll.join(su, Seq("u"), "left").join(sv, Seq("v"), "left")
-        .select(coalesce(col("lu"), col("u")).as("u"),
-          coalesce(col("lv"), col("v")).as("v"))
-        .filter(col("u") =!= col("v")).distinct()
-        .localCheckpoint(true)
-      relabeled.write.mode("overwrite").parquet(qPath)
-      // condensation caught up with the merge log: close the window
-      cfs.delete(pendingDir, true)
-      // reinstate the cadence manifest with this batch's deltas folded
-      // in — a crash before this line leaves it absent (fallback), a
-      // crash after leaves it exact; never stale either way
-      writeSccCounts(spark, mergesPath,
-        baseLabels + nNewLabels, baseMerges + nNewMerges)
-      graft.operators.Checkpoints.free(relabeled)
-      graft.operators.Checkpoints.free(qAll)
-      graft.operators.Checkpoints.free(scc)
-      graft.operators.Checkpoints.free(known)
-      graft.operators.Checkpoints.free(lbl)
-      cur.unpersist()
-      mark()
-      // scheduled maintenance rides the batch boundary: AFTER this
-      // batch's commit (a compaction crash can never reopen the
-      // window the batch just closed), on the sccStateStats cadence
-      autoCompact.foreach { case (ratio, minLog) =>
-        sccCompactIfDue(spark, labelsPath, mergesPath, nBuckets, ratio, minLog)
-      }
-    } finally { b.unpersist(); () }
+      } finally { b.unpersist(); () }
+    }
+    // scheduled maintenance rides the batch boundary: AFTER this
+    // batch's commit (a compaction crash can never reopen the
+    // window the batch just closed), on the sccStateStats cadence
+    if (applied) autoCompact.foreach { case (ratio, minLog) =>
+      sccCompactIfDue(spark, labelsPath, mergesPath, nBuckets, ratio, minLog)
+    }
   }
 
   /** Compact the incremental-SCC state — the [[ccCompact]] treatment
@@ -876,32 +837,28 @@ object GraphStreams {
                               batchId: Long, statePath: String): Unit = {
     val spark = batch0.sparkSession
     import spark.implicits._
-    val commitDir = new org.apache.hadoop.fs.Path(statePath, "_mst_commits")
-    val marker = new org.apache.hadoop.fs.Path(commitDir, batchId.toString)
-    val cfs = commitDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (cfs.exists(marker)) return
-    val forestPath = s"$statePath/forest"
-    // a crash between a prior batch's retire and install leaves the
-    // forest aside — restore it before reading, or this batch would
-    // silently compute MST(batch) alone
-    healSwap(spark, forestPath)
-    val b = batch0.select(col("u"), col("v"), col("w"))
-      .filter(col("u") =!= col("v")).dropDuplicates()
-    val prev =
-      if (hasVisibleData(spark, forestPath))
-        spark.read.parquet(forestPath).select(col("u"), col("v"), col("w"))
-      else Seq.empty[(Long, Long, Long)].toDF("u", "v", "w")
-    val next = graft.operators.Graph.mstBoruvka(prev.unionByName(b))
-      // materialize BEFORE overwriting the files the plan reads
-      .localCheckpoint(true)
-    // rename-aside swap, never in-place overwrite: an overwrite's
-    // delete-then-write window would silently empty the forest on a
-    // crash (the healPairs/semanticPairCompact lesson, shared)
-    next.write.mode("overwrite").parquet(forestPath + "_swap_staging")
-    swapInstall(spark, forestPath)
-    graft.operators.Checkpoints.free(next)
-    cfs.mkdirs(commitDir)
-    cfs.create(marker, true).close()
+    oncePerBatch(spark, s"$statePath/_mst_commits", batchId) {
+      val forestPath = s"$statePath/forest"
+      // a crash between a prior batch's retire and install leaves the
+      // forest aside — restore it before reading, or this batch would
+      // silently compute MST(batch) alone
+      healSwap(spark, forestPath)
+      val b = batch0.select(col("u"), col("v"), col("w"))
+        .filter(col("u") =!= col("v")).dropDuplicates()
+      val prev =
+        if (hasVisibleData(spark, forestPath))
+          spark.read.parquet(forestPath).select(col("u"), col("v"), col("w"))
+        else Seq.empty[(Long, Long, Long)].toDF("u", "v", "w")
+      val next = graft.operators.Graph.mstBoruvka(prev.unionByName(b))
+        // materialize BEFORE overwriting the files the plan reads
+        .localCheckpoint(true)
+      // rename-aside swap, never in-place overwrite: an overwrite's
+      // delete-then-write window would silently empty the forest on a
+      // crash (the healPairs/semanticPairCompact lesson, shared)
+      next.write.mode("overwrite").parquet(forestPath + "_swap_staging")
+      swapInstall(spark, forestPath)
+      graft.operators.Checkpoints.free(next)
+    }
   }
 
   /** Resolve the maintained forest to the one-row
@@ -934,23 +891,13 @@ object GraphStreams {
         graft.Tables.lineitem(spark, dir))
       .localCheckpoint(true)
     val base = java.nio.file.Files.createTempDirectory("graft-mst-ing-").toString
-    val incoming = s"$base/incoming"
-    edges.filter(col("u") % 2 === 0).coalesce(1).write.mode("append").parquet(incoming)
-    edges.filter(col("u") % 2 =!= 0).coalesce(1).write.mode("append").parquet(incoming)
+    val stream = shardedInput(base,
+      edges.filter(col("u") % 2 === 0),
+      edges.filter(col("u") % 2 =!= 0))
     graft.operators.Checkpoints.free(edges)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("u", LongType), StructField("v", LongType),
-        StructField("w", LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(incoming)
-    val q = stream.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        mstBatch(b, id, s"$base/state")
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(stream, s"$base/ckpt") { (b, id) =>
+      mstBatch(b, id, s"$base/state")
+    }
     mstResolveSummary(spark, s"$base/state")
   }
 
@@ -975,14 +922,10 @@ object GraphStreams {
     }
     val seed = seedRow.getLong(0)
     val base = java.nio.file.Files.createTempDirectory("graft-bfs-ing-").toString
-    val incoming = s"$base/incoming"
-    edges.filter(col("u") % 2 === 0).coalesce(1).write.mode("append").parquet(incoming)
-    edges.filter(col("u") % 2 =!= 0).coalesce(1).write.mode("append").parquet(incoming)
+    val stream = shardedInput(base,
+      edges.filter(col("u") % 2 === 0),
+      edges.filter(col("u") % 2 =!= 0))
     graft.operators.Checkpoints.free(edges)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("u", LongType), StructField("v", LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(incoming)
     bfsIngest(stream, s"$base/state", s"$base/ckpt", seed)
     bfsResolve(spark, s"$base/state")
   }
@@ -1010,15 +953,9 @@ object GraphStreams {
     */
   def bfsIngest(edgeStream: DataFrame, statePath: String, checkpoint: String,
                 seed: Long, maxRoundsPerBatch: Int = 30): Unit = {
-    val q = edgeStream
-      .writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        bfsBatch(b, id, statePath, seed, maxRoundsPerBatch)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(edgeStream, checkpoint) { (b, id) =>
+      bfsBatch(b, id, statePath, seed, maxRoundsPerBatch)
+    }
   }
 
   /** Streamed WEIGHTED shortest paths — [[streamedBfs]]'s sibling
@@ -1044,15 +981,10 @@ object GraphStreams {
     }
     val seed = seedRow.getLong(0)
     val base = java.nio.file.Files.createTempDirectory("graft-sssp-ing-").toString
-    val incoming = s"$base/incoming"
-    edges.filter(col("u") % 2 === 0).coalesce(1).write.mode("append").parquet(incoming)
-    edges.filter(col("u") % 2 =!= 0).coalesce(1).write.mode("append").parquet(incoming)
+    val stream = shardedInput(base,
+      edges.filter(col("u") % 2 === 0),
+      edges.filter(col("u") % 2 =!= 0))
     graft.operators.Checkpoints.free(edges)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("u", LongType), StructField("v", LongType),
-        StructField("w", LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(incoming)
     ssspIngest(stream, s"$base/state", s"$base/ckpt", seed)
     bfsResolve(spark, s"$base/state")
   }
@@ -1062,15 +994,9 @@ object GraphStreams {
     * same state layout, same replay idempotence. */
   def ssspIngest(edgeStream: DataFrame, statePath: String, checkpoint: String,
                  seed: Long, maxRoundsPerBatch: Int = 30): Unit = {
-    val q = edgeStream
-      .writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        ssspBatch(b, id, statePath, seed, maxRoundsPerBatch)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(edgeStream, checkpoint) { (b, id) =>
+      ssspBatch(b, id, statePath, seed, maxRoundsPerBatch)
+    }
   }
 
   /** One [[bfsIngest]] micro-batch, exposed for the replay spec. */
@@ -1112,152 +1038,148 @@ object GraphStreams {
                          seed: Long, maxRounds: Int, weighted: Boolean): Unit = {
     val spark = batch0.sparkSession
     import spark.implicits._
-    val commitDir = new org.apache.hadoop.fs.Path(statePath, "_bfs_commits")
-    val marker = new org.apache.hadoop.fs.Path(commitDir, batchId.toString)
-    val cfs = commitDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (cfs.exists(marker)) return // replayed batch: already applied
-    val cols = if (weighted) Seq(col("u"), col("v"), col("w")) else Seq(col("u"), col("v"))
-    val batch = batch0.select(cols: _*).distinct().persist()
-    try {
-      val edgesPath = s"$statePath/edges"
-      val distPath = s"$statePath/dist"
-      // per-batch delta directory with OVERWRITE semantics (the
-      // urlDedupBatch/cdcDedupBatch deltas pattern): a crash-retry
-      // REPLACES this batch's edges instead of appending a second
-      // copy, so the store never grows with retries
-      batch.write.mode("overwrite").parquet(s"$edgesPath/batch=$batchId")
-      def bidir(df: org.apache.spark.sql.DataFrame) = {
-        val wCol = if (weighted) col("w") else lit(1L).as("w")
-        df.select(col("u").as("a"), col("v").as("b"), wCol)
-          .unionAll(df.select(col("v").as("a"), col("u").as("b"), wCol))
-      }
-      // The full adjacency materializes LAZILY, on the first round
-      // that actually improves something: a batch whose one-hop
-      // relaxations all fail (the common always-on case — most
-      // arrivals change no distance) commits without ever scanning
-      // the maintained edge list. A batch that does improve pays ONE
-      // checkpoint reused across its rounds (per-round pruned parquet
-      // re-reads were rehearsed and measured 2x slower on full-graph
-      // builds than the single checkpoint).
-      var und: org.apache.spark.sql.DataFrame = null
-      def adj() = {
-        if (und == null) {
-          MaintIO.edgeStoreReads.incrementAndGet()
-          und = bidir(spark.read.parquet(edgesPath).select(cols: _*).distinct())
-            .localCheckpoint(true)
+    oncePerBatch(spark, s"$statePath/_bfs_commits", batchId) {
+      val cols = if (weighted) Seq(col("u"), col("v"), col("w")) else Seq(col("u"), col("v"))
+      val batch = batch0.select(cols: _*).distinct().persist()
+      try {
+        val edgesPath = s"$statePath/edges"
+        val distPath = s"$statePath/dist"
+        // per-batch delta directory with OVERWRITE semantics (the
+        // urlDedupBatch/cdcDedupBatch deltas pattern): a crash-retry
+        // REPLACES this batch's edges instead of appending a second
+        // copy, so the store never grows with retries
+        batch.write.mode("overwrite").parquet(s"$edgesPath/batch=$batchId")
+        def bidir(df: org.apache.spark.sql.DataFrame) = {
+          val wCol = if (weighted) col("w") else lit(1L).as("w")
+          df.select(col("u").as("a"), col("v").as("b"), wCol)
+            .unionAll(df.select(col("v").as("a"), col("u").as("b"), wCol))
         }
-        und
-      }
-      // Maintained distances load LAZILY too, bucket by bucket: the
-      // claim store is pmod(node)-partitioned, and a batch reads
-      // ONLY the buckets its candidate nodes fall in — a
-      // distance-neutral batch touches the batch-endpoint buckets
-      // and nothing else, never the whole store.
-      val distStoreExists = hasVisibleData(spark, distPath)
-      val loaded = scala.collection.mutable.Set.empty[Long]
-      var dist = Seq.empty[(Long, Long)].toDF("node", "dist")
-      var distCp: org.apache.spark.sql.DataFrame = null
-      def ensureLoaded(buckets: Seq[Long]): Unit = {
-        val need = buckets.filterNot(loaded)
-        if (need.nonEmpty) {
-          if (distStoreExists) {
-            MaintIO.distBucketReads.addAndGet(need.size.toLong)
-            val add = spark.read.parquet(distPath)
-              .filter(col("db").isin(need: _*))
-              .groupBy("node").agg(min("dist").as("dist"))
+        // The full adjacency materializes LAZILY, on the first round
+        // that actually improves something: a batch whose one-hop
+        // relaxations all fail (the common always-on case — most
+        // arrivals change no distance) commits without ever scanning
+        // the maintained edge list. A batch that does improve pays ONE
+        // checkpoint reused across its rounds (per-round pruned parquet
+        // re-reads were rehearsed and measured 2x slower on full-graph
+        // builds than the single checkpoint).
+        var und: org.apache.spark.sql.DataFrame = null
+        def adj() = {
+          if (und == null) {
+            MaintIO.edgeStoreReads.incrementAndGet()
+            und = bidir(spark.read.parquet(edgesPath).select(cols: _*).distinct())
+              .localCheckpoint(true)
+          }
+          und
+        }
+        // Maintained distances load LAZILY too, bucket by bucket: the
+        // claim store is pmod(node)-partitioned, and a batch reads
+        // ONLY the buckets its candidate nodes fall in — a
+        // distance-neutral batch touches the batch-endpoint buckets
+        // and nothing else, never the whole store.
+        val distStoreExists = hasVisibleData(spark, distPath)
+        val loaded = scala.collection.mutable.Set.empty[Long]
+        var dist = Seq.empty[(Long, Long)].toDF("node", "dist")
+        var distCp: org.apache.spark.sql.DataFrame = null
+        def ensureLoaded(buckets: Seq[Long]): Unit = {
+          val need = buckets.filterNot(loaded)
+          if (need.nonEmpty) {
+            if (distStoreExists) {
+              MaintIO.distBucketReads.addAndGet(need.size.toLong)
+              val add = spark.read.parquet(distPath)
+                .filter(col("db").isin(need: _*))
+                .groupBy("node").agg(min("dist").as("dist"))
+              val superseded = distCp
+              dist = dist.unionAll(add).localCheckpoint(true)
+              distCp = dist
+              if (superseded != null) graft.operators.Checkpoints.free(superseded)
+            }
+            loaded ++= need
+          }
+        }
+        def bucketsOf(nodes: org.apache.spark.sql.DataFrame): Seq[Long] =
+          nodes.select(distBucketCol(col("node")).as("db")).distinct()
+            .collect().map(_.getLong(0)).toSeq
+        // Bucket tracking costs a checkpoint + a tiny job per round, so
+        // it runs only while it can still prune: once every bucket is
+        // loaded (or the store doesn't exist yet), rounds run at the
+        // untracked cost exactly like the pre-bucketing design.
+        def trackingNeeded: Boolean =
+          distStoreExists && loaded.size < DistBuckets
+        ensureLoaded(bucketsOf(batch.select(col("u").as("node"))
+          .unionAll(batch.select(col("v").as("node")))
+          .unionAll(Seq(seed).toDF("node"))))
+        // Initial claims: the standing seed claim (first batch, or a
+        // no-op improvement afterwards) + one-hop relaxations of the
+        // NEW edges from currently-known distances.
+        val hop = dist.join(bidir(batch), col("node") === col("a"))
+          .select(col("b").as("node"), (col("dist") + col("w")).as("nd"))
+          .groupBy("node").agg(min("nd").as("dist"))
+        var cand = Seq((seed, 0L)).toDF("node", "dist").unionAll(hop)
+        var candCp: org.apache.spark.sql.DataFrame = null
+        val claimParts = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
+        var round = 0
+        var continue = true
+        while (continue && round <= maxRounds) {
+          val candEval = if (trackingNeeded) {
+            val prevCand = candCp
+            candCp = cand.localCheckpoint(true)
+            if (prevCand != null) graft.operators.Checkpoints.free(prevCand)
+            ensureLoaded(bucketsOf(candCp.select("node")))
+            candCp
+          } else cand
+          val improved = candEval
+            .join(dist.withColumnRenamed("dist", "old"), Seq("node"), "left_outer")
+            .filter(col("old").isNull || col("dist") < col("old"))
+            .select("node", "dist")
+            .localCheckpoint(true)
+          if (improved.isEmpty) {
+            graft.operators.Checkpoints.free(improved)
+            continue = false
+          } else {
+            claimParts += improved
             val superseded = distCp
-            dist = dist.unionAll(add).localCheckpoint(true)
+            dist = dist.join(improved, Seq("node"), "left_anti")
+              .unionAll(improved).localCheckpoint(true)
             distCp = dist
             if (superseded != null) graft.operators.Checkpoints.free(superseded)
+            cand = improved.join(adj(), col("node") === col("a"))
+              .select(col("b").as("node"), (col("dist") + col("w")).as("nd"))
+              .groupBy("node").agg(min("nd").as("dist"))
+            round += 1
           }
-          loaded ++= need
         }
-      }
-      def bucketsOf(nodes: org.apache.spark.sql.DataFrame): Seq[Long] =
-        nodes.select(distBucketCol(col("node")).as("db")).distinct()
-          .collect().map(_.getLong(0)).toSeq
-      // Bucket tracking costs a checkpoint + a tiny job per round, so
-      // it runs only while it can still prune: once every bucket is
-      // loaded (or the store doesn't exist yet), rounds run at the
-      // untracked cost exactly like the pre-bucketing design.
-      def trackingNeeded: Boolean =
-        distStoreExists && loaded.size < DistBuckets
-      ensureLoaded(bucketsOf(batch.select(col("u").as("node"))
-        .unionAll(batch.select(col("v").as("node")))
-        .unionAll(Seq(seed).toDF("node"))))
-      // Initial claims: the standing seed claim (first batch, or a
-      // no-op improvement afterwards) + one-hop relaxations of the
-      // NEW edges from currently-known distances.
-      val hop = dist.join(bidir(batch), col("node") === col("a"))
-        .select(col("b").as("node"), (col("dist") + col("w")).as("nd"))
-        .groupBy("node").agg(min("nd").as("dist"))
-      var cand = Seq((seed, 0L)).toDF("node", "dist").unionAll(hop)
-      var candCp: org.apache.spark.sql.DataFrame = null
-      val claimParts = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-      var round = 0
-      var continue = true
-      while (continue && round <= maxRounds) {
-        val candEval = if (trackingNeeded) {
-          val prevCand = candCp
-          candCp = cand.localCheckpoint(true)
-          if (prevCand != null) graft.operators.Checkpoints.free(prevCand)
-          ensureLoaded(bucketsOf(candCp.select("node")))
-          candCp
-        } else cand
-        val improved = candEval
-          .join(dist.withColumnRenamed("dist", "old"), Seq("node"), "left_outer")
-          .filter(col("old").isNull || col("dist") < col("old"))
-          .select("node", "dist")
-          .localCheckpoint(true)
-        if (improved.isEmpty) {
-          graft.operators.Checkpoints.free(improved)
-          continue = false
-        } else {
-          claimParts += improved
-          val superseded = distCp
-          dist = dist.join(improved, Seq("node"), "left_anti")
-            .unionAll(improved).localCheckpoint(true)
-          distCp = dist
-          if (superseded != null) graft.operators.Checkpoints.free(superseded)
-          cand = improved.join(adj(), col("node") === col("a"))
-            .select(col("b").as("node"), (col("dist") + col("w")).as("nd"))
-            .groupBy("node").agg(min("nd").as("dist"))
-          round += 1
+        // Round budget exhausted while the last wave still improved:
+        // probe whether the untested candidates would improve anything
+        // and fail loud if so — a silently truncated relaxation would
+        // hash-drift from both the batch twin and the shared SQL
+        // oracle on a fixture deep enough to need more rounds.
+        if (continue) {
+          val lastCand = cand.localCheckpoint(true)
+          if (trackingNeeded) ensureLoaded(bucketsOf(lastCand.select("node")))
+          val leftover = lastCand
+            .join(dist.withColumnRenamed("dist", "old"), Seq("node"), "left_outer")
+            .filter(col("old").isNull || col("dist") < col("old"))
+            .limit(1).count()
+          graft.operators.Checkpoints.free(lastCand)
+          if (leftover > 0) {
+            freeCheckpoints(claimParts, candCp, und, distCp)
+            throw new IllegalStateException(
+              s"relaxBatch: maxRounds=$maxRounds exhausted before fixpoint " +
+                s"in batch $batchId — raise maxRoundsPerBatch")
+          }
         }
-      }
-      // Round budget exhausted while the last wave still improved:
-      // probe whether the untested candidates would improve anything
-      // and fail loud if so — a silently truncated relaxation would
-      // hash-drift from both the batch twin and the shared SQL
-      // oracle on a fixture deep enough to need more rounds.
-      if (continue) {
-        val lastCand = cand.localCheckpoint(true)
-        if (trackingNeeded) ensureLoaded(bucketsOf(lastCand.select("node")))
-        val leftover = lastCand
-          .join(dist.withColumnRenamed("dist", "old"), Seq("node"), "left_outer")
-          .filter(col("old").isNull || col("dist") < col("old"))
-          .limit(1).count()
-        graft.operators.Checkpoints.free(lastCand)
-        if (leftover > 0) {
-          freeCheckpoints(claimParts, candCp, und, distCp)
-          throw new IllegalStateException(
-            s"relaxBatch: maxRounds=$maxRounds exhausted before fixpoint " +
-              s"in batch $batchId — raise maxRoundsPerBatch")
+        if (claimParts.nonEmpty) {
+          // cluster by bucket so the write lands ~one file per bucket,
+          // not (tasks × buckets) shards — the pruned reads this store
+          // exists for are priced by file count
+          claimParts.reduce(_ unionAll _)
+            .withColumn("db", distBucketCol(col("node")))
+            .repartition(col("db"))
+            .write.mode("append").partitionBy("db").parquet(distPath)
         }
-      }
-      if (claimParts.nonEmpty) {
-        // cluster by bucket so the write lands ~one file per bucket,
-        // not (tasks × buckets) shards — the pruned reads this store
-        // exists for are priced by file count
-        claimParts.reduce(_ unionAll _)
-          .withColumn("db", distBucketCol(col("node")))
-          .repartition(col("db"))
-          .write.mode("append").partitionBy("db").parquet(distPath)
-      }
-      freeCheckpoints(claimParts, candCp, und, distCp)
-      cfs.mkdirs(commitDir)
-      cfs.create(marker, true).close()
-    } finally batch.unpersist()
+        freeCheckpoints(claimParts, candCp, und, distCp)
+      } finally batch.unpersist()
+    }
   }
 
   /** Compact a [[bfsIngest]]/[[ssspIngest]] claim store: fold the
@@ -1332,22 +1254,13 @@ object GraphStreams {
       return None
     }
     val base = java.nio.file.Files.createTempDirectory("graft-mbfs-ing-").toString
-    val incoming = s"$base/incoming"
-    edges.filter(col("u") % 2 === 0).coalesce(1).write.mode("append").parquet(incoming)
-    edges.filter(col("u") % 2 =!= 0).coalesce(1).write.mode("append").parquet(incoming)
+    val stream = shardedInput(base,
+      edges.filter(col("u") % 2 === 0),
+      edges.filter(col("u") % 2 =!= 0))
     graft.operators.Checkpoints.free(edges)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("u", LongType), StructField("v", LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(incoming)
-    val q = stream.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        multiBfsBatch(b, id, s"$base/state", k)
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(stream, s"$base/ckpt") { (b, id) =>
+      multiBfsBatch(b, id, s"$base/state", k)
+    }
     Some(s"$base/state")
   }
 
@@ -1393,136 +1306,132 @@ object GraphStreams {
                                    maxRounds: Int = 40): Unit = {
     val spark = batch0.sparkSession
     import spark.implicits._
-    val commitDir = new org.apache.hadoop.fs.Path(statePath, "_mb_commits")
-    val marker = new org.apache.hadoop.fs.Path(commitDir, batchId.toString)
-    val cfs = commitDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (cfs.exists(marker)) return
-    val batch = batch0.select(col("u"), col("v")).distinct().persist()
-    try {
-      val edgesPath = s"$statePath/edges"
-      val distPath = s"$statePath/dist"
-      val srcsPath = s"$statePath/srcs"
-      batch.write.mode("overwrite").parquet(s"$edgesPath/batch=$batchId")
-      def bidir(df: org.apache.spark.sql.DataFrame) =
-        df.select(col("u").as("a"), col("v").as("b"))
-          .unionAll(df.select(col("v").as("a"), col("u").as("b")))
-      var und: org.apache.spark.sql.DataFrame = null
-      def adj() = {
-        if (und == null) {
-          MaintIO.edgeStoreReads.incrementAndGet()
-          und = bidir(spark.read.parquet(edgesPath).select(col("u"), col("v"))
-            .distinct()).localCheckpoint(true)
+    oncePerBatch(spark, s"$statePath/_mb_commits", batchId) {
+      val batch = batch0.select(col("u"), col("v")).distinct().persist()
+      try {
+        val edgesPath = s"$statePath/edges"
+        val distPath = s"$statePath/dist"
+        val srcsPath = s"$statePath/srcs"
+        batch.write.mode("overwrite").parquet(s"$edgesPath/batch=$batchId")
+        def bidir(df: org.apache.spark.sql.DataFrame) =
+          df.select(col("u").as("a"), col("v").as("b"))
+            .unionAll(df.select(col("v").as("a"), col("u").as("b")))
+        var und: org.apache.spark.sql.DataFrame = null
+        def adj() = {
+          if (und == null) {
+            MaintIO.edgeStoreReads.incrementAndGet()
+            und = bidir(spark.read.parquet(edgesPath).select(col("u"), col("v"))
+              .distinct()).localCheckpoint(true)
+          }
+          und
         }
-        und
-      }
-      // source ELECTION from the persisted top-k plus this batch
-      val oldSrcs: Seq[Long] =
-        if (hasVisibleData(spark, srcsPath))
-          spark.read.parquet(srcsPath).select(col("s")).as[Long].collect().toSeq
-        else Seq.empty
-      val batchTopK = batch.select(col("u").as("s"))
-        .unionAll(batch.select(col("v").as("s"))).distinct()
-        .orderBy(col("s")).limit(k).as[Long].collect().toSeq
-      val srcs = (oldSrcs ++ batchTopK).distinct.sorted.take(k)
-      // lazily-loaded, bucket-pruned claim state (the relaxBatch shape)
-      val distStoreExists = hasVisibleData(spark, distPath)
-      val loaded = scala.collection.mutable.Set.empty[Long]
-      var dist = Seq.empty[(Long, Long, Long)].toDF("src", "node", "dist")
-      var distCp: org.apache.spark.sql.DataFrame = null
-      def ensureLoaded(buckets: Seq[Long]): Unit = {
-        val need = buckets.filterNot(loaded)
-        if (need.nonEmpty) {
-          if (distStoreExists) {
-            MaintIO.distBucketReads.addAndGet(need.size.toLong)
-            val add = spark.read.parquet(distPath)
-              .filter(col("db").isin(need: _*))
-              .groupBy("src", "node").agg(min("dist").as("dist"))
+        // source ELECTION from the persisted top-k plus this batch
+        val oldSrcs: Seq[Long] =
+          if (hasVisibleData(spark, srcsPath))
+            spark.read.parquet(srcsPath).select(col("s")).as[Long].collect().toSeq
+          else Seq.empty
+        val batchTopK = batch.select(col("u").as("s"))
+          .unionAll(batch.select(col("v").as("s"))).distinct()
+          .orderBy(col("s")).limit(k).as[Long].collect().toSeq
+        val srcs = (oldSrcs ++ batchTopK).distinct.sorted.take(k)
+        // lazily-loaded, bucket-pruned claim state (the relaxBatch shape)
+        val distStoreExists = hasVisibleData(spark, distPath)
+        val loaded = scala.collection.mutable.Set.empty[Long]
+        var dist = Seq.empty[(Long, Long, Long)].toDF("src", "node", "dist")
+        var distCp: org.apache.spark.sql.DataFrame = null
+        def ensureLoaded(buckets: Seq[Long]): Unit = {
+          val need = buckets.filterNot(loaded)
+          if (need.nonEmpty) {
+            if (distStoreExists) {
+              MaintIO.distBucketReads.addAndGet(need.size.toLong)
+              val add = spark.read.parquet(distPath)
+                .filter(col("db").isin(need: _*))
+                .groupBy("src", "node").agg(min("dist").as("dist"))
+              val superseded = distCp
+              dist = dist.unionAll(add).localCheckpoint(true)
+              distCp = dist
+              if (superseded != null) graft.operators.Checkpoints.free(superseded)
+            }
+            loaded ++= need
+          }
+        }
+        def bucketsOf(nodes: org.apache.spark.sql.DataFrame): Seq[Long] =
+          nodes.select(distBucketCol(col("node")).as("db")).distinct()
+            .collect().map(_.getLong(0)).toSeq
+        // tracking prunes only while some bucket is still unloaded
+        // (see relaxBatch)
+        def trackingNeeded: Boolean =
+          distStoreExists && loaded.size < DistBuckets
+        ensureLoaded(bucketsOf(batch.select(col("u").as("node"))
+          .unionAll(batch.select(col("v").as("node")))
+          .unionAll(srcs.toDF("node"))))
+        val seeded = dist.filter(col("node") === col("src"))
+          .select(col("src")).as[Long].collect().toSet
+        val newSeeds = srcs.filterNot(seeded)
+          .map(s => (s, s, 0L)).toDF("src", "node", "dist")
+        val hop = dist.join(bidir(batch), col("node") === col("a"))
+          .select(col("src"), col("b").as("node"), (col("dist") + 1L).as("dist"))
+          .groupBy("src", "node").agg(min("dist").as("dist"))
+        var cand = newSeeds.unionByName(hop)
+        var candCp: org.apache.spark.sql.DataFrame = null
+        val claimParts = scala.collection.mutable.ArrayBuffer
+          .empty[org.apache.spark.sql.DataFrame]
+        var round = 0
+        var continue = true
+        while (continue && round <= maxRounds) {
+          val candEval = if (trackingNeeded) {
+            val prevCand = candCp
+            candCp = cand.localCheckpoint(true)
+            if (prevCand != null) graft.operators.Checkpoints.free(prevCand)
+            ensureLoaded(bucketsOf(candCp.select("node")))
+            candCp
+          } else cand
+          val improved = candEval
+            .join(dist.withColumnRenamed("dist", "old"), Seq("src", "node"), "left_outer")
+            .filter(col("old").isNull || col("dist") < col("old"))
+            .select("src", "node", "dist")
+            .localCheckpoint(true)
+          if (improved.isEmpty) {
+            graft.operators.Checkpoints.free(improved)
+            continue = false
+          } else {
+            claimParts += improved
             val superseded = distCp
-            dist = dist.unionAll(add).localCheckpoint(true)
+            dist = dist.join(improved, Seq("src", "node"), "left_anti")
+              .unionAll(improved).localCheckpoint(true)
             distCp = dist
             if (superseded != null) graft.operators.Checkpoints.free(superseded)
+            cand = improved.join(adj(), col("node") === col("a"))
+              .select(col("src"), col("b").as("node"), (col("dist") + 1L).as("dist"))
+              .groupBy("src", "node").agg(min("dist").as("dist"))
+            round += 1
           }
-          loaded ++= need
         }
-      }
-      def bucketsOf(nodes: org.apache.spark.sql.DataFrame): Seq[Long] =
-        nodes.select(distBucketCol(col("node")).as("db")).distinct()
-          .collect().map(_.getLong(0)).toSeq
-      // tracking prunes only while some bucket is still unloaded
-      // (see relaxBatch)
-      def trackingNeeded: Boolean =
-        distStoreExists && loaded.size < DistBuckets
-      ensureLoaded(bucketsOf(batch.select(col("u").as("node"))
-        .unionAll(batch.select(col("v").as("node")))
-        .unionAll(srcs.toDF("node"))))
-      val seeded = dist.filter(col("node") === col("src"))
-        .select(col("src")).as[Long].collect().toSet
-      val newSeeds = srcs.filterNot(seeded)
-        .map(s => (s, s, 0L)).toDF("src", "node", "dist")
-      val hop = dist.join(bidir(batch), col("node") === col("a"))
-        .select(col("src"), col("b").as("node"), (col("dist") + 1L).as("dist"))
-        .groupBy("src", "node").agg(min("dist").as("dist"))
-      var cand = newSeeds.unionByName(hop)
-      var candCp: org.apache.spark.sql.DataFrame = null
-      val claimParts = scala.collection.mutable.ArrayBuffer
-        .empty[org.apache.spark.sql.DataFrame]
-      var round = 0
-      var continue = true
-      while (continue && round <= maxRounds) {
-        val candEval = if (trackingNeeded) {
-          val prevCand = candCp
-          candCp = cand.localCheckpoint(true)
-          if (prevCand != null) graft.operators.Checkpoints.free(prevCand)
-          ensureLoaded(bucketsOf(candCp.select("node")))
-          candCp
-        } else cand
-        val improved = candEval
-          .join(dist.withColumnRenamed("dist", "old"), Seq("src", "node"), "left_outer")
-          .filter(col("old").isNull || col("dist") < col("old"))
-          .select("src", "node", "dist")
-          .localCheckpoint(true)
-        if (improved.isEmpty) {
-          graft.operators.Checkpoints.free(improved)
-          continue = false
-        } else {
-          claimParts += improved
-          val superseded = distCp
-          dist = dist.join(improved, Seq("src", "node"), "left_anti")
-            .unionAll(improved).localCheckpoint(true)
-          distCp = dist
-          if (superseded != null) graft.operators.Checkpoints.free(superseded)
-          cand = improved.join(adj(), col("node") === col("a"))
-            .select(col("src"), col("b").as("node"), (col("dist") + 1L).as("dist"))
-            .groupBy("src", "node").agg(min("dist").as("dist"))
-          round += 1
+        if (continue) {
+          val lastCand = cand.localCheckpoint(true)
+          if (trackingNeeded) ensureLoaded(bucketsOf(lastCand.select("node")))
+          val leftover = lastCand
+            .join(dist.withColumnRenamed("dist", "old"), Seq("src", "node"), "left_outer")
+            .filter(col("old").isNull || col("dist") < col("old"))
+            .limit(1).count()
+          graft.operators.Checkpoints.free(lastCand)
+          if (leftover > 0) {
+            freeCheckpoints(claimParts, candCp, und, distCp)
+            throw new IllegalStateException(
+              s"multiBfsBatch: maxRounds=$maxRounds exhausted before fixpoint " +
+                s"in batch $batchId — raise maxRounds")
+          }
         }
-      }
-      if (continue) {
-        val lastCand = cand.localCheckpoint(true)
-        if (trackingNeeded) ensureLoaded(bucketsOf(lastCand.select("node")))
-        val leftover = lastCand
-          .join(dist.withColumnRenamed("dist", "old"), Seq("src", "node"), "left_outer")
-          .filter(col("old").isNull || col("dist") < col("old"))
-          .limit(1).count()
-        graft.operators.Checkpoints.free(lastCand)
-        if (leftover > 0) {
-          freeCheckpoints(claimParts, candCp, und, distCp)
-          throw new IllegalStateException(
-            s"multiBfsBatch: maxRounds=$maxRounds exhausted before fixpoint " +
-              s"in batch $batchId — raise maxRounds")
+        if (claimParts.nonEmpty) {
+          claimParts.reduce(_ unionAll _)
+            .withColumn("db", distBucketCol(col("node")))
+            .repartition(col("db"))
+            .write.mode("append").partitionBy("db").parquet(distPath)
         }
-      }
-      if (claimParts.nonEmpty) {
-        claimParts.reduce(_ unionAll _)
-          .withColumn("db", distBucketCol(col("node")))
-          .repartition(col("db"))
-          .write.mode("append").partitionBy("db").parquet(distPath)
-      }
-      srcs.toDF("s").coalesce(1).write.mode("overwrite").parquet(srcsPath)
-      freeCheckpoints(claimParts, candCp, und, distCp)
-      cfs.mkdirs(commitDir)
-      cfs.create(marker, true).close()
-    } finally { batch.unpersist(); () }
+        srcs.toDF("s").coalesce(1).write.mode("overwrite").parquet(srcsPath)
+        freeCheckpoints(claimParts, candCp, und, distCp)
+      } finally { batch.unpersist(); () }
+    }
   }
 
   /** Resolve the maintained multi-source claims: min per (src, node),

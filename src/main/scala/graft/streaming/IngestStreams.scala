@@ -3,9 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types._
 
-import graft.streaming.StreamState.{hasVisibleData, healSwap, swapInstall}
+import graft.streaming.StreamState.{drain, hasVisibleData, healSwap, oncePerBatch, shardedInput, swapInstall}
 
 /** Streaming INGEST-DEDUP / table-maintenance faces (SURVEY §2.7
   * rows 37b\'… 37t and §2.8 sinks): URL/CDC/quality/near-dup/span/
@@ -39,15 +38,10 @@ object IngestStreams {
         .toDF("canonical_url", "keep_doc_id", "n_copies")
     }
     val base = java.nio.file.Files.createTempDirectory("graft-url-ing-").toString
-    val incoming = s"$base/incoming"
-    urls.filter(col("doc_id") % 2 === 0).coalesce(1).write.mode("append").parquet(incoming)
-    urls.filter(col("doc_id") % 2 =!= 0).coalesce(1).write.mode("append").parquet(incoming)
+    val stream = shardedInput(base,
+      urls.filter(col("doc_id") % 2 === 0),
+      urls.filter(col("doc_id") % 2 =!= 0))
     graft.operators.Checkpoints.free(urls)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("url", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(incoming)
     urlDedupIngest(stream, s"$base/state", s"$base/ckpt", nBuckets)
     urlDedupResolve(spark, s"$base/state")
   }
@@ -82,24 +76,14 @@ object IngestStreams {
     val pool = all.filter(col("source") =!= targetSource)
       .select(col("doc_id"), col("text"))
     val base = java.nio.file.Files.createTempDirectory("graft-dsir-ing-").toString
-    val incoming = s"$base/incoming"
-    pool.filter(col("doc_id") % 2 === 0).coalesce(1).write.mode("append").parquet(incoming)
-    pool.filter(col("doc_id") % 2 =!= 0).coalesce(1).write.mode("append").parquet(incoming)
+    val stream = shardedInput(base,
+      pool.filter(col("doc_id") % 2 === 0),
+      pool.filter(col("doc_id") % 2 =!= 0))
     graft.operators.Checkpoints.free(all)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(incoming)
     val state = s"$base/state"
-    val q = stream.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        dsirScoreBatch(b, id, state, lambdas, dim)
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(stream, s"$base/ckpt") { (b, id) =>
+      dsirScoreBatch(b, id, state, lambdas, dim)
+    }
     spark.read.parquet(s"$state/scored")
       .select("doc_id", "n_feats", "w_micros")
   }
@@ -111,16 +95,12 @@ object IngestStreams {
                                     batchId: Long, statePath: String,
                                     lambdas: Seq[(Long, Long)], dim: Int): Unit = {
     val spark = batch0.sparkSession
-    val commitDir = new org.apache.hadoop.fs.Path(statePath, "_dsir_commits")
-    val marker = new org.apache.hadoop.fs.Path(commitDir, batchId.toString)
-    val cfs = commitDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (cfs.exists(marker)) return
-    graft.operators.TextAnalysis.dsirScoreFrozen(
-        batch0.select(col("doc_id"), col("text")).dropDuplicates("doc_id"),
-        lambdas, dim)
-      .write.mode("overwrite").parquet(s"$statePath/scored/batch=$batchId")
-    cfs.mkdirs(commitDir)
-    cfs.create(marker, true).close()
+    oncePerBatch(spark, s"$statePath/_dsir_commits", batchId) {
+      graft.operators.TextAnalysis.dsirScoreFrozen(
+          batch0.select(col("doc_id"), col("text")).dropDuplicates("doc_id"),
+          lambdas, dim)
+        .write.mode("overwrite").parquet(s"$statePath/scored/batch=$batchId")
+    }
   }
 
   /** Streamed C4-style line dedup — the ingest face of
@@ -149,23 +129,13 @@ object IngestStreams {
         .toDF("seg_md5", "keep_doc_id", "keep_seg_idx", "n_copies")
     }
     val base = java.nio.file.Files.createTempDirectory("graft-line-ing-").toString
-    val incoming = s"$base/incoming"
-    docs.filter(col("doc_id") % 2 === 0).coalesce(1).write.mode("append").parquet(incoming)
-    docs.filter(col("doc_id") % 2 =!= 0).coalesce(1).write.mode("append").parquet(incoming)
+    val stream = shardedInput(base,
+      docs.filter(col("doc_id") % 2 === 0),
+      docs.filter(col("doc_id") % 2 =!= 0))
     graft.operators.Checkpoints.free(docs)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(incoming)
-    val q = stream.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        lineDedupBatch(b, id, s"$base/state", wordsPerSeg)
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(stream, s"$base/ckpt") { (b, id) =>
+      lineDedupBatch(b, id, s"$base/state", wordsPerSeg)
+    }
     lineDedupResolve(spark, s"$base/state")
   }
 
@@ -176,22 +146,18 @@ object IngestStreams {
                                     batchId: Long, statePath: String,
                                     wordsPerSeg: Int): Unit = {
     val spark = batch0.sparkSession
-    val commitDir = new org.apache.hadoop.fs.Path(statePath, "_line_commits")
-    val marker = new org.apache.hadoop.fs.Path(commitDir, batchId.toString)
-    val cfs = commitDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (cfs.exists(marker)) return
-    graft.operators.Dedup.lineSegments(
-        batch0.dropDuplicates("doc_id").select(col("doc_id"), col("text")),
-        wordsPerSeg)
-      .select(md5(col("seg")).as("seg_md5"), col("doc_id"), col("seg_idx"))
-      .groupBy("seg_md5")
-      .agg(min(struct(col("doc_id"), col("seg_idx"))).as("first"),
-        count(lit(1)).as("n_copies"))
-      .select(col("seg_md5"), col("first.doc_id").as("keep_doc_id"),
-        col("first.seg_idx").as("keep_seg_idx"), col("n_copies"))
-      .write.mode("overwrite").parquet(s"$statePath/deltas/batch=$batchId")
-    cfs.mkdirs(commitDir)
-    cfs.create(marker, true).close()
+    oncePerBatch(spark, s"$statePath/_line_commits", batchId) {
+      graft.operators.Dedup.lineSegments(
+          batch0.dropDuplicates("doc_id").select(col("doc_id"), col("text")),
+          wordsPerSeg)
+        .select(md5(col("seg")).as("seg_md5"), col("doc_id"), col("seg_idx"))
+        .groupBy("seg_md5")
+        .agg(min(struct(col("doc_id"), col("seg_idx"))).as("first"),
+          count(lit(1)).as("n_copies"))
+        .select(col("seg_md5"), col("first.doc_id").as("keep_doc_id"),
+          col("first.seg_idx").as("keep_seg_idx"), col("n_copies"))
+        .write.mode("overwrite").parquet(s"$statePath/deltas/batch=$batchId")
+    }
   }
 
   /** Resolve the maintained line-dedup deltas: global first
@@ -222,21 +188,17 @@ object IngestStreams {
                                   batchId: Long, statePath: String,
                                   n: Int = 3): Unit = {
     val spark = batch0.sparkSession
-    val commitDir = new org.apache.hadoop.fs.Path(statePath, "_nov_commits")
-    val marker = new org.apache.hadoop.fs.Path(commitDir, batchId.toString)
-    val cfs = commitDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (cfs.exists(marker)) return
-    val sh = graft.operators.Dedup.wordShingles(
-        batch0.dropDuplicates("doc_id").select(col("doc_id"), col("text")), n)
-      .persist()
-    try {
-      sh.groupBy("shingle").agg(min(col("doc_id")).as("first_doc"))
-        .write.mode("overwrite").parquet(s"$statePath/sh_deltas/batch=$batchId")
-      sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-        .write.mode("overwrite").parquet(s"$statePath/doc_deltas/batch=$batchId")
-      cfs.mkdirs(commitDir)
-      cfs.create(marker, true).close()
-    } finally { sh.unpersist(); () }
+    oncePerBatch(spark, s"$statePath/_nov_commits", batchId) {
+      val sh = graft.operators.Dedup.wordShingles(
+          batch0.dropDuplicates("doc_id").select(col("doc_id"), col("text")), n)
+        .persist()
+      try {
+        sh.groupBy("shingle").agg(min(col("doc_id")).as("first_doc"))
+          .write.mode("overwrite").parquet(s"$statePath/sh_deltas/batch=$batchId")
+        sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
+          .write.mode("overwrite").parquet(s"$statePath/doc_deltas/batch=$batchId")
+      } finally { sh.unpersist(); () }
+    }
   }
 
   /** Resolve the maintained novelty deltas to the batch
@@ -272,24 +234,14 @@ object IngestStreams {
     val docs = graft.Tables.documents(spark, dir)
       .select(col("doc_id"), col("text")).localCheckpoint(true)
     val base = java.nio.file.Files.createTempDirectory("graft-nov-ing-").toString
-    val incoming = s"$base/incoming"
-    docs.filter(col("doc_id") % 2 === 0).coalesce(1).write.mode("append").parquet(incoming)
-    docs.filter(col("doc_id") % 2 =!= 0).coalesce(1).write.mode("append").parquet(incoming)
+    val stream = shardedInput(base,
+      docs.filter(col("doc_id") % 2 === 0),
+      docs.filter(col("doc_id") % 2 =!= 0))
     graft.operators.Checkpoints.free(docs)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(incoming)
     val state = s"$base/state"
-    val q = stream.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        noveltyBatch(b, id, state)
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(stream, s"$base/ckpt") { (b, id) =>
+      noveltyBatch(b, id, state)
+    }
     noveltyResolve(spark, state)
   }
 
@@ -313,37 +265,33 @@ object IngestStreams {
                                     batchId: Long, statePath: String,
                                     nBuckets: Int = 64): Unit = {
     val spark = batch0.sparkSession
-    val commitDir = new org.apache.hadoop.fs.Path(statePath, "_bm25_commits")
-    val marker = new org.apache.hadoop.fs.Path(commitDir, batchId.toString)
-    val cfs = commitDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (cfs.exists(marker)) return
-    // positional tokens (the ta_phrase_search convention): tf falls
-    // out as the position count, and storing the sorted position
-    // array makes the maintained index serve PHRASE queries too
-    val toks = graft.operators.TextAnalysis.tokenPositions(
-        batch0.dropDuplicates("doc_id").select(col("doc_id"), col("text")))
-      .persist()
-    try {
-      val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-      // cluster by bucket before the partitioned write: one file per
-      // (batch, bucket), not one per (task, bucket) — the fan-out
-      // otherwise explodes to tasks×buckets tiny files per batch
-      toks.groupBy("doc_id", "word")
-        .agg(count(lit(1)).as("tf"),
-          sort_array(collect_list(col("pos"))).as("positions"))
-        .join(dl, "doc_id")
-        .withColumn("bkt",
-          pmod(xxhash64(col("word")), lit(nBuckets.toLong)).cast("int"))
-        .repartition(col("bkt"))
-        .write.mode("overwrite").partitionBy("bkt")
-        .parquet(s"$statePath/postings/batch=$batchId")
-      dl.agg(count(lit(1)).as("n_docs"),
-          coalesce(sum("dl"), lit(0L)).as("tot_dl"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$statePath/stats/batch=$batchId")
-      cfs.mkdirs(commitDir)
-      cfs.create(marker, true).close()
-    } finally { toks.unpersist(); () }
+    oncePerBatch(spark, s"$statePath/_bm25_commits", batchId) {
+      // positional tokens (the ta_phrase_search convention): tf falls
+      // out as the position count, and storing the sorted position
+      // array makes the maintained index serve PHRASE queries too
+      val toks = graft.operators.TextAnalysis.tokenPositions(
+          batch0.dropDuplicates("doc_id").select(col("doc_id"), col("text")))
+        .persist()
+      try {
+        val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
+        // cluster by bucket before the partitioned write: one file per
+        // (batch, bucket), not one per (task, bucket) — the fan-out
+        // otherwise explodes to tasks×buckets tiny files per batch
+        toks.groupBy("doc_id", "word")
+          .agg(count(lit(1)).as("tf"),
+            sort_array(collect_list(col("pos"))).as("positions"))
+          .join(dl, "doc_id")
+          .withColumn("bkt",
+            pmod(xxhash64(col("word")), lit(nBuckets.toLong)).cast("int"))
+          .repartition(col("bkt"))
+          .write.mode("overwrite").partitionBy("bkt")
+          .parquet(s"$statePath/postings/batch=$batchId")
+        dl.agg(count(lit(1)).as("n_docs"),
+            coalesce(sum("dl"), lit(0L)).as("tot_dl"))
+          .coalesce(1)
+          .write.mode("overwrite").parquet(s"$statePath/stats/batch=$batchId")
+      } finally { toks.unpersist(); () }
+    }
   }
 
   private val Bm25PostingCols = Seq("doc_id", "word", "tf", "positions", "dl", "bkt")
@@ -442,16 +390,10 @@ object IngestStreams {
     val perTrigger = math.max(1L, math.max(even.size, odd.size).toLong)
     val state = s"$base/state"
     if (even.nonEmpty || odd.nonEmpty) {
-      val q = ReplayStream.read(spark, log, Some(perTrigger))
-        .writeStream
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          bm25IndexBatch(
-            b.select(col("key").as("doc_id"), col("value").as("text")), id, state)
-        }
-        .option("checkpointLocation", s"$base/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      drain(ReplayStream.read(spark, log, Some(perTrigger)), s"$base/ckpt") { (b, id) =>
+        bm25IndexBatch(
+          b.select(col("key").as("doc_id"), col("value").as("text")), id, state)
+      }
     }
     // fold the drained deltas so the entry's resolve exercises the
     // compacted path (SURVEY §5's inverted-index rehearsal: un-folded per-shard
@@ -504,16 +446,12 @@ object IngestStreams {
                                   batchId: Long, statePath: String,
                                   k: Int = 50, seed: String = "wsamp"): Unit = {
     val spark = batch0.sparkSession
-    val commitDir = new org.apache.hadoop.fs.Path(statePath, "_wsamp_commits")
-    val marker = new org.apache.hadoop.fs.Path(commitDir, batchId.toString)
-    val cfs = commitDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (cfs.exists(marker)) return
-    graft.operators.TextAnalysis
-      .weightedSampleKeys(batch0.dropDuplicates("doc_id"), seed)
-      .orderBy(col("key_nanos").desc, col("doc_id").asc).limit(k)
-      .write.mode("overwrite").parquet(s"$statePath/wsamp/batch=$batchId")
-    cfs.mkdirs(commitDir)
-    cfs.create(marker, true).close()
+    oncePerBatch(spark, s"$statePath/_wsamp_commits", batchId) {
+      graft.operators.TextAnalysis
+        .weightedSampleKeys(batch0.dropDuplicates("doc_id"), seed)
+        .orderBy(col("key_nanos").desc, col("doc_id").asc).limit(k)
+        .write.mode("overwrite").parquet(s"$statePath/wsamp/batch=$batchId")
+    }
   }
 
   /** Streamed weighted sample without replacement (the
@@ -531,24 +469,14 @@ object IngestStreams {
     val docs = graft.Tables.documents(spark, dir)
       .select(col("doc_id"), col("n_chars")).localCheckpoint(true)
     val base = java.nio.file.Files.createTempDirectory("graft-wsamp-ing-").toString
-    val incoming = s"$base/incoming"
-    docs.filter(col("doc_id") % 2 === 0).coalesce(1).write.mode("append").parquet(incoming)
-    docs.filter(col("doc_id") % 2 =!= 0).coalesce(1).write.mode("append").parquet(incoming)
+    val stream = shardedInput(base,
+      docs.filter(col("doc_id") % 2 === 0),
+      docs.filter(col("doc_id") % 2 =!= 0))
     graft.operators.Checkpoints.free(docs)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("n_chars", LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(incoming)
     val state = s"$base/state"
-    val q = stream.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        wsampleBatch(b, id, state, k)
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(stream, s"$base/ckpt") { (b, id) =>
+      wsampleBatch(b, id, state, k)
+    }
     if (!hasVisibleData(spark, s"$state/wsamp")) {
       return Seq.empty[(Long, Long, Long, Long)]
         .toDF("doc_id", "weight", "key_nanos", "rk")
@@ -566,14 +494,10 @@ object IngestStreams {
   private[graft] def vecStoreBatch(batch0: org.apache.spark.sql.DataFrame,
                                    batchId: Long, statePath: String): Unit = {
     val spark = batch0.sparkSession
-    val commitDir = new org.apache.hadoop.fs.Path(statePath, "_vec_commits")
-    val marker = new org.apache.hadoop.fs.Path(commitDir, batchId.toString)
-    val cfs = commitDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (cfs.exists(marker)) return
-    batch0.dropDuplicates("vec_id").select(col("vec_id"), col("embedding"))
-      .write.mode("overwrite").parquet(s"$statePath/vecs/batch=$batchId")
-    cfs.mkdirs(commitDir)
-    cfs.create(marker, true).close()
+    oncePerBatch(spark, s"$statePath/_vec_commits", batchId) {
+      batch0.dropDuplicates("vec_id").select(col("vec_id"), col("embedding"))
+        .write.mode("overwrite").parquet(s"$statePath/vecs/batch=$batchId")
+    }
   }
 
   /** Streamed hybrid retrieval (the `stream_hybrid_rrf` entry): the
@@ -595,28 +519,22 @@ object IngestStreams {
     val vecs = graft.Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding")).localCheckpoint(true)
     val base = java.nio.file.Files.createTempDirectory("graft-hyb-ing-").toString
-    docs.filter(col("doc_id") % 2 === 0).coalesce(1).write.mode("append").parquet(s"$base/in_docs")
-    docs.filter(col("doc_id") % 2 =!= 0).coalesce(1).write.mode("append").parquet(s"$base/in_docs")
-    vecs.filter(col("vec_id") % 2 === 0).coalesce(1).write.mode("append").parquet(s"$base/in_vecs")
-    vecs.filter(col("vec_id") % 2 =!= 0).coalesce(1).write.mode("append").parquet(s"$base/in_vecs")
+    val docStream = shardedInput(s"$base/docs",
+      docs.filter(col("doc_id") % 2 === 0), docs.filter(col("doc_id") % 2 =!= 0))
+    val vecStream = shardedInput(s"$base/vecs",
+      vecs.filter(col("vec_id") % 2 === 0), vecs.filter(col("vec_id") % 2 =!= 0))
     graft.operators.Checkpoints.free(docs)
     graft.operators.Checkpoints.free(vecs)
     val state = s"$base/state"
-    val qDocs = spark.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in_docs")
-      .writeStream
+    // the two arms drain CONCURRENTLY, so they start here and are
+    // awaited together rather than drained one after the other
+    val qDocs = docStream.writeStream
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
         bm25IndexBatch(b, id, state)
       }
       .option("checkpointLocation", s"$base/ckpt_docs")
       .trigger(Trigger.AvailableNow()).start()
-    val qVecs = spark.readStream
-      .schema(StructType(Seq(StructField("vec_id", LongType),
-        StructField("embedding", ArrayType(FloatType)))))
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in_vecs")
-      .writeStream
+    val qVecs = vecStream.writeStream
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
         vecStoreBatch(b, id, state)
       }
@@ -644,73 +562,60 @@ object IngestStreams {
                                   batchId: Long, statePath: String): Unit = {
     val spark = batch0.sparkSession
     import spark.implicits._
-    val commitDir = new org.apache.hadoop.fs.Path(statePath, "_vecg_commits")
-    val marker = new org.apache.hadoop.fs.Path(commitDir, batchId.toString)
-    val cfs = commitDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (cfs.exists(marker)) return
-    val rows = batch0.dropDuplicates("vec_id")
-      .select(col("vec_id"), col("embedding"), col("label"))
-      .localCheckpoint(true)
-    try {
-      rows.write.mode("overwrite").parquet(s"$statePath/vecs/batch=$batchId")
-      val dim = rows.select(size(col("embedding"))).head(1)
-        .headOption.map(_.getInt(0)).getOrElse(0)
-      // upper-triangle Gram block per partition, folded in partition
-      // order (the pcaTrain determinism discipline), one row per batch
-      val parts = rows.select("embedding").as[Seq[Float]].rdd
-        .mapPartitionsWithIndex { (idx, it0) =>
-          val acc = Array.ofDim[Double](dim, dim)
-          it0.foreach { x =>
-            var i = 0
-            while (i < dim) {
-              val xi = x(i).toDouble
-              if (xi != 0.0) {
-                var j = i
-                while (j < dim) { acc(i)(j) += xi * x(j).toDouble; j += 1 }
+    oncePerBatch(spark, s"$statePath/_vecg_commits", batchId) {
+      val rows = batch0.dropDuplicates("vec_id")
+        .select(col("vec_id"), col("embedding"), col("label"))
+        .localCheckpoint(true)
+      try {
+        rows.write.mode("overwrite").parquet(s"$statePath/vecs/batch=$batchId")
+        val dim = rows.select(size(col("embedding"))).head(1)
+          .headOption.map(_.getInt(0)).getOrElse(0)
+        // upper-triangle Gram block per partition, folded in partition
+        // order (the pcaTrain determinism discipline), one row per batch
+        val parts = rows.select("embedding").as[Seq[Float]].rdd
+          .mapPartitionsWithIndex { (idx, it0) =>
+            val acc = Array.ofDim[Double](dim, dim)
+            it0.foreach { x =>
+              var i = 0
+              while (i < dim) {
+                val xi = x(i).toDouble
+                if (xi != 0.0) {
+                  var j = i
+                  while (j < dim) { acc(i)(j) += xi * x(j).toDouble; j += 1 }
+                }
+                i += 1
               }
-              i += 1
             }
+            Iterator.single((idx, acc))
+          }.collect().sortBy(_._1).map(_._2)
+        val flat = Array.ofDim[Double](dim * dim)
+        parts.foreach { b =>
+          var i = 0
+          while (i < dim) {
+            var j = i
+            while (j < dim) { flat(i * dim + j) += b(i)(j); j += 1 }
+            i += 1
           }
-          Iterator.single((idx, acc))
-        }.collect().sortBy(_._1).map(_._2)
-      val flat = Array.ofDim[Double](dim * dim)
-      parts.foreach { b =>
-        var i = 0
-        while (i < dim) {
-          var j = i
-          while (j < dim) { flat(i * dim + j) += b(i)(j); j += 1 }
-          i += 1
         }
-      }
-      Seq((dim, flat.toSeq)).toDF("dim", "gram")
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$statePath/gram/batch=$batchId")
-      cfs.mkdirs(commitDir)
-      cfs.create(marker, true).close()
-    } finally { graft.operators.Checkpoints.free(rows); () }
+        Seq((dim, flat.toSeq)).toDF("dim", "gram")
+          .coalesce(1)
+          .write.mode("overwrite").parquet(s"$statePath/gram/batch=$batchId")
+      } finally { graft.operators.Checkpoints.free(rows); () }
+    }
   }
 
   private def driveVecGram(spark: SparkSession, dir: String): String = {
     val vecs = graft.Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"), col("label")).localCheckpoint(true)
     val base = java.nio.file.Files.createTempDirectory("graft-vecg-ing-").toString
-    val incoming = s"$base/incoming"
-    vecs.filter(col("vec_id") % 2 === 0).coalesce(1).write.mode("append").parquet(incoming)
-    vecs.filter(col("vec_id") % 2 =!= 0).coalesce(1).write.mode("append").parquet(incoming)
+    val stream = shardedInput(base,
+      vecs.filter(col("vec_id") % 2 === 0),
+      vecs.filter(col("vec_id") % 2 =!= 0))
     graft.operators.Checkpoints.free(vecs)
     val state = s"$base/state"
-    val q = spark.readStream
-      .schema(StructType(Seq(StructField("vec_id", LongType),
-        StructField("embedding", ArrayType(FloatType)),
-        StructField("label", IntegerType))))
-      .option("maxFilesPerTrigger", "1").parquet(incoming)
-      .writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        vecGramBatch(b, id, state)
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    drain(stream, s"$base/ckpt") { (b, id) =>
+      vecGramBatch(b, id, state)
+    }
     state
   }
 
@@ -791,53 +696,49 @@ object IngestStreams {
                                         nBuckets: Int = 64): Unit = {
     val spark = batch0.sparkSession
     import spark.implicits._
-    val commitDir = new org.apache.hadoop.fs.Path(statePath, "_cont_commits")
-    val marker = new org.apache.hadoop.fs.Path(commitDir, batchId.toString)
-    val cfs = commitDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (cfs.exists(marker)) return
-    val docs = batch0.dropDuplicates("doc_id").select(col("doc_id"), col("text"))
-    val trainB = docs.filter(col("doc_id") % evalMod =!= 0)
-    val evalB = docs.filter(col("doc_id") % evalMod === 0)
-    val bkt = pmod(xxhash64(col("shingle")), lit(nBuckets.toLong)).cast("int")
-    val trainSh = graft.operators.Dedup.wordShingles(trainB, n)
-      .withColumn("bkt", bkt).persist()
-    val evalOld =
-      if (hasVisibleData(spark, s"$statePath/eval_sh"))
-        spark.read.parquet(s"$statePath/eval_sh")
-          .filter(col("batch") < batchId).select("shingle")
-      else Seq.empty[String].toDF("shingle")
-    val evalNew = graft.operators.Dedup.wordShingles(evalB, n)
-      .select("shingle").distinct()
-      .join(evalOld, Seq("shingle"), "left_anti")
-      .withColumn("bkt", bkt).persist()
-    try {
-      graft.operators.Dedup.shingleSetSizes(trainB, n)
-        .write.mode("overwrite").parquet(s"$statePath/train_docs/batch=$batchId")
-      evalNew.write.mode("overwrite").parquet(s"$statePath/eval_sh/batch=$batchId")
-      val term1 = trainSh
-        .join(broadcast(evalOld.union(evalNew.select("shingle"))),
-          Seq("shingle"), "left_semi")
-        .select("doc_id")
-      val newBkts = evalNew.select("bkt").distinct()
-        .collect().map(_.getInt(0)).toSeq
-      val term2 =
-        if (newBkts.isEmpty || !hasVisibleData(spark, s"$statePath/train_sh"))
-          spark.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0)
-        else spark.read.parquet(s"$statePath/train_sh")
-          .filter(col("batch") < batchId && col("bkt").isin(newBkts: _*))
-          .join(broadcast(evalNew.select("shingle")), Seq("shingle"), "left_semi")
+    oncePerBatch(spark, s"$statePath/_cont_commits", batchId) {
+      val docs = batch0.dropDuplicates("doc_id").select(col("doc_id"), col("text"))
+      val trainB = docs.filter(col("doc_id") % evalMod =!= 0)
+      val evalB = docs.filter(col("doc_id") % evalMod === 0)
+      val bkt = pmod(xxhash64(col("shingle")), lit(nBuckets.toLong)).cast("int")
+      val trainSh = graft.operators.Dedup.wordShingles(trainB, n)
+        .withColumn("bkt", bkt).persist()
+      val evalOld =
+        if (hasVisibleData(spark, s"$statePath/eval_sh"))
+          spark.read.parquet(s"$statePath/eval_sh")
+            .filter(col("batch") < batchId).select("shingle")
+        else Seq.empty[String].toDF("shingle")
+      val evalNew = graft.operators.Dedup.wordShingles(evalB, n)
+        .select("shingle").distinct()
+        .join(evalOld, Seq("shingle"), "left_anti")
+        .withColumn("bkt", bkt).persist()
+      try {
+        graft.operators.Dedup.shingleSetSizes(trainB, n)
+          .write.mode("overwrite").parquet(s"$statePath/train_docs/batch=$batchId")
+        evalNew.write.mode("overwrite").parquet(s"$statePath/eval_sh/batch=$batchId")
+        val term1 = trainSh
+          .join(broadcast(evalOld.union(evalNew.select("shingle"))),
+            Seq("shingle"), "left_semi")
           .select("doc_id")
-      term1.union(term2).groupBy("doc_id").agg(count(lit(1)).as("n_hits"))
-        .write.mode("overwrite").parquet(s"$statePath/hits/batch=$batchId")
-      // cluster by bucket before the partitioned write (one file per
-      // (batch, bucket) — the bm25IndexBatch fan-out note)
-      trainSh.select("doc_id", "shingle", "bkt")
-        .repartition(col("bkt"))
-        .write.mode("overwrite").partitionBy("bkt")
-        .parquet(s"$statePath/train_sh/batch=$batchId")
-      cfs.mkdirs(commitDir)
-      cfs.create(marker, true).close()
-    } finally { trainSh.unpersist(); evalNew.unpersist(); () }
+        val newBkts = evalNew.select("bkt").distinct()
+          .collect().map(_.getInt(0)).toSeq
+        val term2 =
+          if (newBkts.isEmpty || !hasVisibleData(spark, s"$statePath/train_sh"))
+            spark.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0)
+          else spark.read.parquet(s"$statePath/train_sh")
+            .filter(col("batch") < batchId && col("bkt").isin(newBkts: _*))
+            .join(broadcast(evalNew.select("shingle")), Seq("shingle"), "left_semi")
+            .select("doc_id")
+        term1.union(term2).groupBy("doc_id").agg(count(lit(1)).as("n_hits"))
+          .write.mode("overwrite").parquet(s"$statePath/hits/batch=$batchId")
+        // cluster by bucket before the partitioned write (one file per
+        // (batch, bucket) — the bm25IndexBatch fan-out note)
+        trainSh.select("doc_id", "shingle", "bkt")
+          .repartition(col("bkt"))
+          .write.mode("overwrite").partitionBy("bkt")
+          .parquet(s"$statePath/train_sh/batch=$batchId")
+      } finally { trainSh.unpersist(); evalNew.unpersist(); () }
+    }
   }
 
   /** Resolve the maintained contamination state to
@@ -878,27 +779,17 @@ object IngestStreams {
     val docs = graft.Tables.documents(spark, dir)
       .select(col("doc_id"), col("text")).localCheckpoint(true)
     val base = java.nio.file.Files.createTempDirectory("graft-cont-ing-").toString
-    val incoming = s"$base/incoming"
     // % 3 split (not % 2): eval ids are % 50 == 0, all even — a
     // parity split would land every eval doc in one shard and never
     // drive the retro term at entry scale
-    docs.filter(col("doc_id") % 3 === 0).coalesce(1).write.mode("append").parquet(incoming)
-    docs.filter(col("doc_id") % 3 =!= 0).coalesce(1).write.mode("append").parquet(incoming)
+    val stream = shardedInput(base,
+      docs.filter(col("doc_id") % 3 === 0),
+      docs.filter(col("doc_id") % 3 =!= 0))
     graft.operators.Checkpoints.free(docs)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(incoming)
     val state = s"$base/state"
-    val q = stream.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        contaminationBatch(b, id, state)
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(stream, s"$base/ckpt") { (b, id) =>
+      contaminationBatch(b, id, state)
+    }
     contaminationResolve(spark, state)
   }
 
@@ -923,24 +814,14 @@ object IngestStreams {
         .toDF("doc_id", "n_feats", "logit", "keep")
     }
     val base = java.nio.file.Files.createTempDirectory("graft-clf-ing-").toString
-    val incoming = s"$base/incoming"
-    docs.filter(col("doc_id") % 2 === 0).coalesce(1).write.mode("append").parquet(incoming)
-    docs.filter(col("doc_id") % 2 =!= 0).coalesce(1).write.mode("append").parquet(incoming)
+    val stream = shardedInput(base,
+      docs.filter(col("doc_id") % 2 === 0),
+      docs.filter(col("doc_id") % 2 =!= 0))
     graft.operators.Checkpoints.free(docs)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(incoming)
     val state = s"$base/state"
-    val q = stream.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        qualityClassifyBatch(b, id, state)
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(stream, s"$base/ckpt") { (b, id) =>
+      qualityClassifyBatch(b, id, state)
+    }
     spark.read.parquet(s"$state/scored")
       .select("doc_id", "n_feats", "logit", "keep")
   }
@@ -953,15 +834,11 @@ object IngestStreams {
   private[graft] def langSpansBatch(batch0: org.apache.spark.sql.DataFrame,
                                     batchId: Long, statePath: String): Unit = {
     val spark = batch0.sparkSession
-    val commitDir = new org.apache.hadoop.fs.Path(statePath, "_lspan_commits")
-    val marker = new org.apache.hadoop.fs.Path(commitDir, batchId.toString)
-    val cfs = commitDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (cfs.exists(marker)) return
-    graft.operators.TextAnalysis.langSpans(
-        batch0.select(col("doc_id"), col("text")).dropDuplicates("doc_id"))
-      .write.mode("overwrite").parquet(s"$statePath/spans/batch=$batchId")
-    cfs.mkdirs(commitDir)
-    cfs.create(marker, true).close()
+    oncePerBatch(spark, s"$statePath/_lspan_commits", batchId) {
+      graft.operators.TextAnalysis.langSpans(
+          batch0.select(col("doc_id"), col("text")).dropDuplicates("doc_id"))
+        .write.mode("overwrite").parquet(s"$statePath/spans/batch=$batchId")
+    }
   }
 
   /** Streamed language-span segmentation (the `stream_lang_spans`
@@ -975,24 +852,14 @@ object IngestStreams {
     val docs = graft.Tables.documents(spark, dir)
       .select(col("doc_id"), col("text")).localCheckpoint(true)
     val base = java.nio.file.Files.createTempDirectory("graft-lspan-ing-").toString
-    val incoming = s"$base/incoming"
-    docs.filter(col("doc_id") % 2 === 0).coalesce(1).write.mode("append").parquet(incoming)
-    docs.filter(col("doc_id") % 2 =!= 0).coalesce(1).write.mode("append").parquet(incoming)
+    val stream = shardedInput(base,
+      docs.filter(col("doc_id") % 2 === 0),
+      docs.filter(col("doc_id") % 2 =!= 0))
     graft.operators.Checkpoints.free(docs)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(incoming)
     val state = s"$base/state"
-    val q = stream.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        langSpansBatch(b, id, state)
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(stream, s"$base/ckpt") { (b, id) =>
+      langSpansBatch(b, id, state)
+    }
     spark.read.parquet(s"$state/spans")
       .select("doc_id", "span_idx", "lang", "start_win", "end_win", "n_windows")
   }
@@ -1018,24 +885,14 @@ object IngestStreams {
         .toDF("doc_id", "source", "logit", "rk")
     }
     val base = java.nio.file.Files.createTempDirectory("graft-topp-ing-").toString
-    val incoming = s"$base/incoming"
-    docs.filter(col("doc_id") % 2 === 0).coalesce(1).write.mode("append").parquet(incoming)
-    docs.filter(col("doc_id") % 2 =!= 0).coalesce(1).write.mode("append").parquet(incoming)
+    val stream = shardedInput(base,
+      docs.filter(col("doc_id") % 2 === 0),
+      docs.filter(col("doc_id") % 2 =!= 0))
     graft.operators.Checkpoints.free(docs)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(incoming)
     val state = s"$base/state"
-    val q = stream.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        qualityClassifyBatch(b, id, state)
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(stream, s"$base/ckpt") { (b, id) =>
+      qualityClassifyBatch(b, id, state)
+    }
     val scored = spark.read.parquet(s"$state/scored")
       .select(col("doc_id"), col("logit"))
       .join(graft.Tables.documents(spark, dir).select("doc_id", "source"),
@@ -1068,25 +925,13 @@ object IngestStreams {
     val labeled = TextAnalysis.clfPlantedCorpus.zipWithIndex
       .map { case ((t, y), i) => (i.toLong, t, y) }
     val base = java.nio.file.Files.createTempDirectory("graft-clfrt-ing-").toString
-    val incoming = s"$base/incoming"
-    labeled.filter(_._1 % 2 == 0).toDF("id", "text", "label")
-      .coalesce(1).write.mode("append").parquet(incoming)
-    labeled.filter(_._1 % 2 != 0).toDF("id", "text", "label")
-      .coalesce(1).write.mode("append").parquet(incoming)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("id", LongType),
-        StructField("text", StringType), StructField("label", BooleanType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(incoming)
+    val stream = shardedInput(base,
+      labeled.filter(_._1 % 2 == 0).toDF("id", "text", "label"),
+      labeled.filter(_._1 % 2 != 0).toDF("id", "text", "label"))
     val state = s"$base/state"
-    val q = stream.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        labeledCorpusBatch(b, id, state)
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(stream, s"$base/ckpt") { (b, id) =>
+      labeledCorpusBatch(b, id, state)
+    }
     val corpus = spark.read.parquet(s"$state/labeled")
       .dropDuplicates("id").select(col("text"), col("label"))
     val model = TextAnalysis.qualityClfTrainDistributed(corpus, 4096)
@@ -1099,14 +944,10 @@ object IngestStreams {
   private[graft] def labeledCorpusBatch(batch0: org.apache.spark.sql.DataFrame,
                                         batchId: Long, statePath: String): Unit = {
     val spark = batch0.sparkSession
-    val commitDir = new org.apache.hadoop.fs.Path(statePath, "_lc_commits")
-    val marker = new org.apache.hadoop.fs.Path(commitDir, batchId.toString)
-    val cfs = commitDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (cfs.exists(marker)) return
-    batch0.select(col("id"), col("text"), col("label")).dropDuplicates("id")
-      .write.mode("overwrite").parquet(s"$statePath/labeled/batch=$batchId")
-    cfs.mkdirs(commitDir)
-    cfs.create(marker, true).close()
+    oncePerBatch(spark, s"$statePath/_lc_commits", batchId) {
+      batch0.select(col("id"), col("text"), col("label")).dropDuplicates("id")
+        .write.mode("overwrite").parquet(s"$statePath/labeled/batch=$batchId")
+    }
   }
 
   /** HOT-SWAP face of the learned quality filter: scoring keeps
@@ -1138,41 +979,22 @@ object IngestStreams {
         .toDF("doc_id", "n_feats", "logit", "keep", "weights_version")
     }
     val base = java.nio.file.Files.createTempDirectory("graft-hs-ing-").toString
-    val incoming = s"$base/incoming"
-    val inPath = new org.apache.hadoop.fs.Path(incoming)
-    val infs = inPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def stampShard(mtime: Long): Unit =
-      infs.listStatus(inPath).foreach { s =>
-        val n = s.getPath.getName
-        if (!n.startsWith("_") && !n.startsWith(".") && s.getModificationTime >= mtime)
-          infs.setTimes(s.getPath, mtime, -1)
-      }
     // version-dependent output needs the batch ORDER pinned: even
-    // shard scores first (v1), odd second (v2)
-    docs.filter(col("doc_id") % 2 === 0).coalesce(1).write.mode("append").parquet(incoming)
-    stampShard(1000000L)
-    docs.filter(col("doc_id") % 2 =!= 0).coalesce(1).write.mode("append").parquet(incoming)
-    stampShard(2000000L)
+    // shard scores first (v1), odd second (v2) — shardedInput's
+    // mtime stamps pin it
+    val stream = shardedInput(base,
+      docs.filter(col("doc_id") % 2 === 0),
+      docs.filter(col("doc_id") % 2 =!= 0))
     graft.operators.Checkpoints.free(docs)
     val state = s"$base/state"
     publishWeights(spark, state, 1L, TextAnalysis.qualityClfArtifact)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(incoming)
-    val q = stream.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        // the retrain lands while batch 0 is already scored: v2
-        // publishes just before batch 1 — the cut-over moment this
-        // face exists to model
-        if (id >= 1L) publishWeights(spark, state, 2L, TextAnalysis.qualityClfFullArtifact)
-        qualityHotswapBatch(b, id, state)
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(stream, s"$base/ckpt") { (b, id) =>
+      // the retrain lands while batch 0 is already scored: v2
+      // publishes just before batch 1 — the cut-over moment this
+      // face exists to model
+      if (id >= 1L) publishWeights(spark, state, 2L, TextAnalysis.qualityClfFullArtifact)
+      qualityHotswapBatch(b, id, state)
+    }
     spark.read.parquet(s"$state/scored")
       .select("doc_id", "n_feats", "logit", "keep", "weights_version")
   }
@@ -1183,14 +1005,10 @@ object IngestStreams {
     * Idempotent per version. */
   private[graft] def publishWeights(spark: SparkSession, statePath: String,
       version: Long, artifact: (Seq[(Long, Long)], Long, Int)): Unit = {
-    val commitDir = new org.apache.hadoop.fs.Path(statePath, "_w_commits")
-    val marker = new org.apache.hadoop.fs.Path(commitDir, version.toString)
-    val cfs = commitDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (cfs.exists(marker)) return
-    graft.operators.TextAnalysis.qualityClfSaveWeights(
-      artifact, s"$statePath/weights/version=$version", spark)
-    cfs.mkdirs(commitDir)
-    cfs.create(marker, true).close()
+    oncePerBatch(spark, s"$statePath/_w_commits", version) {
+      graft.operators.TextAnalysis.qualityClfSaveWeights(
+        artifact, s"$statePath/weights/version=$version", spark)
+    }
   }
 
   /** Latest COMMITTED weight version — marker presence, never a
@@ -1214,19 +1032,15 @@ object IngestStreams {
   private[graft] def qualityHotswapBatch(batch0: org.apache.spark.sql.DataFrame,
                                          batchId: Long, statePath: String): Unit = {
     val spark = batch0.sparkSession
-    val commitDir = new org.apache.hadoop.fs.Path(statePath, "_hs_commits")
-    val marker = new org.apache.hadoop.fs.Path(commitDir, batchId.toString)
-    val cfs = commitDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (cfs.exists(marker)) return
-    val v = currentWeightsVersion(spark, statePath)
-    val artifact = graft.operators.TextAnalysis.qualityClfLoadWeights(
-      s"$statePath/weights/version=$v", spark)
-    graft.operators.TextAnalysis.qualityClassify(
-        batch0.select(col("doc_id"), col("text")).dropDuplicates("doc_id"), artifact)
-      .withColumn("weights_version", lit(v))
-      .write.mode("overwrite").parquet(s"$statePath/scored/batch=$batchId")
-    cfs.mkdirs(commitDir)
-    cfs.create(marker, true).close()
+    oncePerBatch(spark, s"$statePath/_hs_commits", batchId) {
+      val v = currentWeightsVersion(spark, statePath)
+      val artifact = graft.operators.TextAnalysis.qualityClfLoadWeights(
+        s"$statePath/weights/version=$v", spark)
+      graft.operators.TextAnalysis.qualityClassify(
+          batch0.select(col("doc_id"), col("text")).dropDuplicates("doc_id"), artifact)
+        .withColumn("weights_version", lit(v))
+        .write.mode("overwrite").parquet(s"$statePath/scored/batch=$batchId")
+    }
   }
 
   /** One [[streamedQualityClassify]] micro-batch, exposed for the
@@ -1234,15 +1048,11 @@ object IngestStreams {
   private[graft] def qualityClassifyBatch(batch0: org.apache.spark.sql.DataFrame,
                                           batchId: Long, statePath: String): Unit = {
     val spark = batch0.sparkSession
-    val commitDir = new org.apache.hadoop.fs.Path(statePath, "_clf_commits")
-    val marker = new org.apache.hadoop.fs.Path(commitDir, batchId.toString)
-    val cfs = commitDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (cfs.exists(marker)) return
-    graft.operators.TextAnalysis.qualityClassify(
-        batch0.select(col("doc_id"), col("text")).dropDuplicates("doc_id"))
-      .write.mode("overwrite").parquet(s"$statePath/scored/batch=$batchId")
-    cfs.mkdirs(commitDir)
-    cfs.create(marker, true).close()
+    oncePerBatch(spark, s"$statePath/_clf_commits", batchId) {
+      graft.operators.TextAnalysis.qualityClassify(
+          batch0.select(col("doc_id"), col("text")).dropDuplicates("doc_id"))
+        .write.mode("overwrite").parquet(s"$statePath/scored/batch=$batchId")
+    }
   }
 
   /** Streamed CDC chunk-store maintenance — the [[streamedUrlDedup]]
@@ -1269,24 +1079,14 @@ object IngestStreams {
         .toDF("chunk_md5", "keep_doc_id", "n_copies", "chunk_len")
     }
     val base = java.nio.file.Files.createTempDirectory("graft-cdc-ing-").toString
-    val incoming = s"$base/incoming"
-    docs.filter(col("doc_id") % 2 === 0).coalesce(1).write.mode("append").parquet(incoming)
-    docs.filter(col("doc_id") % 2 =!= 0).coalesce(1).write.mode("append").parquet(incoming)
+    val stream = shardedInput(base,
+      docs.filter(col("doc_id") % 2 === 0),
+      docs.filter(col("doc_id") % 2 =!= 0))
     graft.operators.Checkpoints.free(docs)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(incoming)
     val state = s"$base/state"
-    val q = stream.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        cdcDedupBatch(b, id, state, minLen, maxLen)
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(stream, s"$base/ckpt") { (b, id) =>
+      cdcDedupBatch(b, id, state, minLen, maxLen)
+    }
     cdcDedupResolve(spark, state)
   }
 
@@ -1300,22 +1100,18 @@ object IngestStreams {
                                    batchId: Long, statePath: String,
                                    minLen: Int = 0, maxLen: Int = 0): Unit = {
     val spark = batch0.sparkSession
-    val commitDir = new org.apache.hadoop.fs.Path(statePath, "_cdc_commits")
-    val marker = new org.apache.hadoop.fs.Path(commitDir, batchId.toString)
-    val cfs = commitDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (cfs.exists(marker)) return
-    val in = batch0.select(col("doc_id"), col("text")).dropDuplicates("doc_id")
-    // maxLen > 0 selects the full size envelope; the clamp folds are
-    // per-DOC local either way, so per-batch == whole-corpus holds
-    (if (maxLen > 0) graft.operators.Dedup.cdcChunksClamped(in, minLen = minLen, maxLen = maxLen)
-     else if (minLen > 0) graft.operators.Dedup.cdcChunksMin(in, minLen = minLen)
-     else graft.operators.Dedup.cdcChunks(in))
-      .groupBy("chunk_md5")
-      .agg(min(col("doc_id")).as("keep_doc_id"), count(lit(1)).as("n_copies"),
-        min(col("chunk_len")).as("chunk_len"))
-      .write.mode("overwrite").parquet(s"$statePath/deltas/batch=$batchId")
-    cfs.mkdirs(commitDir)
-    cfs.create(marker, true).close()
+    oncePerBatch(spark, s"$statePath/_cdc_commits", batchId) {
+      val in = batch0.select(col("doc_id"), col("text")).dropDuplicates("doc_id")
+      // maxLen > 0 selects the full size envelope; the clamp folds are
+      // per-DOC local either way, so per-batch == whole-corpus holds
+      (if (maxLen > 0) graft.operators.Dedup.cdcChunksClamped(in, minLen = minLen, maxLen = maxLen)
+       else if (minLen > 0) graft.operators.Dedup.cdcChunksMin(in, minLen = minLen)
+       else graft.operators.Dedup.cdcChunks(in))
+        .groupBy("chunk_md5")
+        .agg(min(col("doc_id")).as("keep_doc_id"), count(lit(1)).as("n_copies"),
+          min(col("chunk_len")).as("chunk_len"))
+        .write.mode("overwrite").parquet(s"$statePath/deltas/batch=$batchId")
+    }
   }
 
   /** Resolve the maintained chunk-store deltas to the duplicated-
@@ -1336,15 +1132,9 @@ object IngestStreams {
 
   def urlDedupIngest(urlStream: DataFrame, statePath: String,
                      checkpoint: String, nBuckets: Int = 16): Unit = {
-    val q = urlStream
-      .writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        urlDedupBatch(b, id, statePath, nBuckets)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(urlStream, checkpoint) { (b, id) =>
+      urlDedupBatch(b, id, statePath, nBuckets)
+    }
   }
 
   /** One [[urlDedupIngest]] micro-batch, exposed for the replay spec. */
@@ -1352,20 +1142,16 @@ object IngestStreams {
                                    batchId: Long, statePath: String,
                                    nBuckets: Int): Unit = {
     val spark = batch0.sparkSession
-    val commitDir = new org.apache.hadoop.fs.Path(statePath, "_url_commits")
-    val marker = new org.apache.hadoop.fs.Path(commitDir, batchId.toString)
-    val cfs = commitDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (cfs.exists(marker)) return
-    batch0.select(col("doc_id"), col("url")).dropDuplicates("doc_id")
-      .select(col("doc_id"),
-        graft.operators.Dedup.canonicalizeUrl(col("url")).as("canonical_url"))
-      .groupBy("canonical_url")
-      .agg(min(col("doc_id")).as("keep_doc_id"), count(lit(1)).as("n_copies"))
-      .withColumn("bucket", pmod(xxhash64(col("canonical_url")), lit(nBuckets.toLong)))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$statePath/deltas/batch=$batchId")
-    cfs.mkdirs(commitDir)
-    cfs.create(marker, true).close()
+    oncePerBatch(spark, s"$statePath/_url_commits", batchId) {
+      batch0.select(col("doc_id"), col("url")).dropDuplicates("doc_id")
+        .select(col("doc_id"),
+          graft.operators.Dedup.canonicalizeUrl(col("url")).as("canonical_url"))
+        .groupBy("canonical_url")
+        .agg(min(col("doc_id")).as("keep_doc_id"), count(lit(1)).as("n_copies"))
+        .withColumn("bucket", pmod(xxhash64(col("canonical_url")), lit(nBuckets.toLong)))
+        .write.mode("overwrite").partitionBy("bucket")
+        .parquet(s"$statePath/deltas/batch=$batchId")
+    }
   }
 
   /** Resolve the maintained URL-dedup deltas: global min survivor,
@@ -1406,27 +1192,17 @@ object IngestStreams {
         .toDF("source", "n_ref", "n_cur", "d_raw", "ks_ppm", "alarm")
     }
     val base = java.nio.file.Files.createTempDirectory("graft-drift-ing-").toString
-    val incoming = s"$base/incoming"
     // shards split ACROSS the ref/cur windows (doc_id mod 4), so each
     // batch carries deltas for both windows — the merge, not the
     // shard layout, produces the final counts
-    docs.filter(col("doc_id") % 4 < 2).coalesce(1).write.mode("append").parquet(incoming)
-    docs.filter(col("doc_id") % 4 >= 2).coalesce(1).write.mode("append").parquet(incoming)
+    val stream = shardedInput(base,
+      docs.filter(col("doc_id") % 4 < 2),
+      docs.filter(col("doc_id") % 4 >= 2))
     graft.operators.Checkpoints.free(docs)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("source", StringType), StructField("n_chars", LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(incoming)
     val state = s"$base/state"
-    val q = stream.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        sourceDriftBatch(b, id, state)
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(stream, s"$base/ckpt") { (b, id) =>
+      sourceDriftBatch(b, id, state)
+    }
     sourceDriftResolve(spark, state, thresholdPpm)
   }
 
@@ -1435,15 +1211,11 @@ object IngestStreams {
   private[graft] def sourceDriftBatch(batch0: org.apache.spark.sql.DataFrame,
                                       batchId: Long, statePath: String): Unit = {
     val spark = batch0.sparkSession
-    val commitDir = new org.apache.hadoop.fs.Path(statePath, "_drift_commits")
-    val marker = new org.apache.hadoop.fs.Path(commitDir, batchId.toString)
-    val cfs = commitDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (cfs.exists(marker)) return
-    graft.operators.TextAnalysis.sourceDriftCounts(
-        batch0.dropDuplicates("doc_id"))
-      .write.mode("overwrite").parquet(s"$statePath/deltas/batch=$batchId")
-    cfs.mkdirs(commitDir)
-    cfs.create(marker, true).close()
+    oncePerBatch(spark, s"$statePath/_drift_commits", batchId) {
+      graft.operators.TextAnalysis.sourceDriftCounts(
+          batch0.dropDuplicates("doc_id"))
+        .write.mode("overwrite").parquet(s"$statePath/deltas/batch=$batchId")
+    }
   }
 
   /** Merge the maintained count deltas (cell-wise sum — exact and
@@ -1484,24 +1256,14 @@ object IngestStreams {
         .toDF("source", "n_tokens", "share_ppm", "temp_share_ppm", "boost_ppm")
     }
     val base = java.nio.file.Files.createTempDirectory("graft-mix-ing-").toString
-    val incoming = s"$base/incoming"
-    docs.filter(col("doc_id") % 2 === 0).coalesce(1).write.mode("append").parquet(incoming)
-    docs.filter(col("doc_id") % 2 =!= 0).coalesce(1).write.mode("append").parquet(incoming)
+    val stream = shardedInput(base,
+      docs.filter(col("doc_id") % 2 === 0),
+      docs.filter(col("doc_id") % 2 =!= 0))
     graft.operators.Checkpoints.free(docs)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("source", StringType), StructField("text", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(incoming)
     val state = s"$base/state"
-    val q = stream.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        mixCountBatch(b, id, state)
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(stream, s"$base/ckpt") { (b, id) =>
+      mixCountBatch(b, id, state)
+    }
     mixResolve(spark, state, alpha)
   }
 
@@ -1510,15 +1272,11 @@ object IngestStreams {
   private[graft] def mixCountBatch(batch0: org.apache.spark.sql.DataFrame,
                                    batchId: Long, statePath: String): Unit = {
     val spark = batch0.sparkSession
-    val commitDir = new org.apache.hadoop.fs.Path(statePath, "_mix_commits")
-    val marker = new org.apache.hadoop.fs.Path(commitDir, batchId.toString)
-    val cfs = commitDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (cfs.exists(marker)) return
-    graft.operators.TextAnalysis.perSourceTokenCounts(
-        batch0.dropDuplicates("doc_id"))
-      .write.mode("overwrite").parquet(s"$statePath/deltas/batch=$batchId")
-    cfs.mkdirs(commitDir)
-    cfs.create(marker, true).close()
+    oncePerBatch(spark, s"$statePath/_mix_commits", batchId) {
+      graft.operators.TextAnalysis.perSourceTokenCounts(
+          batch0.dropDuplicates("doc_id"))
+        .write.mode("overwrite").parquet(s"$statePath/deltas/batch=$batchId")
+    }
   }
 
   /** Merge the maintained count deltas (exact sum) and run the shared
@@ -1558,24 +1316,14 @@ object IngestStreams {
         graft.Tables.documents(spark, dir), "n_chars", None, qPermille)
     }
     val base = java.nio.file.Files.createTempDirectory("graft-kll-ing-").toString
-    val incoming = s"$base/incoming"
-    docs.filter(col("doc_id") % 4 < 2).coalesce(1).write.mode("append").parquet(incoming)
-    docs.filter(col("doc_id") % 4 >= 2).coalesce(1).write.mode("append").parquet(incoming)
+    val stream = shardedInput(base,
+      docs.filter(col("doc_id") % 4 < 2),
+      docs.filter(col("doc_id") % 4 >= 2))
     graft.operators.Checkpoints.free(docs)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("source", StringType), StructField("n_chars", LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(incoming)
     val state = s"$base/state"
-    val q = stream.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        kllSketchBatch(b, id, state, k)
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(stream, s"$base/ckpt") { (b, id) =>
+      kllSketchBatch(b, id, state, k)
+    }
     graft.operators.Sketches.kllProbeAudit(
       graft.Tables.documents(spark, dir), "n_chars",
       kllSketchResolve(spark, state), qPermille)
@@ -1587,18 +1335,14 @@ object IngestStreams {
                                     batchId: Long, statePath: String,
                                     k: Int): Unit = {
     val spark = batch0.sparkSession
-    val commitDir = new org.apache.hadoop.fs.Path(statePath, "_kll_commits")
-    val marker = new org.apache.hadoop.fs.Path(commitDir, batchId.toString)
-    val cfs = commitDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (cfs.exists(marker)) return
-    val kllUdaf = udaf(new graft.functions.KllAggregator(k),
-      org.apache.spark.sql.Encoders.scalaLong)
-    batch0.dropDuplicates("doc_id")
-      .select(col("source"), col("n_chars").cast("long").as("v"))
-      .groupBy("source").agg(kllUdaf(col("v")).as("sk"))
-      .write.mode("overwrite").parquet(s"$statePath/sketches/batch=$batchId")
-    cfs.mkdirs(commitDir)
-    cfs.create(marker, true).close()
+    oncePerBatch(spark, s"$statePath/_kll_commits", batchId) {
+      val kllUdaf = udaf(new graft.functions.KllAggregator(k),
+        org.apache.spark.sql.Encoders.scalaLong)
+      batch0.dropDuplicates("doc_id")
+        .select(col("source"), col("n_chars").cast("long").as("v"))
+        .groupBy("source").agg(kllUdaf(col("v")).as("sk"))
+        .write.mode("overwrite").parquet(s"$statePath/sketches/batch=$batchId")
+    }
   }
 
   /** Merge the maintained sketch store to one corpus sketch —
@@ -1633,45 +1377,40 @@ object IngestStreams {
     */
   def ingestPartitioned(events: DataFrame, outPath: String,
                         checkpoint: String): Unit = {
-    val q = events
+    val stream = events
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"),
         date_format(col("ts"), "yyyy-MM-dd-HH").as("event_hour"))
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        // Dedupe re-deliveries WITHIN the batch first: a source that
-        // hands the same event_id twice in one micro-batch must still
-        // write it once, or event-level idempotence only holds across
-        // batches, not inside one.
-        val b = batch.dropDuplicates("event_id").persist()
-        try {
-          val hours = b.select("event_hour").distinct().collect().map(_.getString(0))
-          // Existence of prior output resolved through the Hadoop
-          // FileSystem API, not java.io.File — the sink targets HDFS/
-          // S3/local alike; a local-only check would make every remote
-          // replay silently overwrite touched hours with batch rows.
-          val hadoopPath = new org.apache.hadoop.fs.Path(outPath)
-          val fs = hadoopPath.getFileSystem(
-            b.sparkSession.sparkContext.hadoopConfiguration)
-          val merged =
-            if (hours.isEmpty) b
-            else if (!fs.exists(hadoopPath)) b
-            else {
-              val existing = b.sparkSession.read.parquet(outPath)
-                .filter(col("event_hour").isin(hours.toSeq: _*))
-              existing
-                .join(b.select("event_id").distinct(), Seq("event_id"), "left_anti")
-                .unionByName(b)
-            }
-          if (hours.nonEmpty) {
-            graft.sources.Sources.overwritePartitions(
-              merged.localCheckpoint(true), outPath, Seq("event_hour"))
+    drain(stream, checkpoint) { (batch, _) =>
+      // Dedupe re-deliveries WITHIN the batch first: a source that
+      // hands the same event_id twice in one micro-batch must still
+      // write it once, or event-level idempotence only holds across
+      // batches, not inside one.
+      val b = batch.dropDuplicates("event_id").persist()
+      try {
+        val hours = b.select("event_hour").distinct().collect().map(_.getString(0))
+        // Existence of prior output resolved through the Hadoop
+        // FileSystem API, not java.io.File — the sink targets HDFS/
+        // S3/local alike; a local-only check would make every remote
+        // replay silently overwrite touched hours with batch rows.
+        val hadoopPath = new org.apache.hadoop.fs.Path(outPath)
+        val fs = hadoopPath.getFileSystem(
+          b.sparkSession.sparkContext.hadoopConfiguration)
+        val merged =
+          if (hours.isEmpty) b
+          else if (!fs.exists(hadoopPath)) b
+          else {
+            val existing = b.sparkSession.read.parquet(outPath)
+              .filter(col("event_hour").isin(hours.toSeq: _*))
+            existing
+              .join(b.select("event_id").distinct(), Seq("event_id"), "left_anti")
+              .unionByName(b)
           }
-        } finally { b.unpersist(); () }
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+        if (hours.nonEmpty) {
+          graft.sources.Sources.overwritePartitions(
+            merged.localCheckpoint(true), outPath, Seq("event_hour"))
+        }
+      } finally { b.unpersist(); () }
+    }
   }
 
   /** [[ingestPartitioned]] over the standard events source. */
@@ -1723,17 +1462,12 @@ object IngestStreams {
     */
   def scd2Ingest(events: DataFrame, outPath: String, checkpoint: String,
                  nBuckets: Int = 16): Unit = {
-    val q = events
+    val stream = events
       .select(col("event_id"), col("user_id"), col("event_type"),
         expr("ts_ns div 1000").as("tus"))
-      .writeStream
-      .foreachBatch { (batch0: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        scd2MergeBatch(batch0, batchId, outPath, nBuckets)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(stream, checkpoint) { (batch0, batchId) =>
+      scd2MergeBatch(batch0, batchId, outPath, nBuckets)
+    }
   }
 
   /** One [[scd2Ingest]] micro-batch MERGE, exposed for the replay
@@ -1744,73 +1478,66 @@ object IngestStreams {
   private[graft] def scd2MergeBatch(batch0: org.apache.spark.sql.DataFrame,
                                     batchId: Long, outPath: String,
                                     nBuckets: Int): Unit = {
-        val spark = batch0.sparkSession
-        import spark.implicits._
-        val commitDir = new org.apache.hadoop.fs.Path(outPath, "_scd2_commits")
-        val marker = new org.apache.hadoop.fs.Path(commitDir, batchId.toString)
-        val cfs = commitDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (cfs.exists(marker)) return // replayed batch: already applied
-        val batch = batch0.persist()
-        try {
-          val hadoopPath = new org.apache.hadoop.fs.Path(outPath)
-          val fs = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val users = batch.select("user_id").distinct()
-          val touchedBuckets = users
-            .select(pmod(col("user_id"), lit(nBuckets.toLong)).as[Long])
-            .distinct().collect().toSeq
-          // only the touched buckets are ever read (partition pruning)
-          // or rewritten; rows of UNTOUCHED users inside a touched
-          // bucket must ride along or the overwrite would delete them
-          val inTouched: org.apache.spark.sql.Dataset[Scd2Row] =
-            if (fs.exists(hadoopPath))
-              spark.read.parquet(outPath)
-                .filter(col("bucket").isin(touchedBuckets: _*))
-                .select(col("user_id"), col("run_id"), col("state"),
-                  col("valid_from_us"), col("valid_to_us"), col("n_obs"))
-                .as[Scd2Row]
-            else spark.emptyDataset[Scd2Row]
-          val keep = inTouched
-            .join(broadcast(users), Seq("user_id"), "left_anti").as[Scd2Row]
-          val affected = inTouched
-            .join(broadcast(users), Seq("user_id"), "left_semi").as[Scd2Row]
-          val openRuns = affected.filter(col("valid_to_us") === Long.MaxValue).as[Scd2Row]
-          val closedRuns = affected.filter(col("valid_to_us") =!= Long.MaxValue).as[Scd2Row]
-          // fold each user's sorted new observations against their open run
-          val folded = openRuns.groupByKey(_.user_id).cogroup(
-            batch.select(col("user_id").as[Long], col("tus").as[Long],
-              col("event_id").as[Long], col("event_type").as[String])
-              .groupByKey(_._1)) { (user, opens, evs) =>
-            val open = opens.toSeq.headOption
-            val sorted = evs.toSeq.sortBy(e => (e._2, e._3))
-              // straggler guard: never rewrite closed history
-              .filter(e => open.forall(o => e._2 >= o.valid_from_us))
-            var out = List.empty[Scd2Row]
-            var cur = open
-            sorted.foreach { case (_, tus, _, state) =>
-              cur match {
-                case Some(o) if o.state == state =>
-                  cur = Some(o.copy(n_obs = o.n_obs + 1))
-                case Some(o) =>
-                  out ::= o.copy(valid_to_us = tus)
-                  cur = Some(Scd2Row(user, o.run_id + 1, state, tus, Long.MaxValue, 1L))
-                case None =>
-                  cur = Some(Scd2Row(user, 1L, state, tus, Long.MaxValue, 1L))
-              }
+    val spark = batch0.sparkSession
+    import spark.implicits._
+    oncePerBatch(spark, s"$outPath/_scd2_commits", batchId) {
+      val batch = batch0.persist()
+      try {
+        val hadoopPath = new org.apache.hadoop.fs.Path(outPath)
+        val fs = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val users = batch.select("user_id").distinct()
+        val touchedBuckets = users
+          .select(pmod(col("user_id"), lit(nBuckets.toLong)).as[Long])
+          .distinct().collect().toSeq
+        // only the touched buckets are ever read (partition pruning)
+        // or rewritten; rows of UNTOUCHED users inside a touched
+        // bucket must ride along or the overwrite would delete them
+        val inTouched: org.apache.spark.sql.Dataset[Scd2Row] =
+          if (fs.exists(hadoopPath))
+            spark.read.parquet(outPath)
+              .filter(col("bucket").isin(touchedBuckets: _*))
+              .select(col("user_id"), col("run_id"), col("state"),
+                col("valid_from_us"), col("valid_to_us"), col("n_obs"))
+              .as[Scd2Row]
+          else spark.emptyDataset[Scd2Row]
+        val keep = inTouched
+          .join(broadcast(users), Seq("user_id"), "left_anti").as[Scd2Row]
+        val affected = inTouched
+          .join(broadcast(users), Seq("user_id"), "left_semi").as[Scd2Row]
+        val openRuns = affected.filter(col("valid_to_us") === Long.MaxValue).as[Scd2Row]
+        val closedRuns = affected.filter(col("valid_to_us") =!= Long.MaxValue).as[Scd2Row]
+        // fold each user's sorted new observations against their open run
+        val folded = openRuns.groupByKey(_.user_id).cogroup(
+          batch.select(col("user_id").as[Long], col("tus").as[Long],
+            col("event_id").as[Long], col("event_type").as[String])
+            .groupByKey(_._1)) { (user, opens, evs) =>
+          val open = opens.toSeq.headOption
+          val sorted = evs.toSeq.sortBy(e => (e._2, e._3))
+            // straggler guard: never rewrite closed history
+            .filter(e => open.forall(o => e._2 >= o.valid_from_us))
+          var out = List.empty[Scd2Row]
+          var cur = open
+          sorted.foreach { case (_, tus, _, state) =>
+            cur match {
+              case Some(o) if o.state == state =>
+                cur = Some(o.copy(n_obs = o.n_obs + 1))
+              case Some(o) =>
+                out ::= o.copy(valid_to_us = tus)
+                cur = Some(Scd2Row(user, o.run_id + 1, state, tus, Long.MaxValue, 1L))
+              case None =>
+                cur = Some(Scd2Row(user, 1L, state, tus, Long.MaxValue, 1L))
             }
-            (out reverse_::: cur.toList).iterator
           }
-          val merged = keep.unionByName(closedRuns).unionByName(folded).toDF()
-            .withColumn("bucket", pmod(col("user_id"), lit(nBuckets.toLong)))
-          if (!merged.isEmpty) {
-            graft.sources.Sources.overwritePartitions(
-              merged.localCheckpoint(true), outPath, Seq("bucket"))
-          }
-          // commit LAST: a crash before this point replays the batch,
-          // and the marker check above turns that replay into a no-op
-          // only for batches that fully landed
-          cfs.mkdirs(commitDir)
-          cfs.create(marker, true).close()
-        } finally { batch.unpersist(); () }
+          (out reverse_::: cur.toList).iterator
+        }
+        val merged = keep.unionByName(closedRuns).unionByName(folded).toDF()
+          .withColumn("bucket", pmod(col("user_id"), lit(nBuckets.toLong)))
+        if (!merged.isEmpty) {
+          graft.sources.Sources.overwritePartitions(
+            merged.localCheckpoint(true), outPath, Seq("bucket"))
+        }
+      } finally { batch.unpersist(); () }
+    }
   }
 
   /** Write a keyed snapshot as the bucketed reference table the
@@ -1847,15 +1574,9 @@ object IngestStreams {
   def snapshotDiffIngest(newSnapshot: DataFrame, tablePath: String,
                          diffPath: String, checkpoint: String,
                          nBuckets: Int = 16): Unit = {
-    val q = newSnapshot
-      .writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        snapshotDiffBatch(b, id, tablePath, diffPath, nBuckets)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(newSnapshot, checkpoint) { (b, id) =>
+      snapshotDiffBatch(b, id, tablePath, diffPath, nBuckets)
+    }
   }
 
   /** One [[snapshotDiffIngest]] micro-batch, exposed for the replay
@@ -1867,38 +1588,34 @@ object IngestStreams {
                                        diffPath: String, nBuckets: Int): Unit = {
     val spark = batch0.sparkSession
     import spark.implicits._
-    val commitDir = new org.apache.hadoop.fs.Path(diffPath, "_diff_commits")
-    val marker = new org.apache.hadoop.fs.Path(commitDir, batchId.toString)
-    val cfs = commitDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (cfs.exists(marker)) return // replayed batch: already applied
-    val batch = batch0.dropDuplicates("k")
-      .withColumn("bucket", pmod(col("k"), lit(nBuckets.toLong)))
-      .persist()
-    try {
-      val touched = batch.select(col("bucket").as[Long]).distinct().collect().toSeq
-      if (touched.nonEmpty) {
-        // partition pruning: only the touched bucket directories of
-        // the maintained table are ever read. An EMPTY maintained
-        // table (zero-row partitionBy write — only _SUCCESS on disk)
-        // must read as no old keys, not fail schema inference.
-        val old =
-          if (StreamState.hasDataFiles(spark, tablePath))
-            spark.read.parquet(tablePath)
-              .filter(col("bucket").isin(touched: _*))
-              .select(col("k"), col("oh"))
-          else Seq.empty[(Long, String)].toDF("k", "oh")
-        val statuses = batch.select(col("k"), col("nh"), col("bucket"))
-          .join(old, Seq("k"), "left")
-          .select(col("k"),
-            when(col("oh").isNull, "added")
-              .when(col("oh") =!= col("nh"), "changed")
-              .otherwise("unchanged").as("status"),
-            col("bucket"))
-        statuses.write.mode("append").partitionBy("bucket").parquet(diffPath)
-      }
-      cfs.mkdirs(commitDir)
-      cfs.create(marker, true).close()
-    } finally { batch.unpersist(); () }
+    oncePerBatch(spark, s"$diffPath/_diff_commits", batchId) {
+      val batch = batch0.dropDuplicates("k")
+        .withColumn("bucket", pmod(col("k"), lit(nBuckets.toLong)))
+        .persist()
+      try {
+        val touched = batch.select(col("bucket").as[Long]).distinct().collect().toSeq
+        if (touched.nonEmpty) {
+          // partition pruning: only the touched bucket directories of
+          // the maintained table are ever read. An EMPTY maintained
+          // table (zero-row partitionBy write — only _SUCCESS on disk)
+          // must read as no old keys, not fail schema inference.
+          val old =
+            if (StreamState.hasDataFiles(spark, tablePath))
+              spark.read.parquet(tablePath)
+                .filter(col("bucket").isin(touched: _*))
+                .select(col("k"), col("oh"))
+            else Seq.empty[(Long, String)].toDF("k", "oh")
+          val statuses = batch.select(col("k"), col("nh"), col("bucket"))
+            .join(old, Seq("k"), "left")
+            .select(col("k"),
+              when(col("oh").isNull, "added")
+                .when(col("oh") =!= col("nh"), "changed")
+                .otherwise("unchanged").as("status"),
+              col("bucket"))
+          statuses.write.mode("append").partitionBy("bucket").parquet(diffPath)
+        }
+      } finally { batch.unpersist(); () }
+    }
   }
 
   /** Close out a drained [[snapshotDiffIngest]] run: statuses from
@@ -1953,16 +1670,12 @@ object IngestStreams {
           .otherwise(col("text")))
     val base = java.nio.file.Files.createTempDirectory("graft-snapdiff-").toString
     val tablePath = s"$base/table"
-    val incoming = s"$base/incoming"
     writeSnapshotTable(vOld, "doc_id", "text", tablePath, nBuckets)
     val hashed = vNew.select(col("doc_id").cast("long").as("k"),
       md5(col("text")).as("nh"))
-    hashed.filter(col("k") % 2 === 0).coalesce(1).write.mode("append").parquet(incoming)
-    hashed.filter(col("k") % 2 =!= 0).coalesce(1).write.mode("append").parquet(incoming)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("k", LongType), StructField("nh", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(incoming)
+    val stream = shardedInput(base,
+      hashed.filter(col("k") % 2 === 0),
+      hashed.filter(col("k") % 2 =!= 0))
     snapshotDiffIngest(stream, tablePath, s"$base/diff", s"$base/ckpt", nBuckets)
     snapshotDiffSummary(spark, tablePath, s"$base/diff")
   }
@@ -1982,15 +1695,10 @@ object IngestStreams {
       .select(col("doc_id"), col("text"), col("source"))
       .localCheckpoint(true)
     val base = java.nio.file.Files.createTempDirectory("graft-ph-ing-").toString
-    val incoming = s"$base/incoming"
-    docs.filter(col("doc_id") % 2 === 0).coalesce(1).write.mode("append").parquet(incoming)
-    docs.filter(col("doc_id") % 2 =!= 0).coalesce(1).write.mode("append").parquet(incoming)
+    val stream = shardedInput(base,
+      docs.filter(col("doc_id") % 2 === 0),
+      docs.filter(col("doc_id") % 2 =!= 0))
     graft.operators.Checkpoints.free(docs)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType), StructField("source", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(incoming)
     phashIngest(stream, s"$base/state", s"$base/ckpt", nBuckets)
     phashResolve(spark, s"$base/state")
   }
@@ -2022,23 +1730,13 @@ object IngestStreams {
       .toDF("doc_id", "payload")
       .localCheckpoint(true)
     val base = java.nio.file.Files.createTempDirectory("graft-phd-ing-").toString
-    val incoming = s"$base/incoming"
-    docs.filter(col("doc_id") % 2 === 0).coalesce(1).write.mode("append").parquet(incoming)
-    docs.filter(col("doc_id") % 2 =!= 0).coalesce(1).write.mode("append").parquet(incoming)
+    val stream = shardedInput(base,
+      docs.filter(col("doc_id") % 2 === 0),
+      docs.filter(col("doc_id") % 2 =!= 0))
     graft.operators.Checkpoints.free(docs)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("payload", BinaryType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(incoming)
-    val q = stream.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        phashBatch(b, id, s"$base/state", nBuckets, decoded = true)
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(stream, s"$base/ckpt") { (b, id) =>
+      phashBatch(b, id, s"$base/state", nBuckets, decoded = true)
+    }
     phashResolve(spark, s"$base/state")
   }
 
@@ -2070,15 +1768,9 @@ object IngestStreams {
     */
   def phashIngest(docStream: DataFrame, statePath: String, checkpoint: String,
                   nBuckets: Int = 16): Unit = {
-    val q = docStream
-      .writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        phashBatch(b, id, statePath, nBuckets)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(docStream, checkpoint) { (b, id) =>
+      phashBatch(b, id, statePath, nBuckets)
+    }
   }
 
   /** One [[phashIngest]] micro-batch, exposed for the replay spec.
@@ -2102,101 +1794,97 @@ object IngestStreams {
                                 maxBandDf: Int = 100,
                                 decoded: Boolean = false): Unit = {
     val spark = batch0.sparkSession
-    val commitDir = new org.apache.hadoop.fs.Path(statePath, "_ph_commits")
-    val marker = new org.apache.hadoop.fs.Path(commitDir, batchId.toString)
-    val cfs = commitDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (cfs.exists(marker)) return
-    val batch = batch0.persist()
-    try {
-      val phsPath = s"$statePath/phs"
-      val bandsPath = s"$statePath/bands"
-      val pairsPath = s"$statePath/pairs"
-      // the decode swap the stub docs promised: the REAL ImageIO+DCT
-      // band function drops in here and every downstream state/join/
-      // cap/resolve shape runs unchanged
-      val newPh = (if (decoded)
-          graft.operators.Multimodal.phashBandsDecoded(
-            batch.select(col("doc_id"), col("payload")))
-        else if (batch.columns.contains("payload"))
-          graft.operators.Multimodal.phashBandsFromPayload(batch)
-        else graft.operators.Multimodal.phashBands(batch))
-        .localCheckpoint(true)
-      val newEx = newPh
-        .select(col("doc_id"), posexplode(col("phash_bands")).as(Seq("band", "bv")))
-        .localCheckpoint(true)
-      // the PRUNED stored band partitions this batch's values land in
-      val touched = newEx.select(pmod(col("bv"), lit(nBuckets.toLong)).as("bk"))
-        .distinct().collect().map(_.getLong(0)).toSeq
-      val stored =
-        if (hasVisibleData(spark, bandsPath) && touched.nonEmpty)
-          spark.read.parquet(bandsPath)
-            .filter(col("bucket").isin(touched: _*))
-            .select(col("doc_id").as("ex_doc"), col("band").as("eband"),
-              col("bv").as("ebv"))
-            .localCheckpoint(true)
-        else null
-      // cumulative bucket df (stored + new) over the batch's buckets;
-      // counts only — no posting list is ever materialized
-      val newCnt = newEx.groupBy("band", "bv").agg(count(lit(1)).as("n_new"))
-      val cumDf =
-        if (stored != null)
-          newCnt.join(
-            stored.groupBy(col("eband").as("band"), col("ebv").as("bv"))
-              .agg(count(lit(1)).as("n_old")),
-            Seq("band", "bv"), "left")
-            .select(col("band"), col("bv"),
-              (col("n_new") + coalesce(col("n_old"), lit(0L))).as("df"))
-        else newCnt.select(col("band"), col("bv"), col("n_new").as("df"))
-      val keptBv = cumDf.filter(col("df") <= maxBandDf).select("band", "bv")
-        .localCheckpoint(true)
-      val newKept = newEx.join(keptBv, Seq("band", "bv"))
-      // candidates: new×new within the batch (under-cap buckets only)…
-      val nn = newKept.as("a").join(newKept.as("b"),
-          col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      // …plus new×existing, same pruned buckets
-      val ex =
-        if (stored != null)
-          newKept.join(stored,
-              col("band") === col("eband") && col("bv") === col("ebv"))
-            .select(least(col("doc_id"), col("ex_doc")).as("doc_a"),
-              greatest(col("doc_id"), col("ex_doc")).as("doc_b"))
-        else nn.limit(0)
-      val cand = nn.unionAll(ex).distinct().localCheckpoint(true)
-      // verification lookup: new docs' arrays + PRUNED stored arrays
-      val candDocs = cand.select(col("doc_a").as("doc_id"))
-        .unionAll(cand.select(col("doc_b").as("doc_id"))).distinct()
-      val docBuckets = candDocs
-        .select(pmod(col("doc_id"), lit(nBuckets.toLong)).as("bk"))
-        .distinct().collect().map(_.getLong(0)).toSeq
-      val lookup =
-        (if (hasVisibleData(spark, phsPath) && docBuckets.nonEmpty)
-          newPh.unionByName(spark.read.parquet(phsPath)
-            .filter(col("bucket").isin(docBuckets: _*))
-            .select("doc_id", "phash_bands"))
-        else newPh)
-      val verified = cand
-        .join(lookup.select(col("doc_id").as("doc_a"), col("phash_bands").as("pha")), "doc_a")
-        .join(lookup.select(col("doc_id").as("doc_b"), col("phash_bands").as("phb")), "doc_b")
-        .withColumn("hamming",
-          expr("aggregate(zip_with(pha, phb, (x, y) -> bit_count(x ^ y)), 0, (acc, h) -> acc + h)")
-            .cast("long"))
-        .filter(col("hamming") <= maxHamming)
-        .select(col("doc_a"), col("doc_b"), col("hamming"))
-      verified.write.mode("append").parquet(pairsPath)
-      newPh.withColumn("bucket", pmod(col("doc_id"), lit(nBuckets.toLong)))
-        .write.mode("append").partitionBy("bucket").parquet(phsPath)
-      newEx.withColumn("bucket", pmod(col("bv"), lit(nBuckets.toLong)))
-        .write.mode("append").partitionBy("bucket").parquet(bandsPath)
-      graft.operators.Checkpoints.free(cand)
-      graft.operators.Checkpoints.free(keptBv)
-      if (stored != null) graft.operators.Checkpoints.free(stored)
-      graft.operators.Checkpoints.free(newEx)
-      graft.operators.Checkpoints.free(newPh)
-      cfs.mkdirs(commitDir)
-      cfs.create(marker, true).close()
-    } finally batch.unpersist()
+    oncePerBatch(spark, s"$statePath/_ph_commits", batchId) {
+      val batch = batch0.persist()
+      try {
+        val phsPath = s"$statePath/phs"
+        val bandsPath = s"$statePath/bands"
+        val pairsPath = s"$statePath/pairs"
+        // the decode swap the stub docs promised: the REAL ImageIO+DCT
+        // band function drops in here and every downstream state/join/
+        // cap/resolve shape runs unchanged
+        val newPh = (if (decoded)
+            graft.operators.Multimodal.phashBandsDecoded(
+              batch.select(col("doc_id"), col("payload")))
+          else if (batch.columns.contains("payload"))
+            graft.operators.Multimodal.phashBandsFromPayload(batch)
+          else graft.operators.Multimodal.phashBands(batch))
+          .localCheckpoint(true)
+        val newEx = newPh
+          .select(col("doc_id"), posexplode(col("phash_bands")).as(Seq("band", "bv")))
+          .localCheckpoint(true)
+        // the PRUNED stored band partitions this batch's values land in
+        val touched = newEx.select(pmod(col("bv"), lit(nBuckets.toLong)).as("bk"))
+          .distinct().collect().map(_.getLong(0)).toSeq
+        val stored =
+          if (hasVisibleData(spark, bandsPath) && touched.nonEmpty)
+            spark.read.parquet(bandsPath)
+              .filter(col("bucket").isin(touched: _*))
+              .select(col("doc_id").as("ex_doc"), col("band").as("eband"),
+                col("bv").as("ebv"))
+              .localCheckpoint(true)
+          else null
+        // cumulative bucket df (stored + new) over the batch's buckets;
+        // counts only — no posting list is ever materialized
+        val newCnt = newEx.groupBy("band", "bv").agg(count(lit(1)).as("n_new"))
+        val cumDf =
+          if (stored != null)
+            newCnt.join(
+              stored.groupBy(col("eband").as("band"), col("ebv").as("bv"))
+                .agg(count(lit(1)).as("n_old")),
+              Seq("band", "bv"), "left")
+              .select(col("band"), col("bv"),
+                (col("n_new") + coalesce(col("n_old"), lit(0L))).as("df"))
+          else newCnt.select(col("band"), col("bv"), col("n_new").as("df"))
+        val keptBv = cumDf.filter(col("df") <= maxBandDf).select("band", "bv")
+          .localCheckpoint(true)
+        val newKept = newEx.join(keptBv, Seq("band", "bv"))
+        // candidates: new×new within the batch (under-cap buckets only)…
+        val nn = newKept.as("a").join(newKept.as("b"),
+            col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
+              col("a.doc_id") < col("b.doc_id"))
+          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+        // …plus new×existing, same pruned buckets
+        val ex =
+          if (stored != null)
+            newKept.join(stored,
+                col("band") === col("eband") && col("bv") === col("ebv"))
+              .select(least(col("doc_id"), col("ex_doc")).as("doc_a"),
+                greatest(col("doc_id"), col("ex_doc")).as("doc_b"))
+          else nn.limit(0)
+        val cand = nn.unionAll(ex).distinct().localCheckpoint(true)
+        // verification lookup: new docs' arrays + PRUNED stored arrays
+        val candDocs = cand.select(col("doc_a").as("doc_id"))
+          .unionAll(cand.select(col("doc_b").as("doc_id"))).distinct()
+        val docBuckets = candDocs
+          .select(pmod(col("doc_id"), lit(nBuckets.toLong)).as("bk"))
+          .distinct().collect().map(_.getLong(0)).toSeq
+        val lookup =
+          (if (hasVisibleData(spark, phsPath) && docBuckets.nonEmpty)
+            newPh.unionByName(spark.read.parquet(phsPath)
+              .filter(col("bucket").isin(docBuckets: _*))
+              .select("doc_id", "phash_bands"))
+          else newPh)
+        val verified = cand
+          .join(lookup.select(col("doc_id").as("doc_a"), col("phash_bands").as("pha")), "doc_a")
+          .join(lookup.select(col("doc_id").as("doc_b"), col("phash_bands").as("phb")), "doc_b")
+          .withColumn("hamming",
+            expr("aggregate(zip_with(pha, phb, (x, y) -> bit_count(x ^ y)), 0, (acc, h) -> acc + h)")
+              .cast("long"))
+          .filter(col("hamming") <= maxHamming)
+          .select(col("doc_a"), col("doc_b"), col("hamming"))
+        verified.write.mode("append").parquet(pairsPath)
+        newPh.withColumn("bucket", pmod(col("doc_id"), lit(nBuckets.toLong)))
+          .write.mode("append").partitionBy("bucket").parquet(phsPath)
+        newEx.withColumn("bucket", pmod(col("bv"), lit(nBuckets.toLong)))
+          .write.mode("append").partitionBy("bucket").parquet(bandsPath)
+        graft.operators.Checkpoints.free(cand)
+        graft.operators.Checkpoints.free(keptBv)
+        if (stored != null) graft.operators.Checkpoints.free(stored)
+        graft.operators.Checkpoints.free(newEx)
+        graft.operators.Checkpoints.free(newPh)
+      } finally batch.unpersist()
+    }
   }
 
   /** Resolve the maintained phash state into the batch
@@ -2270,31 +1958,12 @@ object IngestStreams {
     val mm = docs.agg(min(col("doc_id")), max(col("doc_id"))).head()
     val mid = (mm.getLong(0) + mm.getLong(1)) / 2
     val base = java.nio.file.Files.createTempDirectory("graft-qa-ing-").toString
-    val incoming = s"$base/incoming"
     // The audit's oracle parity needs the low-doc_id shard processed
-    // FIRST (survivor = min kept doc_id per hash). FileStreamSource
-    // orders by modification time with ties broken by path name, and
-    // two back-to-back writes can share an mtime — so stamp each
-    // shard with an explicit, strictly increasing mtime instead of
-    // trusting the filesystem clock.
-    val inPath = new org.apache.hadoop.fs.Path(incoming)
-    val infs = inPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def stampShard(mtime: Long): Unit =
-      infs.listStatus(inPath).foreach { s =>
-        val n = s.getPath.getName
-        if (!n.startsWith("_") && !n.startsWith(".") && s.getModificationTime >= mtime)
-          infs.setTimes(s.getPath, mtime, -1)
-      }
-    docs.filter(col("doc_id") <= mid).coalesce(1).write.mode("append").parquet(incoming)
-    stampShard(1000000L)
-    docs.filter(col("doc_id") > mid).coalesce(1).write.mode("append").parquet(incoming)
-    stampShard(2000000L)
+    // FIRST (survivor = min kept doc_id per hash): shardedInput's
+    // mtime stamps pin the order.
+    val stream = shardedInput(base,
+      docs.filter(col("doc_id") <= mid), docs.filter(col("doc_id") > mid))
     graft.operators.Checkpoints.free(docs)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType), StructField("source", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(incoming)
     qualityAuditIngest(stream, s"$base/state", s"$base/ckpt", nBuckets)
     qualityAuditResolve(spark, s"$base/state")
   }
@@ -2309,15 +1978,9 @@ object IngestStreams {
     */
   def qualityAuditIngest(docStream: DataFrame, statePath: String,
                          checkpoint: String, nBuckets: Int = 16): Unit = {
-    val q = docStream
-      .writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        qualityAuditBatch(b, id, statePath, nBuckets)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(docStream, checkpoint) { (b, id) =>
+      qualityAuditBatch(b, id, statePath, nBuckets)
+    }
   }
 
   private def hashBucket(h: org.apache.spark.sql.Column, nBuckets: Int) =
@@ -2335,70 +1998,66 @@ object IngestStreams {
                                        nBuckets: Int): Unit = {
     val spark = batch0.sparkSession
     import spark.implicits._
-    val commitDir = new org.apache.hadoop.fs.Path(statePath, "_qa_commits")
-    val marker = new org.apache.hadoop.fs.Path(commitDir, batchId.toString)
-    val cfs = commitDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (cfs.exists(marker)) return
-    val batch = batch0.persist()
-    try {
-      val hashesPath = s"$statePath/kept_hashes"
-      val countsPath = s"$statePath/counts"
-      val flags = graft.operators.TextAnalysis.gopherFlags(batch)
-        .select(col("doc_id"), col("keep"), col("n_words"))
-      val w = org.apache.spark.sql.expressions.Window.partitionBy(col("h"))
-      val marked = batch.select(col("doc_id"), col("source"), col("text"))
-        .join(flags, "doc_id")
-        .withColumn("h", graft.operators.Dedup.contentHash(col("text")))
-        .withColumn("surv",
-          col("keep") && col("doc_id") ===
-            min(when(col("keep"), col("doc_id"))).over(w))
-        .localCheckpoint(true)
-      val batchSurv = marked.filter(col("surv"))
-        .select(col("source"), col("h"), col("n_words"))
-        .withColumn("bucket", hashBucket(col("h"), nBuckets))
-        .localCheckpoint(true)
-      val touched = batchSurv.select("bucket").distinct()
-        .collect().map(_.getLong(0)).toSeq
-      // Replay safety (crash window between the state writes and the
-      // commit marker): kept_hashes rows carry the batch_id that
-      // wrote them, and the seen-set read EXCLUDES the current
-      // batch's own rows — so a foreachBatch retry whose first
-      // attempt already appended this batch's hashes still recomputes
-      // the same uniqueNew instead of a zeroed one.
-      val uniqueNew =
-        if (hasVisibleData(spark, hashesPath) && touched.nonEmpty) {
-          val seen = spark.read.parquet(hashesPath)
-            .filter(col("bucket").isin(touched: _*) &&
-              col("batch_id") =!= lit(batchId))
-            .select(col("h").as("seenH"))
-          batchSurv.join(seen, col("h") === col("seenH"), "left_anti")
-        } else batchSurv
-      val uniqueCp = uniqueNew.localCheckpoint(true)
-      // Per-batch count DELTAS: the all-docs aggregate and the
-      // unique-survivor aggregate land as zero-padded rows in a
-      // PER-BATCH directory written with overwrite semantics — a
-      // retry replaces its own delta set rather than appending a
-      // second one, so resolve's sum never double-counts (replay
-      // safety for the same crash window).
-      val baseCounts = marked.groupBy("source").agg(
-        count(lit(1)).as("n_docs"),
-        sum(when(col("keep"), lit(1L)).otherwise(lit(0L))).as("n_keep"),
-        lit(0L).as("n_unique"), lit(0L).as("tokens_unique"))
-      val uniqCounts = uniqueCp.groupBy("source").agg(
-        lit(0L).as("n_docs"), lit(0L).as("n_keep"),
-        count(lit(1)).as("n_unique"),
-        sum(col("n_words")).as("tokens_unique"))
-      baseCounts.unionByName(uniqCounts)
-        .write.mode("overwrite").parquet(s"$countsPath/batch=$batchId")
-      uniqueCp.select(col("h"), col("bucket"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("append").partitionBy("bucket").parquet(hashesPath)
-      graft.operators.Checkpoints.free(uniqueCp)
-      graft.operators.Checkpoints.free(batchSurv)
-      graft.operators.Checkpoints.free(marked)
-      cfs.mkdirs(commitDir)
-      cfs.create(marker, true).close()
-    } finally batch.unpersist()
+    oncePerBatch(spark, s"$statePath/_qa_commits", batchId) {
+      val batch = batch0.persist()
+      try {
+        val hashesPath = s"$statePath/kept_hashes"
+        val countsPath = s"$statePath/counts"
+        val flags = graft.operators.TextAnalysis.gopherFlags(batch)
+          .select(col("doc_id"), col("keep"), col("n_words"))
+        val w = org.apache.spark.sql.expressions.Window.partitionBy(col("h"))
+        val marked = batch.select(col("doc_id"), col("source"), col("text"))
+          .join(flags, "doc_id")
+          .withColumn("h", graft.operators.Dedup.contentHash(col("text")))
+          .withColumn("surv",
+            col("keep") && col("doc_id") ===
+              min(when(col("keep"), col("doc_id"))).over(w))
+          .localCheckpoint(true)
+        val batchSurv = marked.filter(col("surv"))
+          .select(col("source"), col("h"), col("n_words"))
+          .withColumn("bucket", hashBucket(col("h"), nBuckets))
+          .localCheckpoint(true)
+        val touched = batchSurv.select("bucket").distinct()
+          .collect().map(_.getLong(0)).toSeq
+        // Replay safety (crash window between the state writes and the
+        // commit marker): kept_hashes rows carry the batch_id that
+        // wrote them, and the seen-set read EXCLUDES the current
+        // batch's own rows — so a foreachBatch retry whose first
+        // attempt already appended this batch's hashes still recomputes
+        // the same uniqueNew instead of a zeroed one.
+        val uniqueNew =
+          if (hasVisibleData(spark, hashesPath) && touched.nonEmpty) {
+            val seen = spark.read.parquet(hashesPath)
+              .filter(col("bucket").isin(touched: _*) &&
+                col("batch_id") =!= lit(batchId))
+              .select(col("h").as("seenH"))
+            batchSurv.join(seen, col("h") === col("seenH"), "left_anti")
+          } else batchSurv
+        val uniqueCp = uniqueNew.localCheckpoint(true)
+        // Per-batch count DELTAS: the all-docs aggregate and the
+        // unique-survivor aggregate land as zero-padded rows in a
+        // PER-BATCH directory written with overwrite semantics — a
+        // retry replaces its own delta set rather than appending a
+        // second one, so resolve's sum never double-counts (replay
+        // safety for the same crash window).
+        val baseCounts = marked.groupBy("source").agg(
+          count(lit(1)).as("n_docs"),
+          sum(when(col("keep"), lit(1L)).otherwise(lit(0L))).as("n_keep"),
+          lit(0L).as("n_unique"), lit(0L).as("tokens_unique"))
+        val uniqCounts = uniqueCp.groupBy("source").agg(
+          lit(0L).as("n_docs"), lit(0L).as("n_keep"),
+          count(lit(1)).as("n_unique"),
+          sum(col("n_words")).as("tokens_unique"))
+        baseCounts.unionByName(uniqCounts)
+          .write.mode("overwrite").parquet(s"$countsPath/batch=$batchId")
+        uniqueCp.select(col("h"), col("bucket"))
+          .withColumn("batch_id", lit(batchId))
+          .write.mode("append").partitionBy("bucket").parquet(hashesPath)
+        graft.operators.Checkpoints.free(uniqueCp)
+        graft.operators.Checkpoints.free(batchSurv)
+        graft.operators.Checkpoints.free(marked)
+      } finally batch.unpersist()
+    }
   }
 
   /** Resolve the maintained audit: sum the per-batch deltas. */
@@ -2456,15 +2115,9 @@ object IngestStreams {
   def nearDedupIngest(docStream: DataFrame, statePath: String, checkpoint: String,
                       n: Int = 3, k: Int = 32, bands: Int = 8,
                       minJaccard: Double = 0.5, nBuckets: Int = 16): Unit = {
-    val q = docStream
-      .writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        nearDedupBatch(b, id, statePath, n, k, bands, minJaccard, nBuckets)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(docStream, checkpoint) { (b, id) =>
+      nearDedupBatch(b, id, statePath, n, k, bands, minJaccard, nBuckets)
+    }
   }
 
   /** One [[nearDedupIngest]] micro-batch, exposed for the replay spec. */
@@ -2477,77 +2130,74 @@ object IngestStreams {
     val bucketsPath = s"$statePath/buckets"
     val setsPath = s"$statePath/sets"
     val pairsPath = s"$statePath/pairs"
-    val commitDir = new org.apache.hadoop.fs.Path(statePath, "_nd_commits")
-    val marker = new org.apache.hadoop.fs.Path(commitDir, batchId.toString)
-    val cfs = commitDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (cfs.exists(marker)) return // replayed batch: already applied
-    def mark(): Unit = { cfs.mkdirs(commitDir); cfs.create(marker, true).close() }
-    val arrived = batch0.select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      .dropDuplicates("doc_id")
-    // docs already maintained are no-ops (re-deliveries, exact dups)
-    val docs = (
-      if (hasVisibleData(spark, setsPath)) {
-        val aBuckets = arrived
-          .select(pmod(col("doc_id"), lit(nBuckets.toLong)).as("sb"))
-          .distinct().collect().map(_.getLong(0)).toSeq
-        arrived.join(
-          spark.read.parquet(setsPath).filter(col("sb").isin(aBuckets: _*))
-            .select(col("doc_id")),
-          Seq("doc_id"), "left_anti")
-      } else arrived
-    ).persist()
-    try {
-      if (docs.isEmpty) { mark(); return }
-      val bb = Dedup.minhashBandBuckets(docs, n, k, bands).localCheckpoint(true)
-      val sets = Dedup.shingleHashSets(docs, n).localCheckpoint(true)
-      // candidates: new x new inside the batch...
-      val within = bb.as("a")
-        .join(bb.as("b"),
-          col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      // ...plus new x existing against ONLY the touched partitions
-      val cross =
-        if (hasVisibleData(spark, bucketsPath)) {
-          val pbs = bb.select(pmod(col("bucket"), lit(nBuckets.toLong)).as("pb"))
-            .distinct().collect().map(_.getLong(0)).toSeq
-          val existing = spark.read.parquet(bucketsPath)
-            .filter(col("pb").isin(pbs: _*))
-          existing.as("o").join(bb.as("nw"),
-              col("o.band") === col("nw.band") && col("o.bucket") === col("nw.bucket"))
-            .select(least(col("o.doc_id"), col("nw.doc_id")).as("doc_a"),
-              greatest(col("o.doc_id"), col("nw.doc_id")).as("doc_b"))
-        } else within.limit(0)
-      val candidates = within.unionByName(cross).distinct()
-      // verification sets: new docs in-batch, existing docs pruned
-      val needOld = candidates
-        .select(col("doc_a").as("doc_id")).unionByName(candidates.select(col("doc_b").as("doc_id")))
-        .distinct()
-        .join(sets.select("doc_id"), Seq("doc_id"), "left_anti")
-      val oldSets =
+    oncePerBatch(spark, s"$statePath/_nd_commits", batchId) {
+      val arrived = batch0.select(col("doc_id").cast("long").as("doc_id"), col("text"))
+        .dropDuplicates("doc_id")
+      // docs already maintained are no-ops (re-deliveries, exact dups)
+      val docs = (
         if (hasVisibleData(spark, setsPath)) {
-          val sbs = needOld.select(pmod(col("doc_id"), lit(nBuckets.toLong)).as("sb"))
+          val aBuckets = arrived
+            .select(pmod(col("doc_id"), lit(nBuckets.toLong)).as("sb"))
             .distinct().collect().map(_.getLong(0)).toSeq
-          spark.read.parquet(setsPath).filter(col("sb").isin(sbs: _*))
-            .join(needOld, Seq("doc_id"), "left_semi")
-            .select(col("doc_id"), col("sh_set"))
-        } else sets.limit(0)
-      val verified = Dedup.verifyJaccardSets(sets.unionByName(oldSets), candidates, minJaccard)
-        .localCheckpoint(true)
-      if (!verified.isEmpty) {
-        verified.write.mode("append").parquet(pairsPath)
-        GraphStreams.ccMergeBatch(verified.select(col("doc_a"), col("doc_b")), batchId,
-          s"$statePath/labels", s"$statePath/merges", nBuckets)
-      }
-      bb.withColumn("pb", pmod(col("bucket"), lit(nBuckets.toLong)))
-        .write.mode("append").partitionBy("pb").parquet(bucketsPath)
-      sets.withColumn("sb", pmod(col("doc_id"), lit(nBuckets.toLong)))
-        .write.mode("append").partitionBy("sb").parquet(setsPath)
-      graft.operators.Checkpoints.free(bb)
-      graft.operators.Checkpoints.free(sets)
-      graft.operators.Checkpoints.free(verified)
-      mark()
-    } finally { docs.unpersist(); () }
+          arrived.join(
+            spark.read.parquet(setsPath).filter(col("sb").isin(aBuckets: _*))
+              .select(col("doc_id")),
+            Seq("doc_id"), "left_anti")
+        } else arrived
+      ).persist()
+      try {
+        if (!docs.isEmpty) {
+          val bb = Dedup.minhashBandBuckets(docs, n, k, bands).localCheckpoint(true)
+          val sets = Dedup.shingleHashSets(docs, n).localCheckpoint(true)
+          // candidates: new x new inside the batch...
+          val within = bb.as("a")
+            .join(bb.as("b"),
+              col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
+                col("a.doc_id") < col("b.doc_id"))
+            .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+          // ...plus new x existing against ONLY the touched partitions
+          val cross =
+            if (hasVisibleData(spark, bucketsPath)) {
+              val pbs = bb.select(pmod(col("bucket"), lit(nBuckets.toLong)).as("pb"))
+                .distinct().collect().map(_.getLong(0)).toSeq
+              val existing = spark.read.parquet(bucketsPath)
+                .filter(col("pb").isin(pbs: _*))
+              existing.as("o").join(bb.as("nw"),
+                  col("o.band") === col("nw.band") && col("o.bucket") === col("nw.bucket"))
+                .select(least(col("o.doc_id"), col("nw.doc_id")).as("doc_a"),
+                  greatest(col("o.doc_id"), col("nw.doc_id")).as("doc_b"))
+            } else within.limit(0)
+          val candidates = within.unionByName(cross).distinct()
+          // verification sets: new docs in-batch, existing docs pruned
+          val needOld = candidates
+            .select(col("doc_a").as("doc_id")).unionByName(candidates.select(col("doc_b").as("doc_id")))
+            .distinct()
+            .join(sets.select("doc_id"), Seq("doc_id"), "left_anti")
+          val oldSets =
+            if (hasVisibleData(spark, setsPath)) {
+              val sbs = needOld.select(pmod(col("doc_id"), lit(nBuckets.toLong)).as("sb"))
+                .distinct().collect().map(_.getLong(0)).toSeq
+              spark.read.parquet(setsPath).filter(col("sb").isin(sbs: _*))
+                .join(needOld, Seq("doc_id"), "left_semi")
+                .select(col("doc_id"), col("sh_set"))
+            } else sets.limit(0)
+          val verified = Dedup.verifyJaccardSets(sets.unionByName(oldSets), candidates, minJaccard)
+            .localCheckpoint(true)
+          if (!verified.isEmpty) {
+            verified.write.mode("append").parquet(pairsPath)
+            GraphStreams.ccMergeBatch(verified.select(col("doc_a"), col("doc_b")), batchId,
+              s"$statePath/labels", s"$statePath/merges", nBuckets)
+          }
+          bb.withColumn("pb", pmod(col("bucket"), lit(nBuckets.toLong)))
+            .write.mode("append").partitionBy("pb").parquet(bucketsPath)
+          sets.withColumn("sb", pmod(col("doc_id"), lit(nBuckets.toLong)))
+            .write.mode("append").partitionBy("sb").parquet(setsPath)
+          graft.operators.Checkpoints.free(bb)
+          graft.operators.Checkpoints.free(sets)
+          graft.operators.Checkpoints.free(verified)
+        }
+      } finally { docs.unpersist(); () }
+    }
   }
 
   /** All verified near-dup pairs maintained so far. */
@@ -2572,13 +2222,9 @@ object IngestStreams {
                         nBuckets: Int = 16): DataFrame = {
     val docs = graft.Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     val base = java.nio.file.Files.createTempDirectory("graft-nd-ing-").toString
-    val incoming = s"$base/incoming"
-    docs.filter(col("doc_id") % 2 === 0).coalesce(1).write.mode("append").parquet(incoming)
-    docs.filter(col("doc_id") % 2 =!= 0).coalesce(1).write.mode("append").parquet(incoming)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(incoming)
+    val stream = shardedInput(base,
+      docs.filter(col("doc_id") % 2 === 0),
+      docs.filter(col("doc_id") % 2 =!= 0))
     nearDedupIngest(stream, s"$base/state", s"$base/ckpt", nBuckets = nBuckets)
     nearDedupPairs(spark, s"$base/state")
   }
@@ -2618,70 +2264,61 @@ object IngestStreams {
     val winPath = s"$statePath/windows"
     val docsPath = s"$statePath/docs"
     val spansPath = s"$statePath/spans"
-    val commitDir = new org.apache.hadoop.fs.Path(statePath, "_sp_commits")
-    val marker = new org.apache.hadoop.fs.Path(commitDir, batchId.toString)
-    val cfs = commitDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (cfs.exists(marker)) return // replayed batch: already applied
-    def mark(): Unit = { cfs.mkdirs(commitDir); cfs.create(marker, true).close() }
-    val arrived = batch0.select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      .dropDuplicates("doc_id")
-    val docs = (
-      if (hasVisibleData(spark, docsPath)) {
-        val sbs = arrived.select(pmod(col("doc_id"), lit(nBuckets.toLong)).as("sb"))
-          .distinct().collect().map(_.getLong(0)).toSeq
-        arrived.join(
-          spark.read.parquet(docsPath).filter(col("sb").isin(sbs: _*))
-            .select(col("doc_id")),
-          Seq("doc_id"), "left_anti")
-      } else arrived
-    ).persist()
-    try {
-      if (docs.isEmpty) { mark(); return }
-      val ps = Dedup.positionedShingles(docs, spanTokens).localCheckpoint(true)
-      val inBatch = ps.groupBy("shingle").agg(count(lit(1)).as("c"))
-        .localCheckpoint(true)
-      // maintained counts for ONLY the partitions this batch touches;
-      // appends are deltas, so the stored count is a merge-on-read sum
-      val oldCnt =
-        if (hasVisibleData(spark, winPath)) {
-          val wbs = inBatch
-            .select(pmod(xxhash64(col("shingle")), lit(nBuckets.toLong)).as("wb"))
+    oncePerBatch(spark, s"$statePath/_sp_commits", batchId) {
+      val arrived = batch0.select(col("doc_id").cast("long").as("doc_id"), col("text"))
+        .dropDuplicates("doc_id")
+      val docs = (
+        if (hasVisibleData(spark, docsPath)) {
+          val sbs = arrived.select(pmod(col("doc_id"), lit(nBuckets.toLong)).as("sb"))
             .distinct().collect().map(_.getLong(0)).toSeq
-          spark.read.parquet(winPath).filter(col("wb").isin(wbs: _*))
-            .groupBy("shingle").agg(sum(col("cnt")).as("oldc"))
-        } else inBatch.select(col("shingle"), col("c").as("oldc")).limit(0)
-      val dup = inBatch.join(oldCnt, Seq("shingle"), "left")
-        .filter(col("c") + coalesce(col("oldc"), lit(0L)) >= 2)
-        .select("shingle")
-      val dupPos = ps.join(dup, Seq("shingle"), "left_semi").select("doc_id", "pos")
-      val spans = Dedup.spansFromDupPositions(dupPos, spanTokens)
-        .localCheckpoint(true)
-      if (!spans.isEmpty) spans.write.mode("append").parquet(spansPath)
-      inBatch
-        .withColumn("wb", pmod(xxhash64(col("shingle")), lit(nBuckets.toLong)))
-        .select(col("shingle"), col("c").as("cnt"), col("wb"))
-        .write.mode("append").partitionBy("wb").parquet(winPath)
-      docs.select(col("doc_id"))
-        .withColumn("sb", pmod(col("doc_id"), lit(nBuckets.toLong)))
-        .write.mode("append").partitionBy("sb").parquet(docsPath)
-      graft.operators.Checkpoints.free(ps)
-      graft.operators.Checkpoints.free(inBatch)
-      graft.operators.Checkpoints.free(spans)
-      mark()
-    } finally { docs.unpersist(); () }
+          arrived.join(
+            spark.read.parquet(docsPath).filter(col("sb").isin(sbs: _*))
+              .select(col("doc_id")),
+            Seq("doc_id"), "left_anti")
+        } else arrived
+      ).persist()
+      try {
+        if (!docs.isEmpty) {
+          val ps = Dedup.positionedShingles(docs, spanTokens).localCheckpoint(true)
+          val inBatch = ps.groupBy("shingle").agg(count(lit(1)).as("c"))
+            .localCheckpoint(true)
+          // maintained counts for ONLY the partitions this batch touches;
+          // appends are deltas, so the stored count is a merge-on-read sum
+          val oldCnt =
+            if (hasVisibleData(spark, winPath)) {
+              val wbs = inBatch
+                .select(pmod(xxhash64(col("shingle")), lit(nBuckets.toLong)).as("wb"))
+                .distinct().collect().map(_.getLong(0)).toSeq
+              spark.read.parquet(winPath).filter(col("wb").isin(wbs: _*))
+                .groupBy("shingle").agg(sum(col("cnt")).as("oldc"))
+            } else inBatch.select(col("shingle"), col("c").as("oldc")).limit(0)
+          val dup = inBatch.join(oldCnt, Seq("shingle"), "left")
+            .filter(col("c") + coalesce(col("oldc"), lit(0L)) >= 2)
+            .select("shingle")
+          val dupPos = ps.join(dup, Seq("shingle"), "left_semi").select("doc_id", "pos")
+          val spans = Dedup.spansFromDupPositions(dupPos, spanTokens)
+            .localCheckpoint(true)
+          if (!spans.isEmpty) spans.write.mode("append").parquet(spansPath)
+          inBatch
+            .withColumn("wb", pmod(xxhash64(col("shingle")), lit(nBuckets.toLong)))
+            .select(col("shingle"), col("c").as("cnt"), col("wb"))
+            .write.mode("append").partitionBy("wb").parquet(winPath)
+          docs.select(col("doc_id"))
+            .withColumn("sb", pmod(col("doc_id"), lit(nBuckets.toLong)))
+            .write.mode("append").partitionBy("sb").parquet(docsPath)
+          graft.operators.Checkpoints.free(ps)
+          graft.operators.Checkpoints.free(inBatch)
+          graft.operators.Checkpoints.free(spans)
+        }
+      } finally { docs.unpersist(); () }
+    }
   }
 
   def spanDedupIngest(docStream: DataFrame, statePath: String, checkpoint: String,
                       spanTokens: Int = 8, nBuckets: Int = 16): Unit = {
-    val q = docStream
-      .writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        spanDedupBatch(b, id, statePath, spanTokens, nBuckets)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(docStream, checkpoint) { (b, id) =>
+      spanDedupBatch(b, id, statePath, spanTokens, nBuckets)
+    }
   }
 
   /** Compact the span-ingest window-count table: per-batch DELTAS
@@ -2746,31 +2383,27 @@ object IngestStreams {
                                  statePath: String, minLen: Int = 8,
                                  nBuckets: Int = 32): Unit = {
     val spark = batch0.sparkSession
-    val commitDir = new org.apache.hadoop.fs.Path(statePath, "_sfx_commits")
-    val marker = new org.apache.hadoop.fs.Path(commitDir, batchId.toString)
-    val cfs = commitDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (cfs.exists(marker)) return
-    val docs = batch0.dropDuplicates("doc_id")
-      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      .localCheckpoint(true)
-    try {
-      docs.select(col("doc_id"), length(col("text")).cast("long").as("len"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$statePath/doc_lens/batch=$batchId")
-      graft.operators.Checkpoints.cpuSplit(
-          docs.filter(length(col("text")) >= minLen))
-        .select(col("doc_id"),
-          posexplode(expr(s"transform(sequence(0, char_length(text) - $minLen), " +
-            s"i -> substr(text, i + 1, $minLen))")).as(Seq("pos", "win")))
-        .select((col("doc_id") * lit(1L << 32) + col("pos").cast("long")).as("code"),
-          col("win"))
-        .withColumn("bkt", pmod(xxhash64(col("win")), lit(nBuckets.toLong)).cast("int"))
-        .repartition(col("bkt"))
-        .write.mode("overwrite").partitionBy("bkt")
-        .parquet(s"$statePath/windows/batch=$batchId")
-      cfs.mkdirs(commitDir)
-      cfs.create(marker, true).close()
-    } finally { graft.operators.Checkpoints.free(docs); () }
+    oncePerBatch(spark, s"$statePath/_sfx_commits", batchId) {
+      val docs = batch0.dropDuplicates("doc_id")
+        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+        .localCheckpoint(true)
+      try {
+        docs.select(col("doc_id"), length(col("text")).cast("long").as("len"))
+          .coalesce(1)
+          .write.mode("overwrite").parquet(s"$statePath/doc_lens/batch=$batchId")
+        graft.operators.Checkpoints.cpuSplit(
+            docs.filter(length(col("text")) >= minLen))
+          .select(col("doc_id"),
+            posexplode(expr(s"transform(sequence(0, char_length(text) - $minLen), " +
+              s"i -> substr(text, i + 1, $minLen))")).as(Seq("pos", "win")))
+          .select((col("doc_id") * lit(1L << 32) + col("pos").cast("long")).as("code"),
+            col("win"))
+          .withColumn("bkt", pmod(xxhash64(col("win")), lit(nBuckets.toLong)).cast("int"))
+          .repartition(col("bkt"))
+          .write.mode("overwrite").partitionBy("bkt")
+          .parquet(s"$statePath/windows/batch=$batchId")
+      } finally { graft.operators.Checkpoints.free(docs); () }
+    }
   }
 
   /** Fold committed window deltas into the consolidated base — the
@@ -2821,22 +2454,14 @@ object IngestStreams {
     val docs = graft.Tables.documents(spark, dir)
       .select(col("doc_id"), col("text")).localCheckpoint(true)
     val base = java.nio.file.Files.createTempDirectory("graft-sfx-ing-").toString
-    val incoming = s"$base/incoming"
-    docs.filter(col("doc_id") % 2 === 0).coalesce(1).write.mode("append").parquet(incoming)
-    docs.filter(col("doc_id") % 2 =!= 0).coalesce(1).write.mode("append").parquet(incoming)
+    val stream = shardedInput(base,
+      docs.filter(col("doc_id") % 2 === 0),
+      docs.filter(col("doc_id") % 2 =!= 0))
     graft.operators.Checkpoints.free(docs)
     val state = s"$base/state"
-    val q = spark.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", "1").parquet(incoming)
-      .writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        suffixBatch(b, id, state)
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    drain(stream, s"$base/ckpt") { (b, id) =>
+      suffixBatch(b, id, state)
+    }
     suffixCompact(spark, state)
     suffixProfileResolve(spark, state)
   }
@@ -2935,22 +2560,11 @@ object IngestStreams {
                                        spanTokens: Int, nBuckets: Int): String = {
     val docs = graft.Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     val base = java.nio.file.Files.createTempDirectory("graft-sp-ing-").toString
-    val incoming = s"$base/incoming"
-    // Batch ORDER matters here (the first copy is never retro-flagged),
-    // and FileStreamSource orders by modification time — force distinct
-    // mtimes so even-batch-first holds even when both writes land in
-    // the same filesystem timestamp granule.
-    def stampParquet(ts: Long): Unit = new java.io.File(incoming).listFiles()
-      .filter(f => f.getName.endsWith(".parquet") && f.lastModified() > ts)
-      .foreach { f => f.setLastModified(ts); () }
-    docs.filter(col("doc_id") % 2 === 0).coalesce(1).write.mode("append").parquet(incoming)
-    stampParquet(1000000L)
-    docs.filter(col("doc_id") % 2 =!= 0).coalesce(1).write.mode("append").parquet(incoming)
-    stampParquet(2000000L)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(incoming)
+    // Batch ORDER matters here (the first copy is never retro-flagged):
+    // shardedInput's mtime stamps keep the even batch first even when
+    // both writes land in the same filesystem timestamp granule.
+    val stream = shardedInput(base,
+      docs.filter(col("doc_id") % 2 === 0), docs.filter(col("doc_id") % 2 =!= 0))
     spanDedupIngest(stream, s"$base/state", s"$base/ckpt", spanTokens, nBuckets)
     s"$base/state"
   }
@@ -2981,77 +2595,73 @@ object IngestStreams {
                                     nBuckets: Int = 16,
                                     maxHamming: Int = 3): Unit = {
     val spark = batch0.sparkSession
-    val commitDir = new org.apache.hadoop.fs.Path(statePath, "_pa_commits")
-    val marker = new org.apache.hadoop.fs.Path(commitDir, batchId.toString)
-    val cfs = commitDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (cfs.exists(marker)) return
-    val batch = batch0.select(col("doc_id"), col("text"), col("source"))
-      .dropDuplicates("doc_id").persist()
-    try {
-      val phPath = s"$statePath/ph"
-      val pendingPath = s"$statePath/pending"
-      val verdictsPath = s"$statePath/verdicts"
-      val hammingExpr = expr(
-        "aggregate(zip_with(cap_ph, med_ph, (x, y) -> bit_count(x ^ y)), 0, (acc, h) -> acc + h)")
-        .cast("long")
-      def verdictCol = when(col("hamming") <= maxHamming, lit("match"))
-        .otherwise(lit("conflict"))
-      val newPh = graft.operators.Multimodal.phashBands(batch)
-        .localCheckpoint(true)
-      // the batch's own pairs, caption side always resolvable locally
-      val pairs = graft.operators.Multimodal.pairFixture(batch)
-        .join(batch.select(col("doc_id").as("caption_id"), col("source")),
-          Seq("caption_id"))
-        .join(newPh.select(col("doc_id").as("caption_id"),
-          col("phash_bands").as("cap_ph")), Seq("caption_id"))
-        .localCheckpoint(true)
-      // media lookup: this batch's fingerprints + PRUNED stored buckets
-      val mediaBuckets = pairs
-        .select(pmod(col("media_id"), lit(nBuckets.toLong)).as("bk"))
-        .distinct().collect().map(_.getLong(0)).toSeq
-      val mediaPh =
-        (if (StreamState.hasDataFiles(spark, phPath) && mediaBuckets.nonEmpty)
-          newPh.unionByName(spark.read.parquet(phPath)
-            .filter(col("bucket").isin(mediaBuckets: _*))
-            .select("doc_id", "phash_bands"))
-        else newPh)
-          .select(col("doc_id").as("media_id"), col("phash_bands").as("med_ph"))
-      val looked = pairs.join(mediaPh, Seq("media_id"), "left")
-        .localCheckpoint(true)
-      val resolvedNow = looked.filter(col("med_ph").isNotNull)
-        .withColumn("hamming", hammingExpr)
-        .select(col("caption_id"), col("source"), verdictCol.as("v"))
-      // retro-resolution: pending pairs whose media just arrived
-      val docBuckets = batch
-        .select(pmod(col("doc_id"), lit(nBuckets.toLong)).as("bk"))
-        .distinct().collect().map(_.getLong(0)).toSeq
-      val retro =
-        if (StreamState.hasDataFiles(spark, pendingPath) && docBuckets.nonEmpty) {
-          spark.read.parquet(pendingPath)
-            .filter(col("mb").isin(docBuckets: _*))
-            .select(col("caption_id"), col("media_id"), col("source"),
-              col("cap_ph"))
-            .join(newPh.select(col("doc_id").as("media_id"),
-              col("phash_bands").as("med_ph")), Seq("media_id"))
-            .withColumn("hamming", hammingExpr)
-            .select(col("caption_id"), col("source"), verdictCol.as("v"))
-        } else resolvedNow.limit(0)
-      resolvedNow.unionByName(retro)
-        .write.mode("overwrite").parquet(s"$verdictsPath/batch=$batchId")
-      looked.filter(col("med_ph").isNull)
-        .select(col("caption_id"), col("media_id"), col("source"), col("cap_ph"),
-          pmod(col("media_id"), lit(nBuckets.toLong)).as("mb"))
-        .write.mode("overwrite").partitionBy("mb")
-        .parquet(s"$pendingPath/batch=$batchId")
-      newPh.withColumn("bucket", pmod(col("doc_id"), lit(nBuckets.toLong)))
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$phPath/batch=$batchId")
-      graft.operators.Checkpoints.free(looked)
-      graft.operators.Checkpoints.free(pairs)
-      graft.operators.Checkpoints.free(newPh)
-      cfs.mkdirs(commitDir)
-      cfs.create(marker, true).close()
-    } finally { batch.unpersist(); () }
+    oncePerBatch(spark, s"$statePath/_pa_commits", batchId) {
+      val batch = batch0.select(col("doc_id"), col("text"), col("source"))
+        .dropDuplicates("doc_id").persist()
+      try {
+        val phPath = s"$statePath/ph"
+        val pendingPath = s"$statePath/pending"
+        val verdictsPath = s"$statePath/verdicts"
+        val hammingExpr = expr(
+          "aggregate(zip_with(cap_ph, med_ph, (x, y) -> bit_count(x ^ y)), 0, (acc, h) -> acc + h)")
+          .cast("long")
+        def verdictCol = when(col("hamming") <= maxHamming, lit("match"))
+          .otherwise(lit("conflict"))
+        val newPh = graft.operators.Multimodal.phashBands(batch)
+          .localCheckpoint(true)
+        // the batch's own pairs, caption side always resolvable locally
+        val pairs = graft.operators.Multimodal.pairFixture(batch)
+          .join(batch.select(col("doc_id").as("caption_id"), col("source")),
+            Seq("caption_id"))
+          .join(newPh.select(col("doc_id").as("caption_id"),
+            col("phash_bands").as("cap_ph")), Seq("caption_id"))
+          .localCheckpoint(true)
+        // media lookup: this batch's fingerprints + PRUNED stored buckets
+        val mediaBuckets = pairs
+          .select(pmod(col("media_id"), lit(nBuckets.toLong)).as("bk"))
+          .distinct().collect().map(_.getLong(0)).toSeq
+        val mediaPh =
+          (if (StreamState.hasDataFiles(spark, phPath) && mediaBuckets.nonEmpty)
+            newPh.unionByName(spark.read.parquet(phPath)
+              .filter(col("bucket").isin(mediaBuckets: _*))
+              .select("doc_id", "phash_bands"))
+          else newPh)
+            .select(col("doc_id").as("media_id"), col("phash_bands").as("med_ph"))
+        val looked = pairs.join(mediaPh, Seq("media_id"), "left")
+          .localCheckpoint(true)
+        val resolvedNow = looked.filter(col("med_ph").isNotNull)
+          .withColumn("hamming", hammingExpr)
+          .select(col("caption_id"), col("source"), verdictCol.as("v"))
+        // retro-resolution: pending pairs whose media just arrived
+        val docBuckets = batch
+          .select(pmod(col("doc_id"), lit(nBuckets.toLong)).as("bk"))
+          .distinct().collect().map(_.getLong(0)).toSeq
+        val retro =
+          if (StreamState.hasDataFiles(spark, pendingPath) && docBuckets.nonEmpty) {
+            spark.read.parquet(pendingPath)
+              .filter(col("mb").isin(docBuckets: _*))
+              .select(col("caption_id"), col("media_id"), col("source"),
+                col("cap_ph"))
+              .join(newPh.select(col("doc_id").as("media_id"),
+                col("phash_bands").as("med_ph")), Seq("media_id"))
+              .withColumn("hamming", hammingExpr)
+              .select(col("caption_id"), col("source"), verdictCol.as("v"))
+          } else resolvedNow.limit(0)
+        resolvedNow.unionByName(retro)
+          .write.mode("overwrite").parquet(s"$verdictsPath/batch=$batchId")
+        looked.filter(col("med_ph").isNull)
+          .select(col("caption_id"), col("media_id"), col("source"), col("cap_ph"),
+            pmod(col("media_id"), lit(nBuckets.toLong)).as("mb"))
+          .write.mode("overwrite").partitionBy("mb")
+          .parquet(s"$pendingPath/batch=$batchId")
+        newPh.withColumn("bucket", pmod(col("doc_id"), lit(nBuckets.toLong)))
+          .write.mode("overwrite").partitionBy("bucket")
+          .parquet(s"$phPath/batch=$batchId")
+        graft.operators.Checkpoints.free(looked)
+        graft.operators.Checkpoints.free(pairs)
+        graft.operators.Checkpoints.free(newPh)
+      } finally { batch.unpersist(); () }
+    }
   }
 
   /** Resolve the maintained pair-audit state into the batch
@@ -3113,24 +2723,14 @@ object IngestStreams {
       .select(col("doc_id"), col("text"), col("source"))
       .localCheckpoint(true)
     val base = java.nio.file.Files.createTempDirectory("graft-pa-ing-").toString
-    val incoming = s"$base/incoming"
-    docs.filter(col("doc_id") % 2 === 0).coalesce(1).write.mode("append").parquet(incoming)
-    docs.filter(col("doc_id") % 2 =!= 0).coalesce(1).write.mode("append").parquet(incoming)
+    val stream = shardedInput(base,
+      docs.filter(col("doc_id") % 2 === 0),
+      docs.filter(col("doc_id") % 2 =!= 0))
     graft.operators.Checkpoints.free(docs)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType), StructField("source", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(incoming)
     val state = s"$base/state"
-    val q = stream.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        pairAuditBatch(b, id, state, nBuckets)
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(stream, s"$base/ckpt") { (b, id) =>
+      pairAuditBatch(b, id, state, nBuckets)
+    }
     pairAuditResolve(spark, state)
   }
 
@@ -3165,72 +2765,68 @@ object IngestStreams {
                                    batchId: Long, statePath: String,
                                    nBuckets: Int = 16): Unit = {
     val spark = batch0.sparkSession
-    val commitDir = new org.apache.hadoop.fs.Path(statePath, "_iv_commits")
-    val marker = new org.apache.hadoop.fs.Path(commitDir, batchId.toString)
-    val cfs = commitDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (cfs.exists(marker)) return
-    val batch = batch0.select(col("k"), col("s"), col("e"))
-      .withColumn("bk", pmod(col("k"), lit(nBuckets.toLong)))
-      .persist()
-    try {
-      val touched = batch.select(col("bk")).distinct()
-        .collect().map(_.getLong(0)).toSeq
-      touched.foreach(bk => healSwap(spark, ivBucketDir(statePath, bk)))
-      // ONE read over all touched bucket dirs serves both the retry
-      // check and the merge input — the job count per batch is
-      // constant however many buckets the deployment shards into
-      // (a per-bucket read/write loop would be a sequential-job wall
-      // at production bucket counts)
-      val existingDirs = touched.map(ivBucketDir(statePath, _))
-        .filter(hasVisibleData(spark, _))
-      val stored0 =
-        if (existingDirs.nonEmpty)
-          spark.read.parquet(existingDirs: _*)
-            .withColumn("bk", pmod(col("k"), lit(nBuckets.toLong)))
-            .persist()
-        else null
-      // crash-window retry: skip buckets already merged by this batch
-      val done: Set[Long] =
-        if (stored0 != null)
-          stored0.groupBy("bk").agg(max(col("last_b")).as("mb"))
-            .filter(col("mb") >= batchId)
-            .collect().map(_.getLong(0)).toSet
-        else Set.empty
-      val todo = touched.filterNot(done)
-      if (todo.nonEmpty) {
-        val stored =
+    oncePerBatch(spark, s"$statePath/_iv_commits", batchId) {
+      val batch = batch0.select(col("k"), col("s"), col("e"))
+        .withColumn("bk", pmod(col("k"), lit(nBuckets.toLong)))
+        .persist()
+      try {
+        val touched = batch.select(col("bk")).distinct()
+          .collect().map(_.getLong(0)).toSeq
+        touched.foreach(bk => healSwap(spark, ivBucketDir(statePath, bk)))
+        // ONE read over all touched bucket dirs serves both the retry
+        // check and the merge input — the job count per batch is
+        // constant however many buckets the deployment shards into
+        // (a per-bucket read/write loop would be a sequential-job wall
+        // at production bucket counts)
+        val existingDirs = touched.map(ivBucketDir(statePath, _))
+          .filter(hasVisibleData(spark, _))
+        val stored0 =
+          if (existingDirs.nonEmpty)
+            spark.read.parquet(existingDirs: _*)
+              .withColumn("bk", pmod(col("k"), lit(nBuckets.toLong)))
+              .persist()
+          else null
+        // crash-window retry: skip buckets already merged by this batch
+        val done: Set[Long] =
           if (stored0 != null)
-            stored0.filter(col("bk").isin(todo: _*))
-              .select(col("k"), col("i_s").as("s"), col("i_e").as("e"),
-                col("n").as("wt"))
-          else batch.limit(0).select(col("k"), col("s"), col("e"),
-            lit(0L).as("wt"))
-        val fresh = batch.filter(col("bk").isin(todo: _*))
-          .select(col("k"), col("s"), col("e"), lit(1L).as("wt"))
-        val merged = graft.operators.Relational
-          .sweepIslands(stored.unionByName(fresh))
-          .withColumn("last_b", lit(batchId))
-          .withColumn("bk", pmod(col("k"), lit(nBuckets.toLong)))
-        // one partitioned staging write, then per-bucket RENAMES
-        // (metadata ops) into swap position — never a job per bucket
-        val staging = s"$statePath/_iv_staging"
-        val sp = new org.apache.hadoop.fs.Path(staging)
-        val fs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        merged.write.mode("overwrite").partitionBy("bk").parquet(staging)
-        todo.foreach { bk =>
-          val live = ivBucketDir(statePath, bk)
-          val aside = new org.apache.hadoop.fs.Path(live + "_swap_staging")
-          fs.delete(aside, true)
-          require(fs.rename(new org.apache.hadoop.fs.Path(s"$staging/bk=$bk"), aside),
-            s"interval coverage: staged bucket $bk missing")
-          swapInstall(spark, live)
+            stored0.groupBy("bk").agg(max(col("last_b")).as("mb"))
+              .filter(col("mb") >= batchId)
+              .collect().map(_.getLong(0)).toSet
+          else Set.empty
+        val todo = touched.filterNot(done)
+        if (todo.nonEmpty) {
+          val stored =
+            if (stored0 != null)
+              stored0.filter(col("bk").isin(todo: _*))
+                .select(col("k"), col("i_s").as("s"), col("i_e").as("e"),
+                  col("n").as("wt"))
+            else batch.limit(0).select(col("k"), col("s"), col("e"),
+              lit(0L).as("wt"))
+          val fresh = batch.filter(col("bk").isin(todo: _*))
+            .select(col("k"), col("s"), col("e"), lit(1L).as("wt"))
+          val merged = graft.operators.Relational
+            .sweepIslands(stored.unionByName(fresh))
+            .withColumn("last_b", lit(batchId))
+            .withColumn("bk", pmod(col("k"), lit(nBuckets.toLong)))
+          // one partitioned staging write, then per-bucket RENAMES
+          // (metadata ops) into swap position — never a job per bucket
+          val staging = s"$statePath/_iv_staging"
+          val sp = new org.apache.hadoop.fs.Path(staging)
+          val fs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          merged.write.mode("overwrite").partitionBy("bk").parquet(staging)
+          todo.foreach { bk =>
+            val live = ivBucketDir(statePath, bk)
+            val aside = new org.apache.hadoop.fs.Path(live + "_swap_staging")
+            fs.delete(aside, true)
+            require(fs.rename(new org.apache.hadoop.fs.Path(s"$staging/bk=$bk"), aside),
+              s"interval coverage: staged bucket $bk missing")
+            swapInstall(spark, live)
+          }
+          fs.delete(sp, true)
         }
-        fs.delete(sp, true)
-      }
-      if (stored0 != null) stored0.unpersist()
-      cfs.mkdirs(commitDir)
-      cfs.create(marker, true).close()
-    } finally { batch.unpersist(); () }
+        if (stored0 != null) stored0.unpersist()
+      } finally { batch.unpersist(); () }
+    }
   }
 
   /** Resolve the maintained island store to the
@@ -3264,24 +2860,12 @@ object IngestStreams {
       .intervalFixture(graft.Tables.lineitem(spark, dir))
       .localCheckpoint(true)
     val base = java.nio.file.Files.createTempDirectory("graft-iv-ing-").toString
-    val incoming = s"$base/incoming"
-    iv.filter(col("k") % 2 === 0).coalesce(1).write.mode("append").parquet(incoming)
-    iv.filter(col("k") % 2 =!= 0).coalesce(1).write.mode("append").parquet(incoming)
+    val stream = shardedInput(base, iv.filter(col("k") % 2 === 0), iv.filter(col("k") % 2 =!= 0))
     graft.operators.Checkpoints.free(iv)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("k", LongType),
-        StructField("s", LongType), StructField("e", LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(incoming)
     val state = s"$base/state"
-    val q = stream.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        intervalBatch(b, id, state, nBuckets)
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(stream, s"$base/ckpt") { (b, id) =>
+      intervalBatch(b, id, state, nBuckets)
+    }
     intervalCoverageResolve(spark, state, nBuckets)
   }
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.Trigger
 
 /** Spec-visible I/O counters for the graph-maintenance batch path:
   * the scale contract ("a no-improvement batch never scans the
@@ -20,8 +21,71 @@ private[graft] object MaintIO {
   val stateCountScans = new java.util.concurrent.atomic.AtomicLong(0L)
 }
 
-/** Shared state-store probes for the streaming maintenance modules. */
-private[streaming] object StreamState {
+/** Shared state-store probes and the micro-batch drive contract for
+  * the streaming maintenance modules. */
+private[graft] object StreamState {
+  /** The replay contract every maintenance batch shares: foreachBatch
+    * is at-least-once, so each applied `batchId` is recorded as an
+    * empty marker file under `commitDir` (underscore-prefixed at every
+    * site, so parquet readers never see it) and a marked batch is
+    * skipped outright. The marker is written only after `body`
+    * returns: a body that throws leaves none, and the retry runs it
+    * again. `body` must not `return` — a non-local return would skip
+    * the marker. */
+  private[graft] def oncePerBatch(spark: SparkSession, commitDir: String,
+                                  batchId: Long)(body: => Unit): Unit = {
+    val dir = new org.apache.hadoop.fs.Path(commitDir)
+    val marker = new org.apache.hadoop.fs.Path(dir, batchId.toString)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(marker)) {
+      body
+      fs.mkdirs(dir)
+      fs.create(marker, true).close()
+    }
+  }
+
+  /** Write each shard as one parquet file under `$base/incoming`, in
+    * order, and return the stream that reads them one file per
+    * trigger: shard k arrives as micro-batch k. FileStreamSource
+    * orders files by modification time, ties broken by path name, and
+    * two back-to-back writes can share an mtime — so each shard's file
+    * is stamped with an explicit, strictly increasing mtime instead of
+    * trusting the filesystem clock. The stream's schema is the shards'
+    * own (the first shard's; all must agree).
+    */
+  private[graft] def shardedInput(base: String, shards: DataFrame*): DataFrame = {
+    val spark = shards.head.sparkSession
+    val incoming = new org.apache.hadoop.fs.Path(s"$base/incoming")
+    val fs = incoming.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    shards.zipWithIndex.foreach { case (shard, k) =>
+      shard.coalesce(1).write.mode("append").parquet(incoming.toString)
+      val mtime = (k + 1) * 1000000L
+      fs.listStatus(incoming).foreach { s =>
+        val n = s.getPath.getName
+        if (!n.startsWith("_") && !n.startsWith(".") && s.getModificationTime >= mtime)
+          fs.setTimes(s.getPath, mtime, -1)
+      }
+    }
+    spark.readStream
+      .schema(shards.head.schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(incoming.toString)
+  }
+
+  /** Drain `stream` to completion through `batchFn`: one
+    * `foreachBatch` query under `AvailableNow`, checkpointed at
+    * `checkpoint`, awaited before returning. Every maintenance drive
+    * runs through here except the hybrid RRF drive, whose two queries
+    * must run at the same time. */
+  private[graft] def drain(stream: DataFrame, checkpoint: String)
+                          (batchFn: (DataFrame, Long) => Unit): Unit =
+    stream.writeStream
+      .foreachBatch(batchFn)
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+
   /** Target post-shuffle/state partition size for stateful streaming
     * queries (guide §2.2's 100 MB–1 GB band, taken at the low end
     * because state-store rows are richer than shuffle rows).

@@ -2,11 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
 
 import graft.operators.Similarity
-import graft.streaming.StreamState.hasVisibleData
+import graft.streaming.StreamState.{drain, hasVisibleData, oncePerBatch, shardedInput}
 
 /** Streaming IVF maintenance — the vector face of the always-on
   * ingest story (exact-hash dedup 37b → near-dup dedup 37m → cluster
@@ -51,15 +49,9 @@ object VectorStreams {
   def ivfIngest(vecStream: DataFrame, statePath: String, checkpoint: String,
                 coarse: Seq[(Long, Seq[Float])], nBuckets: Int = 16,
                 books: Option[Seq[Seq[Seq[Float]]]] = None): Unit = {
-    val q = vecStream
-      .writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        ivfIngestBatch(b, id, statePath, coarse, nBuckets, books)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(vecStream, checkpoint) { (b, id) =>
+      ivfIngestBatch(b, id, statePath, coarse, nBuckets, books)
+    }
   }
 
   /** One [[ivfIngest]] micro-batch, exposed for the replay spec. */
@@ -69,36 +61,29 @@ object VectorStreams {
                                     nBuckets: Int,
                                     books: Option[Seq[Seq[Seq[Float]]]] = None): Unit = {
     val spark = batch0.sparkSession
-    val commitDir = new org.apache.hadoop.fs.Path(statePath, "_ivf_commits")
-    val marker = new org.apache.hadoop.fs.Path(commitDir, batchId.toString)
-    val cfs = commitDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (cfs.exists(marker)) return // replayed batch: already applied
-    val arrived = batch0
-      .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
-      .dropDuplicates("vec_id")
-    // an empty micro-batch writes nothing (a zero-row partitionBy dir
-    // would hold only _SUCCESS and poison later schema inference), and
-    // must not evaluate the quantizer either — an empty corpus trains
-    // an EMPTY coarse list, which only a nonempty batch may reject
-    if (arrived.isEmpty) {
-      cfs.mkdirs(commitDir)
-      cfs.create(marker, true).close()
-      return
+    oncePerBatch(spark, s"$statePath/_ivf_commits", batchId) {
+      val arrived = batch0
+        .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
+        .dropDuplicates("vec_id")
+      // an empty micro-batch writes nothing (a zero-row partitionBy dir
+      // would hold only _SUCCESS and poison later schema inference), and
+      // must not evaluate the quantizer either — an empty corpus trains
+      // an EMPTY coarse list, which only a nonempty batch may reject
+      if (!arrived.isEmpty) {
+        require(coarse.nonEmpty, "cannot ingest vectors through an untrained quantizer")
+        val assigned = Similarity.cellAssign(arrived, "vec_id", "embedding", coarse, probes = 1)
+        val rows = books match {
+          case Some(b) =>
+            assigned.join(
+              Similarity.residualCodes(arrived, "vec_id", "embedding", coarse, b)
+                .select(col("vec_id"), col("codes")),
+              Seq("vec_id"))
+          case None => assigned
+        }
+        rows.withColumn("cb", pmod(col("cell"), lit(nBuckets.toLong)))
+          .write.mode("append").partitionBy("cb").parquet(s"$statePath/cells")
+      }
     }
-    require(coarse.nonEmpty, "cannot ingest vectors through an untrained quantizer")
-    val assigned = Similarity.cellAssign(arrived, "vec_id", "embedding", coarse, probes = 1)
-    val rows = books match {
-      case Some(b) =>
-        assigned.join(
-          Similarity.residualCodes(arrived, "vec_id", "embedding", coarse, b)
-            .select(col("vec_id"), col("codes")),
-          Seq("vec_id"))
-      case None => assigned
-    }
-    rows.withColumn("cb", pmod(col("cell"), lit(nBuckets.toLong)))
-      .write.mode("append").partitionBy("cb").parquet(s"$statePath/cells")
-    cfs.mkdirs(commitDir)
-    cfs.create(marker, true).close()
   }
 
   /** ANN top-k against the MAINTAINED cell table: queries assign to
@@ -444,24 +429,14 @@ object VectorStreams {
         .toDF("vec_id", "cell", "centroid_cos", "kept")
     }
     val base = java.nio.file.Files.createTempDirectory("graft-sem-ing-").toString
-    val incoming = s"$base/incoming"
-    emb.filter(col("vec_id") % 2 === 0).coalesce(1).write.mode("append").parquet(incoming)
-    emb.filter(col("vec_id") % 2 =!= 0).coalesce(1).write.mode("append").parquet(incoming)
+    val stream = shardedInput(base,
+      emb.filter(col("vec_id") % 2 === 0),
+      emb.filter(col("vec_id") % 2 =!= 0))
     graft.operators.Checkpoints.free(emb)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("vec_id", LongType),
-        StructField("embedding", ArrayType(FloatType)))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(incoming)
     val state = s"$base/state"
-    val q = stream.writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        semanticIngestBatch(b, id, state, coarse, tau, nBuckets)
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(stream, s"$base/ckpt") { (b, id) =>
+      semanticIngestBatch(b, id, state, coarse, tau, nBuckets)
+    }
     semanticResolve(spark, state)
   }
 
@@ -474,48 +449,44 @@ object VectorStreams {
     import graft.functions.VectorFunctions.vecCosine
     val spark = batch0.sparkSession
     import spark.implicits._
-    val commitDir = new org.apache.hadoop.fs.Path(statePath, "_sem_commits")
-    val marker = new org.apache.hadoop.fs.Path(commitDir, batchId.toString)
-    val cfs = commitDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (cfs.exists(marker)) return
-    // a batch appending into the pairs dir must not resurrect it
-    // AROUND a crashed compaction's retired copy (the append would
-    // strand the retired log forever) — heal first
-    healPairs(spark, statePath)
-    val cents = broadcast(coarse.toDF("cell", "cell_emb"))
-    val assigned = Similarity.cellAssign(
-        batch0.select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
-          .dropDuplicates("vec_id"),
-        "vec_id", "embedding", coarse, probes = 1)
-      .join(cents, "cell")
-      .select(col("vec_id"), col("embedding"), col("cell"),
-        vecCosine(col("embedding"), col("cell_emb")).as("ccos"),
-        pmod(col("cell"), lit(nBuckets.toLong)).as("cb"))
-      .localCheckpoint(true)
-    val touched = assigned.select(col("cb")).distinct()
-      .collect().map(_.getLong(0)) // bounded by nBuckets
-    val existing =
-      if (hasVisibleData(spark, s"$statePath/members"))
-        spark.read.parquet(s"$statePath/members")
-          .filter(col("cb").isin(touched: _*)) // partition-pruned read
-      else assigned.limit(0)
-    val newOld = assigned.as("a")
-      .join(existing.as("b"), col("a.cell") === col("b.cell"))
-      .filter(vecCosine(col("a.embedding"), col("b.embedding")) >= tau)
-      .select(col("a.vec_id").as("v1"), col("b.vec_id").as("v2"))
-    val newNew = assigned.as("a")
-      .join(assigned.as("b"),
-        col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
-      .filter(vecCosine(col("a.embedding"), col("b.embedding")) >= tau)
-      .select(col("a.vec_id").as("v1"), col("b.vec_id").as("v2"))
-    newOld.union(newNew)
-      .write.mode("overwrite").parquet(s"$statePath/pairs/batch=$batchId")
-    assigned.select(col("vec_id"), col("embedding"), col("cell"), col("ccos"), col("cb"))
-      .write.mode("overwrite").partitionBy("cb")
-      .parquet(s"$statePath/members/batch=$batchId")
-    graft.operators.Checkpoints.free(assigned)
-    cfs.mkdirs(commitDir)
-    cfs.create(marker, true).close()
+    oncePerBatch(spark, s"$statePath/_sem_commits", batchId) {
+      // a batch appending into the pairs dir must not resurrect it
+      // AROUND a crashed compaction's retired copy (the append would
+      // strand the retired log forever) — heal first
+      healPairs(spark, statePath)
+      val cents = broadcast(coarse.toDF("cell", "cell_emb"))
+      val assigned = Similarity.cellAssign(
+          batch0.select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
+            .dropDuplicates("vec_id"),
+          "vec_id", "embedding", coarse, probes = 1)
+        .join(cents, "cell")
+        .select(col("vec_id"), col("embedding"), col("cell"),
+          vecCosine(col("embedding"), col("cell_emb")).as("ccos"),
+          pmod(col("cell"), lit(nBuckets.toLong)).as("cb"))
+        .localCheckpoint(true)
+      val touched = assigned.select(col("cb")).distinct()
+        .collect().map(_.getLong(0)) // bounded by nBuckets
+      val existing =
+        if (hasVisibleData(spark, s"$statePath/members"))
+          spark.read.parquet(s"$statePath/members")
+            .filter(col("cb").isin(touched: _*)) // partition-pruned read
+        else assigned.limit(0)
+      val newOld = assigned.as("a")
+        .join(existing.as("b"), col("a.cell") === col("b.cell"))
+        .filter(vecCosine(col("a.embedding"), col("b.embedding")) >= tau)
+        .select(col("a.vec_id").as("v1"), col("b.vec_id").as("v2"))
+      val newNew = assigned.as("a")
+        .join(assigned.as("b"),
+          col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
+        .filter(vecCosine(col("a.embedding"), col("b.embedding")) >= tau)
+        .select(col("a.vec_id").as("v1"), col("b.vec_id").as("v2"))
+      newOld.union(newNew)
+        .write.mode("overwrite").parquet(s"$statePath/pairs/batch=$batchId")
+      assigned.select(col("vec_id"), col("embedding"), col("cell"), col("ccos"), col("cb"))
+        .write.mode("overwrite").partitionBy("cb")
+        .parquet(s"$statePath/members/batch=$batchId")
+      graft.operators.Checkpoints.free(assigned)
+    }
   }
 
   /** Compact the semantic PAIR LOG: per victim keep only the single
@@ -652,14 +623,9 @@ object VectorStreams {
       .localCheckpoint(true)
     val coarse = Similarity.trainCoarseQuantizer(emb, nCells = 4)
     val base = java.nio.file.Files.createTempDirectory("graft-ivf-gate-").toString
-    val incoming = s"$base/incoming"
-    emb.filter(col("vec_id") % 2 === 0).coalesce(1).write.mode("append").parquet(incoming)
-    emb.filter(col("vec_id") % 2 =!= 0).coalesce(1).write.mode("append").parquet(incoming)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("vec_id", LongType),
-        StructField("embedding", ArrayType(FloatType)))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(incoming)
+    val stream = shardedInput(base,
+      emb.filter(col("vec_id") % 2 === 0),
+      emb.filter(col("vec_id") % 2 =!= 0))
     ivfIngest(stream, s"$base/state", s"$base/ckpt", coarse, nBuckets, None)
     val queries = emb.filter(col("vec_id") < numQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
@@ -678,14 +644,9 @@ object VectorStreams {
                            books: Option[Seq[Seq[Seq[Float]]]]): String = {
     val emb = graft.Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val base = java.nio.file.Files.createTempDirectory("graft-ivf-ing-").toString
-    val incoming = s"$base/incoming"
-    emb.filter(col("vec_id") % 2 === 0).coalesce(1).write.mode("append").parquet(incoming)
-    emb.filter(col("vec_id") % 2 =!= 0).coalesce(1).write.mode("append").parquet(incoming)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("vec_id", LongType),
-        StructField("embedding", ArrayType(FloatType)))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(incoming)
+    val stream = shardedInput(base,
+      emb.filter(col("vec_id") % 2 === 0),
+      emb.filter(col("vec_id") % 2 =!= 0))
     ivfIngest(stream, s"$base/state", s"$base/ckpt", coarse, nBuckets, books)
     s"$base/state"
   }

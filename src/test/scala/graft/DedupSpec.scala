@@ -11,6 +11,8 @@ import graft.operators.Dedup
 class DedupSpec extends AnyFunSuite {
   lazy val spark = SharedSpark.spark
 
+  private def persistedIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
   /** 0/1 near-identical (one word changed), 2 identical to 0 modulo
     * whitespace/case, 3 unrelated.
     */
@@ -123,9 +125,14 @@ class DedupSpec extends AnyFunSuite {
     import spark.implicits._
     // components: {1,2,3} via chain 1-2, 2-3; {7,9}; singletons don't appear
     val pairs = Seq((1L, 2L), (2L, 3L), (7L, 9L)).toDF("doc_a", "doc_b")
-    val got = Dedup.connectedComponents(pairs).collect()
+    val before = persistedIds
+    val cc = Dedup.connectedComponents(pairs)
+    val got = cc.collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 9L -> 7L))
+    graft.operators.Checkpoints.free(cc)
+    assert((persistedIds -- before).isEmpty,
+      s"connectedComponents left RDDs persisted beyond its result: ${persistedIds -- before}")
   }
 
   test("boundedComponents: equals converged CC whenever diameter <= rounds; exactly-K semantics pinned on a longer chain; drives the apply family identically there") {
@@ -135,8 +142,11 @@ class DedupSpec extends AnyFunSuite {
       Seq((1L, 2L), (2L, 3L), (7L, 9L)),
       Seq((3L, 2L), (2L, 1L), (1L, 3L), (9L, 7L)),
       Seq((10L, 1L), (11L, 1L), (20L, 2L), (21L, 2L), (11L, 21L)))
+    // collects a component frame, then frees its result checkpoint
     def asMap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      try df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      finally graft.operators.Checkpoints.free(df)
+    val before = persistedIds
     for ((edges, gi) <- shapes.zipWithIndex) {
       val pairs = edges.toDF("doc_a", "doc_b")
       assert(asMap(Dedup.boundedComponents(pairs, 6)) ==
@@ -148,6 +158,8 @@ class DedupSpec extends AnyFunSuite {
     val b6 = asMap(Dedup.boundedComponents(chain, 6))
     assert(b6 == (0L to 10L).map(i => i -> math.max(0L, i - 6L)).toMap,
       s"exactly-6-round chain labels wrong: $b6")
+    assert((persistedIds -- before).isEmpty,
+      s"bounded/converged CC left RDDs persisted beyond their results: ${persistedIds -- before}")
     // the bounded apply elects the same survivors as the converged
     // apply on the short-diameter corpus shapes
     val docs = (1L to 30L).map(i => (i, i * 10)).toDF("doc_id", "n_chars")

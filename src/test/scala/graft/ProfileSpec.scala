@@ -23,4 +23,18 @@ class ProfileSpec extends AnyFunSuite {
     assert(!spark.sparkContext.isStopped)
     assert(spark.range(3).count() == 3)
   }
+
+  test("profile: a frame the caller checkpointed beforehand stays persisted and readable") {
+    def persistedIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persistedIds
+    val mine = spark.range(100).toDF("x").localCheckpoint(true)
+    val mineIds = persistedIds -- before
+    assert(mineIds.nonEmpty, "the eager localCheckpoint persisted nothing")
+    try {
+      Profile.profile(spark, SharedSpark.sf, "q_label_prop")
+      assert(mineIds.subsetOf(persistedIds),
+        s"profiling unpersisted the caller's checkpoint: ${mineIds -- persistedIds}")
+      assert(mine.count() == 100)
+    } finally graft.operators.Checkpoints.free(mine)
+  }
 }

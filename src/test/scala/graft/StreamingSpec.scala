@@ -3075,4 +3075,49 @@ class StreamingSpec extends AnyFunSuite {
     assert(innerP.length == 2, "planted click should inner-match both purchases")
     assert(semiP == Seq((1L, 1L)), "semi join must emit the click exactly once")
   }
+
+  test("oncePerBatch: the body runs once per batch id; its marker lands only after it returns; a throwing body leaves none and reruns") {
+    import graft.streaming.StreamState.oncePerBatch
+    val commits = java.nio.file.Files.createTempDirectory("graft-once-").toString + "/_t_commits"
+    def marked(id: Long) = new java.io.File(s"$commits/$id").exists
+    val runs = scala.collection.mutable.Map.empty[Long, Int].withDefaultValue(0)
+    def run(id: Long): Unit = oncePerBatch(spark, commits, id) {
+      assert(!marked(id), s"batch $id was marked before its body returned")
+      runs(id) += 1
+    }
+    Seq(0L, 0L, 1L, 0L, 1L).foreach(run)
+    assert(runs == Map(0L -> 1, 1L -> 1))
+    assert(marked(0L) && marked(1L))
+    val crash = intercept[IllegalStateException] {
+      oncePerBatch(spark, commits, 2L) {
+        runs(2L) += 1
+        throw new IllegalStateException("injected crash")
+      }
+    }
+    assert(crash.getMessage == "injected crash")
+    assert(!marked(2L), "a body that threw must leave no marker")
+    run(2L)
+    run(2L)
+    assert(runs(2L) == 2 && marked(2L), s"the retry must run once more, then skip: ${runs(2L)}")
+  }
+
+  test("shardedInput + drain: shard k arrives as micro-batch k, ids 0..n-1; the stream schema is the shards' own") {
+    import org.apache.spark.sql.functions.lit
+    import graft.streaming.StreamState.{drain, shardedInput}
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft-shards-").toString
+    val shards = (0 until 3).map { k =>
+      Seq((10L * k, s"s$k"), (10L * k + 1, s"s$k")).toDF("id", "tag").withColumn("k", lit(k))
+    }
+    val stream = shardedInput(base, shards: _*)
+    def fields(schema: org.apache.spark.sql.types.StructType) = schema.map(f => f.name -> f.dataType)
+    assert(fields(stream.schema) == fields(shards.head.schema))
+    val seen = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[(Long, Set[(Long, String, Int)])]())
+    drain(stream, s"$base/ckpt") { (b, id) =>
+      seen.add(id -> b.as[(Long, String, Int)].collect().toSet)
+    }
+    val want = shards.zipWithIndex.map { case (s, k) => k.toLong -> s.as[(Long, String, Int)].collect().toSet }
+    assert(seen.toArray.toSeq == want)
+  }
 }
