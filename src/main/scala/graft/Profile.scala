@@ -4,9 +4,11 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDown
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
+  SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, SQLExecution}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Per-query profile: `runMain graft.Profile <sfDir> name…`.
   *
@@ -19,8 +21,12 @@ import org.apache.spark.sql.execution.ExplainMode
   */
 object Profile {
 
-  /** One finished Spark job: its callsite (the name of its final
-    * stage, which carries the action's callsite) and its cost. */
+  /** One finished Spark job: its callsite and its cost. A job of a SQL
+    * execution is filed under the call site of the action that started
+    * the execution, since adaptive query stages submit their jobs from
+    * a pool thread whose own call site names only that thread; any
+    * other job under the name of its final stage, which carries the
+    * action's call site. */
   private[graft] final case class Job(site: String, stages: Int, tasks: Int, seconds: Double)
 
   /** One query's profile: its formatted plan, the three timed runs
@@ -68,14 +74,20 @@ object Profile {
     * run in a fresh job group; a sentinel job in the same group runs
     * after them, and the listener bus delivers events in order, so
     * once the sentinel's start arrives every earlier job's end has
-    * too. */
+    * too. The group sets no job description, so each SQL execution's
+    * description is its action's call site. */
   private def withJobs[A](spark: SparkSession)(body: => A): (A, Seq[Job]) = {
     val sc = spark.sparkContext
     val group = s"profile-${java.util.UUID.randomUUID()}"
     val starts = new ConcurrentHashMap[Int, SparkListenerJobStart]()
+    val executionSites = new ConcurrentHashMap[Long, String]()
     val jobs = new ConcurrentLinkedQueue[Job]()
     val drained = new CountDownLatch(1)
     val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => executionSites.put(x.executionId, x.description)
+        case _ =>
+      }
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
           if (e.properties.getProperty("spark.job.description") == group) drained.countDown()
@@ -83,14 +95,16 @@ object Profile {
         }
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         Option(starts.remove(e.jobId)).foreach { s =>
-          val site = s.stageInfos.maxByOption(_.stageId).map(_.name).getOrElse("?")
+          val site = Option(s.properties.getProperty(SQLExecution.EXECUTION_ID_KEY))
+            .flatMap(id => Option(executionSites.get(id.toLong)))
+            .orElse(s.stageInfos.maxByOption(_.stageId).map(_.name)).getOrElse("?")
           jobs.add(Job(site.takeWhile(_ != '+').trim, s.stageInfos.size,
             s.stageInfos.map(_.numTasks).sum, math.max(0L, e.time - s.time) / 1e3))
         }
     }
     sc.addSparkListener(listener)
     try {
-      sc.setJobGroup(group, "profiled run")
+      sc.setJobGroup(group, null)
       val result = body
       sc.setJobDescription(group)
       sc.parallelize(Seq(1), 1).count()

@@ -13,4 +13,10 @@ object VectorFunctions {
   def vecDot(a: Column, b: Column): Column = org.apache.spark.sql.graftvec.VectorFunctions.vecDot(a, b)
   def vecCosine(a: Column, b: Column): Column = org.apache.spark.sql.graftvec.VectorFunctions.vecCosine(a, b)
   def vecNorm(a: Column): Column = org.apache.spark.sql.graftvec.VectorFunctions.vecNorm(a)
+  def pqCodes(emb: Column, books: Seq[Seq[Seq[Float]]]): Column =
+    org.apache.spark.sql.graftvec.VectorFunctions.pqCodes(emb, books)
+  def vecMatVec(vec: Column, rows: Seq[Seq[Float]]): Column =
+    org.apache.spark.sql.graftvec.VectorFunctions.vecMatVec(vec, rows)
+  def adcSum(codes: Column, table: Column, ksub: Int): Column =
+    org.apache.spark.sql.graftvec.VectorFunctions.adcSum(codes, table, ksub)
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorFunctions.{vecCosine, vecDot}
+import graft.functions.VectorFunctions.{adcSum, pqCodes, vecCosine, vecDot, vecMatVec}
 
 /** Mean of float vectors with an O(dim) buffer: (running sum, count).
   * Associative + commutative, so Spark runs it map-side.
@@ -310,8 +310,8 @@ object Similarity {
     * centroid table ships as ONE typedlit matrix (plus its
     * precomputed ‖c‖² row), each row scores all cells inside a HOF
     * `transform` and keeps its `probes` best. Plan size is O(1) in
-    * nCells (two literals + a fixed HOF tree — the [[pqCodes]]
-    * lesson), where [[ivfCells]] inlines one subtree per seed
+    * nCells (two literals + a fixed HOF tree), where [[ivfCells]]
+    * inlines one subtree per seed
     * (Janino compile blows up past ~100 cells) and
     * [[ivfCellsBroadcast]] expands every row nCells× through a join
     * and shuffles the candidates back down — at 10⁹ rows × 1024
@@ -321,7 +321,8 @@ object Similarity {
     * double accumulation of dot and both norms, same zero guard,
     * same division shape), so all three assignment paths are
     * ROW-IDENTICAL — spec-pinned. HOFs are CodegenFallback, the price
-    * of the O(1) plan — but the per-cell score inside the lambda is
+    * of the O(1) plan (a native kernel, as the PQ encode `pqCodes`
+    * is, would remove it) — but the per-cell score inside the lambda is
     * the NATIVE [[vecCosine]] kernel (one primitive loop via its
     * interpreted eval), so only the nCells outer iteration pays
     * interpreter dispatch, not every one of nCells × dim element ops
@@ -762,38 +763,12 @@ object Similarity {
   // subspace independently, store each vector as m small codes. The
   // billion-scale compression path: 64 floats (256 B) become m=8
   // codes (8 B), and search runs on per-query lookup tables without
-  // touching a single original vector. ----
-
-  /** All m sub-codes of a vector in ONE expression: the codebook ships
-    * as a single `typedlit` 3-D array literal (plus its precomputed
-    * ‖c‖²/2 bias table), and per subspace the code is the
-    * first-argmax of (x_s·c_k − ‖c_k‖²/2) — lowest code wins ties,
-    * matching the old per-struct comparator. Plan size is O(1) in
-    * m·ksub (two literals + a fixed HOF tree) where the previous form
-    * inlined m·ksub struct expressions — at m=16, ksub=16 that was
-    * 256 literal subtrees whose Janino compile dominated the whole
-    * query at small SF and reappeared on every invocation.
-    *
-    * Cost model: the HOF tree is interpreted (HOFs are CodegenFallback)
-    * at m·ksub·dsub multiply-adds per row — encode-time-only work that
-    * buys a plan whose compile cost no longer scales with the codebook.
-    */
-  private def pqCodes(embCol: Column, books: Seq[Seq[Seq[Float]]]): Column = {
-    val m = books.size
-    val dsub = books.head.head.size
-    val booksLit = typedlit(books)
-    val biasLit = typedlit(books.map(_.map(c => c.map(x => x.toDouble * x).sum / 2.0)))
-    transform(sequence(lit(0), lit(m - 1)), s => {
-      val sub = slice(embCol, s * dsub + 1, lit(dsub))
-      // native vecDot kernel inside the HOF lambda (the
-      // cellAssignColumn treatment): same left-to-right double
-      // accumulation as the aggregate∘zip_with it replaces, one tight
-      // loop instead of dsub interpreted lambda dispatches per code
-      val scores = zip_with(element_at(booksLit, s + 1), element_at(biasLit, s + 1),
-        (c, b) => vecDot(sub, c) - b)
-      array_position(scores, array_max(scores)) - 1
-    })
-  }
+  // touching a single original vector. Codes come from the native
+  // `pqCodes` kernel (one primitive loop per row over a flattened
+  // codebook shipped once per task, not a plan literal) and every ADC
+  // score from the native `adcSum` table fold, so the m·ksub·dsub
+  // multiply-adds and m lookups per row run in whole-stage codegen
+  // with no lambda dispatch. ----
 
   /** Content-hash training sample: keep a row iff the first 16 bits of
     * md5(salt ‖ vec_id) fall below ⌊fraction·2¹⁶⌋ — the
@@ -811,7 +786,7 @@ object Similarity {
 
   /** Train m per-subspace codebooks of up to `ksub` centroids by Lloyd
     * iterations. ONE pass per iteration for all subspaces: each row's
-    * codes come from the single [[pqCodes]] expression, posexplode
+    * codes come from the single native `pqCodes` expression, posexplode
     * into (subspace, code, subvector), and one map-side-combined
     * [[VectorMeanAggregator]] shuffle carries O(m·ksub·dsub) state.
     * Driver round-trip is the codebook itself (m·ksub·dsub floats —
@@ -919,38 +894,30 @@ object Similarity {
     }
     // stride comes from the TRAINED books, never the ksub parameter —
     // a short codebook (small corpus) can't misalign the flat tables
-    val mEff = books.size
     val kEff = books.head.size
     val normTable: Seq[Double] = // ‖c_{s,k}‖² flattened [s*kEff + k]
       books.flatMap(_.map(c => c.map(x => x.toDouble * x).sum))
-    val queryRows = queryDotTables(embeddings, numQueries, books)
+    val qTables = queryDotTables(queryRows(embeddings, numQueries), books)
     val encoded = pqEncode(embeddings, books)
     val scored = encoded
-      .join(broadcast(queryRows.toDF("query_id", "dtbl")),
+      .join(broadcast(qTables.toDF("query_id", "dtbl")),
         col("query_id") =!= col("vec_id"))
       .withColumn("ntbl", typedlit(normTable))
       .select(col("query_id"), col("vec_id").as("corpus_id"),
-        adcCosine(mEff, kEff).as("cosine_pq"))
+        adcCosine(kEff).as("cosine_pq"))
     graft.functions.TopK.perKeyTopK(scored, "query_id", "corpus_id", "cosine_pq", k,
         roundScale = 6)
       .select(col("query_id"), col("corpus_id"), col("score").as("cosine_pq"), col("rk"))
   }
 
-  /** Code-indexed table fold: Σ_s tbl[s·ksub + code_s] — m lookups,
-    * stride from the trained books. The ADC primitive every PQ score
-    * is assembled from.
-    */
-  private def adcLookup(name: String, mEff: Int, kEff: Int): Column = expr(
-    s"""aggregate(sequence(0, ${mEff - 1}), CAST(0.0 AS DOUBLE),
-       |  (acc, s) -> acc + element_at($name, CAST(s * $kEff + element_at(codes, s + 1) + 1 AS INT)))
-       |""".stripMargin.replaceAll("\n", " "))
-
   /** ADC approximate cosine from columns (codes, dtbl, ntbl):
-    * Σ_s dtbl[s·ksub + code_s] / √(Σ_s ntbl[s·ksub + code_s]).
+    * Σ_s dtbl[s·ksub + code_s] / √(Σ_s ntbl[s·ksub + code_s]), both
+    * sums one native [[adcSum]] fold with the stride of the trained
+    * books.
     */
-  private def adcCosine(mEff: Int, kEff: Int): Column =
-    adcLookup("dtbl", mEff, kEff) /
-      sqrt(greatest(adcLookup("ntbl", mEff, kEff), lit(1e-12)))
+  private def adcCosine(kEff: Int): Column =
+    adcSum(col("codes"), col("dtbl"), kEff) /
+      sqrt(greatest(adcSum(col("codes"), col("ntbl"), kEff), lit(1e-12)))
 
   /** Driver-side cosine between two collected vectors, with the same
     * zero guards as the codegen kernel — used only for the tiny
@@ -966,25 +933,31 @@ object Similarity {
     if (nq == 0 || nc == 0) 0.0 else dot / (math.sqrt(nq) * math.sqrt(nc))
   }
 
-  /** Per-query dot-product lookup tables against `books`, flattened
-    * [s·ksub + k], computed once on the driver for the (small,
-    * broadcast) query set.
+  /** The (small) query set, vec_id < numQueries, collected once per
+    * search in id order: the probe assignment and the ADC tables both
+    * read these rows, so neither re-scans the corpus for them.
     */
-  private def queryDotTables(embeddings: DataFrame, numQueries: Int,
-                             books: Seq[Seq[Seq[Float]]]): Seq[(Long, Seq[Double])] = {
+  private def queryRows(embeddings: DataFrame, numQueries: Int): Seq[(Long, Seq[Float])] = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val dsub = books.head.head.size
     embeddings.filter(col("vec_id") < numQueries)
       .select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Seq[Float])].collect().sortBy(_._1)
-      .map { case (qid, q) =>
-        val dots = books.zipWithIndex.flatMap { case (book, s) =>
-          val qs = q.slice(s * dsub, s * dsub + dsub)
-          book.map(c => qs.zip(c).map { case (a, b) => a.toDouble * b.toDouble }.sum)
-        }
-        (qid, dots.toSeq)
-      }.toSeq
+      .as[(Long, Seq[Float])].collect().sortBy(_._1).toSeq
+  }
+
+  /** Per-query dot-product lookup tables against `books`, flattened
+    * [s·ksub + k], computed on the driver for the collected queries.
+    */
+  private def queryDotTables(queries: Seq[(Long, Seq[Float])],
+                             books: Seq[Seq[Seq[Float]]]): Seq[(Long, Seq[Double])] = {
+    val dsub = books.head.head.size
+    queries.map { case (qid, q) =>
+      val dots = books.zipWithIndex.flatMap { case (book, s) =>
+        val qs = q.slice(s * dsub, s * dsub + dsub)
+        book.map(c => qs.zip(c).map { case (a, b) => a.toDouble * b.toDouble }.sum)
+      }
+      (qid, dots.toSeq)
+    }
   }
 
   /** Exact re-rank of a (query_id, corpus_id) shortlist: only the
@@ -1037,7 +1010,6 @@ object Similarity {
         col("vec_id").as("corpus_id"), lit(0.0).as("cosine"),
         lit(0L).as("rk")).limit(0)
     }
-    val mEff = books.size
     val kEff = books.head.size
     val normTable: Seq[Double] = books.flatMap(_.map(c => c.map(x => x.toDouble * x).sum))
     val seedRows = coarse.getOrElse(trainCoarseQuantizer(embeddings, nCells))
@@ -1052,10 +1024,9 @@ object Similarity {
         probes = 1, seedRows.size)
       .select(col("vec_id"), col("cell"), pqCodes(col("embedding"), books).as("codes"))
     // driver-side probe assignment + ADC tables for the tiny query set
-    val qTables = queryDotTables(embeddings, numQueries, books)
-    val qEmb = embeddings.filter(col("vec_id") < numQueries)
-      .select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Seq[Float])].collect().sortBy(_._1).toMap
+    val queries = queryRows(embeddings, numQueries)
+    val qEmb = queries.toMap
+    val qTables = queryDotTables(queries, books)
     val qProbe = qTables.flatMap { case (qid, dtbl) =>
       val probed = seedRows
         .map { case (cell, cEmb) => (cosineTo(qEmb(qid), cEmb), cell) }
@@ -1069,7 +1040,7 @@ object Similarity {
       .filter(col("query_id") =!= col("vec_id"))
       .withColumn("ntbl", typedlit(normTable))
       .select(col("query_id"), col("vec_id").as("corpus_id"),
-        adcCosine(mEff, kEff).as("cosine_pq"))
+        adcCosine(kEff).as("cosine_pq"))
     val short = graft.functions.TopK.perKeyTopK(scored, "query_id", "corpus_id",
         "cosine_pq", k * shortlistFactor, roundScale = 6)
       .select(col("query_id"), col("corpus_id"))
@@ -1215,7 +1186,6 @@ object Similarity {
                                        shortlistFactor: Int): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val mEff = books.size
     val kEff = books.head.size
     val dsub = books.head.head.size
     val resNormTable: Seq[Double] = books.flatMap(_.map(c => c.map(x => x.toDouble * x).sum))
@@ -1228,11 +1198,9 @@ object Similarity {
     }.toMap
     val cnorms: Map[Long, Double] =
       seedRows.map { case (cell, ce) => cell -> ce.map(x => x.toDouble * x).sum }.toMap
-    val qEmb = embeddings.filter(col("vec_id") < numQueries)
-      .select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Seq[Float])].collect().sortBy(_._1).toMap
-    val qTables = queryDotTables(
-      embeddings.select(col("vec_id"), col("embedding")), numQueries, books)
+    val queries = queryRows(embeddings, numQueries)
+    val qEmb = queries.toMap
+    val qTables = queryDotTables(queries, books)
     val probeRows = qTables.flatMap { case (qid, dtbl) =>
       seedRows.map { case (cell, ce) => (cosineTo(qEmb(qid), ce), cell) }
         .sortBy { case (c, cell) => (-c, cell) }
@@ -1250,10 +1218,10 @@ object Similarity {
       .filter(col("query_id") =!= col("vec_id"))
       .withColumn("ntbl", typedlit(resNormTable))
       .select(col("query_id"), col("vec_id").as("corpus_id"),
-        ((col("qc") + adcLookup("dtbl", mEff, kEff)) /
+        ((col("qc") + adcSum(col("codes"), col("dtbl"), kEff)) /
           sqrt(greatest(
-            col("cnorm") + lit(2.0) * adcLookup("xtbl", mEff, kEff) +
-              adcLookup("ntbl", mEff, kEff),
+            col("cnorm") + lit(2.0) * adcSum(col("codes"), col("xtbl"), kEff) +
+              adcSum(col("codes"), col("ntbl"), kEff),
             lit(1e-12)))).as("cosine_pq"))
     val short = graft.functions.TopK.perKeyTopK(scored, "query_id", "corpus_id",
         "cosine_pq", k * shortlistFactor, roundScale = 6)
@@ -1276,13 +1244,12 @@ object Similarity {
   // scores are unchanged.
   // ------------------------------------------------------------------
 
-  /** Rotate each embedding by plan-literal matrix rows (y_j = r_j·x):
-    * d native-codegen dot products per row, zero shuffle, the same
-    * plan-literal pattern as the PQ code expressions. */
+  /** Rotate each embedding by the matrix rows r (y_j = r_j·x, cast to
+    * float): one native matvec loop per row over the matrix, which
+    * ships once per task like the PQ codebook; zero shuffle. */
   def rotateEmbeddings(embeddings: DataFrame, r: Seq[Seq[Float]],
                        embCol: String = "embedding"): DataFrame =
-    embeddings.withColumn(embCol, array(
-      r.map(row => vecDot(col(embCol), typedlit(row)).cast("float")): _*))
+    embeddings.withColumn(embCol, vecMatVec(col(embCol), r))
 
   /** One-sided Jacobi SVD of a small (d×d) driver-side matrix C =
     * U·S·Vᵀ, returning the Procrustes rotation U·Vᵀ — the argmax of
@@ -1733,7 +1700,7 @@ object Similarity {
     (basis, vals.take(dOut).map(v => math.max(v, 0.0) / total))
   }
 
-  /** Project embeddings onto a PCA basis: one plan-literal matvec
+  /** Project embeddings onto a PCA basis: one native matvec
     * per row ([[rotateEmbeddings]] — works rectangular, dOut rows of
     * dim each), zero shuffles. */
   def pcaProject(embeddings: DataFrame, basis: Seq[Seq[Float]],

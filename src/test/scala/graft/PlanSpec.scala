@@ -248,6 +248,22 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("BroadcastHashJoin"), "probe table must broadcast against the cell key")
   }
 
+  test("sim_ann_ivfpq / sim_ann_pq / sim_ann_opq: corpus codes and ADC scores come from the native kernels, never a lambda") {
+    assert(executedPlan("sim_ann_opq").contains("vec_matvec("), "OPQ rotation is not the native matvec")
+    Seq("sim_ann_ivfpq", "sim_ann_pq", "sim_ann_opq").foreach { name =>
+      val p = executedPlan(name)
+      Seq("pq_codes(", "adc_sum(").foreach(k => assert(p.contains(k), s"$name: no $k in\n$p"))
+      // a refactor that wraps either kernel back into an interpreted
+      // HOF (CodegenFallback) would put a lambda on the node's line
+      p.linesIterator.filter(l => l.contains("pq_codes(") || l.contains("adc_sum("))
+        .foreach { l =>
+          assert(!l.contains("lambdafunction") && !l.contains("aggregate("),
+            s"$name: a PQ kernel runs inside a HOF: $l")
+        }
+      assert(!p.contains("aggregate(sequence"), s"$name: the HOF ADC fold is back:\n$p")
+    }
+  }
+
   // FormattedMode prints node headers as "(n) Exchange" with the
   // partitioning on a separate Arguments line — count shuffle nodes
   // by header (BroadcastExchange intentionally excluded).

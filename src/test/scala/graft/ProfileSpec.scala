@@ -24,6 +24,15 @@ class ProfileSpec extends AnyFunSuite {
     assert(spark.range(3).count() == 3)
   }
 
+  test("profile: jobs are filed under their action's call site, never an adaptive-stage pool thread") {
+    Seq("q_label_prop", "sim_ann_ivfpq").foreach { name =>
+      val sites = Profile.profile(spark, SharedSpark.sf, name).jobs.map(_.site)
+      assert(sites.nonEmpty, s"$name: no Spark job reported")
+      assert(!sites.exists(_.contains("CompletableFuture.java")), s"$name job sites: $sites")
+      assert(sites.forall(_.contains(".scala:")), s"$name job sites: $sites")
+    }
+  }
+
   test("profile: a frame the caller checkpointed beforehand stays persisted and readable") {
     def persistedIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val before = persistedIds
