@@ -57,7 +57,16 @@ object GraftSession {
     "spark.speculation" -> "true",
     "spark.speculation.multiplier" -> "3",
     "spark.speculation.quantile" -> "0.75",
-    "spark.ui.enabled" -> "false")
+    "spark.ui.enabled" -> "false",
+    // the in-memory status store keeps finished executions, jobs,
+    // stages and tasks for the UI even with the UI off (defaults
+    // 1000/1000/1000/100000), so the driver heap grows with every
+    // query run. Nothing in graft reads it (Profile and Bench keep
+    // their own listeners), so keep only the most recent few.
+    "spark.sql.ui.retainedExecutions" -> "5",
+    "spark.ui.retainedJobs" -> "20",
+    "spark.ui.retainedStages" -> "20",
+    "spark.ui.retainedTasks" -> "200")
 
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     deploymentConf.foldLeft(

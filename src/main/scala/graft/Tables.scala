@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Parquet loaders for the driver-generated star schema
   * (see TESTDATA.md). Every loader takes the scale-factor directory
@@ -10,10 +12,58 @@ import org.apache.spark.sql.functions._
   * Scans stay lazy DataFrames so Catalyst can push filters and prune
   * columns into the parquet reader — callers should never cache or
   * collect here.
+  *
+  * A plain `spark.read.parquet` infers the schema with a Spark job
+  * (a footer read) on every call. The loaders infer a table's schema
+  * once and then read with it, so a repeat call runs no Spark job.
+  * The memo is keyed by the table's leaf files (name, length,
+  * modification time) and by the session confs that steer parquet
+  * schema inference, so a rewritten table or a changed conf infers
+  * afresh: the memo never serves a schema a fresh inference would
+  * not return.
   */
 object Tables {
-  private def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Session confs that change what parquet schema inference returns. */
+  private val inferenceConfs = Seq(
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles")
+
+  /** Per table path: the key its schema was inferred under, and the schema. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (Seq[Any], StructType)]()
+
+  /** `path`'s schema, inferred by Spark on a key miss. A path that
+    * does not exist is left to the plain read, which fails as Spark
+    * does. */
+  private def schemaOf(spark: SparkSession, path: String): Option[StructType] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(p)) return None
+    val files = scala.collection.mutable.ArrayBuffer[(String, Long, Long)]()
+    val it = fs.listFiles(p, true)
+    while (it.hasNext) {
+      val f = it.next()
+      files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    val key = files.sorted.toSeq ++ inferenceConfs.map(spark.conf.getOption)
+    val hit = schemas.get(path)
+    if (hit != null && hit._1 == key) Some(hit._2)
+    else {
+      val schema = spark.read.parquet(path).schema
+      schemas.put(path, (key, schema))
+      Some(schema)
+    }
+  }
+
+  private def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    schemaOf(spark, path).fold(spark.read)(s => spark.read.schema(s)).parquet(path)
+  }
 
   def region(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "nation")
@@ -26,17 +76,19 @@ object Tables {
     * has shipped two encodings across rounds — int64 TIMESTAMP(NANOS)
     * (rounds 1–7) and Arrow `timestamp[us]` / TIMESTAMP_NTZ (round 8+)
     * — so the loader probes the footer instead of assuming either.
-    * One footer read; no data scan.
+    * Read from the schema memo: at most one footer read, no data scan.
     *
     * `nanosAsLong` is set BEFORE the probe: under it the nanos
     * encoding surfaces as LongType (Spark's vectorized reader rejects
     * TIMESTAMP(NANOS) otherwise) while the µs encodings surface as
     * their timestamp types, so the probed type is exactly the branch
-    * discriminator.
+    * discriminator. The conf is part of the memo key, so a schema
+    * inferred without it is never served here.
     */
-  private[graft] def eventsTsType(spark: SparkSession, dir: String): org.apache.spark.sql.types.DataType = {
+  private[graft] def eventsTsType(spark: SparkSession, dir: String): DataType = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType
+    val path = s"$dir/events.parquet"
+    schemaOf(spark, path).getOrElse(spark.read.parquet(path).schema)("ts").dataType
   }
 
   /** Normalize a raw events frame (whose `ts` has the probed physical
@@ -54,7 +106,7 @@ object Tables {
     * 1000× and yields plausible-but-wrong answers, not errors — the
     * round-8 failure class this guard makes impossible).
     */
-  private[graft] def normalizeEventTs(raw: DataFrame, tsType: org.apache.spark.sql.types.DataType,
+  private[graft] def normalizeEventTs(raw: DataFrame, tsType: DataType,
                                       file: String): DataFrame = {
     import org.apache.spark.sql.types.{LongType, TimestampType, TimestampNTZType}
     tsType match {

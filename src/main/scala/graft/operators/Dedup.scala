@@ -982,43 +982,25 @@ object Dedup {
   // borg/restic lineage) is built on, and it complements the span
   // family: spans find duplicated REGIONS inside documents, CDC finds
   // shared CONTENT BLOCKS across edited copies.
+  //
+  // All three chunk tables run on one native Catalyst expression,
+  // `cdc_chunks` (org.apache.spark.sql.graftcdc.CdcChunks): the
+  // window md5 per position, the min-length fold, the max-length
+  // forced cuts and the slicing happen in one primitive loop per
+  // document, inside whole-stage codegen, then one explode. No
+  // shuffle and no lambda per character position; the DuckDB oracle
+  // spells the same rules out as SQL.
   // ------------------------------------------------------------------
 
   /** Per-document CDC chunk table: (doc_id, chunk_idx, chunk_start
     * 0-based, chunk_len, chunk_md5). Boundary after position i iff
     * bucket(md5(text[i-w+1..i])) ≡ 0 (mod `mask`+1); expected chunk
-    * length ≈ mask+1 characters. One pure per-row expression chain
-    * (positions → boundary filter → consecutive-pair slices) then a
-    * single explode — no shuffle at all; the md5-per-position cost is
-    * the positioned-shingles cost class the span family already pays,
-    * and every step reproduces verbatim in the oracle.
+    * length ≈ mask+1 characters. The [[cdcChunksClamped]] kernel
+    * with no minimum (minLen = 1) and no maximum, then one explode —
+    * no shuffle at all.
     */
-  def cdcChunks(documents: DataFrame, w: Int = 8, mask: Int = 63): DataFrame = {
-    require(w >= 2, s"window must be >= 2, got $w")
-    require(mask >= 1, s"mask must be >= 1, got $mask")
-    val m = mask + 1
-    val bnds = s"filter(sequence(${w}L, length(text)), i -> " +
-      s"pmod(CAST(conv(substring(md5(substring(text, CAST(i - $w + 1 AS INT), $w)), 1, 12), 16, 10) AS BIGINT), $m) = 0)"
-    // cuts MUST materialize as its own projection: inlining it into
-    // each element_at below would re-evaluate the whole md5 boundary
-    // scan once per chunk reference (measured: 105 s vs 3 s at sf0.1
-    // — Catalyst does not common-subexpression an array this large
-    // across a transform lambda)
-    val cuts = s"concat(array(0L), filter($bnds, b -> b < length(text)), " +
-      "array(CAST(length(text) AS BIGINT)))"
-    val chunks = "filter(transform(sequence(1, size(cuts) - 1), j -> " +
-      "struct(CAST(j - 1 AS BIGINT) AS chunk_idx, " +
-      "element_at(cuts, j) AS chunk_start, " +
-      "element_at(cuts, j + 1) - element_at(cuts, j) AS chunk_len)), " +
-      "c -> c.chunk_len > 0)"
-    Checkpoints.cpuSplit(documents)
-      .select(col("doc_id"), col("text"), expr(cuts).as("cuts"))
-      .select(col("doc_id"), col("text"), explode(expr(chunks)).as("c"))
-      .select(col("doc_id"), col("c.chunk_idx"), col("c.chunk_start"),
-        col("c.chunk_len"),
-        md5(expr("substring(text, CAST(c.chunk_start + 1 AS INT), CAST(c.chunk_len AS INT))"))
-          .as("chunk_md5"))
-  }
+  def cdcChunks(documents: DataFrame, w: Int = 8, mask: Int = 63): DataFrame =
+    chunkTable(documents, w, mask, 1, Int.MaxValue)
 
   /** Chunk-level dedup over [[cdcChunks]] — the [[exact]] survivor
     * contract at CDC-chunk granularity, duplicated chunks only:
@@ -1027,17 +1009,13 @@ object Dedup {
     * many copies a chunk store would collapse. One map-side-combined
     * aggregate over the chunk table. */
   def cdcDedup(documents: DataFrame, w: Int = 8, mask: Int = 63): DataFrame =
-    cdcChunks(documents, w, mask)
-      .groupBy("chunk_md5")
-      .agg(min(col("doc_id")).as("keep_doc_id"), count(lit(1)).as("n_copies"),
-        min(col("chunk_len")).as("chunk_len"))
-      .filter(col("n_copies") >= 2)
+    duplicatedChunks(cdcChunks(documents, w, mask))
 
   /** [[cdcChunks]] with the LBFS MINIMUM-CHUNK rule: a boundary is
     * suppressed when it lands fewer than `minLen` characters after
-    * the previous KEPT boundary (a sequential left fold over the
-    * ascending candidate list — `aggregate`, still one pure per-row
-    * expression chain, no shuffle). SURVEY §5's CDC rehearsal at 10⁷ chunks is
+    * the previous KEPT boundary (a sequential walk over the ascending
+    * candidates, inside the same per-row kernel — no shuffle).
+    * SURVEY §5's CDC rehearsal at 10⁷ chunks is
     * why this exists: with an expected length of only mask+1, the
     * geometric boundary spacing emits a long tail of tiny chunks
     * (sub-25-char content like `"q17 w"` carries no identifying
@@ -1046,44 +1024,16 @@ object Dedup {
     * nothing, the exact problem LBFS's min-size clamp solves. The
     * doc's final cut is always kept, so a forced short FINAL chunk
     * can still appear (content coverage beats the clamp); minLen=1
-    * reproduces [[cdcChunks]] exactly (spec-pinned). */
+    * reproduces [[cdcChunks]] exactly (spec-pinned). A candidate
+    * inside the clamp is never hashed. */
   def cdcChunksMin(documents: DataFrame, w: Int = 8, mask: Int = 63,
-                   minLen: Int = 16): DataFrame = {
-    require(w >= 2, s"window must be >= 2, got $w")
-    require(mask >= 1, s"mask must be >= 1, got $mask")
-    require(minLen >= 1, s"minLen must be >= 1, got $minLen")
-    val m = mask + 1
-    val bnds = s"filter(sequence(${w}L, length(text)), i -> " +
-      s"pmod(CAST(conv(substring(md5(substring(text, CAST(i - $w + 1 AS INT), $w)), 1, 12), 16, 10) AS BIGINT), $m) = 0)"
-    // left fold keeping only boundaries >= minLen after the last
-    // kept one; the 0 start rides as the fold's seed, the end cut
-    // appends unconditionally (materialized projection — the
-    // cdcChunks element_at lesson)
-    val folded = s"aggregate(filter($bnds, b -> b < length(text)), array(0L), " +
-      s"(acc, b) -> IF(b - element_at(acc, -1) >= ${minLen}L, concat(acc, array(b)), acc))"
-    val cuts = s"concat($folded, array(CAST(length(text) AS BIGINT)))"
-    val chunks = "filter(transform(sequence(1, size(cuts) - 1), j -> " +
-      "struct(CAST(j - 1 AS BIGINT) AS chunk_idx, " +
-      "element_at(cuts, j) AS chunk_start, " +
-      "element_at(cuts, j + 1) - element_at(cuts, j) AS chunk_len)), " +
-      "c -> c.chunk_len > 0)"
-    Checkpoints.cpuSplit(documents)
-      .select(col("doc_id"), col("text"), expr(cuts).as("cuts"))
-      .select(col("doc_id"), col("text"), explode(expr(chunks)).as("c"))
-      .select(col("doc_id"), col("c.chunk_idx"), col("c.chunk_start"),
-        col("c.chunk_len"),
-        md5(expr("substring(text, CAST(c.chunk_start + 1 AS INT), CAST(c.chunk_len AS INT))"))
-          .as("chunk_md5"))
-  }
+                   minLen: Int = 16): DataFrame =
+    chunkTable(documents, w, mask, minLen, Int.MaxValue)
 
   /** [[cdcDedup]] over the min-length-clamped chunk table. */
   def cdcDedupMin(documents: DataFrame, w: Int = 8, mask: Int = 63,
                   minLen: Int = 16): DataFrame =
-    cdcChunksMin(documents, w, mask, minLen)
-      .groupBy("chunk_md5")
-      .agg(min(col("doc_id")).as("keep_doc_id"), count(lit(1)).as("n_copies"),
-        min(col("chunk_len")).as("chunk_len"))
-      .filter(col("n_copies") >= 2)
+    duplicatedChunks(cdcChunksMin(documents, w, mask, minLen))
 
   /** The FULL LBFS size envelope: [[cdcChunksMin]]'s minimum rule
     * plus a MAXIMUM — whenever the next kept boundary (or the doc
@@ -1097,55 +1047,36 @@ object Dedup {
     * never hits the residue becomes one giant chunk whose hash
     * changes on any edit (no dedup at all); with the clamp every
     * chunk is ≤ maxLen and re-sync resumes at the next natural
-    * boundary. Still one pure per-row expression chain (the fold
-    * emits forced cuts arithmetically: newLast = last +
-    * maxLen·⌊(b−1−last)/maxLen⌋), mirrored step for step in the
-    * DuckDB oracle; maxLen ≥ text length reproduces [[cdcChunksMin]]
-    * exactly (spec-pinned). */
+    * boundary. The kernel walks this online; the DuckDB oracle
+    * emits the forced cuts arithmetically (newLast = last +
+    * maxLen·⌊(b−1−last)/maxLen⌋). maxLen ≥ text length reproduces
+    * [[cdcChunksMin]] exactly (spec-pinned). */
   def cdcChunksClamped(documents: DataFrame, w: Int = 8, mask: Int = 63,
-                       minLen: Int = 16, maxLen: Int = 128): DataFrame = {
-    require(w >= 2, s"window must be >= 2, got $w")
-    require(mask >= 1, s"mask must be >= 1, got $mask")
-    require(minLen >= 1, s"minLen must be >= 1, got $minLen")
-    require(maxLen >= minLen, s"maxLen $maxLen must be >= minLen $minLen")
-    val m = mask + 1
-    val bnds = s"filter(sequence(${w}L, length(text)), i -> " +
-      s"pmod(CAST(conv(substring(md5(substring(text, CAST(i - $w + 1 AS INT), $w)), 1, 12), 16, 10) AS BIGINT), $m) = 0)"
-    val last = "element_at(acc, -1)"
-    val forced = s"sequence($last + ${maxLen}L, b - 1, ${maxLen}L)"
-    val newLast = s"($last + ${maxLen}L * ((b - 1 - $last) div ${maxLen}L))"
-    val folded =
-      s"aggregate(filter($bnds, b -> b < length(text)), array(0L), (acc, b) -> " +
-        s"IF(b - $last > ${maxLen}L, " +
-        s"IF(b - $newLast >= ${minLen}L, concat(acc, $forced, array(b)), concat(acc, $forced)), " +
-        s"IF(b - $last >= ${minLen}L, concat(acc, array(b)), acc)))"
-    // forced cuts between the last kept boundary and the doc end,
-    // then the end cut itself (materialized projection — the
-    // cdcChunks element_at lesson)
-    val cuts =
-      s"concat(CASE WHEN length(text) - element_at(fold0, -1) > ${maxLen}L " +
-        s"THEN concat(fold0, sequence(element_at(fold0, -1) + ${maxLen}L, length(text) - 1, ${maxLen}L)) " +
-        s"ELSE fold0 END, array(CAST(length(text) AS BIGINT)))"
-    val chunks = "filter(transform(sequence(1, size(cuts) - 1), j -> " +
-      "struct(CAST(j - 1 AS BIGINT) AS chunk_idx, " +
-      "element_at(cuts, j) AS chunk_start, " +
-      "element_at(cuts, j + 1) - element_at(cuts, j) AS chunk_len)), " +
-      "c -> c.chunk_len > 0)"
+                       minLen: Int = 16, maxLen: Int = 128): DataFrame =
+    chunkTable(documents, w, mask, minLen, maxLen)
+
+  /** [[cdcDedup]] over the fully size-enveloped chunk table. */
+  def cdcDedupClamped(documents: DataFrame, w: Int = 8, mask: Int = 63,
+                      minLen: Int = 16, maxLen: Int = 128): DataFrame =
+    duplicatedChunks(cdcChunksClamped(documents, w, mask, minLen, maxLen))
+
+  /** The `cdc_chunks` kernel's chunks of every document, each with
+    * the md5 of its text. */
+  private def chunkTable(documents: DataFrame, w: Int, mask: Int, minLen: Int,
+                         maxLen: Int): DataFrame = {
+    val chunks = org.apache.spark.sql.graftcdc.CdcFunctions
+      .cdcChunks(col("text"), w, mask, minLen, maxLen)
     Checkpoints.cpuSplit(documents)
-      .select(col("doc_id"), col("text"), expr(folded).as("fold0"))
-      .select(col("doc_id"), col("text"), expr(cuts).as("cuts"))
-      .select(col("doc_id"), col("text"), explode(expr(chunks)).as("c"))
+      .select(col("doc_id"), col("text"), explode(chunks).as("c"))
       .select(col("doc_id"), col("c.chunk_idx"), col("c.chunk_start"),
         col("c.chunk_len"),
         md5(expr("substring(text, CAST(c.chunk_start + 1 AS INT), CAST(c.chunk_len AS INT))"))
           .as("chunk_md5"))
   }
 
-  /** [[cdcDedup]] over the fully size-enveloped chunk table. */
-  def cdcDedupClamped(documents: DataFrame, w: Int = 8, mask: Int = 63,
-                      minLen: Int = 16, maxLen: Int = 128): DataFrame =
-    cdcChunksClamped(documents, w, mask, minLen, maxLen)
-      .groupBy("chunk_md5")
+  /** Chunks held more than once: canonical holder, copy count, length. */
+  private def duplicatedChunks(chunks: DataFrame): DataFrame =
+    chunks.groupBy("chunk_md5")
       .agg(min(col("doc_id")).as("keep_doc_id"), count(lit(1)).as("n_copies"),
         min(col("chunk_len")).as("chunk_len"))
       .filter(col("n_copies") >= 2)

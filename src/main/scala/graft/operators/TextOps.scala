@@ -41,18 +41,26 @@ object TextOps {
 
   /** Inverted index: word -> (#docs containing it, sorted doc list).
     * Matches the reference's "<n> <doc,doc,...>" output as typed
-    * columns. Distinct (word, doc) first so the shuffle is bounded by
-    * vocabulary x docs, not token occurrences.
+    * columns. Each document's tokens are made distinct inside its own
+    * row (`array_distinct`, no shuffle), so the one `groupBy(word)`
+    * shuffle carries at most one row per (partition, word), its doc
+    * set partially merged map-side. `n_docs` counts a null `doc_id`
+    * as one doc and `docs` leaves it out, as `count(*)` and the
+    * joined list over DISTINCT (doc_id, word) do; two rows with one
+    * `doc_id` are one doc.
     */
-  def invertedIndex(documents: DataFrame): DataFrame =
-    tokens(documents)
-      .select(col("word"), col("doc_id"))
-      .distinct()
+  def invertedIndex(documents: DataFrame): DataFrame = {
+    val ds = collect_set(col("doc_id"))
+    documents
+      .select(col("doc_id"), explode(array_distinct(split(col("text"), TokenPattern))).as("word"))
+      .filter(col("word") =!= "")
       .groupBy("word")
       .agg(
-        count(lit(1)).as("n_docs"),
-        array_join(transform(array_sort(collect_set(col("doc_id"))),
-          d => d.cast("string")), ",").as("docs"))
+        (size(ds).cast("long") + (count(when(col("doc_id").isNull, 1)) > 0).cast("long")).as("n_docs"),
+        // sort_array, not array_sort: array_sort's default comparator
+        // is an interpreted lambda; both order a null-free set alike
+        array_join(sort_array(ds).cast("array<string>"), ",").as("docs"))
+  }
 
   /** Distributed grep: documents whose text matches `pattern`, with a
     * per-document match count. The regex filter evaluates inside the

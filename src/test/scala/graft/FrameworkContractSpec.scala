@@ -145,6 +145,13 @@ class FrameworkContractSpec extends AnyFunSuite {
     assert(q > 0.0 && q < 1.0, "quantile must wait for a fraction of the stage, not all of it")
   }
 
+  test("driver heap: the unread in-memory status store keeps only a few recent executions, jobs, stages and tasks") {
+    val c = GraftSession.deploymentConf
+    assert(c("spark.ui.enabled") == "false")
+    assert(Seq("spark.sql.ui.retainedExecutions", "spark.ui.retainedJobs",
+      "spark.ui.retainedStages", "spark.ui.retainedTasks").map(c) == Seq("5", "20", "20", "200"))
+  }
+
   test("atomic output: committed parquet has _SUCCESS and no temp files") {
     val out = java.nio.file.Files.createTempDirectory("graft-commit-").toString + "/t"
     Tables.nation(spark, SharedSpark.sf).write.parquet(out)

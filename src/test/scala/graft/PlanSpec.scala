@@ -270,6 +270,19 @@ class PlanSpec extends AnyFunSuite {
   private def shuffleCount(p: String): Int =
     "\\(\\d+\\) Exchange\\b".r.findAllIn(p).length
 
+  test("mr_inverted_index: one shuffle on word, no lambda") {
+    val p = plan("mr_inverted_index")
+    assert(shuffleCount(p) == 1, s"the (word, doc) pairs must shuffle once:\n$p")
+    assert(!p.contains("lambdafunction"), s"a lambda is left in the plan:\n$p")
+    assert(p.contains("partial_collect_set"), "doc sets merge map-side")
+  }
+
+  test("dedup_cdc: chunk boundaries come from the native cdc_chunks kernel, never a lambda") {
+    val p = executedPlan("dedup_cdc")
+    assert(p.contains("cdc_chunks("), s"no cdc_chunks in\n$p")
+    assert(!p.contains("lambdafunction"), s"a lambda is left in the plan:\n$p")
+  }
+
   test("q_session_window: native merging-sessions pass, one shuffle on user_id") {
     val p = plan("q_session_window")
     assert(p.contains("MergingSessions") || p.contains("UpdatingSession"),
