@@ -634,12 +634,12 @@ object Dedup {
     * the reason this variant can be spec-pinned against an independent
     * local implementation exactly, not within an epsilon.
     *
-    * Cost per round: one broadcast-sized? no — one hash join of the
-    * edge list against the pr table on src + one aggregate on dst —
-    * both shuffles keyed on node id, the same shape as one
-    * [[connectedComponents]] round; `localCheckpoint` per round keeps
-    * the logical plan constant-size (the iterative-lineage lesson from
-    * CC). Undirected near-dup graphs have no dangling nodes (every
+    * Cost per round: one hash join of the edge list against the pr
+    * table on src + one aggregate on dst — both shuffles keyed on node
+    * id, the same shape as one [[connectedComponents]] round. The
+    * rounds run on [[Fixpoint.stable]] with no probe, so exactly
+    * `iters` of them, each checkpointed to keep the logical plan
+    * constant-size (the iterative-lineage lesson from CC). Undirected near-dup graphs have no dangling nodes (every
     * node has degree ≥ 1), so no mass-leak correction term is needed;
     * totals stay bounded by nodes·10⁶, far inside Long.
     */
@@ -650,22 +650,19 @@ object Dedup {
       .distinct()
     val degrees = edges.groupBy("src").agg(count(lit(1)).as("deg"))
     val withDeg = edges.join(degrees, "src").localCheckpoint(true)
-    var pr = degrees.select(col("src").as("doc_id"), lit(1000000L).as("pr"))
+    val pr0 = degrees.select(col("src").as("doc_id"), lit(1000000L).as("pr"))
       .localCheckpoint(true)
     // withDeg and pr-round-0 are materialized: the raw pair
     // checkpoint's blocks are no longer reachable from anything live
     Checkpoints.free(p)
-    for (_ <- 0 until iters) {
-      val prev = pr
-      pr = withDeg.join(pr, col("src") === col("doc_id"))
+    val pr = Fixpoint.stable(pr0, (), iters, None) { (pr, _) =>
+      withDeg.join(pr, col("src") === col("doc_id"))
         .select(col("dst"), expr("pr div deg").as("contrib"))
         .groupBy("dst")
         .agg(sum(col("contrib")).as("s"))
         .select(col("dst").as("doc_id"),
           (lit(150000L) + expr("(85 * s) div 100")).as("pr"))
-        .localCheckpoint(true)
-      Checkpoints.free(prev)
-    }
+    }.state
     Checkpoints.free(withDeg)
     pr
   }

@@ -233,6 +233,16 @@ object Similarity {
     embeddings.filter(keep).select(col("vec_id"), col("label"))
   }
 
+  /** The IVF cell order every assignment path ranks by: cosine
+    * descending, ties to the smaller cell id. An `array_sort`
+    * comparator over (c, cell) structs. */
+  private def cellOrder(l: Column, r: Column): Column =
+    when(l.getField("c") > r.getField("c"), -1)
+      .when(l.getField("c") < r.getField("c"), 1)
+      .when(l.getField("cell") < r.getField("cell"), -1)
+      .when(l.getField("cell") > r.getField("cell"), 1)
+      .otherwise(0)
+
   /** IVF cell assignment: each row's `probes` nearest seed vectors
     * (cosine desc, cell-id-asc tiebreak).
     *
@@ -264,13 +274,7 @@ object Similarity {
     val cellStructs = seedRows.map { case (cell, emb) =>
       struct(vecCosine(col(embCol), typedlit(emb)).as("c"), lit(cell).as("cell"))
     }
-    val cmp = (l: Column, r: Column) =>
-      when(l.getField("c") > r.getField("c"), -1)
-        .when(l.getField("c") < r.getField("c"), 1)
-        .when(l.getField("cell") < r.getField("cell"), -1)
-        .when(l.getField("cell") > r.getField("cell"), 1)
-        .otherwise(0)
-    val nearest = slice(array_sort(array(cellStructs: _*), cmp), 1, probes)
+    val nearest = slice(array_sort(array(cellStructs: _*), cellOrder), 1, probes)
     df.select(col(idCol), col(embCol),
       explode(transform(nearest, x => x.getField("cell"))).as("cell"))
   }
@@ -305,6 +309,41 @@ object Similarity {
         explode(expr("transform(top, x -> x._2)")).as("cell"))
   }
 
+  /** Single-nearest-cell assignment as a pure COLUMN — the probes=1
+    * matrix form ([[ivfCellsMatrix]]) packaged so a caller can attach
+    * `new_cell` to an arbitrary frame WITHOUT the select that the
+    * DataFrame-shaped paths apply (they drop every column but id/emb/
+    * cell). This is what lets the incremental IVF refresh
+    * ([[graft.streaming.VectorStreams.ivfCompactIncremental]]) compare
+    * stored vs fresh assignment in ONE zero-shuffle, zero-join scan.
+    *
+    * Bit-identity: the score is the same left-to-right double
+    * accumulation, zero guard, and (cosine desc, cell asc) comparator
+    * as the three assignment paths — the [[vecCosine]] kernel computes
+    * dot and both norms in one index-ordered loop, so each accumulator
+    * sees the identical addition sequence the separate HOF aggregates
+    * produced.
+    */
+  def cellAssignColumn(embCol: Column, coarse: Seq[(Long, Seq[Float])]): Column = {
+    require(coarse.nonEmpty, "cellAssignColumn needs a trained quantizer")
+    val seedRows = coarse.sortBy(_._1)
+    val n = seedRows.size
+    val cellsLit = typedlit(seedRows.map(_._1))
+    val embsLit = typedlit(seedRows.map(_._2))
+    // the score is the NATIVE kernel ([[vecCosine]]) nested inside the
+    // HOF lambda: the surrounding transform stays interpreted (the O(1)
+    // plan), but each cosine is one tight primitive loop instead of
+    // dim element-wise lambda dispatches — measured at sf1 as the
+    // difference between minutes and seconds of quantizer work. Same
+    // left-to-right double accumulation and zero guard, so the score
+    // is bit-identical to the HOF composition it replaces.
+    val scored = transform(sequence(lit(0), lit(n - 1)), i =>
+      struct(
+        vecCosine(embCol, element_at(embsLit, i + 1)).as("c"),
+        element_at(cellsLit, i + 1).as("cell")))
+    element_at(array_sort(scored, cellOrder), 1).getField("cell")
+  }
+
   /** Cell assignment for the LARGE-quantizer regime as a PURE
     * PROJECTION — no join, no shuffle, at ANY quantizer size: the
     * centroid table ships as ONE typedlit matrix (plus its
@@ -330,47 +369,6 @@ object Similarity {
     * `ArrayAggregate.eval`); the arithmetic volume (rows × nCells ×
     * dim) is the same as the broadcast join's, minus its exchange.
     */
-  /** Single-nearest-cell assignment as a pure COLUMN — the probes=1
-    * matrix form ([[ivfCellsMatrix]]) packaged so a caller can attach
-    * `new_cell` to an arbitrary frame WITHOUT the select that the
-    * DataFrame-shaped paths apply (they drop every column but id/emb/
-    * cell). This is what lets the incremental IVF refresh
-    * ([[graft.streaming.VectorStreams.ivfCompactIncremental]]) compare
-    * stored vs fresh assignment in ONE zero-shuffle, zero-join scan.
-    *
-    * Bit-identity: the score is the same left-to-right double
-    * accumulation, zero guard, and (cosine desc, cell asc) comparator
-    * as the three assignment paths — the [[vecCosine]] kernel computes
-    * dot and both norms in one index-ordered loop, so each accumulator
-    * sees the identical addition sequence the separate HOF aggregates
-    * produced.
-    */
-  def cellAssignColumn(embCol: Column, coarse: Seq[(Long, Seq[Float])]): Column = {
-    require(coarse.nonEmpty, "cellAssignColumn needs a trained quantizer")
-    val seedRows = coarse.sortBy(_._1)
-    val n = seedRows.size
-    val cellsLit = typedlit(seedRows.map(_._1))
-    val embsLit = typedlit(seedRows.map(_._2))
-    val cmp = (l: Column, r: Column) =>
-      when(l.getField("c") > r.getField("c"), -1)
-        .when(l.getField("c") < r.getField("c"), 1)
-        .when(l.getField("cell") < r.getField("cell"), -1)
-        .when(l.getField("cell") > r.getField("cell"), 1)
-        .otherwise(0)
-    // the score is the NATIVE kernel ([[vecCosine]]) nested inside the
-    // HOF lambda: the surrounding transform stays interpreted (the O(1)
-    // plan), but each cosine is one tight primitive loop instead of
-    // dim element-wise lambda dispatches — measured at sf1 as the
-    // difference between minutes and seconds of quantizer work. Same
-    // left-to-right double accumulation and zero guard, so the score
-    // is bit-identical to the HOF composition it replaces.
-    val scored = transform(sequence(lit(0), lit(n - 1)), i =>
-      struct(
-        vecCosine(embCol, element_at(embsLit, i + 1)).as("c"),
-        element_at(cellsLit, i + 1).as("cell")))
-    element_at(array_sort(scored, cmp), 1).getField("cell")
-  }
-
   def ivfCellsMatrix(df: DataFrame, idCol: String, embCol: String, seeds: DataFrame,
                      probes: Int): DataFrame = {
     val spark = df.sparkSession
@@ -393,13 +391,7 @@ object Similarity {
       struct(
         vecCosine(x, element_at(embsLit, i + 1)).as("c"),
         element_at(cellsLit, i + 1).as("cell")))
-    val cmp = (l: Column, r: Column) =>
-      when(l.getField("c") > r.getField("c"), -1)
-        .when(l.getField("c") < r.getField("c"), 1)
-        .when(l.getField("cell") < r.getField("cell"), -1)
-        .when(l.getField("cell") > r.getField("cell"), 1)
-        .otherwise(0)
-    val nearest = slice(array_sort(scored, cmp), 1, probes)
+    val nearest = slice(array_sort(scored, cellOrder), 1, probes)
     df.select(col(idCol), col(embCol),
       explode(transform(nearest, s => s.getField("cell"))).as("cell"))
   }

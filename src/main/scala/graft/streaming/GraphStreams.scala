@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.functions._
 
 import graft.streaming.StreamState.{drain, hasVisibleData, healSwap, oncePerBatch, shardedInput, swapInstall}
@@ -390,6 +391,19 @@ object GraphStreams {
     ccResolve(spark, s"$base/labels", s"$base/merges")
   }
 
+  /** The u-parity ingest harness of the graph drives: shard the
+    * checkpointed `edges` by u parity into two micro-batches under
+    * `base`, free the checkpoint, and drain the shards through
+    * `batchFn`. */
+  private def drainByParity(edges: DataFrame, base: String)
+                           (batchFn: (DataFrame, Long) => Unit): Unit = {
+    val stream = shardedInput(base,
+      edges.filter(col("u") % 2 === 0),
+      edges.filter(col("u") % 2 =!= 0))
+    graft.operators.Checkpoints.free(edges)
+    drain(stream, s"$base/ckpt")(batchFn)
+  }
+
   /** Incremental STRONGLY connected components under streaming edge
     * arrivals — the directed maintenance face of
     * [[graft.operators.Graph.stronglyConnectedComponents]], built on
@@ -430,11 +444,7 @@ object GraphStreams {
       return Seq.empty[(Long, Long)].toDF("node", "scc_label")
     }
     val base = java.nio.file.Files.createTempDirectory("graft-scc-ing-").toString
-    val stream = shardedInput(base,
-      edges.filter(col("u") % 2 === 0),
-      edges.filter(col("u") % 2 =!= 0))
-    graft.operators.Checkpoints.free(edges)
-    drain(stream, s"$base/ckpt") { (b, id) =>
+    drainByParity(edges, base) { (b, id) =>
       // cadence-triggered label compaction ON in the deployed drive
       // (resolution-invariant, spec-pinned)
       sccMergeBatch(b, id, s"$base/labels", s"$base/merges", s"$base/qedges",
@@ -467,11 +477,7 @@ object GraphStreams {
       return Seq.empty[(Long, Long)].toDF("scc", "depth")
     }
     val base = java.nio.file.Files.createTempDirectory("graft-topo-ing-").toString
-    val stream = shardedInput(base,
-      edges.filter(col("u") % 2 === 0),
-      edges.filter(col("u") % 2 =!= 0))
-    graft.operators.Checkpoints.free(edges)
-    drain(stream, s"$base/ckpt") { (b, id) =>
+    drainByParity(edges, base) { (b, id) =>
       // cadence-triggered label compaction ON in the deployed drive
       // (resolution-invariant, spec-pinned)
       sccMergeBatch(b, id, s"$base/labels", s"$base/merges", s"$base/qedges",
@@ -891,11 +897,7 @@ object GraphStreams {
         graft.Tables.lineitem(spark, dir))
       .localCheckpoint(true)
     val base = java.nio.file.Files.createTempDirectory("graft-mst-ing-").toString
-    val stream = shardedInput(base,
-      edges.filter(col("u") % 2 === 0),
-      edges.filter(col("u") % 2 =!= 0))
-    graft.operators.Checkpoints.free(edges)
-    drain(stream, s"$base/ckpt") { (b, id) =>
+    drainByParity(edges, base) { (b, id) =>
       mstBatch(b, id, s"$base/state")
     }
     mstResolveSummary(spark, s"$base/state")
@@ -910,25 +912,10 @@ object GraphStreams {
     * the entry can share `q_bfs`'s recursive-CTE SQL oracle verbatim
     * — a fully hash-checked STREAMING graph query.
     */
-  def streamedBfs(spark: SparkSession, dir: String): DataFrame = {
-    val edges = graft.operators.Graph.coPurchaseEdges(
-        graft.Tables.lineitem(spark, dir))
-      .localCheckpoint(true)
-    val seedRow = edges.agg(least(min(col("u")), min(col("v")))).head()
-    if (seedRow.isNullAt(0)) {
-      graft.operators.Checkpoints.free(edges)
-      import spark.implicits._
-      return Seq.empty[(Long, Long)].toDF("node", "dist")
-    }
-    val seed = seedRow.getLong(0)
-    val base = java.nio.file.Files.createTempDirectory("graft-bfs-ing-").toString
-    val stream = shardedInput(base,
-      edges.filter(col("u") % 2 === 0),
-      edges.filter(col("u") % 2 =!= 0))
-    graft.operators.Checkpoints.free(edges)
-    bfsIngest(stream, s"$base/state", s"$base/ckpt", seed)
-    bfsResolve(spark, s"$base/state")
-  }
+  def streamedBfs(spark: SparkSession, dir: String): DataFrame =
+    seededRelaxDrive(graft.operators.Graph.coPurchaseEdges(
+        graft.Tables.lineitem(spark, dir)).localCheckpoint(true),
+      "graft-bfs-ing-")(bfsBatch(_, _, _, _, 30))
 
   /** Incremental BFS maintenance over a stream of (u, v) edge
     * batches: hop distances from a FIXED query point stay
@@ -969,25 +956,10 @@ object GraphStreams {
     * path through a new edge), which the min-over-claims resolution
     * absorbs without rewriting anything.
     */
-  def streamedSssp(spark: SparkSession, dir: String): DataFrame = {
-    val edges = graft.operators.Graph.coPurchaseWeightedEdges(
-        graft.Tables.lineitem(spark, dir))
-      .localCheckpoint(true)
-    val seedRow = edges.agg(least(min(col("u")), min(col("v")))).head()
-    if (seedRow.isNullAt(0)) {
-      graft.operators.Checkpoints.free(edges)
-      import spark.implicits._
-      return Seq.empty[(Long, Long)].toDF("node", "dist")
-    }
-    val seed = seedRow.getLong(0)
-    val base = java.nio.file.Files.createTempDirectory("graft-sssp-ing-").toString
-    val stream = shardedInput(base,
-      edges.filter(col("u") % 2 === 0),
-      edges.filter(col("u") % 2 =!= 0))
-    graft.operators.Checkpoints.free(edges)
-    ssspIngest(stream, s"$base/state", s"$base/ckpt", seed)
-    bfsResolve(spark, s"$base/state")
-  }
+  def streamedSssp(spark: SparkSession, dir: String): DataFrame =
+    seededRelaxDrive(graft.operators.Graph.coPurchaseWeightedEdges(
+        graft.Tables.lineitem(spark, dir)).localCheckpoint(true),
+      "graft-sssp-ing-")(ssspBatch(_, _, _, _, 30))
 
   /** Incremental weighted-SSSP maintenance over a stream of
     * (u, v, w) edge batches — [[bfsIngest]] with weighted steps;
@@ -999,27 +971,39 @@ object GraphStreams {
     }
   }
 
+  /** The [[streamedBfs]]/[[streamedSssp]] drive: seed at the graph's
+    * global min node id, drain the checkpointed `edges` through
+    * `batch` (batch, batchId, statePath, seed) and resolve. No edges,
+    * no seed: the resolve is empty. */
+  private def seededRelaxDrive(edges: DataFrame, prefix: String)
+                              (batch: (DataFrame, Long, String, Long) => Unit): DataFrame = {
+    val spark = edges.sparkSession
+    val seedRow = edges.agg(least(min(col("u")), min(col("v")))).head()
+    if (seedRow.isNullAt(0)) {
+      graft.operators.Checkpoints.free(edges)
+      import spark.implicits._
+      return Seq.empty[(Long, Long)].toDF("node", "dist")
+    }
+    val seed = seedRow.getLong(0)
+    val base = java.nio.file.Files.createTempDirectory(prefix).toString
+    drainByParity(edges, base)((b, id) => batch(b, id, s"$base/state", seed))
+    bfsResolve(spark, s"$base/state")
+  }
+
   /** One [[bfsIngest]] micro-batch, exposed for the replay spec. */
   private[graft] def bfsBatch(batch0: org.apache.spark.sql.DataFrame,
                               batchId: Long, statePath: String,
                               seed: Long, maxRounds: Int): Unit =
-    relaxBatch(batch0, batchId, statePath, seed, maxRounds, weighted = false)
+    relaxBatch(batch0, batchId, statePath, maxRounds, SingleSource,
+      weighted = false)(standingSeed(seed))
 
   /** One [[ssspIngest]] micro-batch (weighted relaxation). */
   private[graft] def ssspBatch(batch0: org.apache.spark.sql.DataFrame,
                                batchId: Long, statePath: String,
                                seed: Long, maxRounds: Int): Unit =
-    relaxBatch(batch0, batchId, statePath, seed, maxRounds, weighted = true)
+    relaxBatch(batch0, batchId, statePath, maxRounds, SingleSource,
+      weighted = true)(standingSeed(seed))
 
-  /** Shared dynamic-relaxation micro-batch for [[bfsIngest]] (step
-    * cost 1) and [[ssspIngest]] (step cost = the edge's integer
-    * weight). The dynamic-SSSP argument is the same in both: added
-    * edges only DECREASE distances, so seeding the relaxation from
-    * the new edges' already-reached endpoints and propagating
-    * improvements to fixpoint reaches exactly the batch result over
-    * the union — which is what lets both entries share their batch
-    * twins' SQL oracles verbatim.
-    */
   /** pmod(node) partition count for maintained claim stores — the
     * unit of pruned dist reads (the 37l/37q read shape). */
   private[graft] val DistBuckets = 16
@@ -1033,12 +1017,66 @@ object GraphStreams {
                               cps: org.apache.spark.sql.DataFrame*): Unit =
     (claimParts ++ cps.filter(_ != null)).foreach(graft.operators.Checkpoints.free)
 
-  private def relaxBatch(batch0: org.apache.spark.sql.DataFrame,
-                         batchId: Long, statePath: String,
-                         seed: Long, maxRounds: Int, weighted: Boolean): Unit = {
+  /** A relaxation claim store: its claim key, its commit-marker
+    * directory, and the kernel name and round-budget knob that its
+    * exhausted-budget error names. */
+  private final case class ClaimStore(keys: Seq[String], commits: String,
+                                      name: String, knob: String)
+
+  /** [[bfsIngest]]/[[ssspIngest]] claims: (node, dist). */
+  private val SingleSource =
+    ClaimStore(Seq("node"), "_bfs_commits", "relaxBatch", "maxRoundsPerBatch")
+
+  /** [[multiBfsBatch]] claims: (src, node, dist). */
+  private val MultiSource =
+    ClaimStore(Seq("src", "node"), "_mb_commits", "multiBfsBatch", "maxRounds")
+
+  /** How a relaxation batch starts: the `nodes` whose claim buckets
+    * load with the batch endpoints' buckets, the seed claims given
+    * the claims loaded so far, and what to `persist` after the
+    * claims append (before the commit marker). */
+  private final case class Seeding(nodes: Seq[Long], claims: DataFrame => DataFrame,
+                                   persist: () => Unit = () => ())
+
+  /** The standing (seed, 0) claim of a single-source store: the first
+    * batch's start, a no-op improvement in every later batch. */
+  private def standingSeed(seed: Long)(batch: DataFrame): Seeding = {
+    val spark = batch.sparkSession
+    import spark.implicits._
+    Seeding(Seq(seed), _ => Seq((seed, 0L)).toDF("node", "dist"))
+  }
+
+  /** A claim store's key: (src, node) when it has a `src` column,
+    * else node. */
+  private def claimKeys(claims: DataFrame): Seq[String] =
+    if (claims.columns.contains("src")) Seq("src", "node") else Seq("node")
+
+  /** The fold every read of a claim store applies: min dist per key. */
+  private def minClaims(claims: DataFrame): DataFrame =
+    claims.groupBy(claimKeys(claims).map(col): _*).agg(min("dist").as("dist"))
+
+  /** Shared dynamic-relaxation micro-batch for [[bfsIngest]] (step
+    * cost 1), [[ssspIngest]] (step cost = the edge's integer weight)
+    * and [[multiBfsBatch]] (step cost 1, one wave per source). The
+    * dynamic-SSSP argument is the same in all three: added edges only
+    * DECREASE distances, so seeding the relaxation from the new
+    * edges' already-reached endpoints and propagating improvements to
+    * fixpoint reaches exactly the batch result over the union — which
+    * is what lets the entries share their batch twins' SQL oracles
+    * verbatim.
+    *
+    * Per batch, in order: the batch's edges land in a per-batch
+    * overwrite delta, `seeding` runs on the batch, the claims the
+    * batch improves are appended, then `Seeding.persist` runs, and
+    * [[StreamState.oncePerBatch]] writes the commit marker.
+    */
+  private def relaxBatch(batch0: DataFrame, batchId: Long, statePath: String,
+                         maxRounds: Int, store: ClaimStore, weighted: Boolean)
+                        (seeding: DataFrame => Seeding): Unit = {
     val spark = batch0.sparkSession
     import spark.implicits._
-    oncePerBatch(spark, s"$statePath/_bfs_commits", batchId) {
+    val keys = store.keys
+    oncePerBatch(spark, s"$statePath/${store.commits}", batchId) {
       val cols = if (weighted) Seq(col("u"), col("v"), col("w")) else Seq(col("u"), col("v"))
       val batch = batch0.select(cols: _*).distinct().persist()
       try {
@@ -1049,11 +1087,18 @@ object GraphStreams {
         // REPLACES this batch's edges instead of appending a second
         // copy, so the store never grows with retries
         batch.write.mode("overwrite").parquet(s"$edgesPath/batch=$batchId")
-        def bidir(df: org.apache.spark.sql.DataFrame) = {
-          val wCol = if (weighted) col("w") else lit(1L).as("w")
-          df.select(col("u").as("a"), col("v").as("b"), wCol)
-            .unionAll(df.select(col("v").as("a"), col("u").as("b"), wCol))
-        }
+        val start = seeding(batch)
+        // step cost: the edge's weight, or 1 on an unweighted store
+        val (wCols, step) = if (weighted) (Seq(col("w")), col("w")) else (Nil, lit(1L))
+        def bidir(df: DataFrame) =
+          df.select(col("u").as("a") +: col("v").as("b") +: wCols: _*)
+            .unionAll(df.select(col("v").as("a") +: col("u").as("b") +: wCols: _*))
+        // one step: every claim crosses its node's edges, min per key
+        def relax(claims: DataFrame, edges: DataFrame) =
+          claims.join(edges, col("node") === col("a"))
+            .select(keys.map(k => if (k == "node") col("b").as(k) else col(k)) :+
+              (col("dist") + step).as("nd"): _*)
+            .groupBy(keys.map(col): _*).agg(min("nd").as("dist"))
         // The full adjacency materializes LAZILY, on the first round
         // that actually improves something: a batch whose one-hop
         // relaxations all fail (the common always-on case — most
@@ -1062,7 +1107,7 @@ object GraphStreams {
         // checkpoint reused across its rounds (per-round pruned parquet
         // re-reads were rehearsed and measured 2x slower on full-graph
         // builds than the single checkpoint).
-        var und: org.apache.spark.sql.DataFrame = null
+        var und: DataFrame = null
         def adj() = {
           if (und == null) {
             MaintIO.edgeStoreReads.incrementAndGet()
@@ -1078,16 +1123,15 @@ object GraphStreams {
         // and nothing else, never the whole store.
         val distStoreExists = hasVisibleData(spark, distPath)
         val loaded = scala.collection.mutable.Set.empty[Long]
-        var dist = Seq.empty[(Long, Long)].toDF("node", "dist")
-        var distCp: org.apache.spark.sql.DataFrame = null
+        var dist = spark.createDataFrame(java.util.Collections.emptyList[Row](),
+          StructType((keys :+ "dist").map(StructField(_, LongType, nullable = false))))
+        var distCp: DataFrame = null
         def ensureLoaded(buckets: Seq[Long]): Unit = {
           val need = buckets.filterNot(loaded)
           if (need.nonEmpty) {
             if (distStoreExists) {
               MaintIO.distBucketReads.addAndGet(need.size.toLong)
-              val add = spark.read.parquet(distPath)
-                .filter(col("db").isin(need: _*))
-                .groupBy("node").agg(min("dist").as("dist"))
+              val add = minClaims(spark.read.parquet(distPath).filter(col("db").isin(need: _*)))
               val superseded = distCp
               dist = dist.unionAll(add).localCheckpoint(true)
               distCp = dist
@@ -1096,7 +1140,7 @@ object GraphStreams {
             loaded ++= need
           }
         }
-        def bucketsOf(nodes: org.apache.spark.sql.DataFrame): Seq[Long] =
+        def bucketsOf(nodes: DataFrame): Seq[Long] =
           nodes.select(distBucketCol(col("node")).as("db")).distinct()
             .collect().map(_.getLong(0)).toSeq
         // Bucket tracking costs a checkpoint + a tiny job per round, so
@@ -1107,16 +1151,16 @@ object GraphStreams {
           distStoreExists && loaded.size < DistBuckets
         ensureLoaded(bucketsOf(batch.select(col("u").as("node"))
           .unionAll(batch.select(col("v").as("node")))
-          .unionAll(Seq(seed).toDF("node"))))
-        // Initial claims: the standing seed claim (first batch, or a
-        // no-op improvement afterwards) + one-hop relaxations of the
+          .unionAll(start.nodes.toDF("node"))))
+        // the candidates' claims that beat the loaded ones
+        def improving(cand: DataFrame) = cand
+          .join(dist.withColumnRenamed("dist", "old"), keys, "left_outer")
+          .filter(col("old").isNull || col("dist") < col("old"))
+        // Initial claims: the seed claims + one-hop relaxations of the
         // NEW edges from currently-known distances.
-        val hop = dist.join(bidir(batch), col("node") === col("a"))
-          .select(col("b").as("node"), (col("dist") + col("w")).as("nd"))
-          .groupBy("node").agg(min("nd").as("dist"))
-        var cand = Seq((seed, 0L)).toDF("node", "dist").unionAll(hop)
-        var candCp: org.apache.spark.sql.DataFrame = null
-        val claimParts = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
+        var cand = start.claims(dist).unionByName(relax(dist, bidir(batch)))
+        var candCp: DataFrame = null
+        val claimParts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
         var round = 0
         var continue = true
         while (continue && round <= maxRounds) {
@@ -1127,10 +1171,8 @@ object GraphStreams {
             ensureLoaded(bucketsOf(candCp.select("node")))
             candCp
           } else cand
-          val improved = candEval
-            .join(dist.withColumnRenamed("dist", "old"), Seq("node"), "left_outer")
-            .filter(col("old").isNull || col("dist") < col("old"))
-            .select("node", "dist")
+          val improved = improving(candEval)
+            .select((keys :+ "dist").map(col): _*)
             .localCheckpoint(true)
           if (improved.isEmpty) {
             graft.operators.Checkpoints.free(improved)
@@ -1138,13 +1180,11 @@ object GraphStreams {
           } else {
             claimParts += improved
             val superseded = distCp
-            dist = dist.join(improved, Seq("node"), "left_anti")
+            dist = dist.join(improved, keys, "left_anti")
               .unionAll(improved).localCheckpoint(true)
             distCp = dist
             if (superseded != null) graft.operators.Checkpoints.free(superseded)
-            cand = improved.join(adj(), col("node") === col("a"))
-              .select(col("b").as("node"), (col("dist") + col("w")).as("nd"))
-              .groupBy("node").agg(min("nd").as("dist"))
+            cand = relax(improved, adj())
             round += 1
           }
         }
@@ -1156,16 +1196,13 @@ object GraphStreams {
         if (continue) {
           val lastCand = cand.localCheckpoint(true)
           if (trackingNeeded) ensureLoaded(bucketsOf(lastCand.select("node")))
-          val leftover = lastCand
-            .join(dist.withColumnRenamed("dist", "old"), Seq("node"), "left_outer")
-            .filter(col("old").isNull || col("dist") < col("old"))
-            .limit(1).count()
+          val leftover = improving(lastCand).limit(1).count()
           graft.operators.Checkpoints.free(lastCand)
           if (leftover > 0) {
             freeCheckpoints(claimParts, candCp, und, distCp)
             throw new IllegalStateException(
-              s"relaxBatch: maxRounds=$maxRounds exhausted before fixpoint " +
-                s"in batch $batchId — raise maxRoundsPerBatch")
+              s"${store.name}: maxRounds=$maxRounds exhausted before fixpoint " +
+                s"in batch $batchId — raise ${store.knob}")
           }
         }
         if (claimParts.nonEmpty) {
@@ -1177,6 +1214,7 @@ object GraphStreams {
             .repartition(col("db"))
             .write.mode("append").partitionBy("db").parquet(distPath)
         }
+        start.persist()
         freeCheckpoints(claimParts, candCp, und, distCp)
       } finally batch.unpersist()
     }
@@ -1190,11 +1228,16 @@ object GraphStreams {
     * skip. Resolution before and after is identical because
     * [[bfsResolve]] and every pruned batch read already fold
     * min-per-node on read. */
-  def bfsStateCompact(spark: SparkSession, statePath: String): Unit = {
+  def bfsStateCompact(spark: SparkSession, statePath: String): Unit =
+    compactClaims(spark, statePath)(identity)
+
+  /** Rewrite a claim store as its [[minClaims]] fold, narrowed by
+    * `keep`, one file per bucket. */
+  private def compactClaims(spark: SparkSession, statePath: String)
+                           (keep: DataFrame => DataFrame): Unit = {
     val distPath = s"$statePath/dist"
     if (!hasVisibleData(spark, distPath)) return
-    val folded = spark.read.parquet(distPath)
-      .groupBy("node").agg(min("dist").as("dist"))
+    val folded = keep(minClaims(spark.read.parquet(distPath)))
       .withColumn("db", distBucketCol(col("node")))
       // materialize BEFORE touching the files the plan reads
       .localCheckpoint(true)
@@ -1209,8 +1252,7 @@ object GraphStreams {
     if (!hasVisibleData(spark, s"$statePath/dist")) {
       return Seq.empty[(Long, Long)].toDF("node", "dist")
     }
-    spark.read.parquet(s"$statePath/dist")
-      .groupBy("node").agg(min("dist").as("dist"))
+    minClaims(spark.read.parquet(s"$statePath/dist"))
   }
 
   // ------------------------------------------------------------------
@@ -1254,11 +1296,7 @@ object GraphStreams {
       return None
     }
     val base = java.nio.file.Files.createTempDirectory("graft-mbfs-ing-").toString
-    val stream = shardedInput(base,
-      edges.filter(col("u") % 2 === 0),
-      edges.filter(col("u") % 2 =!= 0))
-    graft.operators.Checkpoints.free(edges)
-    drain(stream, s"$base/ckpt") { (b, id) =>
+    drainByParity(edges, base) { (b, id) =>
       multiBfsBatch(b, id, s"$base/state", k)
     }
     Some(s"$base/state")
@@ -1288,150 +1326,44 @@ object GraphStreams {
     }
   }
 
-  /** One multi-source BFS micro-batch, exposed for the replay spec.
-    *
-    * Same scale contract as [[relaxBatch]]: the full adjacency
-    * materializes LAZILY (only a batch that actually improves a
-    * distance or seeds a new source scans the maintained edge
-    * store), the claim store loads bucket-by-bucket, and the batch's
-    * edges land in a per-batch overwrite delta. Source ELECTION
-    * never needs an edge scan either: the node set only grows, so
-    * the new top-k ⊆ old top-k ∪ this batch's nodes — the old
-    * top-k persists in a k-row `srcs` table. Seeded-ness is read
-    * from the CLAIM store (a source with its own 0-claim), not the
-    * srcs table, so a crash between the srcs overwrite and the
-    * commit marker replays correctly. */
+  /** One multi-source BFS micro-batch, exposed for the replay spec:
+    * [[relaxBatch]] over (src, node) claims, seeded by
+    * [[electSources]]. */
   private[graft] def multiBfsBatch(batch0: org.apache.spark.sql.DataFrame,
                                    batchId: Long, statePath: String, k: Int,
-                                   maxRounds: Int = 40): Unit = {
-    val spark = batch0.sparkSession
+                                   maxRounds: Int = 40): Unit =
+    relaxBatch(batch0, batchId, statePath, maxRounds, MultiSource,
+      weighted = false)(electSources(_, statePath, k))
+
+  /** Multi-source seeding. Source ELECTION never needs an edge scan:
+    * the node set only grows, so the new top-k ⊆ old top-k ∪ this
+    * batch's nodes — the old top-k persists in a k-row `srcs` table,
+    * overwritten after the claims append. Seeded-ness is read from
+    * the CLAIM store (a source with its own 0-claim), not the srcs
+    * table, so a crash between the srcs overwrite and the commit
+    * marker replays correctly. */
+  private def electSources(batch: DataFrame, statePath: String, k: Int): Seeding = {
+    val spark = batch.sparkSession
     import spark.implicits._
-    oncePerBatch(spark, s"$statePath/_mb_commits", batchId) {
-      val batch = batch0.select(col("u"), col("v")).distinct().persist()
-      try {
-        val edgesPath = s"$statePath/edges"
-        val distPath = s"$statePath/dist"
-        val srcsPath = s"$statePath/srcs"
-        batch.write.mode("overwrite").parquet(s"$edgesPath/batch=$batchId")
-        def bidir(df: org.apache.spark.sql.DataFrame) =
-          df.select(col("u").as("a"), col("v").as("b"))
-            .unionAll(df.select(col("v").as("a"), col("u").as("b")))
-        var und: org.apache.spark.sql.DataFrame = null
-        def adj() = {
-          if (und == null) {
-            MaintIO.edgeStoreReads.incrementAndGet()
-            und = bidir(spark.read.parquet(edgesPath).select(col("u"), col("v"))
-              .distinct()).localCheckpoint(true)
-          }
-          und
-        }
-        // source ELECTION from the persisted top-k plus this batch
-        val oldSrcs: Seq[Long] =
-          if (hasVisibleData(spark, srcsPath))
-            spark.read.parquet(srcsPath).select(col("s")).as[Long].collect().toSeq
-          else Seq.empty
-        val batchTopK = batch.select(col("u").as("s"))
-          .unionAll(batch.select(col("v").as("s"))).distinct()
-          .orderBy(col("s")).limit(k).as[Long].collect().toSeq
-        val srcs = (oldSrcs ++ batchTopK).distinct.sorted.take(k)
-        // lazily-loaded, bucket-pruned claim state (the relaxBatch shape)
-        val distStoreExists = hasVisibleData(spark, distPath)
-        val loaded = scala.collection.mutable.Set.empty[Long]
-        var dist = Seq.empty[(Long, Long, Long)].toDF("src", "node", "dist")
-        var distCp: org.apache.spark.sql.DataFrame = null
-        def ensureLoaded(buckets: Seq[Long]): Unit = {
-          val need = buckets.filterNot(loaded)
-          if (need.nonEmpty) {
-            if (distStoreExists) {
-              MaintIO.distBucketReads.addAndGet(need.size.toLong)
-              val add = spark.read.parquet(distPath)
-                .filter(col("db").isin(need: _*))
-                .groupBy("src", "node").agg(min("dist").as("dist"))
-              val superseded = distCp
-              dist = dist.unionAll(add).localCheckpoint(true)
-              distCp = dist
-              if (superseded != null) graft.operators.Checkpoints.free(superseded)
-            }
-            loaded ++= need
-          }
-        }
-        def bucketsOf(nodes: org.apache.spark.sql.DataFrame): Seq[Long] =
-          nodes.select(distBucketCol(col("node")).as("db")).distinct()
-            .collect().map(_.getLong(0)).toSeq
-        // tracking prunes only while some bucket is still unloaded
-        // (see relaxBatch)
-        def trackingNeeded: Boolean =
-          distStoreExists && loaded.size < DistBuckets
-        ensureLoaded(bucketsOf(batch.select(col("u").as("node"))
-          .unionAll(batch.select(col("v").as("node")))
-          .unionAll(srcs.toDF("node"))))
+    val srcsPath = s"$statePath/srcs"
+    val oldSrcs = if (hasVisibleData(spark, srcsPath)) storedSrcs(spark, statePath) else Seq.empty
+    val batchTopK = batch.select(col("u").as("s"))
+      .unionAll(batch.select(col("v").as("s"))).distinct()
+      .orderBy(col("s")).limit(k).as[Long].collect().toSeq
+    val srcs = (oldSrcs ++ batchTopK).distinct.sorted.take(k)
+    Seeding(srcs,
+      dist => {
         val seeded = dist.filter(col("node") === col("src"))
           .select(col("src")).as[Long].collect().toSet
-        val newSeeds = srcs.filterNot(seeded)
-          .map(s => (s, s, 0L)).toDF("src", "node", "dist")
-        val hop = dist.join(bidir(batch), col("node") === col("a"))
-          .select(col("src"), col("b").as("node"), (col("dist") + 1L).as("dist"))
-          .groupBy("src", "node").agg(min("dist").as("dist"))
-        var cand = newSeeds.unionByName(hop)
-        var candCp: org.apache.spark.sql.DataFrame = null
-        val claimParts = scala.collection.mutable.ArrayBuffer
-          .empty[org.apache.spark.sql.DataFrame]
-        var round = 0
-        var continue = true
-        while (continue && round <= maxRounds) {
-          val candEval = if (trackingNeeded) {
-            val prevCand = candCp
-            candCp = cand.localCheckpoint(true)
-            if (prevCand != null) graft.operators.Checkpoints.free(prevCand)
-            ensureLoaded(bucketsOf(candCp.select("node")))
-            candCp
-          } else cand
-          val improved = candEval
-            .join(dist.withColumnRenamed("dist", "old"), Seq("src", "node"), "left_outer")
-            .filter(col("old").isNull || col("dist") < col("old"))
-            .select("src", "node", "dist")
-            .localCheckpoint(true)
-          if (improved.isEmpty) {
-            graft.operators.Checkpoints.free(improved)
-            continue = false
-          } else {
-            claimParts += improved
-            val superseded = distCp
-            dist = dist.join(improved, Seq("src", "node"), "left_anti")
-              .unionAll(improved).localCheckpoint(true)
-            distCp = dist
-            if (superseded != null) graft.operators.Checkpoints.free(superseded)
-            cand = improved.join(adj(), col("node") === col("a"))
-              .select(col("src"), col("b").as("node"), (col("dist") + 1L).as("dist"))
-              .groupBy("src", "node").agg(min("dist").as("dist"))
-            round += 1
-          }
-        }
-        if (continue) {
-          val lastCand = cand.localCheckpoint(true)
-          if (trackingNeeded) ensureLoaded(bucketsOf(lastCand.select("node")))
-          val leftover = lastCand
-            .join(dist.withColumnRenamed("dist", "old"), Seq("src", "node"), "left_outer")
-            .filter(col("old").isNull || col("dist") < col("old"))
-            .limit(1).count()
-          graft.operators.Checkpoints.free(lastCand)
-          if (leftover > 0) {
-            freeCheckpoints(claimParts, candCp, und, distCp)
-            throw new IllegalStateException(
-              s"multiBfsBatch: maxRounds=$maxRounds exhausted before fixpoint " +
-                s"in batch $batchId — raise maxRounds")
-          }
-        }
-        if (claimParts.nonEmpty) {
-          claimParts.reduce(_ unionAll _)
-            .withColumn("db", distBucketCol(col("node")))
-            .repartition(col("db"))
-            .write.mode("append").partitionBy("db").parquet(distPath)
-        }
-        srcs.toDF("s").coalesce(1).write.mode("overwrite").parquet(srcsPath)
-        freeCheckpoints(claimParts, candCp, und, distCp)
-      } finally { batch.unpersist(); () }
-    }
+        srcs.filterNot(seeded).map(s => (s, s, 0L)).toDF("src", "node", "dist")
+      },
+      () => srcs.toDF("s").coalesce(1).write.mode("overwrite").parquet(srcsPath))
+  }
+
+  /** The persisted source election: the `srcs` table's ids. */
+  private def storedSrcs(spark: SparkSession, statePath: String): Seq[Long] = {
+    import spark.implicits._
+    spark.read.parquet(s"$statePath/srcs").select(col("s")).as[Long].collect().toSeq
   }
 
   /** Resolve the maintained multi-source claims: min per (src, node),
@@ -1445,10 +1377,8 @@ object GraphStreams {
         !hasVisibleData(spark, s"$statePath/srcs")) {
       return Seq.empty[(Long, Long, Long)].toDF("src", "node", "dist")
     }
-    val srcs = spark.read.parquet(s"$statePath/srcs")
-      .select(col("s")).as[Long].collect().toSeq.sorted.take(k)
-    spark.read.parquet(s"$statePath/dist")
-      .groupBy("src", "node").agg(min("dist").as("dist"))
+    val srcs = storedSrcs(spark, statePath).sorted.take(k)
+    minClaims(spark.read.parquet(s"$statePath/dist"))
       .filter(col("src").isin(srcs: _*))
   }
 
@@ -1456,19 +1386,18 @@ object GraphStreams {
     * stores (the [[VectorStreams.cellStats]] shape): stored claim
     * rows vs LIVE rows (one per distinct key) and parquet data
     * files — the two costs compaction reclaims (merge-on-read fold
-    * work and pruned-read listing). `multi` selects the (src, node)
-    * key of [[multiBfsBatch]] stores over [[bfsIngest]]'s (node).
-    * Schedule [[bfsStateCompact]]/[[multiBfsStateCompact]] when
-    * claims/live or files/bucket grows past taste — an operator-side
-    * read, never an ingest-path cost. */
-  def bfsStateStats(spark: SparkSession, statePath: String,
-                    multi: Boolean = false): (Long, Long, Long) = {
+    * work and pruned-read listing). The key is read from the store's
+    * schema: (src, node) for a [[multiBfsBatch]] store, (node) for a
+    * [[bfsIngest]] one. Schedule
+    * [[bfsStateCompact]]/[[multiBfsStateCompact]] when claims/live or
+    * files/bucket grows past taste — an operator-side read, never an
+    * ingest-path cost. */
+  def bfsStateStats(spark: SparkSession, statePath: String): (Long, Long, Long) = {
     val distPath = s"$statePath/dist"
     if (!StreamState.hasVisibleData(spark, distPath)) return (0L, 0L, 0L)
     val claims = spark.read.parquet(distPath)
     val nClaims = claims.count()
-    val keyCols = if (multi) Seq("src", "node") else Seq("node")
-    val nLive = claims.select(keyCols.map(col): _*).distinct().count()
+    val nLive = claims.select(claimKeys(claims).map(col): _*).distinct().count()
     val p = new org.apache.hadoop.fs.Path(distPath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val it = fs.listFiles(p, true)
@@ -1484,24 +1413,10 @@ object GraphStreams {
     * the election — safe because the node set only grows, so a
     * source that fell out of the top-k can never re-enter it.
     * Markers survive; resolution before and after is identical. */
-  def multiBfsStateCompact(spark: SparkSession, statePath: String): Unit = {
-    import spark.implicits._
-    val distPath = s"$statePath/dist"
-    val srcsPath = s"$statePath/srcs"
-    if (!hasVisibleData(spark, distPath)) return
-    val folded0 = spark.read.parquet(distPath)
-      .groupBy("src", "node").agg(min("dist").as("dist"))
-    val folded = (
-      if (hasVisibleData(spark, srcsPath)) {
-        val srcs = spark.read.parquet(srcsPath)
-          .select(col("s")).as[Long].collect().toSeq
-        folded0.filter(col("src").isin(srcs: _*))
-      } else folded0)
-      .withColumn("db", distBucketCol(col("node")))
-      // materialize BEFORE touching the files the plan reads
-      .localCheckpoint(true)
-    folded.repartition(col("db"))
-      .write.mode("overwrite").partitionBy("db").parquet(distPath)
-    graft.operators.Checkpoints.free(folded)
-  }
+  def multiBfsStateCompact(spark: SparkSession, statePath: String): Unit =
+    compactClaims(spark, statePath) { folded =>
+      if (hasVisibleData(spark, s"$statePath/srcs"))
+        folded.filter(col("src").isin(storedSrcs(spark, statePath): _*))
+      else folded
+    }
 }

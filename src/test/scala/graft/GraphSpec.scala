@@ -729,7 +729,9 @@ class GraphSpec extends AnyFunSuite {
       ("kCoreApprox", 12,
         () => Graph.kCoreApprox(und, 2, width = 256, minWidth = 64).collect()),
       ("minLabelFlood", 37, () => Graph.minLabelFlood(digraph).collect()),
-      ("labelPropagation", 14, () => Graph.labelPropagation(und, 5, 0L).collect()))
+      ("labelPropagation", 14, () => Graph.labelPropagation(und, 5, 0L).collect()),
+      ("pagerankMicros", 15, () => graft.operators.Dedup.pagerankMicros(
+        pairs.toDF("doc_a", "doc_b"), iters = 5).collect()))
     val aqe = "spark.sql.adaptive.enabled"
     val saved = spark.conf.getOption(aqe)
     spark.conf.set(aqe, "false")

@@ -1829,7 +1829,7 @@ class StreamingSpec extends AnyFunSuite {
     val compClaims = spark.read.parquet(s"$state/dist").count()
     assert(compClaims == r1.size && compClaims < rawClaims,
       s"expected exactly the ${r1.size} live claims, got $compClaims (was $rawClaims)")
-    val (mc, ml, _) = GraphStreams.bfsStateStats(spark, state, multi = true)
+    val (mc, ml, _) = GraphStreams.bfsStateStats(spark, state)
     assert(mc == ml && ml == r1.size, "multi stats disagree post-compaction")
     assert(spark.read.parquet(s"$state/dist")
         .select("src").distinct().collect().map(_.getLong(0)).toSet == Set(1L, 2L, 10L),
@@ -2624,6 +2624,40 @@ class StreamingSpec extends AnyFunSuite {
       val leaked = persistedIds -- before
       assert(leaked.isEmpty, s"$name left checkpoints behind on the exhausted budget: $leaked")
     }
+  }
+
+  test("bfsBatch/ssspBatch/multiBfsBatch: pinned Spark jobs per call over a first, an improving, a distance-neutral and a replayed batch") {
+    import spark.implicits._
+    type Batch = (org.apache.spark.sql.DataFrame, Long, String) => Unit
+    // One fixed sequence per kernel: batch 0 builds a chain, batch 1
+    // shortcuts it (and relaxes on past its end), batch 2 re-delivers
+    // a known edge, and batch 1 is replayed. Every edge write, bucket
+    // probe, checkpoint and emptiness probe is a job, so an added or
+    // dropped action moves these counts. AQE is off while counting,
+    // as in GraphSpec's round-loop counts, so every count repeats.
+    val chain = Seq((1L, 2L, 3L), (2L, 3L, 3L), (3L, 4L, 3L)).toDF("u", "v", "w")
+    val shortcut = Seq((1L, 4L, 1L), (4L, 5L, 1L)).toDF("u", "v", "w")
+    val neutral = Seq((2L, 3L, 3L)).toDF("u", "v", "w")
+    val sequence = Seq(chain -> 0L, shortcut -> 1L, neutral -> 2L, shortcut -> 1L)
+    val expected = Seq[(String, Seq[Int], Batch)](
+      ("bfsBatch", Seq(26, 27, 10, 0),
+        (b, id, st) => GraphStreams.bfsBatch(b, id, st, seed = 1L, maxRounds = 30)),
+      ("ssspBatch", Seq(26, 29, 10, 0),
+        (b, id, st) => GraphStreams.ssspBatch(b, id, st, seed = 1L, maxRounds = 30)),
+      ("multiBfsBatch", Seq(28, 32, 15, 0),
+        (b, id, st) => GraphStreams.multiBfsBatch(b, id, st, k = 2)))
+    val aqe = "spark.sql.adaptive.enabled"
+    val saved = spark.conf.getOption(aqe)
+    spark.conf.set(aqe, "false")
+    val off = try expected.flatMap { case (name, want, batch) =>
+      val state = java.nio.file.Files.createTempDirectory("graft-relax-jobs-").toString + "/state"
+      val jobs = sequence.map { case (b, id) => SparkJobs.count(spark)(batch(b, id, state)) }
+      if (jobs != want) Some(s"$name: $jobs jobs, pinned $want") else None
+    } finally saved match {
+      case Some(v) => spark.conf.set(aqe, v)
+      case None => spark.conf.unset(aqe)
+    }
+    assert(off.isEmpty, off.mkString("; "))
   }
 
   test("streamedSssp two-batch ingest == batch sssp over the weighted co-purchase graph") {
