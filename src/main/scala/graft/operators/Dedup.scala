@@ -639,9 +639,10 @@ object Dedup {
     * id, the same shape as one [[connectedComponents]] round. The
     * rounds run on [[Fixpoint.stable]] with no probe, so exactly
     * `iters` of them, each checkpointed to keep the logical plan
-    * constant-size (the iterative-lineage lesson from CC). Undirected near-dup graphs have no dangling nodes (every
-    * node has degree ≥ 1), so no mass-leak correction term is needed;
-    * totals stay bounded by nodes·10⁶, far inside Long.
+    * constant-size (the iterative-lineage lesson from CC). Undirected
+    * near-dup graphs have no dangling nodes (every node has degree
+    * ≥ 1), so no mass-leak correction term is needed; totals stay
+    * bounded by nodes·10⁶, far inside Long.
     */
   def pagerankMicros(pairs: DataFrame, iters: Int = 10): DataFrame = {
     val p = pairs.localCheckpoint(true)

@@ -917,34 +917,6 @@ object GraphStreams {
         graft.Tables.lineitem(spark, dir)).localCheckpoint(true),
       "graft-bfs-ing-")(bfsBatch(_, _, _, _, 30))
 
-  /** Incremental BFS maintenance over a stream of (u, v) edge
-    * batches: hop distances from a FIXED query point stay
-    * continuously current as edges arrive. New edges can only
-    * DECREASE distances, so each batch seeds its relaxation from the
-    * one-hop neighborhoods of the NEW edges' already-reached
-    * endpoints (plus the standing seed claim) and propagates
-    * improvements to fixpoint — per-batch rounds are bounded by how
-    * far the improvement wave actually travels, never by the graph's
-    * diameter, and a batch touching only settled regions converges
-    * in one empty round. The classic dynamic-BFS argument makes this
-    * exact: any node whose distance drops has a shortest path through
-    * a new edge, and the wave from that edge's endpoints reaches it.
-    *
-    * State under `statePath`, all append-only (the [[ccIngest]]
-    * story): `edges` — the maintained canonical edge list (deduped on
-    * read, so replayed appends are harmless); `dist` — (node, dist)
-    * improvement CLAIMS, resolved by min-per-node at read time
-    * ([[bfsResolve]]), so a batch writes only its improvements and
-    * never rewrites the distance table; `_bfs_commits` batchId
-    * markers make whole-batch replays no-ops.
-    */
-  def bfsIngest(edgeStream: DataFrame, statePath: String, checkpoint: String,
-                seed: Long, maxRoundsPerBatch: Int = 30): Unit = {
-    drain(edgeStream, checkpoint) { (b, id) =>
-      bfsBatch(b, id, statePath, seed, maxRoundsPerBatch)
-    }
-  }
-
   /** Streamed WEIGHTED shortest paths — [[streamedBfs]]'s sibling
     * over the multiplicity-weighted co-purchase edges: same
     * append-only claims state, same dynamic-relaxation argument
@@ -960,16 +932,6 @@ object GraphStreams {
     seededRelaxDrive(graft.operators.Graph.coPurchaseWeightedEdges(
         graft.Tables.lineitem(spark, dir)).localCheckpoint(true),
       "graft-sssp-ing-")(ssspBatch(_, _, _, _, 30))
-
-  /** Incremental weighted-SSSP maintenance over a stream of
-    * (u, v, w) edge batches — [[bfsIngest]] with weighted steps;
-    * same state layout, same replay idempotence. */
-  def ssspIngest(edgeStream: DataFrame, statePath: String, checkpoint: String,
-                 seed: Long, maxRoundsPerBatch: Int = 30): Unit = {
-    drain(edgeStream, checkpoint) { (b, id) =>
-      ssspBatch(b, id, statePath, seed, maxRoundsPerBatch)
-    }
-  }
 
   /** The [[streamedBfs]]/[[streamedSssp]] drive: seed at the graph's
     * global min node id, drain the checkpointed `edges` through
@@ -990,14 +952,16 @@ object GraphStreams {
     bfsResolve(spark, s"$base/state")
   }
 
-  /** One [[bfsIngest]] micro-batch, exposed for the replay spec. */
+  /** One [[streamedBfs]] micro-batch (step cost 1), exposed for the
+    * replay spec. */
   private[graft] def bfsBatch(batch0: org.apache.spark.sql.DataFrame,
                               batchId: Long, statePath: String,
                               seed: Long, maxRounds: Int): Unit =
     relaxBatch(batch0, batchId, statePath, maxRounds, SingleSource,
       weighted = false)(standingSeed(seed))
 
-  /** One [[ssspIngest]] micro-batch (weighted relaxation). */
+  /** One [[streamedSssp]] micro-batch (step cost = the edge's
+    * integer weight). */
   private[graft] def ssspBatch(batch0: org.apache.spark.sql.DataFrame,
                                batchId: Long, statePath: String,
                                seed: Long, maxRounds: Int): Unit =
@@ -1018,18 +982,17 @@ object GraphStreams {
     (claimParts ++ cps.filter(_ != null)).foreach(graft.operators.Checkpoints.free)
 
   /** A relaxation claim store: its claim key, its commit-marker
-    * directory, and the kernel name and round-budget knob that its
-    * exhausted-budget error names. */
+    * directory, and the kernel name its exhausted-budget error names. */
   private final case class ClaimStore(keys: Seq[String], commits: String,
-                                      name: String, knob: String)
+                                      name: String)
 
-  /** [[bfsIngest]]/[[ssspIngest]] claims: (node, dist). */
+  /** [[bfsBatch]]/[[ssspBatch]] claims: (node, dist). */
   private val SingleSource =
-    ClaimStore(Seq("node"), "_bfs_commits", "relaxBatch", "maxRoundsPerBatch")
+    ClaimStore(Seq("node"), "_bfs_commits", "relaxBatch")
 
   /** [[multiBfsBatch]] claims: (src, node, dist). */
   private val MultiSource =
-    ClaimStore(Seq("src", "node"), "_mb_commits", "multiBfsBatch", "maxRounds")
+    ClaimStore(Seq("src", "node"), "_mb_commits", "multiBfsBatch")
 
   /** How a relaxation batch starts: the `nodes` whose claim buckets
     * load with the batch endpoints' buckets, the seed claims given
@@ -1046,24 +1009,35 @@ object GraphStreams {
     Seeding(Seq(seed), _ => Seq((seed, 0L)).toDF("node", "dist"))
   }
 
-  /** A claim store's key: (src, node) when it has a `src` column,
-    * else node. */
-  private def claimKeys(claims: DataFrame): Seq[String] =
-    if (claims.columns.contains("src")) Seq("src", "node") else Seq("node")
-
   /** The fold every read of a claim store applies: min dist per key. */
-  private def minClaims(claims: DataFrame): DataFrame =
-    claims.groupBy(claimKeys(claims).map(col): _*).agg(min("dist").as("dist"))
+  private def minClaims(claims: DataFrame, keys: Seq[String]): DataFrame =
+    claims.groupBy(keys.map(col): _*).agg(min("dist").as("dist"))
 
-  /** Shared dynamic-relaxation micro-batch for [[bfsIngest]] (step
-    * cost 1), [[ssspIngest]] (step cost = the edge's integer weight)
-    * and [[multiBfsBatch]] (step cost 1, one wave per source). The
-    * dynamic-SSSP argument is the same in all three: added edges only
-    * DECREASE distances, so seeding the relaxation from the new
-    * edges' already-reached endpoints and propagating improvements to
-    * fixpoint reaches exactly the batch result over the union — which
-    * is what lets the entries share their batch twins' SQL oracles
-    * verbatim.
+  /** Incremental relaxation maintenance over a stream of edge
+    * batches, shared by [[bfsBatch]] (step cost 1), [[ssspBatch]]
+    * (step cost = the edge's integer weight) and [[multiBfsBatch]]
+    * (step cost 1, one wave per source): distances from fixed query
+    * points stay continuously current as edges arrive. New edges can
+    * only DECREASE distances, so each batch seeds its relaxation from
+    * the one-hop neighborhoods of the NEW edges' already-reached
+    * endpoints (plus the seed claims) and propagates improvements to
+    * fixpoint — per-batch rounds are bounded by how far the
+    * improvement wave actually travels, never by the graph's
+    * diameter, and a batch touching only settled regions converges
+    * in one empty round. The classic dynamic-BFS argument makes this
+    * exact: any node whose distance drops has a shortest path through
+    * a new edge, and the wave from that edge's endpoints reaches it —
+    * which is what lets the entries share their batch twins' SQL
+    * oracles verbatim.
+    *
+    * State under `statePath`, all append-only (the [[ccIngest]]
+    * story): `edges` — the maintained edge list, one overwrite delta
+    * per batch (deduped on read, so replayed batches are harmless);
+    * `dist` — improvement CLAIMS keyed by `store.keys`, resolved by
+    * min-per-key at read time ([[bfsResolve]], [[multiBfsResolve]]),
+    * so a batch writes only its improvements and never rewrites the
+    * distance table; `store.commits` batchId markers make whole-batch
+    * replays no-ops.
     *
     * Per batch, in order: the batch's edges land in a per-batch
     * overwrite delta, `seeding` runs on the batch, the claims the
@@ -1131,7 +1105,8 @@ object GraphStreams {
           if (need.nonEmpty) {
             if (distStoreExists) {
               MaintIO.distBucketReads.addAndGet(need.size.toLong)
-              val add = minClaims(spark.read.parquet(distPath).filter(col("db").isin(need: _*)))
+              val add = minClaims(
+                spark.read.parquet(distPath).filter(col("db").isin(need: _*)), keys)
               val superseded = distCp
               dist = dist.unionAll(add).localCheckpoint(true)
               distCp = dist
@@ -1202,7 +1177,7 @@ object GraphStreams {
             freeCheckpoints(claimParts, candCp, und, distCp)
             throw new IllegalStateException(
               s"${store.name}: maxRounds=$maxRounds exhausted before fixpoint " +
-                s"in batch $batchId — raise ${store.knob}")
+                s"in batch $batchId — raise maxRounds")
           }
         }
         if (claimParts.nonEmpty) {
@@ -1220,7 +1195,7 @@ object GraphStreams {
     }
   }
 
-  /** Compact a [[bfsIngest]]/[[ssspIngest]] claim store: fold the
+  /** Compact a [[bfsBatch]]/[[ssspBatch]] claim store: fold the
     * append-only claims to their min per node and rewrite, one file
     * per bucket (the [[spanStateCompact]] schedule — claims "cost
     * storage, never correctness", and this is where the storage gets
@@ -1229,15 +1204,15 @@ object GraphStreams {
     * [[bfsResolve]] and every pruned batch read already fold
     * min-per-node on read. */
   def bfsStateCompact(spark: SparkSession, statePath: String): Unit =
-    compactClaims(spark, statePath)(identity)
+    compactClaims(spark, statePath, SingleSource.keys)(identity)
 
   /** Rewrite a claim store as its [[minClaims]] fold, narrowed by
     * `keep`, one file per bucket. */
-  private def compactClaims(spark: SparkSession, statePath: String)
+  private def compactClaims(spark: SparkSession, statePath: String, keys: Seq[String])
                            (keep: DataFrame => DataFrame): Unit = {
     val distPath = s"$statePath/dist"
     if (!hasVisibleData(spark, distPath)) return
-    val folded = keep(minClaims(spark.read.parquet(distPath)))
+    val folded = keep(minClaims(spark.read.parquet(distPath), keys))
       .withColumn("db", distBucketCol(col("node")))
       // materialize BEFORE touching the files the plan reads
       .localCheckpoint(true)
@@ -1252,7 +1227,7 @@ object GraphStreams {
     if (!hasVisibleData(spark, s"$statePath/dist")) {
       return Seq.empty[(Long, Long)].toDF("node", "dist")
     }
-    minClaims(spark.read.parquet(s"$statePath/dist"))
+    minClaims(spark.read.parquet(s"$statePath/dist"), SingleSource.keys)
   }
 
   // ------------------------------------------------------------------
@@ -1378,7 +1353,7 @@ object GraphStreams {
       return Seq.empty[(Long, Long, Long)].toDF("src", "node", "dist")
     }
     val srcs = storedSrcs(spark, statePath).sorted.take(k)
-    minClaims(spark.read.parquet(s"$statePath/dist"))
+    minClaims(spark.read.parquet(s"$statePath/dist"), MultiSource.keys)
       .filter(col("src").isin(srcs: _*))
   }
 
@@ -1388,7 +1363,7 @@ object GraphStreams {
     * files — the two costs compaction reclaims (merge-on-read fold
     * work and pruned-read listing). The key is read from the store's
     * schema: (src, node) for a [[multiBfsBatch]] store, (node) for a
-    * [[bfsIngest]] one. Schedule
+    * [[bfsBatch]]/[[ssspBatch]] one. Schedule
     * [[bfsStateCompact]]/[[multiBfsStateCompact]] when claims/live or
     * files/bucket grows past taste — an operator-side read, never an
     * ingest-path cost. */
@@ -1397,7 +1372,9 @@ object GraphStreams {
     if (!StreamState.hasVisibleData(spark, distPath)) return (0L, 0L, 0L)
     val claims = spark.read.parquet(distPath)
     val nClaims = claims.count()
-    val nLive = claims.select(claimKeys(claims).map(col): _*).distinct().count()
+    val keys =
+      if (claims.columns.contains("src")) MultiSource.keys else SingleSource.keys
+    val nLive = claims.select(keys.map(col): _*).distinct().count()
     val p = new org.apache.hadoop.fs.Path(distPath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val it = fs.listFiles(p, true)
@@ -1414,7 +1391,7 @@ object GraphStreams {
     * source that fell out of the top-k can never re-enter it.
     * Markers survive; resolution before and after is identical. */
   def multiBfsStateCompact(spark: SparkSession, statePath: String): Unit =
-    compactClaims(spark, statePath) { folded =>
+    compactClaims(spark, statePath, MultiSource.keys) { folded =>
       if (hasVisibleData(spark, s"$statePath/srcs"))
         folded.filter(col("src").isin(storedSrcs(spark, statePath): _*))
       else folded
